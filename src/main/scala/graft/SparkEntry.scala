@@ -13,7 +13,7 @@ object SparkEntry {
   /** Flagship: the full parse -> index -> route -> aggregate transcript pipeline on a
     * deterministic synthetic corpus — raw log lines are grok-parsed into turns,
     * FM-Index shards are built per deterministic partition, substring routing fans
-    * turns out to sinks, enriched via broadcast dimensions.
+    * turns out to sinks, enriched from in-row dimension lookups.
     */
   def entry(spark: SparkSession): DataFrame = {
     val turns = Transcripts.generate(spark, nConvs = 30, turnsPerConv = 20)

@@ -1,13 +1,15 @@
 package graft.pipeline
 
 import graft.core.{FmIndex, FmIndexBuilder}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.sql.Timestamp
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** One FM-Index shard: the compressed index + per-turn metadata for one deterministic
   * partition of the transcript table. The shard's corpus is the concatenation of its
@@ -78,7 +80,7 @@ object TsMicros {
   *  - routing deserializes each shard once and evaluates all broadcast patterns against
   *    it (mapPartitions); per-(sink, conv) aggregation is a classic partial+final agg
   *    handled by Catalyst.
-  *  - enrichment joins are broadcast hash joins (dimensions are tiny by design).
+  *  - enrichment is an in-row CASE lookup, not a join (dimensions are tiny by design).
   *  - lineage rows + a JSON manifest make the job resumable: committed shard_ids are
   *    skipped on re-run, so a killed job continues without recount drift.
   */
@@ -281,7 +283,7 @@ object TranscriptPipeline {
 
   // -------------------------------------------------------------- aggregate stage
 
-  /** Per-(sink, conversation) aggregate counts, ordered by (conv_id). */
+  /** Per-(sink, conversation) aggregate counts, unordered (readers sort if they need to). */
   def conversationAggregates(routed: DataFrame): DataFrame =
     routed
       .groupBy(col("sink"), col("conv_id"))
@@ -291,7 +293,6 @@ object TranscriptPipeline {
         min(col("ts")).as("first_ts"),
         max(col("ts")).as("last_ts")
       )
-      .orderBy(col("sink"), col("conv_id"))
 
   /** Windowed per-conversation running stats ordered by (conv_id, turn_idx). */
   def runningWindow(routed: DataFrame): DataFrame = {
@@ -305,11 +306,22 @@ object TranscriptPipeline {
       .select("sink", "conv_id", "turn_idx", "hit_rank", "running_matches", "n_matches")
   }
 
-  /** Broadcast enrichment with role/tool dimensions. */
-  def enrich(spark: SparkSession, routed: Dataset[RoutedHit]): DataFrame =
-    routed
-      .join(broadcast(Transcripts.roleLookup(spark)), Seq("role"), "left")
-      .join(broadcast(Transcripts.toolLookup(spark)), Seq("tool"), "left")
+  /** Enrichment with the role/tool dimensions: the rows the left joins on `role` and
+    * then `tool` would give (same columns, order, types and nullability; null enrichment
+    * for an unknown key), looked up in-row by a CASE per column. A dimension of a few
+    * rows is cheaper inlined than joined: no broadcast job, no hash build.
+    */
+  def enrich(spark: SparkSession, routed: Dataset[RoutedHit]): DataFrame = {
+    import Transcripts.{RoleDim, ToolDim}
+    def lookup(key: String, dim: Seq[Product], field: Int): Column = {
+      val cases = dim.map(r => (col(key) === r.productElement(0), r.productElement(field)))
+      cases.tail.foldLeft(when(cases.head._1, cases.head._2)) { case (c, (k, v)) => c.when(k, v) }
+    }
+    val rest = routed.columns.filterNot(Set("role", "tool")).map(col).toSeq
+    routed.select(Seq(col("tool"), col("role")) ++ rest ++ Seq(
+      lookup("role", RoleDim, 1).as("role_group"), lookup("role", RoleDim, 2).as("is_human"),
+      lookup("tool", ToolDim, 1).as("tool_family"), lookup("tool", ToolDim, 2).as("risk_tier")): _*)
+  }
 
   // ----------------------------------------------------------------- full job + resume
 
@@ -322,7 +334,8 @@ object TranscriptPipeline {
     *     attempt ids are unique even across crashed runs, so a crashed attempt's orphan
     *     sink rows can never be adopted by a later commit.
     *  2. append sink rows under `sinks/sink=S/attempt=K/`.
-    *  3. append lineage rows (one per shard piece) with attempt=K.
+    *  3. append lineage rows (one per shard piece) with attempt=K, as ONE file per
+    *     attempt; the attempt's `RunReport` is observed on that write (no re-read).
     *  4. atomically create `_manifests/commit-K` (write temp + ATOMIC_MOVE). Only now is
     *     attempt K committed.
     *
@@ -334,12 +347,13 @@ object TranscriptPipeline {
     */
   private def manifestPath(outDir: String) = Paths.get(outDir, "_manifests")
 
+  /** Ids of the markers named exactly `<prefix><digits>` (not a crashed write's `.tmp`). */
   private def listMarkers(outDir: String, prefix: String): Set[Int] = {
     val dir = manifestPath(outDir)
     if (!Files.isDirectory(dir)) return Set.empty
+    val marker = s"$prefix(\\d+)".r
     val s = Files.list(dir)
-    try s.toArray.map(_.toString.split('/').last)
-      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toInt).toSet
+    try s.iterator.asScala.map(_.getFileName.toString).collect { case marker(k) => k.toInt }.toSet
     finally s.close()
   }
 
@@ -354,12 +368,23 @@ object TranscriptPipeline {
 
   def committedAttempts(outDir: String): Set[Int] = listMarkers(outDir, "commit-")
 
+  // Schemas of the files the pipeline writes, so re-reads skip the inference job.
+  private[pipeline] val LineageSchema = StructType.fromDDL("shard_id INT, shard_seq INT, " +
+    "n_turns BIGINT, corpus_chars BIGINT, alphabet INT, checksum BIGINT, rows_routed BIGINT, attempt INT")
+
+  /** `sinks/` as read back: the data columns of `enrich`, then the partition columns. */
+  private def sinkSchema(spark: SparkSession): StructType = {
+    val s = enrich(spark, spark.emptyDataset[RoutedHit](Encoders.product[RoutedHit])).schema
+    StructType((s.filterNot(_.name == "sink") :+ s("sink") :+ StructField("attempt", IntegerType))
+      .map(_.copy(nullable = true)))
+  }
+
   /** Committed sink rows only (attempts with a commit marker); `attempt` is dropped —
     * it is commit bookkeeping, not data. Partition pruning keeps orphan files unread.
     */
   def readSinks(spark: SparkSession, outDir: String): DataFrame = {
     val committed = committedAttempts(outDir)
-    spark.read.parquet(s"$outDir/sinks")
+    spark.read.schema(sinkSchema(spark)).parquet(s"$outDir/sinks")
       .filter(col("attempt").isInCollection(committed.toSeq))
       .drop("attempt")
   }
@@ -369,13 +394,6 @@ object TranscriptPipeline {
     */
   def runToSinks(spark: SparkSession, turns: Dataset[Turn], cfg: Config, outDir: String): RunReport = {
     import spark.implicits._
-    val dbg = sys.env.contains("SPARK_GRAFT_PIPE_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(name: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[pipe] $name%-24s ${(now - t0) / 1e9}%7.2f s")
-      t0 = now
-    }
     val committed = committedAttempts(outDir)
     val resumed = committed.nonEmpty
     val attempt = (listMarkers(outDir, "start-") ++ committed + (-1)).max + 1
@@ -385,7 +403,7 @@ object TranscriptPipeline {
       if (!resumed) turns
       else {
         // lineage parquet = committed shard ids; anti-join scales to any shard count
-        val committedIds = spark.read.parquet(s"$outDir/lineage")
+        val committedIds = spark.read.schema(LineageSchema).parquet(s"$outDir/lineage")
           .filter(col("attempt").isInCollection(committed.toSeq))
           .select(col("shard_id").as("__cid")).distinct()
         turns.withColumn("__sid", shardIdCol(cfg))
@@ -433,36 +451,28 @@ object TranscriptPipeline {
       case Some(v) => spark.conf.set(writersKey, v)
       case None => spark.conf.unset(writersKey)
     }
-    mark("sinks write")
 
     // this attempt's rows, re-read from the files just written (pruned to the
     // columns each consumer needs; never consults commit markers, so it serves
     // both paths' lineage counts and the fresh path's aggregates)
-    val attemptRows = spark.read.parquet(s"$outDir/sinks")
+    val attemptRows = spark.read.schema(sinkSchema(spark)).parquet(s"$outDir/sinks")
       .filter(col("attempt") === attempt).drop("attempt")
 
     // lineage is written BY SPARK (no driver collect of per-shard rows) and appended,
     // then the attempt is committed with one atomic marker
     val routedCounts = attemptRows.groupBy(col("shard_id")).agg(count(lit(1)).as("__rr"))
-    val lineageDf = shards
+    val lineageDf = shards.join(routedCounts, Seq("shard_id"), "left")
       .select(col("shard_id"), col("shard_seq"), col("n_turns").cast("long").as("n_turns"),
-        col("corpus_chars"), col("alphabet"), col("checksum"))
-      .join(routedCounts, Seq("shard_id"), "left")
-      .select(col("shard_id"), col("shard_seq"), col("n_turns"), col("corpus_chars"),
-        col("alphabet"), col("checksum"),
+        col("corpus_chars"), col("alphabet"), col("checksum"),
         // attribute routed rows to the first piece of a split shard (counts are per
         // shard_id; duplicating them across seq pieces would double-count)
         when(col("shard_seq") === 0, coalesce(col("__rr"), lit(0L)))
           .otherwise(lit(0L)).as("rows_routed"),
         lit(attempt).as("attempt"))
-    // aggregates must cover ALL committed data: a fresh run aggregates the in-memory
-    // routed rows directly; a resumed run re-reads the committed sinks so the final
-    // output converges to exactly the single-run result (no recount drift).
-    // The three derived outputs (lineage, aggregates, window) all read the
-    // persisted shards/routed frames and are mutually independent, so in the
-    // FRESH path they run as concurrent Spark jobs (tail back-fill) — the commit
-    // marker still lands strictly after the lineage write. The RESUMED path stays
-    // sequential: its aggSource (readSinks) must observe THIS attempt's marker.
+    // aggregates must cover ALL committed data. A fresh run aggregates this attempt's
+    // rows in jobs concurrent with the lineage write (the commit marker still lands
+    // strictly after it); a resumed run re-reads the committed sinks, so it waits for
+    // THIS attempt's marker and converges to exactly the single-run result.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -474,24 +484,23 @@ object TranscriptPipeline {
         runningWindow(src).write.mode("overwrite").parquet(s"$outDir/window")
       })
     val freshJobs = if (resumed) None else Some(startAggJobs(attemptRows))
-    lineageDf.write.options(directCommit).mode("append").parquet(s"$outDir/lineage")
-    mark("lineage write")
+    // ONE lineage file per attempt (one small row per shard piece), and this attempt's
+    // report observed on that write rather than re-read from it. The counts are exact
+    // under task retry: after coalesce(1) the observation runs in the write's single
+    // result task, and Spark merges a result task's accumulator updates only for the
+    // first successful attempt of its partition.
+    val stats = Observation(s"lineage-$attempt")
+    lineageDf.coalesce(1)
+      .observe(stats, count(lit(1)).as("shards"), coalesce(sum("n_turns"), lit(0L)).as("turns"),
+        coalesce(sum("rows_routed"), lit(0L)).as("rows"))
+      .write.options(directCommit).mode("append").parquet(s"$outDir/lineage")
     writeMarker(outDir, s"commit-$attempt", s"""{"attempt": $attempt, "committed": true}""")
-    // report totals for THIS attempt from its lineage (one tiny aggregate, no row
-    // collect) — submitted concurrently with the aggregate/window jobs above
-    val fStats = Future {
-      spark.read.parquet(s"$outDir/lineage")
-        .filter(col("attempt") === attempt)
-        .agg(count(lit(1)), coalesce(sum("n_turns"), lit(0L)),
-          coalesce(sum("rows_routed"), lit(0L)))
-        .first()
-    }
     val (fAgg, fWin) = freshJobs.getOrElse(startAggJobs(readSinks(spark, outDir)))
     Await.result(fAgg, Duration.Inf)
     Await.result(fWin, Duration.Inf)
-    val stats = Await.result(fStats, Duration.Inf)
-    mark("agg+window")
     shards.unpersist()
-    RunReport(stats.getLong(0), stats.getLong(1), stats.getLong(2), resumed)
+    val m = stats.get
+    RunReport(m("shards").asInstanceOf[Long], m("turns").asInstanceOf[Long],
+      m("rows").asInstanceOf[Long], resumed)
   }
 }

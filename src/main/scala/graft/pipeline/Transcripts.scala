@@ -36,28 +36,13 @@ object Transcripts {
     SinkRule("agents", "tool_call")
   )
 
-  /** Tiny enrichment dimensions (broadcast-joined). */
-  def roleLookup(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("user", "human", true),
-      ("assistant", "model", false),
-      ("system", "control", false),
-      ("tool", "machine", false)
-    ).toDF("role", "role_group", "is_human")
-  }
-
-  def toolLookup(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("", "none", 0),
-      ("bash", "shell", 3),
-      ("search", "web", 1),
-      ("browser", "web", 2),
-      ("editor", "files", 2),
-      ("scheduler", "system", 3)
-    ).toDF("tool", "tool_family", "risk_tier")
-  }
+  /** Enrichment dimensions, tiny by design: role -> (role_group, is_human) and
+    * tool -> (tool_family, risk_tier), looked up in-row by `TranscriptPipeline.enrich`.
+    */
+  val RoleDim: Seq[(String, String, Boolean)] = Seq(("user", "human", true),
+    ("assistant", "model", false), ("system", "control", false), ("tool", "machine", false))
+  val ToolDim: Seq[(String, String, Int)] = Seq(("", "none", 0), ("bash", "shell", 3),
+    ("search", "web", 1), ("browser", "web", 2), ("editor", "files", 2), ("scheduler", "system", 3))
 
   /** Deterministic (seed-fixed, wall-clock-free) transcript text for one turn.
     * Log-like payload with levels, block ids, key=value pairs and multi-byte salt so

@@ -128,6 +128,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(!p1.resumed)
     val p2 = TranscriptPipeline.runToSinks(spark, turns, cfg, outResume)
     assert(p2.resumed, "second run must resume from the committed lineage")
+    // every shard is committed now: a rerun is a no-op attempt
+    val p3 = TranscriptPipeline.runToSinks(spark, turns, cfg, outResume)
+    assert(p3 == TranscriptPipeline.RunReport(0L, 0L, 0L, resumed = true), s"no-op rerun reported $p3")
+
+    // each report equals the totals its attempt committed to the lineage
+    def committedTotals(out: String, attempt: Int) = {
+      val r = spark.read.parquet(s"$out/lineage").filter(col("attempt") === attempt)
+        .agg(count(lit(1)), coalesce(sum("n_turns"), lit(0L)), coalesce(sum("rows_routed"), lit(0L)))
+        .first()
+      (r.getLong(0), r.getLong(1), r.getLong(2))
+    }
+    Seq((r1, outFull, 0), (p1, outResume, 0), (p2, outResume, 1), (p3, outResume, 2))
+      .foreach { case (rep, out, attempt) =>
+        assert((rep.shardsBuilt, rep.turnsIndexed, rep.rowsRouted) == committedTotals(out, attempt),
+          s"attempt $attempt of $out reported $rep")
+      }
+    assert(p1.turnsIndexed + p2.turnsIndexed == r1.turnsIndexed &&
+      p1.rowsRouted + p2.rowsRouted == r1.rowsRouted)
 
     val sinksFull = TranscriptPipeline.readSinks(spark, outFull)
     val sinksRes = TranscriptPipeline.readSinks(spark, outResume)
@@ -139,6 +157,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(aggFull.exceptAll(aggRes).count() == 0 && aggRes.exceptAll(aggFull).count() == 0)
 
     val lineage = spark.read.parquet(s"$outFull/lineage")
+    // the schemas re-reads use instead of inferring are the inferred ones
+    assert(lineage.schema == TranscriptPipeline.LineageSchema)
+    assert(sinksFull.schema == spark.read.parquet(s"$outFull/sinks").drop("attempt").schema)
     assert(lineage.count() == r1.shardsBuilt)
     assert(lineage.agg(sum("n_turns")).first().getLong(0) == turns.count())
   }
@@ -159,6 +180,10 @@ class PipelineSpec extends AnyFunSuite {
     TranscriptPipeline.runToSinks(spark, turns, cfg, out)
     val marker = java.nio.file.Paths.get(out, "_manifests", "commit-1")
     assert(Files.deleteIfExists(marker), "expected commit-1 marker to exist")
+    // a crash inside writeMarker leaves its temp file behind: never a marker
+    Seq("start-9.tmp", "commit-1.tmp", "commit-2.tmp").foreach { name =>
+      Files.write(java.nio.file.Paths.get(out, "_manifests", name), Array[Byte]())
+    }
 
     // readers must not see the orphaned attempt
     val committedOnly = TranscriptPipeline.readSinks(spark, out)
@@ -170,10 +195,42 @@ class PipelineSpec extends AnyFunSuite {
     // final committed view equals the single-run result exactly — no duplicated rows
     val r = TranscriptPipeline.runToSinks(spark, turns, cfg, out)
     assert(r.resumed)
+    assert(TranscriptPipeline.committedAttempts(out) == Set(0, 2))
     val fin = TranscriptPipeline.readSinks(spark, out)
     val full = TranscriptPipeline.readSinks(spark, outFull)
     assert(fin.exceptAll(full).count() == 0 && full.exceptAll(fin).count() == 0,
       "post-crash resume diverged from the single-run sinks")
+  }
+
+  test("in-row enrich equals the two broadcast left joins it replaces") {
+    import spark.implicits._
+    // the reference: the join form over the dimension rows, as literal rows
+    val roleLookup = Seq(("user", "human", true), ("assistant", "model", false),
+      ("system", "control", false), ("tool", "machine", false)).toDF("role", "role_group", "is_human")
+    val toolLookup = Seq(("", "none", 0), ("bash", "shell", 3), ("search", "web", 1),
+      ("browser", "web", 2), ("editor", "files", 2), ("scheduler", "system", 3))
+      .toDF("tool", "tool_family", "risk_tier")
+    def viaJoins(routed: org.apache.spark.sql.Dataset[RoutedHit]) = routed
+      .join(broadcast(roleLookup), Seq("role"), "left")
+      .join(broadcast(toolLookup), Seq("tool"), "left")
+
+    val shards = TranscriptPipeline.buildShards(spark, turns, cfg)
+    val hit = RoutedHit("s", "conv-x", 0, "user", "bash", null, 1, "t", 0)
+    // keys the dimensions lack (and null keys) enrich to all-null columns
+    val unknown = Seq(hit.copy(role = "robot", tool = "hammer"), hit.copy(role = null, tool = null),
+      hit.copy(turn_idx = 1, tool = "hammer"), hit.copy(turn_idx = 2, role = "robot")).toDS()
+    val routed = TranscriptPipeline.route(spark, shards, cfg.rules).union(unknown).cache()
+    val got = TranscriptPipeline.enrich(spark, routed)
+    val want = viaJoins(routed)
+    assert(got.schema == want.schema, s"${got.schema.treeString} vs ${want.schema.treeString}")
+    assert(got.count() == want.count() && got.exceptAll(want).count() == 0 &&
+      want.exceptAll(got).count() == 0, "in-row enrich differs from the join form")
+    assert(got.filter(col("role") === "robot" || col("role").isNull)
+      .filter(col("role_group").isNotNull || col("is_human").isNotNull).count() == 0)
+    assert(got.filter(col("tool") === "hammer" || col("tool").isNull)
+      .filter(col("tool_family").isNotNull || col("risk_tier").isNotNull).count() == 0)
+    assert(got.filter(col("role_group").isNotNull && col("tool_family").isNotNull).count() > 0)
+    routed.unpersist()
   }
 
   test("resume at 10,000 shards: anti-join scales, no shard-count-proportional driver state") {
