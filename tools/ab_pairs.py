@@ -7,7 +7,8 @@
 Run from the repository root. Each revision's committed files are exported with
 `git archive` into its own directory under --scratch (a plain copy: nothing is
 registered in this repository's .git, and uncommitted edits never leak into a
-side). Pair i runs `python3 perfbench/run.py --workload W --seed SEED+i
+side). Keep --scratch short: sbt puts a unix socket under it, and socket paths
+are limited to about 100 bytes. Pair i runs `python3 perfbench/run.py --workload W --seed SEED+i
 --seconds S --trace 0` once in each copy, S being BENCHMARK.json's run_seconds;
 the side that runs first alternates from pair to pair. For every end-to-end
 metric of BENCHMARK.json it prints each side's median and quartiles, the change's
@@ -37,7 +38,7 @@ def git(*args):
 def export(rev, scratch):
     """The committed tree of `rev` in scratch/<sha>, exported once and reused."""
     sha = git("rev-parse", "--verify", f"{rev}^{{commit}}")
-    path = os.path.join(scratch, sha)
+    path = os.path.join(scratch, sha[:8])
     if not os.path.isdir(path):
         tmp = path + ".partial"
         subprocess.run(["rm", "-rf", tmp], check=True)
@@ -125,6 +126,9 @@ def main():
         pair = {"pair": i, "seed": a.seed + i, "first": order[0]}
         for side in order:
             pair[side] = run_once(sides[side][1], a.workload, a.seed + i, seconds)
+            if not pair[side]["metrics"]:
+                sys.exit(f"ab_pairs: the {side} run of pair {i} exited {pair[side]['exit']} "
+                         f"without metrics:\n{pair[side].get('stderr_tail', '')}")
         pairs.append(pair)
         print(f"pair {i} seed {a.seed + i} first={order[0]} " + " ".join(
             f"{s}:exit={pair[s]['exit']},wall={pair[s]['wall_s']}s" for s in ("base", "change")),
