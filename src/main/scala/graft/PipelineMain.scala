@@ -9,7 +9,6 @@ import graft.pipeline.{PartitionedTable, SinkRule, Transcripts, TranscriptPipeli
   *     --input <transcript table dir | "synthetic:N_CONVS:TURNS"> \
   *     --output <out dir> [--shards 4096] [--sample-rate 16] [--salt-block 4096] \
   *     [--rules sink=pattern,sink=pattern,...] [--raw-lines] [--compress]
-  *     [--compress-mode wavelet|all|off]
   *
   * Runs parse -> index -> route -> aggregate and writes per-sink tables, aggregates,
   * window stats and lineage under --output with atomic per-attempt commit markers.
@@ -21,14 +20,16 @@ import graft.pipeline.{PartitionedTable, SinkRule, Transcripts, TranscriptPipeli
   */
 object PipelineMain {
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
+  private val ValueFlags = Set("input", "output", "shards", "sample-rate", "salt-block", "rules")
+
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map[String, String]()
     var i = 0
     while (i < args.length) {
       args(i) match {
         case "--raw-lines" => m += "raw-lines" -> "true"; i += 1
         case "--compress" => m += "compress" -> "true"; i += 1
-        case flag if flag.startsWith("--") && i + 1 < args.length =>
+        case flag if flag.startsWith("--") && ValueFlags(flag.drop(2)) && i + 1 < args.length =>
           m += flag.drop(2) -> args(i + 1); i += 2
         case other => throw new IllegalArgumentException(s"unexpected argument: $other")
       }
@@ -36,10 +37,24 @@ object PipelineMain {
     m.toMap
   }
 
+  /** `--rules sink=pattern,...`. Every entry needs a sink, an `=` and a non-empty
+    * pattern: an empty pattern would otherwise reach FmIndex.count (which needs at
+    * least one char) inside a routing task, after the whole shard build.
+    */
+  private[graft] def parseRules(spec: String): Seq[SinkRule] =
+    spec.split(',').toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(sink, pattern) if sink.nonEmpty && pattern.nonEmpty => SinkRule(sink, pattern)
+        case _ => throw new IllegalArgumentException(
+          s"--rules entry '$kv' is not sink=pattern with a non-empty sink and pattern")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
     val input = opts.getOrElse("input", sys.error("--input required"))
     val output = opts.getOrElse("output", sys.error("--output required"))
+    val rules = opts.get("rules").map(parseRules).getOrElse(Transcripts.DefaultRules)
 
     val spark = SparkSession.builder()
       // spark-submit injects spark.master; default to local[*] for direct JVM runs
@@ -50,29 +65,12 @@ object PipelineMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val rules = opts.get("rules") match {
-      case Some(spec) =>
-        spec.split(',').toSeq.map { kv =>
-          val Array(sink, pattern) = kv.split("=", 2)
-          SinkRule(sink, pattern)
-        }
-      case None => Transcripts.DefaultRules
-    }
     val cfg = TranscriptPipeline.Config(
       numShards = opts.getOrElse("shards", "4096").toInt,
       saltBlock = opts.getOrElse("salt-block", "4096").toInt,
       sampleRate = opts.getOrElse("sample-rate", "16").toInt,
       rules = rules,
-      // --compress = RRR everywhere; --compress-mode wavelet = RRR nodes + Rank9
-      // sample marks (fast locate at most of the size win)
-      compression = opts.get("compress-mode").map {
-        case "wavelet" => graft.core.FmIndex.CompressWavelet
-        case "all" => graft.core.FmIndex.CompressAll
-        case "off" => graft.core.FmIndex.NoCompression
-        case other => sys.error(s"--compress-mode must be wavelet|all|off, got $other")
-      }.getOrElse(
-        if (opts.contains("compress")) graft.core.FmIndex.CompressAll
-        else graft.core.FmIndex.NoCompression))
+      compress = opts.contains("compress"))
 
     val turns =
       if (input.startsWith("synthetic:")) {

@@ -12,7 +12,7 @@ package graft.core
   * HDFS_2k_multichar.log) and additionally reports serialized size as a percentage of
   * input UTF-8 BYTES — the unit the reference's size benchmark uses (44.5% @rate 32 on
   * Android.log, FmIndexSerializedSizeBenchmark.java:57).
-  * Prints one JSON line per engine config.
+  * Prints one JSON line per build config (Rank9 for speed, RRR for size).
   */
 object BigShardStress {
 
@@ -77,15 +77,7 @@ object BigShardStress {
 
     val configs = Seq[(String, FmIndexBuilder)](
       ("huffman+rank9", new FmIndexBuilder().setSampleRate(sampleRate)),
-      ("huffman+rrr", new FmIndexBuilder().setSampleRate(sampleRate).setCompression(true)),
-      ("fbb+rrr", new FmIndexBuilder().setSampleRate(sampleRate)
-        .setWaveletEngine(FmIndex.Fbb).setCompression(true)),
-      // MIXED: RRR wavelet nodes, Rank9 SA-sample marks — closes most of the RRR
-      // locate gap (the per-LF-step sample probe) at a fraction of a B/char
-      ("huffman+mixed", new FmIndexBuilder().setSampleRate(sampleRate)
-        .setCompressionMode(FmIndex.CompressWavelet)),
-      ("fbb+mixed", new FmIndexBuilder().setSampleRate(sampleRate)
-        .setWaveletEngine(FmIndex.Fbb).setCompressionMode(FmIndex.CompressWavelet))
+      ("huffman+rrr", new FmIndexBuilder().setSampleRate(sampleRate).setCompression(true))
     )
     val patterns = Seq("blk_", "PacketResponder", "size=1", "terminating")
     configs.foreach { case (name, builder) =>
@@ -110,8 +102,8 @@ object BigShardStress {
       val peakMb = (peak >> 20) - baseHeap
       val retainedMb = usedHeapMb() - baseHeap
       val bytes = fm.serialize().length
-      // warm the query paths before timing: the FIRST engine config otherwise pays the
-      // JIT interpreter/compile cost in its numbers and cross-engine ratios skew
+      // warm the query paths before timing: the FIRST config otherwise pays the JIT
+      // interpreter/compile cost in its numbers and cross-config ratios skew
       patterns.foreach(p => fm.count(p.toCharArray))
       fm.locate("blk_".toCharArray, 0, 4, new Array[Int](1000), 1000)
       fm.extractString(chars / 3, chars / 3 + 1024)

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.io.{DataInput, DataOutput}
+import java.io.{DataInput, DataOutput, IOException}
 
 /** Common contract of the rank bitvectors backing the FM-Index: plain Rank9
   * (RankBitVector, fast) or RRR-compressed (RrrVector, ~entropy-sized). The reference
@@ -25,8 +25,9 @@ object BitSeqSerde {
   }
 
   def read(in: DataInput): BitRankSeq = in.readByte() match {
+    case 0 => RankBitVector.read(in)
     case 1 => RrrVector.read(in)
-    case _ => RankBitVector.read(in)
+    case other => throw new IOException(s"unknown bitvector kind byte ${other & 0xff}")
   }
 
   /** Default RRR rank-sample rate (blocks per sample) used by the compressed build. */

@@ -1,20 +1,20 @@
 package graft.core
 
-import java.io.{DataInput, DataOutput}
+import java.io.{DataInput, DataOutput, IOException}
 import scala.collection.mutable
 
 /** FM-Index: compressed full-text substring index (suffix array + Burrows-Wheeler transform
-  * + wavelet-matrix rank/select) supporting count / locate / extract / extractUntilBoundary
-  * over the indexed text.
+  * + Huffman-shaped wavelet tree rank/select) supporting count / locate / extract /
+  * extractUntilBoundary over the indexed text.
   *
   * Public behavior mirrors the reference implementation's test suite exactly
   * (/root/reference/indices/src/main/java/com/dynatrace/fm/FmIndex.java:155-941,
   * /root/reference/indices/src/test/java/com/dynatrace/fm/FmIndexTest.java), including
   * overlapping-match counting, appearance-order alphabet mapping, embedded-sentinel rules
   * (FmIndex.java:396-435), sampling semantics and exact error messages. Internals are a
-  * fresh design: SA-IS construction (the reference delegates to DivSufSort) and a wavelet
-  * matrix whose single-descent inverseSelect fuses the reference's separate
-  * inverseSelect + rank calls (FmIndex.java:532-535) into one.
+  * fresh design: SA-IS construction (the reference delegates to DivSufSort) and a
+  * Huffman-shaped wavelet tree whose single-descent inverseSelect fuses the reference's
+  * separate inverseSelect + rank calls (FmIndex.java:532-535) into one.
   *
   * Thread-safe for concurrent reads after construction.
   */
@@ -29,7 +29,7 @@ final class FmIndex private (
     private val suffixes: IntVector,
     private val positions: IntVector, // null when !enableExtract
     private val sampledSuffixes: BitRankSeq,
-    private val wavelet: SymbolRankSeq
+    private val wavelet: HuffmanWaveletTree
 ) {
 
   @inline private def code(ch: Char): Int = monotonicMap.getOrElse(ch.toLong, 0.toShort).toInt
@@ -294,7 +294,6 @@ final class FmIndex private (
     downStreamLength
   }
 
-  /** Rightward-only variant (e.g. the value of a key=value pair). FmIndex.java:844-922. */
   /** Rightward-only variant (e.g. the value of a key=value pair): chars strictly after
     * `from0` up to the boundary or corpus end; empty when the char at `from0` is the
     * boundary itself. FmIndex.java:844-922 semantics per the char-walk oracle.
@@ -329,11 +328,7 @@ final class FmIndex private (
     suffixes.write(out)
     if (enableExtract) positions.write(out)
     BitSeqSerde.write(out, sampledSuffixes)
-    out.writeByte(wavelet match {
-      case _: HuffmanWaveletTree => 1
-      case _: WaveletFbb => 2
-      case _ => 0
-    })
+    out.writeByte(FmIndex.HuffmanWaveletKind)
     wavelet.write(out)
   }
 
@@ -359,42 +354,20 @@ object FmIndex {
   // v1: bitvectors carry a kind byte (0 = Rank9, 1 = RRR-compressed)
   private[core] val SerialVersion: Byte = 1
 
+  /** Kind byte written before the wavelet; the Huffman-shaped tree is the only kind read. */
+  private val HuffmanWaveletKind: Byte = 1
+
   val MaxAlphabet: Int = Short.MaxValue.toInt
 
   /** Builds the index: sentinel append -> appearance-order alphabet mapping (embedded-'\0'
     * rule: when the input itself contains '\0', those map to code 1 and only the final
     * appended sentinel takes code 0) -> cumulative counts -> SA-IS -> SA sampling -> BWT ->
-    * wavelet matrix.
+    * Huffman-shaped wavelet tree. `compress` stores every bitvector, the SA-sample marks
+    * and each wavelet node, RRR-compressed (reference-style: smallest, slower queries);
+    * the default Rank9 everywhere favors query speed.
     */
-  /** Wavelet engines: Huffman-shaped tree (default, fastest), fixed-block boosting
-    * (entropy-adaptive per block, most compact), plain wavelet matrix (comparison).
-    */
-  sealed trait WaveletEngine
-  case object Huffman extends WaveletEngine
-  case object Fbb extends WaveletEngine
-  case object Matrix extends WaveletEngine
-
-  /** Storage modes for the index's bitvectors. The wavelet nodes are the bulk of the
-    * size; the SA-sample mark bitvector is the locate hot path (every LF-walk step
-    * probes it). CompressWavelet therefore keeps most of CompressAll's footprint win
-    * while the locate walk pays Rank9 prices at the sample probe — the trade the
-    * reference cannot express (its compression flag is all-or-nothing).
-    */
-  sealed trait Compression
-  /** Rank9 everywhere: fastest queries, ~25% bitvector overhead. */
-  case object NoCompression extends Compression
-  /** RRR everywhere (reference-style): smallest, slowest locate. */
-  case object CompressAll extends Compression
-  /** MIXED: RRR wavelet nodes + Rank9 SA-sample marks. */
-  case object CompressWavelet extends Compression
-
   def build(input: Array[Char], sampleRate: Int = 32, enableExtract: Boolean = true,
-      compress: Boolean = false, engine: WaveletEngine = Huffman): FmIndex =
-    build(input, sampleRate, enableExtract,
-      if (compress) CompressAll else NoCompression, engine)
-
-  def build(input: Array[Char], sampleRate: Int, enableExtract: Boolean,
-      compression: Compression, engine: WaveletEngine): FmIndex = {
+      compress: Boolean = false): FmIndex = {
     require(sampleRate > 0, "sampleRate must be positive")
     val n = input.length + 1
 
@@ -452,10 +425,7 @@ object FmIndex {
       }
       i += 1
     }
-    // CompressAll = reference-style RRR for BOTH the SA-sample marks and every wavelet
-    // node; CompressWavelet keeps the sample marks Rank9 (the locate hot path);
-    // default Rank9 everywhere favors query speed
-    val sampled = BitSeqSerde.maybeCompress(sampledB.result(), compression == CompressAll)
+    val sampled = BitSeqSerde.maybeCompress(sampledB.result(), compress)
 
     var positions: IntVector = null
     if (enableExtract) {
@@ -469,13 +439,8 @@ object FmIndex {
     }
 
     val bwt = Bwt.fromSuffixArray(seq, sa)
-    val compressNodes = compression != NoCompression
     // Huffman-shaped wavelet: frequent BWT symbols descend ~entropy levels, not log(sigma)
-    val wavelet: SymbolRankSeq = engine match {
-      case Huffman => HuffmanWaveletTree(bwt, sigma, compressNodes)
-      case Fbb => WaveletFbb(bwt, sigma, compressNodes)
-      case Matrix => WaveletMatrix(bwt, sigma)
-    }
+    val wavelet = HuffmanWaveletTree(bwt, sigma, compress)
 
     new FmIndex(sampleRate, enableExtract, n, map, lookUp, cumulative, bitWidth,
       suffixes, positions, sampled, wavelet)
@@ -505,11 +470,10 @@ object FmIndex {
     val suffixes = IntVector.read(in)
     val positions = if (enableExtract) IntVector.read(in) else null
     val sampled = BitSeqSerde.read(in)
-    val wavelet: SymbolRankSeq = in.readByte() match {
-      case 1 => HuffmanWaveletTree.read(in)
-      case 2 => WaveletFbb.read(in)
-      case _ => WaveletMatrix.read(in)
-    }
+    val kind = in.readByte()
+    if (kind != HuffmanWaveletKind)
+      throw new IOException(s"unknown wavelet kind byte ${kind & 0xff}")
+    val wavelet = HuffmanWaveletTree.read(in)
     new FmIndex(sampleRate, enableExtract, length, map, lookUp, cumulative, bitWidth,
       suffixes, positions, sampled, wavelet)
   }
@@ -561,20 +525,13 @@ object FmIndex {
 final class FmIndexBuilder {
   private var sampleRate: Int = 32
   private var enableExtraction: Boolean = true
-  private var compression: FmIndex.Compression = FmIndex.NoCompression
-  private var engine: FmIndex.WaveletEngine = FmIndex.Huffman
+  private var compress: Boolean = false
 
   def setSampleRate(rate: Int): FmIndexBuilder = { sampleRate = rate; this }
   def setEnableExtraction(enabled: Boolean): FmIndexBuilder = { enableExtraction = enabled; this }
   /** RRR-compressed bitvectors (reference-style all-or-nothing storage) vs Rank9. */
-  def setCompression(enabled: Boolean): FmIndexBuilder = {
-    compression = if (enabled) FmIndex.CompressAll else FmIndex.NoCompression; this
-  }
-  /** Full mode control incl. CompressWavelet (RRR nodes + Rank9 sample marks). */
-  def setCompressionMode(c: FmIndex.Compression): FmIndexBuilder = { compression = c; this }
-  /** Rank engine: Huffman wavelet tree (default), fixed-block boosting, or matrix. */
-  def setWaveletEngine(e: FmIndex.WaveletEngine): FmIndexBuilder = { engine = e; this }
+  def setCompression(enabled: Boolean): FmIndexBuilder = { compress = enabled; this }
   def build(text: Array[Char]): FmIndex =
-    FmIndex.build(text, sampleRate, enableExtraction, compression, engine)
+    FmIndex.build(text, sampleRate, enableExtraction, compress)
   def build(text: String): FmIndex = build(text.toCharArray)
 }

@@ -2,18 +2,6 @@ package graft.core
 
 import java.io.{DataInput, DataOutput}
 
-/** Common contract of the wavelet structures backing the FM-Index: symbol rank and the
-  * fused access+rank descent (returns (rankBefore << 16) | symbol).
-  */
-trait SymbolRankSeq {
-  def length: Int
-  def sigma: Int
-  def rank(pos: Int, sym: Int): Int
-  def inverseSelect(pos: Int): Long
-  def write(out: DataOutput): Unit
-  def sizeInBytes: Long
-}
-
 /** Huffman-shaped wavelet tree: symbols get canonical-derived Huffman paths, so frequent
   * symbols (the BWT of log text is highly skewed) descend ~entropy levels instead of
   * ceil(log2 sigma). Same rank/inverseSelect contract as the reference's Huffman-shaped
@@ -33,7 +21,7 @@ final class HuffmanWaveletTree private (
     private val nodeRight: Array[Int],
     private val root: Int,
     private val nodeBv: Array[BitRankSeq] // Rank9 (fast) or RRR (compressed) per build
-) extends SymbolRankSeq {
+) {
 
   /** Occurrences of `sym` in [0, pos). */
   def rank(pos: Int, sym: Int): Int = {

@@ -888,8 +888,10 @@ object CorpusQueries {
         d.take(6).map(b => f"$b%02x").mkString
       }
       val tag = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9_]", "_")
+      // the suffix keeps the names tables were first published under, so they are reused
+      val mode = if (ShardTableCache.compress) "CompressAll" else "NoCompression"
       val tbl = s"/tmp/graft_q26_v${graft.sources.ShardIndexTable.LayoutVersion}_" +
-        s"${tag}_${dirHash}_${ShardTableCache.compressionMode}"
+        s"${tag}_${dirHash}_$mode"
       graft.sources.ShardIndexTable.publish(
         ShardTableCache.docShards(s, dir, numShards = 16).toDF(), tbl)
       val branches = Seq("merge", "the ", "zz-absent").zipWithIndex.map { case (p, i) =>

@@ -27,7 +27,7 @@ object DocShards {
   val Separator = '\n'
 
   def build(spark: SparkSession, docs: DataFrame, numShards: Int, sampleRate: Int = 8,
-      compression: FmIndex.Compression = FmIndex.NoCompression): Dataset[DocShard] = {
+      compress: Boolean = false): Dataset[DocShard] = {
     import spark.implicits._
     docs
       .select(col("doc_id").cast("long"), col("text"))
@@ -59,7 +59,7 @@ object DocShards {
             val corpus = new Array[Char](sb.length)
             sb.getChars(0, sb.length, corpus, 0)
             val fm = new FmIndexBuilder().setSampleRate(sampleRate)
-              .setCompressionMode(compression).build(corpus)
+              .setCompression(compress).build(corpus)
             // char-presence fingerprint: lets a filter on fm_count(shard, p) > 0 skip
             // the shard without deserializing (FmFingerprintPruning optimizer rule)
             DocShard(shardId, fm.serialize(), ids.toArray, offsets.toArray, lens.toArray,

@@ -27,22 +27,26 @@ private[graft] object ShardTableCache {
       cache.getOrElseUpdate(key(s, tag), build.persist()).asInstanceOf[Dataset[T]]
     }
 
-  /** SPARK_GRAFT_SHARD_COMPRESSION=off|all|wavelet flips the storage mode of every
-    * catalog shard table WITHOUT touching query code — how the driver's CORRECTNESS
-    * battery is re-run against compressed/mixed shards (results must be identical:
-    * compression is storage-only).
+  /** SPARK_GRAFT_SHARD_COMPRESSION=off|all (unset = off) turns RRR on for every catalog
+    * shard table WITHOUT touching query code — how the catalog's correctness check is
+    * re-run against compressed shards (results must be identical: compression is
+    * storage-only). Any other value throws, so a typo can never silently check
+    * uncompressed shards.
     */
-  private[graft] def compressionMode: graft.core.FmIndex.Compression =
-    sys.env.getOrElse("SPARK_GRAFT_SHARD_COMPRESSION", "off") match {
-      case "all" => graft.core.FmIndex.CompressAll
-      case "wavelet" => graft.core.FmIndex.CompressWavelet
-      case _ => graft.core.FmIndex.NoCompression
-    }
+  private[graft] def parseCompression(value: Option[String]): Boolean = value match {
+    case None | Some("off") => false
+    case Some("all") => true
+    case Some(other) => throw new IllegalArgumentException(
+      s"SPARK_GRAFT_SHARD_COMPRESSION must be off or all, got '$other'")
+  }
+
+  private[graft] def compress: Boolean =
+    parseCompression(sys.env.get("SPARK_GRAFT_SHARD_COMPRESSION"))
 
   def docShards(s: SparkSession, dir: String, numShards: Int): Dataset[DocShard] =
-    getOrBuild(s, s"docs:$dir:$numShards:$compressionMode") {
+    getOrBuild(s, s"docs:$dir:$numShards:$compress") {
       DocShards.build(s, s.read.parquet(s"$dir/documents.parquet"), numShards,
-        compression = compressionMode)
+        compress = compress)
     }
 
   def eventShards(s: SparkSession, dir: String, cfg: TranscriptPipeline.Config): Dataset[ShardRow] = {
@@ -77,6 +81,5 @@ private[graft] object ShardTableCache {
 
   /** The catalog-wide compression sweep (env knob) applied to a pipeline config. */
   private[graft] def effectiveCfg(cfg: TranscriptPipeline.Config): TranscriptPipeline.Config =
-    if (compressionMode == graft.core.FmIndex.NoCompression) cfg
-    else cfg.copy(compression = compressionMode)
+    if (compress) cfg.copy(compress = true) else cfg
 }

@@ -93,11 +93,7 @@ object TranscriptPipeline {
       maxCorpusChars: Int = 1 << 27, // split shards beyond 128M chars (int positions cap)
       rules: Seq[SinkRule] = Transcripts.DefaultRules,
       numPartitionsOpt: Option[Int] = None,
-      // NoCompression | CompressAll (RRR everywhere, size over speed) | CompressWavelet
-      // (RRR wavelet nodes + Rank9 locate-path sample marks — the mixed middle ground)
-      compression: graft.core.FmIndex.Compression = graft.core.FmIndex.NoCompression,
-      waveletEngine: graft.core.FmIndex.WaveletEngine = graft.core.FmIndex.Huffman
-        // Fbb: per-block boosting — smallest + fastest count on repetitive log text
+      compress: Boolean = false // RRR bitvectors everywhere: size over query speed
   ) {
     /** Task partitions for the shard-build shuffle. Keep numShards >= 4x numPartitions:
       * shard_ids hash into partitions, so several shards per partition smooth the
@@ -190,8 +186,7 @@ object TranscriptPipeline {
             val corpus = new Array[Char](sb.length)
             sb.getChars(0, sb.length, corpus, 0)
             val fm = new FmIndexBuilder().setSampleRate(cfg.sampleRate)
-              .setCompressionMode(cfg.compression)
-              .setWaveletEngine(cfg.waveletEngine).build(corpus)
+              .setCompression(cfg.compress).build(corpus)
             // char-presence fingerprint: the distributed analog of the reference's
             // unknown-symbol short-circuit (FmIndex.java:457-459) lifted to shard
             // granularity — routing skips shards that cannot contain a pattern's chars

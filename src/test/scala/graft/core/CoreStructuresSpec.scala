@@ -98,51 +98,6 @@ class SuffixArraySpec extends AnyFunSuite {
   }
 }
 
-class WaveletMatrixSpec extends AnyFunSuite {
-  test("rank matches naive counting for random sequences") {
-    val rnd = new Random(42)
-    for (sigma <- Seq(2, 3, 17, 300)) {
-      val n = 2000
-      val seq = Array.fill(n)(rnd.nextInt(sigma))
-      val wm = WaveletMatrix(seq, sigma)
-      for (_ <- 0 until 200) {
-        val pos = rnd.nextInt(n + 1)
-        val sym = rnd.nextInt(sigma)
-        assert(wm.rank(pos, sym) == TestOracles.countPrevOccurrences(sym, seq, pos),
-          s"sigma=$sigma pos=$pos sym=$sym")
-      }
-    }
-  }
-
-  test("inverseSelect returns (symbol, rank-before) at every position") {
-    val rnd = new Random(7)
-    val sigma = 50
-    val seq = Array.fill(3000)(rnd.nextInt(sigma))
-    val wm = WaveletMatrix(seq, sigma)
-    var i = 0
-    while (i < seq.length) {
-      val packed = wm.inverseSelect(i)
-      val sym = (packed & 0xffffL).toInt
-      val rank = (packed >>> 16).toInt
-      assert(sym == seq(i), s"access($i)")
-      assert(rank == TestOracles.countPrevOccurrences(sym, seq, i), s"rank@$i")
-      i += 1
-    }
-  }
-
-  test("serde round-trip preserves answers") {
-    val seq = Array.tabulate(500)(i => (i * 7) % 23)
-    val wm = WaveletMatrix(seq, 23)
-    val bytes = Serde.writeToByteArray[WaveletMatrix]((x, o) => x.write(o), wm)
-    val back = Serde.readFromByteArray(WaveletMatrix.read, bytes)
-    (0 until 500 by 17).foreach { p =>
-      assert(back.rank(p, p % 23) == wm.rank(p, p % 23))
-      assert(back.inverseSelect(p) == wm.inverseSelect(p))
-    }
-    assert(back.hashCode == wm.hashCode)
-  }
-}
-
 class BwtSpec extends AnyFunSuite {
   test("Wikipedia BANANA example") {
     assert(new String(Bwt.transform("BANANA".toCharArray)) == "ANNB\u0000AA")

@@ -61,17 +61,17 @@ class PipelineSpec extends AnyFunSuite {
     shards.unpersist()
   }
 
-  test("FBB + RRR engine config routes identically (wavelet engine is a pure knob)") {
-    val fbbCfg = cfg.copy(waveletEngine = graft.core.FmIndex.Fbb,
-      compression = graft.core.FmIndex.CompressAll)
+  test("RRR-compressed shards route identically") {
+    val rrrCfg = cfg.copy(compress = true)
     val base = TranscriptPipeline.route(spark,
         TranscriptPipeline.buildShards(spark, turns, cfg), cfg.rules)
       .select("sink", "conv_id", "turn_idx", "text")
-    val fbb = TranscriptPipeline.route(spark,
-        TranscriptPipeline.buildShards(spark, turns, fbbCfg), fbbCfg.rules)
+    val rrr = TranscriptPipeline.route(spark,
+        TranscriptPipeline.buildShards(spark, turns, rrrCfg), rrrCfg.rules)
       .select("sink", "conv_id", "turn_idx", "text")
-    assert(base.exceptAll(fbb).count() == 0 && fbb.exceptAll(base).count() == 0,
-      "wavelet engine choice changed routing output")
+    assert(base.count() > 0, "routing should produce rows on the synthetic corpus")
+    assert(base.exceptAll(rrr).count() == 0 && rrr.exceptAll(base).count() == 0,
+      "compressed shards changed routing output")
   }
 
   test("per-turn text equality: extract of every turn equals the input text") {
