@@ -5,40 +5,54 @@ import scala.util.Random
 
 class HuffmanWaveletTreeSpec extends AnyFunSuite {
 
-  /** Uniform input over a mid-size alphabet (no symbol dominates the Huffman shape). */
-  private val uniform: (Int, Array[Int]) = {
-    val rnd = new Random(3)
-    120 -> Array.fill(5000)(rnd.nextInt(120))
-  }
-
   test("rank matches naive counting on skewed and uniform sequences") {
     val rnd = new Random(42)
-    // skew: half the positions use symbol 0
-    val skewed = Seq(2, 3, 17, 300).map(sigma =>
-      sigma -> Array.fill(2000)(if (rnd.nextBoolean()) 0 else rnd.nextInt(sigma)))
-    for ((sigma, seq) <- skewed :+ uniform) {
+    for (sigma <- Seq(2, 3, 17, 300)) {
+      val n = 2000
+      // skew: half the positions use symbol 0
+      val seq = Array.fill(n)(if (rnd.nextBoolean()) 0 else rnd.nextInt(sigma))
       val wt = HuffmanWaveletTree(seq, sigma)
       for (_ <- 0 until 300) {
-        val pos = rnd.nextInt(seq.length + 1)
+        val pos = rnd.nextInt(n + 1)
         val sym = rnd.nextInt(sigma)
         assert(wt.rank(pos, sym) == TestOracles.countPrevOccurrences(sym, seq, pos),
-          s"sigma=$sigma n=${seq.length} pos=$pos sym=$sym")
+          s"sigma=$sigma pos=$pos sym=$sym")
       }
     }
   }
 
   test("inverseSelect returns (symbol, rank-before) at every position") {
     val rnd = new Random(7)
-    for ((sigma, seq) <- Seq(50 -> Array.fill(3000)(rnd.nextInt(50)), uniform)) {
-      val wt = HuffmanWaveletTree(seq, sigma)
-      var i = 0
-      while (i < seq.length) {
-        val packed = wt.inverseSelect(i)
-        assert((packed & 0xffffL).toInt == seq(i), s"sigma=$sigma access($i)")
-        assert((packed >>> 16).toInt == TestOracles.countPrevOccurrences(seq(i), seq, i),
-          s"sigma=$sigma rank@$i")
-        i += 1
-      }
+    val sigma = 50
+    val seq = Array.fill(3000)(rnd.nextInt(sigma))
+    val wt = HuffmanWaveletTree(seq, sigma)
+    var i = 0
+    while (i < seq.length) {
+      val packed = wt.inverseSelect(i)
+      assert((packed & 0xffffL).toInt == seq(i), s"access($i)")
+      assert((packed >>> 16).toInt == TestOracles.countPrevOccurrences(seq(i), seq, i), s"rank@$i")
+      i += 1
+    }
+  }
+
+  test("agrees with naive counting on uniform random input (sigma=120)") {
+    // no symbol dominates, so the Huffman shape is close to a balanced tree
+    val rnd = new Random(3)
+    val sigma = 120
+    val seq = Array.fill(5000)(rnd.nextInt(sigma))
+    val wt = HuffmanWaveletTree(seq, sigma)
+    for (_ <- 0 until 500) {
+      val pos = rnd.nextInt(seq.length + 1)
+      val sym = rnd.nextInt(sigma)
+      assert(wt.rank(pos, sym) == TestOracles.countPrevOccurrences(sym, seq, pos),
+        s"pos=$pos sym=$sym")
+    }
+    var i = 0
+    while (i < seq.length) {
+      val packed = wt.inverseSelect(i)
+      assert((packed & 0xffffL).toInt == seq(i), s"access($i)")
+      assert((packed >>> 16).toInt == TestOracles.countPrevOccurrences(seq(i), seq, i), s"rank@$i")
+      i += 1
     }
   }
 
