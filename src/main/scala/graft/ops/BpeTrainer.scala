@@ -50,16 +50,6 @@ object BpeTrainer {
       slice(syms, lit(2), size(syms) - 1),
       (a, b) => struct(a.as("l"), b.as("r")))
 
-  /** Default row cap for the local training fast path: vocab tables at or under
-    * this many (word, freq) rows train on the driver in ONE bounded job (the same
-    * adaptive-threshold contract as a broadcast join); larger vocabs take the
-    * distributed per-round loop unchanged. ~1M rows ≈ tens of MB — the bound is
-    * the threshold, never the corpus (a 100 TB corpus with a 10^8-word vocab
-    * exceeds it and stays distributed).
-    */
-  def localMaxDefault: Int =
-    sys.env.getOrElse("SPARK_GRAFT_BPE_LOCAL_MAX", (1 << 20).toString).toInt
-
   /** Train `k` merges over a (w: string, f: long) word-frequency table. Ties on the
     * pair count break by (l, r) ascending, so the learned merge list is deterministic.
     * Returns the merge table and the final symbolized word-frequency frame
@@ -72,19 +62,16 @@ object BpeTrainer {
     * paying per-round job latency for it is pure overhead.
     */
   def train(wordFreq: DataFrame, k: Int,
-      localMax: Int = localMaxDefault): (Seq[MergeRow], DataFrame) = {
-    if (localMax > 0) {
-      val head = wordFreq.select(col("w"), col("f")).limit(localMax + 1).collect()
-      if (head.length <= localMax) {
+      localMax: Int = LocalFit.MaxRows): (Seq[MergeRow], DataFrame) =
+    LocalFit.collectIfSmall(wordFreq.select(col("w"), col("f")), localMax) match {
+      case Some(head) =>
         val spark = wordFreq.sparkSession
         import spark.implicits._
         val (merges, words) = trainLocal(
           head.map(r => (r.getString(0), r.getLong(1))), k)
-        return (merges, spark.createDataset(words.toSeq).toDF("w", "f", "syms"))
-      }
+        (merges, spark.createDataset(words.toSeq).toDF("w", "f", "syms"))
+      case None => trainDistributed(wordFreq, k)
     }
-    trainDistributed(wordFreq, k)
-  }
 
   /** UTF-8 byte-wise string comparison — Spark's string ordering (UTF8String
     * compares unsigned bytes; Java String.compareTo compares UTF-16 units, which

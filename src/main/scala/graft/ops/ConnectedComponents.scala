@@ -26,16 +26,6 @@ object ConnectedComponents {
     */
   def run(edges: DataFrame, maxIters: Int = 50): DataFrame = runWithRounds(edges, maxIters)._1
 
-  /** Default edge cap for the local union-find fast path: edge sets at or under
-    * this many rows resolve on the driver in ONE bounded job (the adaptive-threshold
-    * contract of a broadcast join); larger graphs take the distributed loop
-    * unchanged. A dedup edge set is proportional to the number of DUPLICATED docs,
-    * so at 100 TB it exceeds the cap and stays distributed — the threshold bounds
-    * driver memory, never the corpus.
-    */
-  def localMaxDefault: Int =
-    sys.env.getOrElse("SPARK_GRAFT_CC_LOCAL_MAX", (1 << 20).toString).toInt
-
   /** run + the number of rounds executed (spec hook: a 2^k chain must finish in
     * O(k) rounds, not O(2^k)). `pointerJump = false` drops the extra per-round join
     * for workloads known to be clique-shaped (diameter 2-3), where jumping cannot
@@ -46,22 +36,18 @@ object ConnectedComponents {
     */
   def runWithRounds(edges: DataFrame, maxIters: Int = 50,
       pointerJump: Boolean = true,
-      localMax: Int = localMaxDefault): (DataFrame, Int) = {
-    if (localMax > 0) {
-      val aC = edges.columns(0)
-      val bC = edges.columns(1)
-      val head = edges
-        .select(col(aC).cast("long").as("a"), col(bC).cast("long").as("b"))
-        .limit(localMax + 1).collect()
-      if (head.length <= localMax) {
+      localMax: Int = LocalFit.MaxRows): (DataFrame, Int) = {
+    val longEdges = edges.select(col(edges.columns(0)).cast("long").as("a"),
+      col(edges.columns(1)).cast("long").as("b"))
+    LocalFit.collectIfSmall(longEdges, localMax) match {
+      case Some(head) =>
         val spark = edges.sparkSession
         import spark.implicits._
-        return (spark.createDataset(
+        (spark.createDataset(
           localComponents(head.map(r => (r.getLong(0), r.getLong(1)))).toSeq)
           .toDF("node", "cluster_id"), 0)
-      }
+      case None => runDistributed(edges, maxIters, pointerJump)
     }
-    runDistributed(edges, maxIters, pointerJump)
   }
 
   /** Union-find with min-id roots over an in-memory edge list — identical labeling

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
 
 /** FM-Index, text-analysis, dedup, similarity and multimodal operators over the
   * `documents` / `embeddings` / `events` testdata tables, each with a DuckDB oracle.
@@ -83,11 +84,6 @@ object CorpusQueries {
     cum.groupBy(col("lang")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** q88 body over any (doc_id, lang, text) frame — q91 reuses it over its
-    * filtered/deduped survivors, so the LM and the cutoffs are computed over
-    * exactly the corpus being bucketed. Returns one row per input doc with
-    * (doc_id, lang, n_bigrams, lm_hits, score_fp, bucket), unordered.
-    */
   /** Per-(doc, bigram) counts as ONE typed map — the (doc_id, …) grouping key makes
     * the aggregation row-local (every bigram of a doc lives in its row), so the
     * kernel emits pre-aggregated counts with NO explode and NO shuffle; the old
@@ -102,18 +98,17 @@ object CorpusQueries {
       .as[(Long, String, String)]
       .mapPartitions(_.flatMap { case (id, lang, text) =>
         val w = text.split(" ", -1)
-        val counts = scala.collection.mutable.HashMap.empty[String, Long]
-        var i = 0
-        while (i + 1 < w.length) {
-          val bg = w(i) + " " + w(i + 1)
-          counts.update(bg, counts.getOrElse(bg, 0L) + 1L)
-          i += 1
-        }
-        counts.iterator.map { case (bg, c) => (id, lang, bg, c) }
+        countKeys((0 until w.length - 1).iterator.map(i => w(i) + " " + w(i + 1)))
+          .iterator.map { case (bg, c) => (id, lang, bg, c) }
       })
       .toDF("doc_id", "lang", "bigram", "bn")
   }
 
+  /** q88 body over any (doc_id, lang, text) frame — q91 reuses it over its
+    * filtered/deduped survivors, so the LM and the cutoffs are computed over
+    * exactly the corpus being bucketed. Returns one row per input doc with
+    * (doc_id, lang, n_bigrams, lm_hits, score_fp, bucket), unordered.
+    */
   private[graft] def ccnetBuckets(docs: DataFrame): DataFrame = {
     // per-(doc, bigram) COUNTS, lazily checkpointed: the LM fit, the scoring agg
     // and (through `scored`) the cutoff histogram all read this compact frame —
@@ -182,16 +177,9 @@ object CorpusQueries {
       .as[(Long, String, String)]
       .mapPartitions(_.map { case (id, lang, text) =>
         val w = text.split(" ", -1)
-        val mult = scala.collection.mutable.HashMap.empty[String, Long]
-        var wchars = 0L
-        var i = 0
-        while (i < w.length) {
-          wchars += cpCount(w(i))
-          mult.update(w(i), mult.getOrElse(w(i), 0L) + 1L)
-          i += 1
-        }
-        var top = 0L
-        mult.valuesIterator.foreach(v => if (v > top) top = v)
+        val wchars = w.iterator.map(cpCount).sum
+        val mult = countKeys(w.iterator)
+        val top = mult.valuesIterator.max
         var nStop = 0L
         if (mult.contains("the")) nStop += 1
         if (mult.contains("a")) nStop += 1
@@ -236,12 +224,9 @@ object CorpusQueries {
         .mapPartitions { it =>
           val md5hex = md5HexFn()
           it.flatMap { case (id, lang, src, text) =>
-            val counts = scala.collection.mutable.HashMap.empty[Long, Long]
-            text.split(" ", -1).foreach { w =>
-              val f = java.lang.Long.parseLong(md5hex(w).substring(0, 3), 16)
-              counts.update(f, counts.getOrElse(f, 0L) + 1L)
-            }
-            counts.iterator.map { case (f, c) => (id, lang, src, f, c) }
+            countKeys(text.split(" ", -1).iterator
+              .map(w => java.lang.Long.parseLong(md5hex(w).substring(0, 3), 16)))
+              .iterator.map { case (f, c) => (id, lang, src, f, c) }
           }
         }
         .toDF("doc_id", "lang", "source", "f", "cnt")
@@ -281,13 +266,7 @@ object CorpusQueries {
       .mapPartitions(_.flatMap { case (id, text) =>
         val w = text.split(" ", -1)
         val dl = w.length.toLong
-        val counts = scala.collection.mutable.HashMap.empty[String, Long]
-        var i = 0
-        while (i < w.length) {
-          counts.update(w(i), counts.getOrElse(w(i), 0L) + 1L)
-          i += 1
-        }
-        counts.iterator.map { case (term, c) => (id, dl, term, c) }
+        countKeys(w.iterator).iterator.map { case (term, c) => (id, dl, term, c) }
       })
       .toDF("doc_id", "dl", "term", "tf")
       .localCheckpoint(false)
@@ -427,7 +406,7 @@ object CorpusQueries {
     * serializable nor thread-safe — construct INSIDE mapPartitions). Byte-for-byte
     * the hex md5() expression both engines compute.
     */
-  private def md5HexFn(): String => String = {
+  private[ops] def md5HexFn(): String => String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     (x: String) => {
       md.reset()
@@ -441,6 +420,26 @@ object CorpusQueries {
       }
       sb.toString
     }
+  }
+
+  /** Multiplicity of every key in `keys` — the row-local counting kernel of the
+    * typed per-document aggregations (terms, bigrams, md5 feature buckets).
+    */
+  private def countKeys[K](keys: Iterator[K]): scala.collection.mutable.HashMap[K, Long] = {
+    val counts = scala.collection.mutable.HashMap.empty[K, Long]
+    keys.foreach(k => counts.update(k, counts.getOrElse(k, 0L) + 1L))
+    counts
+  }
+
+  /** The distinct word 3-gram shingles of `text` (words of split(text, ' ')) in
+    * first-seen order — the `duckShingles` list without its duplicates.
+    */
+  private def shingleSet(text: String): java.util.LinkedHashSet[String] = {
+    val w = text.split(" ", -1)
+    val set = new java.util.LinkedHashSet[String]()
+    var i = 0
+    while (i + 2 < w.length) { set.add(w(i) + " " + w(i + 1) + " " + w(i + 2)); i += 1 }
+    set
   }
 
   /** Code-point count of `s` — Spark's length()/substr() contract (UTF8String
@@ -506,6 +505,28 @@ object CorpusQueries {
     shiftright(sim, 16).bitwiseAND(lit(0xffffL)),
     shiftright(sim, 32).bitwiseAND(lit(0xffffL)),
     shiftright(sim, 48).bitwiseAND(lit(0xffffL)))
+
+  /** Distinct (doc_a < doc_b, hamming) pairs of the 64-bit signature column `sigCol`
+    * within hamming distance 3, ordered: candidates from an equi-join on the four
+    * `simhashBands` quarters (pigeonhole: three differing bits leave one quarter
+    * intact, so recall is exact), then an exact bit_count(xor) filter. Shared by
+    * q37 (simhash) and q95 (dhash).
+    */
+  private def hammingPairs(sigs: DataFrame, sigCol: String): DataFrame = {
+    val bands = sigs.select(col("doc_id"), col(sigCol),
+      posexplode(simhashBands(col(sigCol))).as(Seq("band_idx", "band_val")))
+    val a = bands.select(col("doc_id").as("doc_a"), col(sigCol).as("sa"),
+      col("band_idx"), col("band_val"))
+    val b = bands.select(col("doc_id").as("doc_b"), col(sigCol).as("sb"),
+      col("band_idx").as("bi2"), col("band_val").as("bv2"))
+    a.join(b, col("band_idx") === col("bi2") && col("band_val") === col("bv2") &&
+        col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long").as("hamming"))
+      .filter(col("hamming") <= 3)
+      .distinct()
+      .orderBy(col("doc_a"), col("doc_b"))
+  }
 
   private def words(c: Column): Column = split(c, " ")
 
@@ -596,13 +617,6 @@ object CorpusQueries {
 
   private def minhashFromHs(hs: Column, j: Int): Column =
     array_min(transform(hs, h => h.bitwiseXOR(lit(MinhashSalts(j)))))
-
-  private def dotD(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  private def cosine(a: Column, b: Column): Column =
-    dotD(a, b) / (sqrt(dotD(a, a)) * sqrt(dotD(b, b)))
 
   // ---------------------------------------------------------------- helpers (oracle side)
 
@@ -698,17 +712,6 @@ object CorpusQueries {
       |    ts
       |  FROM events)""".stripMargin
 
-  /** MinHash-LSH near-dup candidate pairs (doc_a < doc_b), shared by q41 and the
-    * dedup-clustering query q44. Signatures run in a typed mapPartitions kernel
-    * (interpreted higher-order lambdas cost ~10x here); the band join + dedup stay
-    * declarative Catalyst — candidates are an EQUI-JOIN on (band_idx, band), never
-    * all-pairs.
-    *
-    * `maxBucket` is the web-scale hot-bucket guard (see SimilarityLsh.candidatePairs):
-    * a band value shared by k docs (boilerplate pages, empty-ish docs) emits k^2/2
-    * candidate rows in one shuffle partition; buckets above the cap are dropped before
-    * the self-join via a partial+final count. Default None = oracle-exact.
-    */
   /** Catalog-wide LSH hot-bucket cap: `SPARK_GRAFT_LSH_MAXBUCKET=<k>` flips every
     * band join (q41/q44/q52) to the capped web-scale shape without touching query
     * code — the ScaleProbe 100x run is why: non-clustered embeddings degrade 4-bit
@@ -716,27 +719,36 @@ object CorpusQueries {
     * fan-out at k^2/2. Unset (the driver's CORRECTNESS runs) = None = oracle-exact.
     */
   private[graft] def lshMaxBucket: Option[Int] =
-    sys.env.get("SPARK_GRAFT_LSH_MAXBUCKET").map(_.toInt)
+    parsePositiveInt("SPARK_GRAFT_LSH_MAXBUCKET", sys.env.get("SPARK_GRAFT_LSH_MAXBUCKET"))
 
+  /** A numeric env knob `name`: unset = None, a positive int = Some(it); anything
+    * else throws naming the variable — a 0 cap would silently empty the LSH joins
+    * and a 0 k would fail deep inside the k-means fit.
+    */
+  private[graft] def parsePositiveInt(name: String, value: Option[String]): Option[Int] =
+    value.map { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$v'"))
+    }
+
+  /** MinHash-LSH near-dup candidate pairs (doc_a < doc_b), shared by q41 and the
+    * dedup-clustering query q44. Signatures run in a typed mapPartitions kernel
+    * (interpreted higher-order lambdas cost ~10x here); the band join + dedup stay
+    * declarative Catalyst — candidates are an EQUI-JOIN on (band_idx, band_val),
+    * never all-pairs.
+    *
+    * `maxBucket` is the web-scale hot-bucket guard (see SimilarityLsh.candidatePairs):
+    * a band value shared by k docs (boilerplate pages, empty-ish docs) emits k^2/2
+    * candidate rows in one shuffle partition; buckets above the cap are dropped before
+    * the self-join via a partial+final count. Default None = oracle-exact.
+    */
   def minhashLshPairs(s: SparkSession, dir: String,
       maxBucket: Option[Int] = lshMaxBucket): DataFrame = {
     import s.implicits._
     val bands = tWide(s, dir, "documents")
       .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def md5hex(x: String): String = {
-          md.reset()
-          val d = md.digest(x.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          val sb = new java.lang.StringBuilder(32)
-          var i = 0
-          while (i < 16) {
-            sb.append(Character.forDigit((d(i) >> 4) & 0xf, 16))
-            sb.append(Character.forDigit(d(i) & 0xf, 16))
-            i += 1
-          }
-          sb.toString
-        }
+        val md5hex = md5HexFn()
         it.flatMap { case (docId, text) =>
           val w = text.split(" ", -1)
           val mins = Array.fill(8)(Long.MaxValue)
@@ -757,32 +769,17 @@ object CorpusQueries {
             (docId, b, md5hex(s"${mins(2 * b)}:${mins(2 * b + 1)}")))
         }
       }
-      .toDF("doc_id", "band_idx", "band")
+      .toDF("doc_id", "band_idx", "band_val")
     // NOT checkpointed although both self-join sides recompute the kernel:
     // measured r06 — a localCheckpoint here made q41/q44/q44b 0.2-0.5 s SLOWER
     // because the plan barrier hides the band frame's small size estimate and the
     // candidate self-join loses its broadcast plan for full shuffle+sort; the
     // duplicated kernel is the cheaper side of that trade at every tested SF.
-    val capped = maxBucket match {
-      case None =>
-        // loud guard: an uncapped run whose worst bucket exceeds the budget warns
-        // with the remedy knob named (SimilarityLshSpec pins the adversarial case);
-        // memoized per corpus dir — q41/q44/q44b share these bands, one probe covers all
-        if (SimilarityLsh.fanoutGuardThreshold > 0 &&
-            SimilarityLsh.guardOnce(s"minhash:$dir"))
-          SimilarityLsh.fanoutWarning(bands, Seq("band_idx", "band"),
-            SimilarityLsh.fanoutGuardThreshold)
-        bands
-      case Some(cap) =>
-        val sizes = bands.groupBy(col("band_idx"), col("band")).count()
-          .filter(col("count") <= cap).drop("count")
-        bands.join(sizes, Seq("band_idx", "band"))
-    }
-    val a = capped.select(col("doc_id").as("doc_a"), col("band_idx"), col("band"))
-    val c = capped.select(col("doc_id").as("doc_b"), col("band_idx").as("bi2"), col("band").as("b2"))
-    a.join(c, col("band_idx") === col("bi2") && col("band") === col("b2") &&
-        col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    // The guard key is the corpus dir: q41/q44/q44b share these bands, so one
+    // fan-out probe covers all three.
+    SimilarityLsh.candidatePairs(bands, "doc_id", maxBucket = maxBucket,
+      guardKey = Some(s"minhash:$dir"))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
   }
 
   // ---------------------------------------------------------------------------- queries
@@ -1034,19 +1031,9 @@ object CorpusQueries {
         .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
         .mapPartitions { it =>
           it.flatMap { case (docId, text) =>
-            val w = text.split(" ", -1)
-            if (w.length < 3) Iterator.empty
-            else {
-              val set = new java.util.LinkedHashSet[String]()
-              var i = 0
-              while (i + 2 < w.length) { set.add(w(i) + " " + w(i + 1) + " " + w(i + 2)); i += 1 }
-              val n = set.size
-              val itr = set.iterator()
-              new Iterator[(Long, Int, String)] {
-                def hasNext: Boolean = itr.hasNext
-                def next(): (Long, Int, String) = (docId, n, itr.next())
-              }
-            }
+            val set = shingleSet(text)
+            val n = set.size
+            set.asScala.iterator.map(sh => (docId, n, sh))
           }
         }.toDF("doc_id", "n_sh", "shingle")
       val a = ex.select(col("doc_id").as("doc_a"), col("n_sh").as("na"), col("shingle"))
@@ -1104,14 +1091,8 @@ object CorpusQueries {
       val tf = tWide(s, dir, "documents")
         .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
         .mapPartitions(_.flatMap { case (id, text) =>
-          val w = text.split(" ", -1)
-          val counts = scala.collection.mutable.HashMap.empty[String, Long]
-          var i = 0
-          while (i < w.length) {
-            counts.update(w(i), counts.getOrElse(w(i), 0L) + 1L)
-            i += 1
-          }
-          counts.iterator.map { case (term, c) => (id, term, c) }
+          countKeys(text.split(" ", -1).iterator)
+            .iterator.map { case (term, c) => (id, term, c) }
         })
         .toDF("doc_id", "term", "tf")
       val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -1238,14 +1219,8 @@ object CorpusQueries {
       val tok = tWide(s, dir, "documents")
         .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
         .mapPartitions(_.flatMap { case (id, text) =>
-          val w = text.split(" ", -1)
-          val counts = scala.collection.mutable.HashMap.empty[String, Long]
-          var i = 0
-          while (i < w.length) {
-            counts.update(w(i), counts.getOrElse(w(i), 0L) + 1L)
-            i += 1
-          }
-          counts.iterator.map { case (term, c) => (id, term, c) }
+          countKeys(text.split(" ", -1).iterator)
+            .iterator.map { case (term, c) => (id, term, c) }
         })
         .toDF("doc_id", "term", "c")
       val vocab = rankedIds(
@@ -1274,15 +1249,7 @@ object CorpusQueries {
           val md5hex = md5HexFn()
           it.flatMap { case (id, text) =>
             val split = if (md5hex(text).charAt(0) <= 'c') "train" else "eval"
-            val w = text.split(" ", -1)
-            val set = new java.util.LinkedHashSet[String]()
-            var i = 0
-            while (i + 2 < w.length) { set.add(w(i) + " " + w(i + 1) + " " + w(i + 2)); i += 1 }
-            val itr = set.iterator()
-            new Iterator[(Long, String, String)] {
-              def hasNext: Boolean = itr.hasNext
-              def next(): (Long, String, String) = (id, split, itr.next())
-            }
+            shingleSet(text).asScala.iterator.map(sh => (id, split, sh))
           }
         }
         .toDF("doc_id", "split", "shingle")
@@ -1427,7 +1394,8 @@ object CorpusQueries {
     //     bit-for-bit at the default k. ---
     "q58_semantic_dedup" -> ((s, dir) =>
       semanticDedup(s, dir,
-        k = sys.env.getOrElse("SPARK_GRAFT_SEMDEDUP_K", "10").toInt)),
+        k = parsePositiveInt("SPARK_GRAFT_SEMDEDUP_K", sys.env.get("SPARK_GRAFT_SEMDEDUP_K"))
+          .getOrElse(10))),
 
     // --- int8 symmetric embedding quantization: q = round(x * 127 / max|x|) per
     //     vector — the storage step of a quantized vector index (4x smaller than
@@ -1475,19 +1443,7 @@ object CorpusQueries {
       val sim = simhashSignatures(s, dir)
       // not checkpointed: the duplicate simhash kernel is cheaper than losing the
       // self-join's broadcast plan behind a stats-hiding barrier (measured r06)
-      val bands = sim.select(col("doc_id"), col("simhash"),
-        posexplode(simhashBands(col("simhash"))).as(Seq("band_idx", "band_val")))
-      val a = bands.select(col("doc_id").as("doc_a"), col("simhash").as("sa"),
-        col("band_idx"), col("band_val"))
-      val b = bands.select(col("doc_id").as("doc_b"), col("simhash").as("sb"),
-        col("band_idx").as("bi2"), col("band_val").as("bv2"))
-      a.join(b, col("band_idx") === col("bi2") && col("band_val") === col("bv2") &&
-          col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long").as("hamming"))
-        .filter(col("hamming") <= 3)
-        .distinct()
-        .orderBy(col("doc_a"), col("doc_b"))
+      hammingPairs(sim, "simhash")
     }),
 
     // --- ANN baseline: brute-force cosine top-5, double math, total order ---
@@ -1500,7 +1456,7 @@ object CorpusQueries {
         .orderBy(col("cos").desc, col("neighbor_id"))
       c.crossJoin(broadcast(q))
         .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("cos", cosine(col("qe"), col("ce")))
+        .withColumn("cos", SimilarityLsh.cosine(col("qe"), col("ce")))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"))
@@ -1533,7 +1489,7 @@ object CorpusQueries {
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("cos").desc, col("neighbor_id"))
       c.join(broadcast(q), col("qb") === col("cb") && col("neighbor_id") =!= col("query_id"))
-        .withColumn("cos", cosine(col("qe"), col("ce")))
+        .withColumn("cos", SimilarityLsh.cosine(col("qe"), col("ce")))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 3)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cb").as("bucket"))
@@ -1569,7 +1525,7 @@ object CorpusQueries {
       val ivf = cand
         .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("qe")), "query_id")
         .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce")), "neighbor_id")
-        .withColumn("cos", cosine(col("qe"), col("ce")))
+        .withColumn("cos", SimilarityLsh.cosine(col("qe"), col("ce")))
         .withColumn("rank", row_number().over(wI).cast("long"))
         .filter(col("rank") <= 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"))
@@ -1579,7 +1535,7 @@ object CorpusQueries {
       val brute = emb.select(col("vec_id").as("bn"), col("embedding").as("ce"))
         .crossJoin(broadcast(q))
         .filter(col("bn") =!= col("bq"))
-        .withColumn("cos", cosine(col("qe"), col("ce")))
+        .withColumn("cos", SimilarityLsh.cosine(col("qe"), col("ce")))
         .withColumn("rank", row_number().over(wB))
         .filter(col("rank") <= 5)
         .select(col("bq"), col("bn"))
@@ -1740,7 +1696,7 @@ object CorpusQueries {
       val reranked = shortlist
         .join(emb.select(col("vec_id").as("query_id"), col("embedding").as("qe")), "query_id")
         .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce")), "neighbor_id")
-        .withColumn("cos", cosine(col("qe"), col("ce")))
+        .withColumn("cos", SimilarityLsh.cosine(col("qe"), col("ce")))
         .withColumn("rank", row_number().over(wI).cast("long"))
         .filter(col("rank") <= 5)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc"))
@@ -1750,7 +1706,7 @@ object CorpusQueries {
       val brute = emb.select(col("vec_id").as("bn"), col("embedding").as("ce"))
         .crossJoin(broadcast(q))
         .filter(col("bn") =!= col("bq"))
-        .withColumn("cos", cosine(col("qe"), col("ce")))
+        .withColumn("cos", SimilarityLsh.cosine(col("qe"), col("ce")))
         .withColumn("rank", row_number().over(wB))
         .filter(col("rank") <= 5)
         .select(col("bq"), col("bn"))
@@ -1897,19 +1853,7 @@ object CorpusQueries {
           }
         }
         .toDF("doc_id", "dhash")
-      val bands = sigs.select(col("doc_id"), col("dhash"),
-        posexplode(simhashBands(col("dhash"))).as(Seq("band_idx", "band_val")))
-      val a = bands.select(col("doc_id").as("doc_a"), col("dhash").as("sa"),
-        col("band_idx"), col("band_val"))
-      val b = bands.select(col("doc_id").as("doc_b"), col("dhash").as("sb"),
-        col("band_idx").as("bi2"), col("band_val").as("bv2"))
-      a.join(b, col("band_idx") === col("bi2") && col("band_val") === col("bv2") &&
-          col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long").as("hamming"))
-        .filter(col("hamming") <= 3)
-        .distinct()
-        .orderBy(col("doc_a"), col("doc_b"))
+      hammingPairs(sigs, "dhash")
     }),
 
     // --- audio tone detection over the REAL codec path: a square-wave tone of

@@ -84,22 +84,6 @@ object IvfKmeans {
     finally quant.unpersist(blocking = false)
   }
 
-  /** fit over an ALREADY-QUANTIZED (and typically caller-persisted) vector table —
-    * the shared-cache path for composite indexes running several fits over the
-    * same vectors (q54 shares one persisted quant between the coarse IVF fit and
-    * the PQ codebook fits). Bit-identical to fit(): same seeds, same integer
-    * partial sums, same centroid division.
-    */
-  /** Default row cap for the local Lloyd fast path: vector tables at or under this
-    * many rows fit on the driver over ONE bounded collect instead of 1 + iters
-    * distributed jobs (the adaptive-threshold contract of a broadcast join). The
-    * integer partial sums are associative, so the local fit is bit-identical to the
-    * distributed one (IvfKmeansSpec pins it); above the cap the distributed loop
-    * runs unchanged — the threshold bounds driver memory, never the corpus.
-    */
-  def localMaxDefault: Int =
-    sys.env.getOrElse("SPARK_GRAFT_LOCAL_FIT_MAX", (1 << 20).toString).toInt
-
   /** Lloyd iterations over an in-memory quantized table — the same seeds, integer
     * sums and centroid re-quantization as the distributed loop.
     */
@@ -124,15 +108,19 @@ object IvfKmeans {
     model
   }
 
+  /** fit over an ALREADY-QUANTIZED (and typically caller-persisted) vector table —
+    * the shared-cache path for composite indexes running several fits over the
+    * same vectors (q54 shares one persisted quant between the coarse IVF fit and
+    * the PQ codebook fits). Bit-identical to fit(): same seeds, same integer
+    * partial sums, same centroid division. At most `localMax` rows fit on the driver
+    * ([[LocalFit]]); the integer partial sums are associative, so that local fit is
+    * bit-identical to the distributed one (IvfKmeansSpec pins it).
+    */
   def fitQuantized(quant: Dataset[(Long, Array[Long])], k: Int, iters: Int,
-      localMax: Int = localMaxDefault): Model = {
+      localMax: Int = LocalFit.MaxRows): Model = {
     val spark = quant.sparkSession
     import spark.implicits._
-    if (localMax > 0) {
-      val head = quant.limit(localMax + 1).collect()
-      if (head.length <= localMax) return fitLocal(head, k, iters)
-    }
-    {
+    LocalFit.collectIfSmall(quant, localMax).map(fitLocal(_, k, iters)).getOrElse {
       val seeds = quant.filter(_._1 < k).collect().sortBy(_._1)
         .map { case (id, q) => (id.toInt, q) }
       require(seeds.length == k, s"need vec_ids 0..${k - 1} as seeds, found ${seeds.length}")

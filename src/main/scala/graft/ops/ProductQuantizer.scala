@@ -84,21 +84,18 @@ object ProductQuantizer {
     * IVF fit.
     */
   def fitQuantized(quant: Dataset[(Long, Array[Long])], numSub: Int, subdim: Int,
-      k: Int, iters: Int, localMax: Int = IvfKmeans.localMaxDefault): Pq = {
+      k: Int, iters: Int, localMax: Int = LocalFit.MaxRows): Pq = {
     val spark = quant.sparkSession
     import spark.implicits._
     def slice(q: Array[Long], m: Int): Array[Long] =
       java.util.Arrays.copyOfRange(q, m * subdim, (m + 1) * subdim)
-    if (localMax > 0) {
-      // local fast path (see IvfKmeans.localMaxDefault): each subspace fit is the
-      // same integer Lloyd over the sliced vectors — bit-identical by associativity
-      val head = quant.limit(localMax + 1).collect()
-      if (head.length <= localMax)
-        return Pq(subdim, Array.tabulate(numSub) { m =>
-          IvfKmeans.fitLocal(head.map { case (id, q) => (id, slice(q, m)) }, k, iters)
-        })
-    }
-    locally {
+    // local fast path (see LocalFit): each subspace fit is the same integer
+    // Lloyd over the sliced vectors — bit-identical by associativity
+    LocalFit.collectIfSmall(quant, localMax).map { head =>
+      Pq(subdim, Array.tabulate(numSub) { m =>
+        IvfKmeans.fitLocal(head.map { case (id, q) => (id, slice(q, m)) }, k, iters)
+      })
+    }.getOrElse {
       val seeds = quant.filter(_._1 < k).collect().sortBy(_._1)
       require(seeds.length == k, s"need vec_ids 0..${k - 1} as seeds, found ${seeds.length}")
       var models = Array.tabulate(numSub) { m =>

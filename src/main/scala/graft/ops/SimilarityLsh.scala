@@ -60,18 +60,6 @@ object SimilarityLsh {
       posexplode(array(vals: _*)).as(Seq("band_idx", "band_val"))): _*)
   }
 
-  /** Distinct unordered candidate pairs (id_a < id_b) sharing any band (and every
-    * `matchCols` group key, e.g. a media `kind`). The equi-join shuffles on the band
-    * key — no cartesian anywhere.
-    *
-    * `maxBucket`: web-scale guard against degenerate buckets (a band value shared by k
-    * rows emits k^2/2 candidates inside ONE shuffle partition — all-zero embeddings,
-    * boilerplate docs). Buckets larger than the cap are dropped BEFORE the self-join via
-    * a partial+final count on the band key, bounding any bucket's candidate fan-out at
-    * maxBucket^2/2. Costs recall only on pairs whose every shared band is degenerate —
-    * exactly the pairs an exact rerank would mostly reject. Default None keeps the
-    * oracle-exact behavior (q41/q44/q52 gates compare against a capless SQL pipeline).
-    */
   /** Uncapped fan-out guard: a partial+final count over the band keys (map-side
     * combine absorbs the hot key, same shape the cap uses), warning loudly when any
     * bucket exceeds `threshold` rows — its self-join alone emits > threshold²/2
@@ -105,12 +93,18 @@ object SimilarityLsh {
   // (q41/q44/q44b share the minhash bands) should pay it once, not per query
   private val guarded = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
 
-  /** True the FIRST time `key` is seen at the current threshold (callers with a
-    * stable corpus key run the guard once per JVM).
+  /** Distinct unordered candidate pairs (id_a < id_b) sharing any band (and every
+    * `matchCols` group key, e.g. a media `kind`). The equi-join shuffles on the band
+    * key — no cartesian anywhere.
+    *
+    * `maxBucket`: web-scale guard against degenerate buckets (a band value shared by k
+    * rows emits k^2/2 candidates inside ONE shuffle partition — all-zero embeddings,
+    * boilerplate docs). Buckets larger than the cap are dropped BEFORE the self-join via
+    * a partial+final count on the band key, bounding any bucket's candidate fan-out at
+    * maxBucket^2/2. Costs recall only on pairs whose every shared band is degenerate —
+    * exactly the pairs an exact rerank would mostly reject. Default None keeps the
+    * oracle-exact behavior (q41/q44/q52 gates compare against a capless SQL pipeline).
     */
-  private[graft] def guardOnce(key: String): Boolean =
-    guarded.add((key, fanoutGuardThreshold))
-
   def candidatePairs(bandsDf: DataFrame, idCol: String, matchCols: Seq[String] = Nil,
       maxBucket: Option[Int] = None, guardKey: Option[String] = None): DataFrame = {
     val keys = Seq("band_idx", "band_val") ++ matchCols

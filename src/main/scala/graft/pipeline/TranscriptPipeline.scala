@@ -204,17 +204,17 @@ object TranscriptPipeline {
 
   // ------------------------------------------------------------------ route stage
 
-  /** Evaluates every routing rule against every shard; emits one row per (sink, turn)
-    * with the overlapping-match count and the turn text RECONSTRUCTED via FM extract.
-    * A match is attributed to the turn containing its start position.
-    */
   /** True iff every char of `pattern` is present in the shard's fingerprint
     * (delegates to the shared kernel so builder and test can never drift).
     */
   def mayContain(alphaBits: Array[Long], pattern: String): Boolean =
     graft.functions.AlphaFingerprint.mayContain(alphaBits, pattern)
 
-  /** `locateCap` guards against pathological high-frequency patterns: locateAll costs
+  /** Evaluates every routing rule against every shard; emits one row per (sink, turn)
+    * with the overlapping-match count and the turn text RECONSTRUCTED via FM extract.
+    * A match is attributed to the turn containing its start position.
+    *
+    * `locateCap` guards against pathological high-frequency patterns: locateAll costs
     * O(occurrences x sampleRate) LF-walks, which for a pattern matching a large fraction
     * of the corpus exceeds the cost of simply scanning the turns. Above the cap, routing
     * falls back to extracting each turn once (O(corpus), bounded) and counting

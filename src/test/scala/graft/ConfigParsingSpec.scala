@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.ShardTableCache
+import graft.ops.{CorpusQueries, ShardTableCache}
 import graft.pipeline.SinkRule
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +14,19 @@ class ConfigParsingSpec extends AnyFunSuite {
     for (bad <- Seq("wavelet", "ALL", "on", "", "all ")) {
       val e = intercept[IllegalArgumentException](ShardTableCache.parseCompression(Some(bad)))
       assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("numeric catalog knobs accept only positive integers; unset means the default") {
+    for (name <- Seq("SPARK_GRAFT_LSH_MAXBUCKET", "SPARK_GRAFT_SEMDEDUP_K")) {
+      assert(CorpusQueries.parsePositiveInt(name, None).isEmpty)
+      assert(CorpusQueries.parsePositiveInt(name, Some("1")).contains(1))
+      assert(CorpusQueries.parsePositiveInt(name, Some("64")).contains(64))
+      for (bad <- Seq("0", "-1", "abc", "", " 8", "1.5", "99999999999")) {
+        val e = intercept[IllegalArgumentException](
+          CorpusQueries.parsePositiveInt(name, Some(bad)))
+        assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
     }
   }
 

@@ -36,6 +36,33 @@ class ModulesSpec extends AnyFunSuite {
       s"approx p50 drifted: approx=$approxP exact=$exactP")
   }
 
+  test("md5HexFn equals Spark's md5 over the UTF-8 bytes on random strings") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20)
+    def pick(chars: IndexedSeq[Char]): String =
+      Seq.fill(rnd.nextInt(12))(chars(rnd.nextInt(chars.length))).mkString
+    val ascii = (' ' to '~').toVector
+    val bmp = "éßøΩжשع中文字\u20ac\ufffd\uffff".toVector
+    val pairs = Vector("\ud83d\ude00", "\ud834\udd1e", "\udbff\udfff") // U+1F600, U+1D11E, U+10FFFF
+    val lone = Vector('\ud800', '\udbff', '\udc00', '\udfff')
+    val strs = Vector("", " ", "\ud800", "\udc00a", "a\ud83d") ++ Vector.fill(200) {
+      rnd.nextInt(4) match {
+        case 0 => pick(ascii)
+        case 1 => pick(ascii ++ bmp)
+        case 2 => pick(ascii) + pairs(rnd.nextInt(pairs.length)) + pick(bmp)
+        case _ => pick(ascii) + lone(rnd.nextInt(lone.length)) + pick(ascii ++ bmp)
+      }
+    }
+    val md5hex = CorpusQueries.md5HexFn()
+    val got = strs.zipWithIndex.toDF("s", "i")
+      .select(col("i"), md5(col("s").cast("binary")))
+      .as[(Int, String)].collect().sortBy(_._1).map(_._2).toVector
+    assert(got.length == strs.length)
+    strs.zip(got).foreach { case (x, h) =>
+      assert(md5hex(x) == h, s"md5 mismatch on ${x.map(_.toInt.toHexString)}")
+    }
+  }
+
   test("q57 exact substring dedup equals the brute-force span oracle") {
     // differential gate for the hashed-window shape: the brute force counts every
     // length-20 window in a HashMap and merges duplicated runs per doc — if the

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: for each SparkEntry query dump under
 OUTDIR, run the matching oracle SQL in DuckDB over the same testdata parquet tables and
-compare values (columns sorted by name, rows sorted)."""
+compare values (columns sorted by name, rows sorted). Exits 1 when any query fails."""
 import sys, json, glob, os
 import duckdb
 import pandas as pd
@@ -61,3 +61,4 @@ for q in sorted(oracle):
 print(f"PASS {len(passes)}/{len(oracle)}")
 for q, msg in fails:
     print(f"FAIL {q}: {msg[:400]}")
+sys.exit(1 if fails else 0)
