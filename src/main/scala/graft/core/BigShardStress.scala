@@ -52,6 +52,27 @@ object BigShardStress {
     (rt.totalMemory() - rt.freeMemory()) >> 20
   }
 
+  /** Runs `f` while sampling used heap every 20 ms: (result, seconds, peak used bytes). */
+  private def withPeakHeap[T](f: => T): (T, Double, Long) = {
+    @volatile var peak = 0L
+    @volatile var sampling = true
+    val sampler = new Thread(() => {
+      val rt = Runtime.getRuntime
+      while (sampling) {
+        peak = math.max(peak, rt.totalMemory() - rt.freeMemory())
+        Thread.sleep(20)
+      }
+    })
+    sampler.setDaemon(true)
+    sampler.start()
+    val t0 = System.nanoTime()
+    val out = f
+    val sec = (System.nanoTime() - t0) / 1e9
+    sampling = false
+    sampler.join()
+    (out, sec, peak)
+  }
+
   def main(args: Array[String]): Unit = {
     val (text, inputBytes, sampleRate) =
       if (args.headOption.contains("--file")) {
@@ -83,22 +104,7 @@ object BigShardStress {
     configs.foreach { case (name, builder) =>
       // sample used heap during the build: the transient peak (SA-IS int arrays + BWT)
       // is what sizes a real executor, not the retained index
-      @volatile var peak = 0L
-      @volatile var sampling = true
-      val sampler = new Thread(() => {
-        val rt = Runtime.getRuntime
-        while (sampling) {
-          peak = math.max(peak, rt.totalMemory() - rt.freeMemory())
-          Thread.sleep(20)
-        }
-      })
-      sampler.setDaemon(true)
-      sampler.start()
-      val t0 = System.nanoTime()
-      val fm = builder.build(text)
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      sampling = false
-      sampler.join()
+      val (fm, buildSec, peak) = withPeakHeap(builder.build(text))
       val peakMb = (peak >> 20) - baseHeap
       val retainedMb = usedHeapMb() - baseHeap
       val bytes = fm.serialize().length
@@ -118,6 +124,34 @@ object BigShardStress {
       val snippet = fm.extractString(chars / 2, chars / 2 + 1024)
       val extractUs = (System.nanoTime() - e0) / 1e3
       require(snippet.length == 1024 && nLoc > 0 && counts.head > 0)
+      // per-char costs of the two ways route rebuilds text: the LF-walk extract (one
+      // wavelet descent per char) against one linear decode of the whole shard
+      // (shard-sized corpora repeat each pass: their arrays stay in cache)
+      val span = math.min(chars, 1 << 20)
+      val reps = math.max(1, (1 << 22) / chars)
+      fm.extractString(0, span)
+      val x0 = System.nanoTime()
+      (1 to reps).foreach(_ => fm.extractString(0, span))
+      val extractNs = (System.nanoTime() - x0).toDouble / span / reps
+      fm.decodeAll() // warm-up
+      val decodeBase = usedHeapMb()
+      val (decoded, decodeSec, decodePeak) = withPeakHeap {
+        var last = fm.decodeAll()
+        (2 to reps).foreach(_ => last = fm.decodeAll())
+        last
+      }
+      require(java.util.Arrays.equals(decoded, text), "decodeAll differs from the input")
+      val decodePeakMb = (decodePeak >> 20) - decodeBase
+      // one overlapping indexOf scan of the decoded text, as the dense route runs per rule
+      val decodedText = new String(decoded)
+      val s0 = System.nanoTime()
+      var hits = 0
+      (1 to reps).foreach { _ =>
+        var i = decodedText.indexOf("blk_")
+        while (i >= 0) { hits += 1; i = decodedText.indexOf("blk_", i + 1) }
+      }
+      val scanNs = (System.nanoTime() - s0).toDouble / chars / reps
+      require(hits == counts.head * reps)
       println(
         f"""{"engine":"$name","chars":$chars,"sampleRate":$sampleRate,""" +
           f""""buildSec":$buildSec%.1f,"mcharsPerSec":${chars / 1e6 / buildSec}%.2f,""" +
@@ -125,7 +159,10 @@ object BigShardStress {
           f""""bytesPerChar":${bytes.toDouble / chars}%.3f,""" +
           (if (inputBytes > 0) f""""pctOfInputBytes":${100.0 * bytes / inputBytes}%.1f,""" else "") +
           f""""countUsPerPattern":$countUs%.0f,"locate1000Us":$locateUs%.0f,""" +
-          f""""extract1024Us":$extractUs%.0f}""")
+          f""""extract1024Us":$extractUs%.0f,"extractNsPerChar":$extractNs%.1f,""" +
+          f""""decodeNsPerChar":${decodeSec * 1e9 / chars / reps}%.1f,"scanNsPerChar":$scanNs%.2f,""" +
+          f""""buildPeakBytesPerChar":${peakMb * 1048576.0 / chars}%.1f,""" +
+          f""""decodePeakBytesPerChar":${decodePeakMb * 1048576.0 / chars}%.1f}""")
     }
   }
 }

@@ -13,6 +13,10 @@ trait BitRankSeq {
   def access(pos: Int): Boolean
   def rankOnes(pos: Int): Int
   def rankZeroes(pos: Int): Int
+  /** The bits as 64-bit words, bit i at `words(i >>> 6) >>> (i & 63)`: Rank9 returns
+    * its backing array (do not write to it), RRR decodes a copy block by block.
+    */
+  def toWords: Array[Long]
   def sizeInBytes: Long
   def write(out: DataOutput): Unit
 }

@@ -63,6 +63,43 @@ final class HuffmanWaveletTree private (
     0L // unreachable
   }
 
+  /** The whole sequence in one sequential pass, the construction loop run backwards:
+    * position i reads the next unread bit of each node on its path, so no rank is
+    * needed (`inverseSelect` pays one per level per position). The node bits are
+    * copied into one word array (each node word-aligned) and the children into one
+    * array indexed by the bit, so a level costs three loads and no branch.
+    */
+  def decodeAll(): Array[Int] = {
+    val out = new Array[Int](length)
+    if (root < 0) return out // sigma == 1: every position holds symbol 0
+    val m = nodeBv.length
+    val cursor = new Array[Long](m) // absolute index of each node's next unread bit
+    var words = 0L
+    var v = 0
+    while (v < m) { cursor(v) = words << 6; words += (nodeBv(v).numBits + 63) >>> 6; v += 1 }
+    val bits = new Array[Long](words.toInt)
+    val child = new Array[Int](2 * m)
+    v = 0
+    while (v < m) {
+      System.arraycopy(nodeBv(v).toWords, 0, bits, (cursor(v) >>> 6).toInt, (nodeBv(v).numBits + 63) >>> 6)
+      child(2 * v) = nodeLeft(v)
+      child(2 * v + 1) = nodeRight(v)
+      v += 1
+    }
+    var i = 0
+    while (i < length) {
+      var node = root
+      while (node >= 0) {
+        val p = cursor(node)
+        cursor(node) = p + 1
+        node = child(2 * node + ((bits((p >>> 6).toInt) >>> p) & 1L).toInt)
+      }
+      out(i) = -node - 1
+      i += 1
+    }
+    out
+  }
+
   def sizeInBytes: Long =
     nodeBv.map(_.sizeInBytes).sum + 9L * sigma + 8L * nodeLeft.length + 32
 

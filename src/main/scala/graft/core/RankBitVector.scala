@@ -37,6 +37,8 @@ final class RankBitVector private (
   /** Number of 0-bits in [0, pos). */
   @inline def rankZeroes(pos: Int): Int = pos - rankOnes(pos)
 
+  def toWords: Array[Long] = words
+
   def sizeInBytes: Long = 8L * words.length + 4L * blockRank.length + 8L * subRank.length + 16
 
   def write(out: DataOutput): Unit = {

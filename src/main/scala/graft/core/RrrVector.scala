@@ -59,6 +59,26 @@ final class RrrVector private (
 
   def rankZeroes(pos: Int): Int = pos - rankOnes(pos)
 
+  /** One sequential pass over the blocks: no per-bit walk from a rank sample. */
+  def toWords: Array[Long] = {
+    val out = new Array[Long]((numBits + 63) >>> 6)
+    var bitPos = 0L
+    var b = 0
+    while (b < numBlocks) {
+      val c = classes.getValue(b).toInt
+      val w = OffsetWidth(c)
+      val word = decodeOffset(c, if (w == 0) 0 else offsets.getValue(bitPos, w).toInt).toLong
+      bitPos += w
+      val base = b * BlockSize
+      val sh = base & 63
+      out(base >>> 6) |= word << sh
+      // a block that straddles two words: its high bits go to the next one
+      if (sh > 64 - BlockSize && (base >>> 6) + 1 < out.length) out((base >>> 6) + 1) |= word >>> (64 - sh)
+      b += 1
+    }
+    out
+  }
+
   private def decodeBlock(block: Int): Int = {
     val sample = block / sampleRate
     var b = sample * sampleRate

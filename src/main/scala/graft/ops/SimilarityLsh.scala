@@ -40,7 +40,7 @@ object SimilarityLsh {
   def cosine(a: Column, b: Column): Column =
     dotD(a, b) / (sqrt(dotD(a, a)) * sqrt(dotD(b, b)))
 
-  private def planeLit(w: Array[Int]): Column = array(w.map(x => lit(x.toDouble)): _*)
+  private def planeLit(w: Array[Int]): Column = array(w.toSeq.map(x => lit(x.toDouble)): _*)
 
   /** One BIGINT band value per band: bandBits sign bits packed little-endian. */
   def bandValues(emb: Column, planes: Array[Array[Int]], bandBits: Int): Seq[Column] = {
@@ -86,7 +86,17 @@ object SimilarityLsh {
 
   /** Guard threshold: `SPARK_GRAFT_LSH_FANOUT_WARN=<rows>` overrides, 0 disables. */
   private[graft] def fanoutGuardThreshold: Long =
-    sys.env.get("SPARK_GRAFT_LSH_FANOUT_WARN").map(_.toLong).getOrElse(4096L)
+    parseFanoutWarn(sys.env.get("SPARK_GRAFT_LSH_FANOUT_WARN"))
+
+  /** Unset = 4096 rows, `0` = guard disabled, a positive long = that threshold;
+    * anything else throws naming the variable (a negative value used to disable the
+    * guard silently, a non-numeric one to fail without naming it).
+    */
+  private[graft] def parseFanoutWarn(value: Option[String]): Long =
+    value.fold(4096L) { v =>
+      v.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_LSH_FANOUT_WARN must be 0 (disabled) or a positive row count, got '$v'"))
+    }
 
   // one guard run per (corpus key, threshold) per JVM: the guard is an extra agg
   // job, and a catalog running several queries over the SAME immutable corpus

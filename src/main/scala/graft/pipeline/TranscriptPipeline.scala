@@ -78,8 +78,10 @@ object TsMicros {
   *    construction is a single mapPartitions pass with run-detection on shard_id — no
   *    per-group in-memory regrouping beyond one shard's corpus (capped by maxCorpusChars).
   *  - routing deserializes each shard once and evaluates all broadcast patterns against
-  *    it (mapPartitions); per-(sink, conv) aggregation is a classic partial+final agg
-  *    handled by Catalyst.
+  *    it: a shard whose matches are dense is decoded once (one linear inverse BWT) and
+  *    scanned per rule, a sparse one locates its matches and extracts only the hit
+  *    turns. Routed rows go to the sink write in the same stage, with no shuffle;
+  *    per-(sink, conv) aggregation is a classic partial+final agg handled by Catalyst.
   *  - enrichment is an in-row CASE lookup, not a join (dimensions are tiny by design).
   *  - lineage rows + a JSON manifest make the job resumable: committed shard_ids are
   *    skipped on re-run, so a killed job continues without recount drift.
@@ -211,58 +213,116 @@ object TranscriptPipeline {
     graft.functions.AlphaFingerprint.mayContain(alphaBits, pattern)
 
   /** Evaluates every routing rule against every shard; emits one row per (sink, turn)
-    * with the overlapping-match count and the turn text RECONSTRUCTED via FM extract.
-    * A match is attributed to the turn containing its start position.
+    * with the overlapping-match count and the turn text RECONSTRUCTED from the shard.
+    * A match counts for the turn holding its start, and only if it also ends inside
+    * that turn: a match that runs across the separator into the next turn is in no
+    * turn's text (the Catalyst `contains()` oracle agrees).
     *
-    * `locateCap` guards against pathological high-frequency patterns: locateAll costs
-    * O(occurrences x sampleRate) LF-walks, which for a pattern matching a large fraction
-    * of the corpus exceeds the cost of simply scanning the turns. Above the cap, routing
-    * falls back to extracting each turn once (O(corpus), bounded) and counting
-    * overlapping occurrences directly — identical output, bounded worst case.
+    * Each shard first prunes rules by its alphabet fingerprint and counts the rest
+    * (one O(|pattern|) backward search each), then takes one of two branches, chosen
+    * by `decodeShard` from its own numbers:
+    *  - dense: decode the whole text once (`FmIndex.decodeAll`, one linear inverse
+    *    BWT, O(corpus) however frequent the patterns are) and scan it once per rule
+    *    with overlapping `indexOf`. Each rule's scan total must equal its `count()`,
+    *    so a corrupted shard fails the task instead of routing wrong rows.
+    *  - sparse: `locateAll` every match and extract only the hit turns.
+    * Both branches emit rows in (rule, position) order, so a retried task emits the
+    * same rows in the same order.
     */
-  def route(spark: SparkSession, shards: Dataset[ShardRow], rules: Seq[SinkRule],
-      locateCap: Int = 1 << 22): Dataset[RoutedHit] = {
+  def route(spark: SparkSession, shards: Dataset[ShardRow], rules: Seq[SinkRule]): Dataset[RoutedHit] =
+    route(spark, shards, rules, decodeShard)
+
+  /** `route` with the branch choice passed in: specs force either branch with it. */
+  private[pipeline] def route(spark: SparkSession, shards: Dataset[ShardRow], rules: Seq[SinkRule],
+      decode: (Long, Int, Long, Int) => Boolean): Dataset[RoutedHit] = {
     import spark.implicits._
     val bRules = spark.sparkContext.broadcast(rules.toArray)
     shards.flatMap { s =>
       lazy val fm = FmIndex.deserialize(s.shard)
-      val textCache = mutable.HashMap[Int, String]()
-      def turnText(t: Int): String =
-        textCache.getOrElseUpdate(t, fm.extractString(s.offsets(t), s.offsets(t) + s.lens(t)))
-
-      def hit(turn: Int, n: Int, sink: String): RoutedHit =
-        RoutedHit(sink, s.conv_ids(turn), s.turn_idxs(turn), s.roles(turn),
-          s.tools(turn), TsMicros.toTimestamp(s.ts_micros(turn)), n, turnText(turn), s.shard_id)
-
-      bRules.value.iterator.flatMap { rule =>
-        if (!mayContain(s.alpha_bits, rule.pattern)) Iterator.empty
+      val live = bRules.value.toSeq.flatMap { rule =>
+        if (!mayContain(s.alpha_bits, rule.pattern)) None
         else {
-          // count first: one O(|pattern|) backward search decides the strategy
           val total = fm.count(rule.pattern.toCharArray)
-          if (total == 0) Iterator.empty
-          else if (total <= locateCap) {
-            val positions = fm.locateAll(rule.pattern.toCharArray)
-            // merge-walk sorted positions against sorted turn offsets
-            val perTurn = mutable.LinkedHashMap[Int, Int]()
-            var t = 0
-            positions.foreach { pos =>
-              while (t + 1 < s.offsets.length && s.offsets(t + 1) <= pos) t += 1
-              perTurn.updateWith(t) { c => Some(c.getOrElse(0) + 1) }
+          if (total == 0) None else Some(rule -> total)
+        }
+      }
+      if (live.isEmpty) Iterator.empty
+      else {
+        val dense = decode(live.map(_._2.toLong).sum, fm.sampleRate, s.corpus_chars, s.n_turns)
+        lazy val corpus = new String(fm.decodeAll())
+        def starts(pattern: String, total: Int): Array[Int] =
+          if (dense) scanAll(corpus, pattern, total, s) else fm.locateAll(pattern.toCharArray)
+        val texts = new Array[String](s.n_turns)
+        def turnText(t: Int): String = {
+          if (texts(t) eq null) texts(t) =
+            if (dense) corpus.substring(s.offsets(t), s.offsets(t) + s.lens(t))
+            else fm.extractString(s.offsets(t), s.offsets(t) + s.lens(t))
+          texts(t)
+        }
+        live.iterator.flatMap { case (rule, total) =>
+          matchesPerTurn(starts(rule.pattern, total), rule.pattern.length, s.offsets, s.lens)
+            .iterator.map { case (t, n) =>
+              RoutedHit(rule.sink, s.conv_ids(t), s.turn_idxs(t), s.roles(t), s.tools(t),
+                TsMicros.toTimestamp(s.ts_micros(t)), n, turnText(t), s.shard_id)
             }
-            perTurn.iterator.map { case (turn, n) => hit(turn, n, rule.sink) }
-          } else {
-            // scan fallback: overlapping occurrences per turn on the extracted text
-            (0 until s.n_turns).iterator.flatMap { turn =>
-              val text = turnText(turn)
-              var n = 0
-              var i = text.indexOf(rule.pattern)
-              while (i >= 0) { n += 1; i = text.indexOf(rule.pattern, i + 1) }
-              if (n == 0) Iterator.empty else Iterator.single(hit(turn, n, rule.sink))
-            }
-          }
         }
       }
     }
+  }
+
+  /** Dense or sparse: true when one decode of the whole shard is expected to cost less
+    * than locating `matches` occurrences plus extracting the turns they hit. Costs are
+    * in LF steps (one wavelet descent each), measured with BigShardStress on a
+    * 40k-char corpus at sampleRate 16 (Rank9, 4-vCPU host): extract 47 ns/char (one LF
+    * step per char), decodeAll 22 ns/char (0.45 step), locate 0.78-0.82 us/match
+    * (about sampleRate/2 + 9 steps). Hit turns are estimated as min(matches, nTurns),
+    * each paying its text plus half a sample of skip. Left out: the per-rule scans of
+    * the dense branch (0.33 ns/char each, under 0.01 step) and RRR shards' dearer LF
+    * step (extract 630 ns/char against decodeAll 35), which only favours decoding more.
+    */
+  private[pipeline] def decodeShard(matches: Long, sampleRate: Int, corpusChars: Long,
+      nTurns: Int): Boolean = {
+    val locateSteps = matches * (sampleRate / 2.0 + 9)
+    val extractSteps = math.min(matches, nTurns.toLong) *
+      (corpusChars.toDouble / math.max(1, nTurns) + sampleRate / 2.0)
+    corpusChars * DecodeStepsPerChar <= locateSteps + extractSteps
+  }
+
+  private val DecodeStepsPerChar = 0.45
+
+  /** Sorted start positions of the overlapping occurrences of `pattern` in `corpus`;
+    * throws unless there are exactly `total` (the shard's `count()`).
+    */
+  private[pipeline] def scanAll(corpus: String, pattern: String, total: Int, s: ShardRow): Array[Int] = {
+    val starts = new Array[Int](total)
+    var n = 0
+    var i = corpus.indexOf(pattern)
+    while (i >= 0) {
+      if (n < total) starts(n) = i
+      n += 1
+      i = corpus.indexOf(pattern, i + 1)
+    }
+    if (n != total)
+      throw new IllegalStateException(s"shard ${s.shard_id}/${s.shard_seq}: pattern " +
+        s"'$pattern' occurs $n times in the decoded text but count() says $total")
+    starts
+  }
+
+  /** (turn, matches) in turn order from ascending match starts: a match counts for the
+    * turn holding its start, and only if it ends inside that turn's text.
+    */
+  private[pipeline] def matchesPerTurn(starts: Array[Int], patternLen: Int, offsets: Array[Int],
+      lens: Array[Int]): mutable.ArrayBuffer[(Int, Int)] = {
+    val out = mutable.ArrayBuffer[(Int, Int)]()
+    var t = 0
+    starts.foreach { pos =>
+      while (t + 1 < offsets.length && offsets(t + 1) <= pos) t += 1
+      if (pos + patternLen <= offsets(t) + lens(t)) {
+        if (out.nonEmpty && out.last._1 == t) out(out.length - 1) = (t, out.last._2 + 1)
+        else out += ((t, 1))
+      }
+    }
+    out
   }
 
   /** Persists the shard table (the compressed index REPLACES the raw text downstream);
@@ -416,12 +476,12 @@ object TranscriptPipeline {
     val routed = route(spark, shards, cfg.rules)
 
     val enriched = enrich(spark, routed).withColumn("attempt", lit(attempt))
-    // cluster-width tasks before the dynamic-partition write: output file count
-    // (and the driver-serial commit) tracks the cluster, not the shard count.
-    // Hash keys, not round-robin: keyless repartition(n) first pays a local sort
-    // of its full input (sort-before-repartition, for retry determinism) — on
-    // these text-heavy rows that sort was pure overhead, and deterministic keys
-    // give the same retry safety for free. (conv_id, turn_idx) hashes uniformly.
+    // No shuffle before the write: route, enrich and the sink write run in the stage
+    // that reads the persisted shards, so the text-heavy routed rows are never
+    // exchanged. coalesce (narrow, no shuffle) caps the tasks at cluster width, so
+    // output file count (and the driver-serial commit) tracks the cluster, not the
+    // shard partitions. A retried task re-reads the same persisted shards and both
+    // route branches emit rows in position order, so a retry writes the same rows.
     // committer v2 (direct task commit, no serial driver-side rename pass) is safe
     // for sinks + lineage ONLY because visibility is governed by the attempt
     // markers, not the parquet committer: readers never trust an attempt without
@@ -438,8 +498,7 @@ object TranscriptPipeline {
     val writersKey = "spark.sql.maxConcurrentOutputFileWriters"
     val prevWriters = spark.conf.getOption(writersKey)
     spark.conf.set(writersKey, math.max(8, cfg.rules.length + 2).toString)
-    try enriched.repartition(spark.sparkContext.defaultParallelism,
-        col("conv_id"), col("turn_idx"))
+    try enriched.coalesce(spark.sparkContext.defaultParallelism)
       .write.options(directCommit)
       .mode("append").partitionBy("sink", "attempt").parquet(s"$outDir/sinks")
     finally prevWriters match {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{CorpusQueries, ShardTableCache}
+import graft.ops.{CorpusQueries, ShardTableCache, SimilarityLsh}
 import graft.pipeline.SinkRule
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,6 +27,18 @@ class ConfigParsingSpec extends AnyFunSuite {
           CorpusQueries.parsePositiveInt(name, Some(bad)))
         assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"), e.getMessage)
       }
+    }
+  }
+
+  test("SPARK_GRAFT_LSH_FANOUT_WARN: unset 4096, 0 disables, positive longs; else throws") {
+    assert(SimilarityLsh.parseFanoutWarn(None) == 4096L)
+    assert(SimilarityLsh.parseFanoutWarn(Some("0")) == 0L)
+    assert(SimilarityLsh.parseFanoutWarn(Some("1")) == 1L)
+    assert(SimilarityLsh.parseFanoutWarn(Some("99999999999")) == 99999999999L)
+    for (bad <- Seq("-1", "abc", "", " 8", "1.5", "99999999999999999999")) {
+      val e = intercept[IllegalArgumentException](SimilarityLsh.parseFanoutWarn(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_LSH_FANOUT_WARN") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
     }
   }
 

@@ -247,6 +247,39 @@ class FmIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("decodeAll equals the input and extract(0, n): rates 1/8/32, Rank9 and RRR") {
+    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Test.{check, Parameters}
+    val small = Gen.listOf(Gen.oneOf('a', 'b', 'c', '\u0000', '\n')).map(_.mkString)
+    val text = Gen.listOf(Gen.frequency(8 -> Gen.choose(' ', '~'), 1 -> Gen.const('\u0000'),
+      1 -> Gen.choose('\u4e00', '\u4eff'))).map(_.mkString)
+    // more than 1024 distinct symbols: the alphabet fingerprint's c & 1023 aliases
+    val wide = Gen.choose(1200, 1600).map { n =>
+      val rnd = new Random(n)
+      Array.fill(4 * n)((0x100 + rnd.nextInt(n)).toChar).mkString
+    }
+    val edge = Gen.oneOf("", "a", "aaaa", "\u0000", "\u0000\u0000x", "\n")
+    val gen = Gen.frequency(3 -> small, 4 -> text, 1 -> wide, 2 -> edge)
+    val prop = Prop.forAll(gen) { s =>
+      val in = s.toCharArray
+      Seq(1, 8, 32).forall { rate =>
+        Seq(false, true).forall { compress =>
+          val fm = FmIndex.build(in, rate, compress = compress)
+          val decoded = fm.decodeAll()
+          java.util.Arrays.equals(decoded, in) &&
+            fm.extractString(0, in.length) == new String(decoded)
+        }
+      }
+    }
+    val res = check(Parameters.default.withMinSuccessfulTests(150), prop)
+    assert(res.passed, s"property failed: ${res.status}")
+    val wideFm = FmIndex.build(wide.sample.get.toCharArray, 8)
+    assert(wideFm.getAlphabetLength > 1025)
+    val noExtract = FmIndex.build("abc".toCharArray, 8, enableExtract = false)
+    assert(intercept[RuntimeException](noExtract.decodeAll()).getMessage ==
+      "Text recovery not enabled at build time")
+  }
+
   test("extraction errors: disabled, bounds, small destination") {
     val noExtract = new FmIndexBuilder().setEnableExtraction(false).build(LogChars)
     assert(intercept[RuntimeException](noExtract.extract(50, 100, new Array[Char](50), 0))

@@ -56,6 +56,19 @@ class HuffmanWaveletTreeSpec extends AnyFunSuite {
     }
   }
 
+  test("decodeAll equals the sequence on skewed and uniform input, Rank9 and RRR") {
+    val rnd = new Random(11)
+    for (sigma <- Seq(2, 3, 17, 120, 300); compress <- Seq(false, true)) {
+      val skewed = Array.fill(3000)(if (rnd.nextBoolean()) 0 else rnd.nextInt(sigma))
+      val uniform = Array.fill(3000)(rnd.nextInt(sigma))
+      for (seq <- Seq(skewed, uniform))
+        assert(HuffmanWaveletTree(seq, sigma, compress).decodeAll().sameElements(seq),
+          s"sigma=$sigma compress=$compress")
+    }
+    assert(HuffmanWaveletTree(Array(0, 0, 0), 1).decodeAll().sameElements(Array(0, 0, 0)))
+    assert(HuffmanWaveletTree(Array.empty[Int], 1).decodeAll().isEmpty)
+  }
+
   test("degenerate single-symbol sequence (the sentinel-only corpus)") {
     val wt = HuffmanWaveletTree(Array(0), 1)
     assert(wt.rank(1, 0) == 1 && wt.rank(0, 0) == 0)

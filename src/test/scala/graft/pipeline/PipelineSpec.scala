@@ -272,17 +272,68 @@ class PipelineSpec extends AnyFunSuite {
     manyTurns.unpersist()
   }
 
-  test("high-frequency-pattern scan fallback routes identically to the locate path") {
+  test("dense decode and sparse locate branches route identically") {
     val shards = TranscriptPipeline.buildShards(spark, turns, cfg).cache()
     val cols = Seq("sink", "conv_id", "turn_idx", "role", "tool", "ts", "n_matches", "text")
-    val viaLocate = TranscriptPipeline.route(spark, shards, cfg.rules)
+    // the branch function forced either way: every shard decodes, or every shard locates
+    val viaDecode = TranscriptPipeline.route(spark, shards, cfg.rules, (_, _, _, _) => true)
       .selectExpr(cols: _*)
-    // locateCap = 0 forces the O(corpus) scan fallback for every matched pattern
-    val viaScan = TranscriptPipeline.route(spark, shards, cfg.rules, locateCap = 0)
+    val viaLocate = TranscriptPipeline.route(spark, shards, cfg.rules, (_, _, _, _) => false)
       .selectExpr(cols: _*)
-    assert(viaLocate.exceptAll(viaScan).count() == 0 &&
-      viaScan.exceptAll(viaLocate).count() == 0, "scan fallback differs from locate routing")
+    assert(viaDecode.count() > 0, "routing should produce rows on the synthetic corpus")
+    assert(viaLocate.exceptAll(viaDecode).count() == 0 &&
+      viaDecode.exceptAll(viaLocate).count() == 0, "decode branch differs from locate routing")
     shards.unpersist()
+  }
+
+  test("a match across the turn separator routes no turn, in both branches") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(0L)
+    val texts = Seq("alpha end", "start beta", "line one\nline two", "", "tail\n", "end")
+    val hand = texts.zipWithIndex.map { case (t, i) => Turn("conv-x", i, "user", t, "", ts) }.toDS()
+    // one shard: the corpus is the texts joined by the separator, in turn order
+    val oneShard = cfg.copy(numShards = 1)
+    val rules = Seq(SinkRule("nl", "\n"), SinkRule("cross", "end\nstart"),
+      SinkRule("inner", "one\nline"), SinkRule("line", "line"), SinkRule("endtail", "\nend"))
+    val oracle = rules.map { r =>
+      hand.filter(col("text").contains(r.pattern))
+        .select(lit(r.sink).as("sink"), col("turn_idx"), col("text"))
+    }.reduce(_ unionAll _)
+    assert(oracle.count() == 4, "oracle: nl x2, inner, line; cross and endtail match nothing")
+    val shards = TranscriptPipeline.buildShards(spark, hand, oneShard).cache()
+    for (dense <- Seq(true, false)) {
+      val routed = TranscriptPipeline.route(spark, shards, rules, (_, _, _, _) => dense)
+      val got = routed.select("sink", "turn_idx", "text")
+      assert(got.exceptAll(oracle).count() == 0 && oracle.exceptAll(got).count() == 0,
+        s"dense=$dense routed ${got.collect().mkString(", ")}")
+      // n_matches counts only the matches inside the turn: one '\n' in "line one\nline two"
+      val nl = routed.filter(col("sink") === "nl").select("turn_idx", "n_matches").as[(Int, Int)]
+        .collect().toSet
+      assert(nl == Set((2, 1), (4, 1)), s"dense=$dense nl=$nl")
+      assert(routed.filter(col("sink") === "line").select("n_matches").as[Int].collect().toSeq == Seq(2))
+    }
+    shards.unpersist()
+  }
+
+  test("the dense scan fails loudly when its total differs from count()") {
+    val shard = TranscriptPipeline.buildShards(spark, turns, cfg).head()
+    assert(TranscriptPipeline.scanAll("abab", "ab", 2, shard).toSeq == Seq(0, 2))
+    for (wrong <- Seq(1, 3)) {
+      val e = intercept[IllegalStateException](TranscriptPipeline.scanAll("abab", "ab", wrong, shard))
+      assert(e.getMessage.contains(s"shard ${shard.shard_id}/${shard.shard_seq}") &&
+        e.getMessage.contains("'ab'") && e.getMessage.contains(s"count() says $wrong"), e.getMessage)
+    }
+  }
+
+  test("decodeShard picks decode once locate plus hit-turn extract costs more") {
+    // 10,100 chars in 100 turns at sampleRate 16: one decode costs 4,545 LF steps; each
+    // match costs 17 to locate and, up to 100 hit turns, 109 to extract its turn
+    def dense(m: Long) = TranscriptPipeline.decodeShard(m, 16, 10100L, 100)
+    assert(!dense(0) && !dense(1) && !dense(36))
+    assert(dense(37) && dense(100) && dense(1000000))
+    assert((0L to 500L).map(dense) == (0L to 500L).map(_ >= 37), "not monotone in matches")
+    // a sparser sample makes locate and extract dearer, so the boundary moves down
+    assert(!dense(30) && TranscriptPipeline.decodeShard(30, 64, 10100L, 100))
   }
 
   test("alphabet fingerprint prunes shards that cannot match, never drops real matches") {

@@ -2,7 +2,8 @@
 """Interleaved A/B pairs of the benchmark between two revisions.
 
     python3 tools/ab_pairs.py --workload ingest --pairs 10 --seed 401 \
-        [--base HEAD~1] [--change HEAD] [--scratch DIR] [--out bench/ab_ingest.json]
+        [--base HEAD~1] [--change HEAD] [--traced K] [--scratch DIR] \
+        [--out bench/ab_ingest.json]
 
 Run from the repository root. Each revision's committed files are exported with
 `git archive` into its own directory under --scratch (a plain copy: nothing is
@@ -16,6 +17,12 @@ wins, ties and losses over the pairs, whether a gain may be claimed (wins in at
 least nine tenths of all pairs, ties counting for neither, and a median gap wider
 than the base's interquartile range) and whether the change's median stays inside
 the metric's bound. Every run, the summary and the failure counts go to --out.
+
+--traced K then runs K traced runs per side (`--trace 1`, seeds SEED..SEED+K-1), the
+side that runs first again alternating. Each traced run's per-layer metrics and its
+ingest_attribution_s (the split of the traced runToSinks wall into parse, build,
+route, sink, tail) go under "traced" in --out, and the per-layer medians of both
+sides are printed side by side: where a gain appeared, from the same command.
 """
 import argparse
 import json
@@ -51,11 +58,12 @@ def export(rev, scratch):
     return sha, path
 
 
-def run_once(checkout, workload, seed, seconds):
-    """One benchmark run; returns its final JSON line plus exit code and wall time."""
+def run_once(checkout, workload, seed, seconds, trace=0):
+    """One benchmark run; returns its final JSON line plus exit code and wall time.
+    A traced run also returns its ingest_attribution_s info line, when it prints one."""
     t0 = time.time()
     proc = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
                           cwd=checkout, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     try:
@@ -63,9 +71,49 @@ def run_once(checkout, workload, seed, seconds):
     except (IndexError, ValueError):
         res = {"correct": False, "attempted": 0, "failed": 0, "metrics": {},
                "stderr_tail": proc.stderr[-2000:]}
+    prefix = "  ingest_attribution_s: "
+    for line in lines:
+        if line.startswith(prefix):
+            res["ingest_attribution_s"] = json.loads(line[len(prefix):])
     res["exit"] = proc.returncode
     res["wall_s"] = round(time.time() - t0, 1)
     return res
+
+
+def traced_runs(sides, workload, seed, seconds, k):
+    """K traced runs per side, alternating which side goes first."""
+    runs = []
+    for i in range(k):
+        order = ("base", "change") if i % 2 == 0 else ("change", "base")
+        for side in order:
+            res = run_once(sides[side][1], workload, seed + i, seconds, trace=1)
+            runs.append({"side": side, "seed": seed + i, "exit": res["exit"],
+                         "wall_s": res["wall_s"], "correct": res["correct"],
+                         "failed": res["failed"], "attempted": res["attempted"],
+                         "ingest_attribution_s": res.get("ingest_attribution_s"),
+                         "metrics": {n: m["value"] for n, m in res["metrics"].items()}})
+            print(f"traced {i} seed {seed + i} {side}: exit={res['exit']}, "
+                  f"wall={res['wall_s']}s", flush=True)
+    return runs
+
+
+def print_traced(runs, per_layer):
+    """Per-layer medians of both sides, then the median attribution split."""
+    def med(side, get):
+        xs = [x for x in (get(r) for r in runs if r["side"] == side) if x is not None]
+        return statistics.median(xs) if xs else None
+
+    def fmt(x):
+        return f"{x:.4g}" if x is not None else "n/a"
+    print(f"\n{'per-layer metric (traced median)':<34} {'base':>11} {'change':>11} {'delta':>8}")
+    rows = [(m["name"], (lambda r, n=m["name"]: r["metrics"].get(n))) for m in per_layer]
+    parts = sorted({k for r in runs for k in (r["ingest_attribution_s"] or {})})
+    rows += [(f"ingest_attribution_s.{p}", (lambda r, p=p: (r["ingest_attribution_s"] or {}).get(p)))
+             for p in parts]
+    for name, get in rows:
+        b, c = med("base", get), med("change", get)
+        rel = f"{100 * (c - b) / b:+.1f}%" if b and c is not None else ""
+        print(f"{name:<34} {fmt(b):>11} {fmt(c):>11} {rel:>8}")
 
 
 def quartiles(xs):
@@ -110,6 +158,8 @@ def main():
     ap.add_argument("--seed", type=int, default=401, help="seed of pair 0; pair i uses seed+i")
     ap.add_argument("--base", default="HEAD~1")
     ap.add_argument("--change", default="HEAD")
+    ap.add_argument("--traced", type=int, default=0, metavar="K",
+                    help="after the pairs, K traced runs per side")
     ap.add_argument("--scratch", default=os.path.join(tempfile.gettempdir(), "ab_pairs"))
     ap.add_argument("--out", help="JSON file (default bench/ab_<workload>.json)")
     a = ap.parse_args()
@@ -151,6 +201,10 @@ def main():
     for side in ("base", "change"):
         print(f"failed/attempted {side}: {sum(failed[side])}/{sum(attempted[side])}")
 
+    traced = traced_runs(sides, a.workload, a.seed, seconds, a.traced) if a.traced > 0 else []
+    if traced:
+        print_traced(traced, spec["per_layer"])
+
     os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
     with open(out, "w") as fh:
         json.dump({"workload": a.workload, "seconds": seconds, "first_seed": a.seed,
@@ -158,7 +212,7 @@ def main():
                    "change": {"rev": a.change, "sha": sides["change"][0]},
                    "host": {"nproc": len(os.sched_getaffinity(0))},
                    "failed": failed, "attempted": attempted,
-                   "summary": summary, "pairs": pairs}, fh, indent=1)
+                   "summary": summary, "pairs": pairs, "traced": traced}, fh, indent=1)
     print(f"wrote {out}")
 
 
