@@ -124,8 +124,8 @@ object BigShardStress {
       val snippet = fm.extractString(chars / 2, chars / 2 + 1024)
       val extractUs = (System.nanoTime() - e0) / 1e3
       require(snippet.length == 1024 && nLoc > 0 && counts.head > 0)
-      // per-char costs of the two ways route rebuilds text: the LF-walk extract (one
-      // wavelet descent per char) against one linear decode of the whole shard
+      // per-char costs of two ways to rebuild text: the LF-walk extract (one wavelet
+      // descent per char) against one linear decode of the whole shard, as route runs
       // (shard-sized corpora repeat each pass: their arrays stay in cache)
       val span = math.min(chars, 1 << 20)
       val reps = math.max(1, (1 << 22) / chars)
@@ -142,7 +142,7 @@ object BigShardStress {
       }
       require(java.util.Arrays.equals(decoded, text), "decodeAll differs from the input")
       val decodePeakMb = (decodePeak >> 20) - decodeBase
-      // one overlapping indexOf scan of the decoded text, as the dense route runs per rule
+      // one overlapping indexOf scan of the decoded text, as route runs per live rule
       val decodedText = new String(decoded)
       val s0 = System.nanoTime()
       var hits = 0

@@ -78,9 +78,8 @@ object TsMicros {
   *    construction is a single mapPartitions pass with run-detection on shard_id — no
   *    per-group in-memory regrouping beyond one shard's corpus (capped by maxCorpusChars).
   *  - routing deserializes each shard once and evaluates all broadcast patterns against
-  *    it: a shard whose matches are dense is decoded once (one linear inverse BWT) and
-  *    scanned per rule, a sparse one locates its matches and extracts only the hit
-  *    turns. Routed rows go to the sink write in the same stage, with no shuffle;
+  *    it: a shard with any match is decoded once (one linear inverse BWT) and scanned
+  *    per rule. Routed rows go to the sink write in the same stage, with no shuffle;
   *    per-(sink, conv) aggregation is a classic partial+final agg handled by Catalyst.
   *  - enrichment is an in-row CASE lookup, not a join (dimensions are tiny by design).
   *  - lineage rows + a JSON manifest make the job resumable: committed shard_ids are
@@ -218,23 +217,16 @@ object TranscriptPipeline {
     * that turn: a match that runs across the separator into the next turn is in no
     * turn's text (the Catalyst `contains()` oracle agrees).
     *
-    * Each shard first prunes rules by its alphabet fingerprint and counts the rest
-    * (one O(|pattern|) backward search each), then takes one of two branches, chosen
-    * by `decodeShard` from its own numbers:
-    *  - dense: decode the whole text once (`FmIndex.decodeAll`, one linear inverse
-    *    BWT, O(corpus) however frequent the patterns are) and scan it once per rule
-    *    with overlapping `indexOf`. Each rule's scan total must equal its `count()`,
-    *    so a corrupted shard fails the task instead of routing wrong rows.
-    *  - sparse: `locateAll` every match and extract only the hit turns.
-    * Both branches emit rows in (rule, position) order, so a retried task emits the
-    * same rows in the same order.
+    * Each shard prunes rules by its alphabet fingerprint and counts the rest (one
+    * O(|pattern|) backward search each). A shard with any live rule is decoded once
+    * (`FmIndex.decodeAll`, one linear inverse BWT, O(corpus) however frequent the
+    * patterns are) and scanned once per live rule with overlapping `indexOf`; each
+    * routed row's text is a slice of the decoded text. Each rule's scan total must
+    * equal its `count()`, so a corrupted shard fails the task instead of routing wrong
+    * rows. Rows come out in (rule, position) order, so a retried task emits the same
+    * rows in the same order.
     */
-  def route(spark: SparkSession, shards: Dataset[ShardRow], rules: Seq[SinkRule]): Dataset[RoutedHit] =
-    route(spark, shards, rules, decodeShard)
-
-  /** `route` with the branch choice passed in: specs force either branch with it. */
-  private[pipeline] def route(spark: SparkSession, shards: Dataset[ShardRow], rules: Seq[SinkRule],
-      decode: (Long, Int, Long, Int) => Boolean): Dataset[RoutedHit] = {
+  def route(spark: SparkSession, shards: Dataset[ShardRow], rules: Seq[SinkRule]): Dataset[RoutedHit] = {
     import spark.implicits._
     val bRules = spark.sparkContext.broadcast(rules.toArray)
     shards.flatMap { s =>
@@ -248,19 +240,14 @@ object TranscriptPipeline {
       }
       if (live.isEmpty) Iterator.empty
       else {
-        val dense = decode(live.map(_._2.toLong).sum, fm.sampleRate, s.corpus_chars, s.n_turns)
-        lazy val corpus = new String(fm.decodeAll())
-        def starts(pattern: String, total: Int): Array[Int] =
-          if (dense) scanAll(corpus, pattern, total, s) else fm.locateAll(pattern.toCharArray)
+        val corpus = new String(fm.decodeAll())
         val texts = new Array[String](s.n_turns)
         def turnText(t: Int): String = {
-          if (texts(t) eq null) texts(t) =
-            if (dense) corpus.substring(s.offsets(t), s.offsets(t) + s.lens(t))
-            else fm.extractString(s.offsets(t), s.offsets(t) + s.lens(t))
+          if (texts(t) eq null) texts(t) = corpus.substring(s.offsets(t), s.offsets(t) + s.lens(t))
           texts(t)
         }
         live.iterator.flatMap { case (rule, total) =>
-          matchesPerTurn(starts(rule.pattern, total), rule.pattern.length, s.offsets, s.lens)
+          matchesPerTurn(scanAll(corpus, rule.pattern, total, s), rule.pattern.length, s.offsets, s.lens)
             .iterator.map { case (t, n) =>
               RoutedHit(rule.sink, s.conv_ids(t), s.turn_idxs(t), s.roles(t), s.tools(t),
                 TsMicros.toTimestamp(s.ts_micros(t)), n, turnText(t), s.shard_id)
@@ -269,26 +256,6 @@ object TranscriptPipeline {
       }
     }
   }
-
-  /** Dense or sparse: true when one decode of the whole shard is expected to cost less
-    * than locating `matches` occurrences plus extracting the turns they hit. Costs are
-    * in LF steps (one wavelet descent each), measured with BigShardStress on a
-    * 40k-char corpus at sampleRate 16 (Rank9, 4-vCPU host): extract 47 ns/char (one LF
-    * step per char), decodeAll 22 ns/char (0.45 step), locate 0.78-0.82 us/match
-    * (about sampleRate/2 + 9 steps). Hit turns are estimated as min(matches, nTurns),
-    * each paying its text plus half a sample of skip. Left out: the per-rule scans of
-    * the dense branch (0.33 ns/char each, under 0.01 step) and RRR shards' dearer LF
-    * step (extract 630 ns/char against decodeAll 35), which only favours decoding more.
-    */
-  private[pipeline] def decodeShard(matches: Long, sampleRate: Int, corpusChars: Long,
-      nTurns: Int): Boolean = {
-    val locateSteps = matches * (sampleRate / 2.0 + 9)
-    val extractSteps = math.min(matches, nTurns.toLong) *
-      (corpusChars.toDouble / math.max(1, nTurns) + sampleRate / 2.0)
-    corpusChars * DecodeStepsPerChar <= locateSteps + extractSteps
-  }
-
-  private val DecodeStepsPerChar = 0.45
 
   /** Sorted start positions of the overlapping occurrences of `pattern` in `corpus`;
     * throws unless there are exactly `total` (the shard's `count()`).
@@ -478,10 +445,12 @@ object TranscriptPipeline {
     val enriched = enrich(spark, routed).withColumn("attempt", lit(attempt))
     // No shuffle before the write: route, enrich and the sink write run in the stage
     // that reads the persisted shards, so the text-heavy routed rows are never
-    // exchanged. coalesce (narrow, no shuffle) caps the tasks at cluster width, so
-    // output file count (and the driver-serial commit) tracks the cluster, not the
-    // shard partitions. A retried task re-reads the same persisted shards and both
-    // route branches emit rows in position order, so a retry writes the same rows.
+    // exchanged. coalesce is narrow: it only merges partitions, so the write runs
+    // min(shard partitions, defaultParallelism) tasks, and it does not rebalance, so
+    // a hot shard's rows all land on one writer. Output file count (and the
+    // driver-serial commit) stays at most cluster width. A retried task re-reads the
+    // same persisted shards and route emits rows in position order, so a retry
+    // writes the same rows.
     // committer v2 (direct task commit, no serial driver-side rename pass) is safe
     // for sinks + lineage ONLY because visibility is governed by the attempt
     // markers, not the parquet committer: readers never trust an attempt without

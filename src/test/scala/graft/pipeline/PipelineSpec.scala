@@ -272,21 +272,34 @@ class PipelineSpec extends AnyFunSuite {
     manyTurns.unpersist()
   }
 
-  test("dense decode and sparse locate branches route identically") {
+  test("decode routing equals the locate + extract path") {
+    import spark.implicits._
     val shards = TranscriptPipeline.buildShards(spark, turns, cfg).cache()
     val cols = Seq("sink", "conv_id", "turn_idx", "role", "tool", "ts", "n_matches", "text")
-    // the branch function forced either way: every shard decodes, or every shard locates
-    val viaDecode = TranscriptPipeline.route(spark, shards, cfg.rules, (_, _, _, _) => true)
-      .selectExpr(cols: _*)
-    val viaLocate = TranscriptPipeline.route(spark, shards, cfg.rules, (_, _, _, _) => false)
-      .selectExpr(cols: _*)
+    val viaDecode = TranscriptPipeline.route(spark, shards, cfg.rules).selectExpr(cols: _*)
+    // reference: locateAll every match, keep those inside one turn, extract that turn
+    val viaLocate = shards.collect().toSeq.flatMap { s =>
+      val fm = FmIndex.deserialize(s.shard)
+      cfg.rules.flatMap { rule =>
+        val ends = fm.locateAll(rule.pattern.toCharArray).toSeq.flatMap { pos =>
+          (0 until s.n_turns).find { t =>
+            s.offsets(t) <= pos && pos + rule.pattern.length <= s.offsets(t) + s.lens(t)
+          }
+        }
+        ends.groupBy(identity).toSeq.map { case (t, hits) =>
+          RoutedHit(rule.sink, s.conv_ids(t), s.turn_idxs(t), s.roles(t), s.tools(t),
+            TsMicros.toTimestamp(s.ts_micros(t)), hits.length,
+            fm.extractString(s.offsets(t), s.offsets(t) + s.lens(t)), s.shard_id)
+        }
+      }
+    }.toDS().selectExpr(cols: _*)
     assert(viaDecode.count() > 0, "routing should produce rows on the synthetic corpus")
     assert(viaLocate.exceptAll(viaDecode).count() == 0 &&
-      viaDecode.exceptAll(viaLocate).count() == 0, "decode branch differs from locate routing")
+      viaDecode.exceptAll(viaLocate).count() == 0, "decode routing differs from locate + extract")
     shards.unpersist()
   }
 
-  test("a match across the turn separator routes no turn, in both branches") {
+  test("a match across the turn separator routes no turn") {
     import spark.implicits._
     val ts = new java.sql.Timestamp(0L)
     val texts = Seq("alpha end", "start beta", "line one\nline two", "", "tail\n", "end")
@@ -301,21 +314,19 @@ class PipelineSpec extends AnyFunSuite {
     }.reduce(_ unionAll _)
     assert(oracle.count() == 4, "oracle: nl x2, inner, line; cross and endtail match nothing")
     val shards = TranscriptPipeline.buildShards(spark, hand, oneShard).cache()
-    for (dense <- Seq(true, false)) {
-      val routed = TranscriptPipeline.route(spark, shards, rules, (_, _, _, _) => dense)
-      val got = routed.select("sink", "turn_idx", "text")
-      assert(got.exceptAll(oracle).count() == 0 && oracle.exceptAll(got).count() == 0,
-        s"dense=$dense routed ${got.collect().mkString(", ")}")
-      // n_matches counts only the matches inside the turn: one '\n' in "line one\nline two"
-      val nl = routed.filter(col("sink") === "nl").select("turn_idx", "n_matches").as[(Int, Int)]
-        .collect().toSet
-      assert(nl == Set((2, 1), (4, 1)), s"dense=$dense nl=$nl")
-      assert(routed.filter(col("sink") === "line").select("n_matches").as[Int].collect().toSeq == Seq(2))
-    }
+    val routed = TranscriptPipeline.route(spark, shards, rules)
+    val got = routed.select("sink", "turn_idx", "text")
+    assert(got.exceptAll(oracle).count() == 0 && oracle.exceptAll(got).count() == 0,
+      s"routed ${got.collect().mkString(", ")}")
+    // n_matches counts only the matches inside the turn: one '\n' in "line one\nline two"
+    val nl = routed.filter(col("sink") === "nl").select("turn_idx", "n_matches").as[(Int, Int)]
+      .collect().toSet
+    assert(nl == Set((2, 1), (4, 1)), s"nl=$nl")
+    assert(routed.filter(col("sink") === "line").select("n_matches").as[Int].collect().toSeq == Seq(2))
     shards.unpersist()
   }
 
-  test("the dense scan fails loudly when its total differs from count()") {
+  test("the route scan fails loudly when its total differs from count()") {
     val shard = TranscriptPipeline.buildShards(spark, turns, cfg).head()
     assert(TranscriptPipeline.scanAll("abab", "ab", 2, shard).toSeq == Seq(0, 2))
     for (wrong <- Seq(1, 3)) {
@@ -323,17 +334,6 @@ class PipelineSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"shard ${shard.shard_id}/${shard.shard_seq}") &&
         e.getMessage.contains("'ab'") && e.getMessage.contains(s"count() says $wrong"), e.getMessage)
     }
-  }
-
-  test("decodeShard picks decode once locate plus hit-turn extract costs more") {
-    // 10,100 chars in 100 turns at sampleRate 16: one decode costs 4,545 LF steps; each
-    // match costs 17 to locate and, up to 100 hit turns, 109 to extract its turn
-    def dense(m: Long) = TranscriptPipeline.decodeShard(m, 16, 10100L, 100)
-    assert(!dense(0) && !dense(1) && !dense(36))
-    assert(dense(37) && dense(100) && dense(1000000))
-    assert((0L to 500L).map(dense) == (0L to 500L).map(_ >= 37), "not monotone in matches")
-    // a sparser sample makes locate and extract dearer, so the boundary moves down
-    assert(!dense(30) && TranscriptPipeline.decodeShard(30, 64, 10100L, 100))
   }
 
   test("alphabet fingerprint prunes shards that cannot match, never drops real matches") {
