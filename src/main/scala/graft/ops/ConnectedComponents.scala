@@ -140,10 +140,4 @@ object ConnectedComponents {
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
-
-  /** Spec hook: ids of the RDD blocks currently persisted for `df`'s checkpoint. */
-  private[graft] def checkpointRddId(df: DataFrame): Option[Int] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
 }

@@ -597,26 +597,10 @@ object CorpusQueries {
        |SELECT lang, CAST(sum(t.n_tok) AS BIGINT) AS n_tokens, count(*) AS n_words
        |FROM dw JOIN tok t USING (w) GROUP BY lang ORDER BY lang""".stripMargin
 
-  /** Word 3-gram shingles, 1-based positions [1, len-2]; empty below 3 words. */
-  private def shingles(w: Column): Column =
-    when(size(w) >= 3,
-      transform(sequence(lit(1), size(w) - 2), i =>
-        concat_ws(" ", element_at(w, i), element_at(w, i + 1), element_at(w, i + 2))))
-      .otherwise(array().cast("array<string>"))
-
   /** 8 deterministic salts for the MinHash family (fixed 60-bit constants). */
   val MinhashSalts: Array[Long] = Array(
     0x243f6a8885a308dL, 0x13198a2e0370734L, 0xa4093822299f31dL, 0x082efa98ec4e6c8L,
     0x452821e638d0137L, 0xbe5466cf34e90c6L, 0xc0ac29b7c97c50dL, 0x3f84d5b5b547091L)
-
-  /** MinHash family from ONE md5 per shingle: the 60-bit hex prefix xor a per-function
-    * salt (9x fewer digests than hashing per function).
-    */
-  private def shingleHash(sh: Column): Column =
-    transform(sh, x => conv(substring(md5s(x), 1, 15), 16, 10).cast("long"))
-
-  private def minhashFromHs(hs: Column, j: Int): Column =
-    array_min(transform(hs, h => h.bitwiseXOR(lit(MinhashSalts(j)))))
 
   // ---------------------------------------------------------------- helpers (oracle side)
 
@@ -3511,7 +3495,6 @@ object CorpusQueries {
 
     // --- log pipeline stage 2: FM-shard substring routing with match counts ---
     "q71_route_fm" -> ((s, dir) => {
-      import s.implicits._
       val cfg = graft.pipeline.TranscriptPipeline.Config(
         numShards = 16, saltBlock = 64, sampleRate = 8, rules = RouteRulesEvents)
       val shards = ShardTableCache.eventShards(s, dir, cfg)
@@ -3522,7 +3505,6 @@ object CorpusQueries {
 
     // --- log pipeline stage 3: per-conversation aggregates over routed rows ---
     "q72_conv_agg" -> ((s, dir) => {
-      import s.implicits._
       val cfg = graft.pipeline.TranscriptPipeline.Config(
         numShards = 16, saltBlock = 64, sampleRate = 8, rules = RouteRulesEvents)
       val shards = ShardTableCache.eventShards(s, dir, cfg)
@@ -3896,7 +3878,6 @@ object CorpusQueries {
     // --- log pipeline invariant: routed-turn text RECONSTRUCTED from the shard must
     //     equal the input text (per-turn text equality, checked by the oracle) ---
     "q73_turn_equality" -> ((s, dir) => {
-      import s.implicits._
       val cfg = graft.pipeline.TranscriptPipeline.Config(
         numShards = 16, saltBlock = 64, sampleRate = 8, rules = RouteRulesEvents)
       val shards = ShardTableCache.eventShards(s, dir, cfg)

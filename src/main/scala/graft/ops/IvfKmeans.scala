@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** IVF (inverted-file) coarse quantizer for approximate nearest-neighbor search:
   * Lloyd's k-means over QUANTIZED integer vectors, so the model is bit-reproducible

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -67,14 +67,6 @@ object PartitionedTable {
   def readTranscripts(spark: SparkSession, dir: String): Dataset[Turn] = {
     import spark.implicits._
     spark.read.parquet(dir)
-      .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .as[Turn]
-  }
-
-  def readBuckets(spark: SparkSession, dir: String, buckets: Seq[Int]): Dataset[Turn] = {
-    import spark.implicits._
-    spark.read.parquet(dir)
-      .filter(col("p_bucket").isin(buckets: _*))
       .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
       .as[Turn]
   }

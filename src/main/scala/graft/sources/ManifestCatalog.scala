@@ -651,7 +651,7 @@ class ManifestCatalog extends TableCatalog
       // bucket/days/truncate expressions bind (RequiresDistributionAndOrdering)
       case n if PartitionTransformFunctions.all.contains(n) =>
         PartitionTransformFunctions.all(n)
-      case other =>
+      case _ =>
         throw new org.apache.spark.sql.catalyst.analysis.NoSuchFunctionException(ident)
     }
 

@@ -2,12 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.SparkSession
@@ -16,7 +13,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{
   Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder,
-  SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+  SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{
   BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo,
   SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
@@ -191,7 +188,6 @@ object ManifestDataSource {
     */
   private def schemaFromFirstFile(dir: String, entries: Seq[ManifestTables.Entry],
       spec: Seq[ManifestTables.PartCol]): StructType = {
-    val conf = hadoopConf()
     val reader = ParquetFileReader.open(ManifestDataSource.parquetInput(s"$dir/${entries.head.path}"))
     val fileSchema = try reader.getFileMetaData.getSchema finally reader.close()
     StructType(sparkFields(fileSchema) ++ spec.filter(_.transform.isEmpty)
@@ -441,12 +437,8 @@ object ManifestDataSource {
     * Empty bounds = no constraint = every entry satisfies — which reads as "keep
     * all" on the scan side and "an unconstrained conjunction is TRUE" on the
     * DELETE side; both are the same statement.
-    */
-  private[sources] def entryWithinBounds(partCols: Seq[ManifestTables.PartCol],
-      bounds: Map[String, Set[String]])(e: ManifestTables.Entry): Boolean =
-    entryWithinBoundsBy(_ => partCols, bounds)(e)
-
-  /** Partition-EVOLUTION-aware bounds check: each entry's value is read under its
+    *
+    * Partition-EVOLUTION-aware: each entry's value is read under its
     * OWN spec (ManifestTables.specResolver), and a bound on a column the entry's
     * spec lacks keeps the entry — its files predate the field, their rows may
     * match, and the residual predicate decides. Identity columns exist in every
@@ -468,12 +460,7 @@ object ManifestDataSource {
     * partitioning: a residual `ts >= T` predicate prunes files whose day lies
     * wholly before T's day)? Bounds are (column name, ">="|"<=", epoch day); a
     * malformed recorded value answers true (never prune on doubt).
-    */
-  private[sources] def entryWithinDayRanges(partCols: Seq[ManifestTables.PartCol],
-      ranges: Seq[(String, String, Long)])(e: ManifestTables.Entry): Boolean =
-    entryWithinDayRangesBy(_ => partCols, ranges)(e)
-
-  /** Evolution-aware day-range check — already name-keyed, so an entry whose spec
+    * Evolution-aware — already name-keyed, so an entry whose spec
     * predates the days() field simply finds no index and stays (never prune on a
     * field the file was not routed by).
     */
@@ -3919,7 +3906,7 @@ private class ManifestDeltaBatchWrite(dir: String, cmdName: String,
     fileIdx: Int, posIdx: Int, rowFields: Array[(String, DataType)],
     insertsAllowed: Boolean)
     extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-  import org.apache.spark.sql.connector.write.{DeltaWriter, DeltaWriterFactory}
+  import org.apache.spark.sql.connector.write.DeltaWriterFactory
 
   private val writeUid = java.util.UUID.randomUUID().toString.substring(0, 8)
   private val partCol = ManifestTables.readPartitionColumn(dir)

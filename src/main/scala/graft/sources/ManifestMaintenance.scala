@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.nio.charset.StandardCharsets
 
 /** Data-file COMPACTION for manifest tables — the `rewrite_data_files` analog to
   * `ManifestTables.compact`'s `rewrite_manifests`. The small-file problem is the
@@ -513,8 +512,8 @@ object ManifestMaintenance {
     */
   private def readFilesWithDeletes(s2: SparkSession, dir: String, dataSchema: StructType,
       files: Seq[ManifestTables.Entry], deleted: Map[String, Array[Long]],
-      eqDels: Seq[ManifestTables.EqDelete] = Nil,
-      colIds: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      eqDels: Seq[ManifestTables.EqDelete],
+      colIds: Option[String]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val reg = colIds.map(ManifestTables.parseColIds).getOrElse(Nil)
     // only a rename/drop history forces per-file name resolution; fresh registries
@@ -587,15 +586,14 @@ object ManifestMaintenance {
     (batched ++ perFileDfs).reduce(_ unionAll _)
   }
 
-  /** Run independent per-partition rewrite jobs from a small thread pool so the
+  /** Run independent per-partition rewrite jobs from a thread pool of at most 4 so the
     * next group's tasks back-fill executors freed by the current group's tail
     * (guide §2.6 overlap): Spark's scheduler runs concurrent jobs FIFO, each
     * rewrite works in its own uuid temp dir and new session, and Future.traverse
     * preserves input order so the caller sees the exact sequential result.
     */
   private def mapConcurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    val par = math.min(
-      sys.env.getOrElse("SPARK_GRAFT_MAINT_PAR", "4").toInt, math.max(1, xs.length))
+    val par = math.min(4, math.max(1, xs.length))
     if (xs.length <= 1 || par <= 1) xs.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
@@ -625,9 +623,9 @@ object ManifestMaintenance {
   private def rewriteBin(spark: SparkSession, dir: String,
       partCols: Seq[ManifestTables.PartCol], dataSchema: StructType,
       joined: String, bin: Seq[ManifestTables.Entry],
-      deleted: Map[String, Array[Long]] = Map.empty,
-      eqDels: Seq[ManifestTables.EqDelete] = Nil,
-      colIds: Option[String] = None): ManifestTables.Entry = {
+      deleted: Map[String, Array[Long]],
+      eqDels: Seq[ManifestTables.EqDelete],
+      colIds: Option[String]): ManifestTables.Entry = {
     val uid = java.util.UUID.randomUUID().toString
     val tmpOut = s"$dir/_compact_tmp/$uid"
     val s2 = rewriteSession(spark)

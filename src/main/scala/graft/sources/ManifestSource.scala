@@ -1733,11 +1733,6 @@ object ManifestTables {
     s"\"note\"\\s*:\\s*\"$JStr\"".r.findFirstMatchIn(head).map(m => jsonUnescape(m.group(1)))
   }
 
-  /** Commit note of one snapshot by id (the `.snapshots` metadata table's column). */
-  private[sources] def noteOfSnapshot(dir: String, id: Int): Option[String] =
-    noteOf(Paths.get(dir, "_manifests", f"snapshot-$id%05d.json").toString)
-      .filter(_.nonEmpty)
-
   /** (commit ts ms, operation tag, note) of one snapshot from ONE head probe —
     * all three live in the fixed-size head; the `.snapshots` metadata table reads
     * each snapshot head once. Pre-tag snapshots answer operation None.
@@ -1849,11 +1844,6 @@ object ManifestTables {
         snapshotFiles(dir).reverseIterator.exists(f => noteOf(f).contains(note))
     }
   }
-
-  /** All commit notes across committed snapshots (spec hook). */
-  private[sources] def committedNotes(dir: String): Set[String] =
-    if (latestSnapshotId(dir).isEmpty) Set.empty
-    else snapshotFiles(dir).flatMap(noteOf(_)).toSet
 
   /** The partition column name recorded by the latest committed snapshot ("" if the
     * manifest predates partition recording, e.g. PartitionedTable transcript tables).

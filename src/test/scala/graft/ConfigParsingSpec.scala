@@ -67,4 +67,38 @@ class ConfigParsingSpec extends AnyFunSuite {
       PipelineMain.parseArgs(Array("--input", "i", "--compression", "all")))
     assert(e.getMessage.contains("--compression"), e.getMessage)
   }
+
+  test("Probe parses each mode's arguments; unset SPARK_GRAFT_CPUS means every processor") {
+    assert(Probe.parseArgs(Seq("query", "2", "q01_agg_pricing", "--plans", "p")) ==
+      Probe.Query(2, Seq("q01_agg_pricing"), Some("p")))
+    assert(Probe.parseArgs(Seq("scale")) == Probe.Scale(Seq(1, 10)))
+    assert(Probe.parseArgs(Seq("dml", "200")) == Probe.Dml(Seq(200)))
+    assert(Probe.parseArgs(Seq("pipeline", "4", "200", "40")) ==
+      Probe.Pipeline(Some(4), 200, 40, 3))
+    assert(Probe.parseCpus(None) == Runtime.getRuntime.availableProcessors)
+    assert(Probe.parseCpus(Some("3")) == 3)
+  }
+
+  test("Probe rejects an unknown mode, a non-numeric count and an unknown flag") {
+    val cases = Seq(
+      Seq("explain", "1") -> "'explain'",
+      Seq("query", "many", "q01_agg_pricing") -> "'many'",
+      Seq("query", "1", "q00_missing") -> "'q00_missing'",
+      Seq("scale", "1", "ten") -> "'ten'",
+      Seq("dml", "150") -> "'150'",
+      Seq("pipeline", "4", "200", "x40") -> "'x40'",
+      Seq("pipeline", "1", "2", "3", "4", "5") -> "pipeline 1 2 3 4 5",
+      Seq("scale", "--cpus", "4") -> "--cpus",
+      Seq("dml", "--plans", "p") -> "--plans",
+      Seq("query", "1", "--plans") -> "--plans")
+    for ((args, named) <- cases) {
+      val e = intercept[IllegalArgumentException](Probe.parseArgs(args))
+      assert(e.getMessage.contains(named), e.getMessage)
+    }
+    for (bad <- Seq("0", "eight", "")) {
+      val e = intercept[IllegalArgumentException](Probe.parseCpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+  }
 }

@@ -1,7 +1,8 @@
 package graft.functions
 
+import graft.SharedSparkSession
 import graft.ops.ShardTableCache
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * FmFingerprintPruning optimizer rule (soundness + that it actually fires), and the
   * GraftExtensions wiring class.
   */
-class ExtensionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-extensions-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class ExtensionsSpec extends AnyFunSuite with SharedSparkSession {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -132,7 +125,6 @@ class ExtensionsSpec extends AnyFunSuite {
   test("rule steps aside when shard and alpha_fp come from different relations") {
     FmFunctions.register(spark)
     GraftExtensions.installRules(spark)
-    import spark.implicits._
     val base = ShardTableCache.docShards(spark, dir, numShards = 16).toDF()
     val pa = java.nio.file.Files.createTempDirectory("ext_xrel_a").toString
     val pb = java.nio.file.Files.createTempDirectory("ext_xrel_b").toString

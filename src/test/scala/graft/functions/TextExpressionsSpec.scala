@@ -1,18 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TextExpressionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-textexpr-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class TextExpressionsSpec extends AnyFunSuite with SharedSparkSession {
 
   /** Independent reference: fold over code points, h = (h*31 + cp) mod 1e9+7. */
   private def ref(s: String): Long = {

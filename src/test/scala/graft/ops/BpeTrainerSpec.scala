@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * trainer against DuckDB on the real corpus; this spec proves the greedy contract
   * on the inputs the corpus never produces.
   */
-class BpeTrainerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-bpe-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class BpeTrainerSpec extends AnyFunSuite with SharedSparkSession {
 
   /** Reference BPE: greedy single-pass merge application, (count desc, l, r) argmax. */
   private def refTrain(words: Map[String, Long], k: Int)

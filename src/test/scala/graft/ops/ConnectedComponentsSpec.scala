@@ -1,18 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class ConnectedComponentsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-cc-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class ConnectedComponentsSpec extends AnyFunSuite with SharedSparkSession {
 
   /** Union-find oracle. */
   private def ufComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {

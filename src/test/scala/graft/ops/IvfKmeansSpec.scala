@@ -1,19 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class IvfKmeansSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-ivf-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class IvfKmeansSpec extends AnyFunSuite with SharedSparkSession {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -25,7 +16,6 @@ class IvfKmeansSpec extends AnyFunSuite {
   }
 
   test("fit is deterministic across refits and repartitionings") {
-    import spark.implicits._
     val a = IvfKmeans.fit(embDs, k = 10, iters = 2)
     val b = IvfKmeans.fit(embDs.repartition(7), k = 10, iters = 2)
     assert(a.centroids.map(_._1).sameElements(b.centroids.map(_._1)))

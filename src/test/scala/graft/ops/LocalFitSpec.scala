@@ -1,21 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The row-count gate in front of every iterative fit: `max` rows fit on the
   * driver, `max + 1` rows or `max = 0` take the distributed loop.
   */
-class LocalFitSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-localfit-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class LocalFitSpec extends AnyFunSuite with SharedSparkSession {
 
   test("collectIfSmall: max rows collect, max + 1 rows and max = 0 do not") {
     import spark.implicits._

@@ -1,23 +1,14 @@
 package graft.ops
 
+import graft.SharedSparkSession
 import graft.functions.FmFunctions
 import graft.pipeline.Transcripts
 import graft.streaming.StreamingPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class ModulesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-modules-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class ModulesSpec extends AnyFunSuite with SharedSparkSession {
 
   test("approximate aggregates: HLL distinct and approx percentile within error bounds") {
     // sketch surface for corpus-level stats where exactness is not worth the shuffle:
@@ -235,7 +226,6 @@ class ModulesSpec extends AnyFunSuite {
   }
 
   test("streaming: windowed counts and stateful conversation aggregates match batch") {
-    import spark.implicits._
     val turns = Transcripts.generate(spark, nConvs = 12, turnsPerConv = 15)
     val rawDir = Files.createTempDirectory("stream_raw").toString
     Transcripts.renderRawLines(turns).write.mode("overwrite").parquet(rawDir)
@@ -273,7 +263,6 @@ class ModulesSpec extends AnyFunSuite {
   }
 
   test("streaming: watermark-bounded dedup and native session windows match batch") {
-    import spark.implicits._
     val base = Transcripts.generate(spark, nConvs = 8, turnsPerConv = 12)
     val turns = base.union(base.limit(20)) // inject exact duplicates
     val rawDir = Files.createTempDirectory("stream_dedup").toString

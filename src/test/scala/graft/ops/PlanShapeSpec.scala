@@ -1,7 +1,6 @@
 package graft.ops
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{SharedSparkSession, SparkEntry}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits: the properties that matter at 100x scale, asserted on the
@@ -12,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (BroadcastNestedLoopJoin/CartesianProduct), except the LABELED brute-force
   *    baselines whose broadcast side is bounded by construction
   */
-class PlanShapeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-planshape-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class PlanShapeSpec extends AnyFunSuite with SharedSparkSession {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -245,7 +235,6 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("pipeline route stage: patterns broadcast, shards stream (single shuffle)") {
-    import spark.implicits._
     val turns = graft.pipeline.Transcripts.generate(spark, 10, 10)
     val cfg = graft.pipeline.TranscriptPipeline.Config(numShards = 4, saltBlock = 8, sampleRate = 8)
     val shards = graft.pipeline.TranscriptPipeline.buildShards(spark, turns, cfg)

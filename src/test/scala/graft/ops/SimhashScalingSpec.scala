@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.SparkEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{SharedSparkSession, SparkEntry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -15,15 +15,7 @@ import java.nio.file.Files
   * bucket sizes stay near-constant and per-doc candidate work stays bounded when the
   * corpus grows 10x, and that the band join's recall is exact for hamming <= 3.
   */
-class SimhashScalingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-simhash-scaling-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class SimhashScalingSpec extends AnyFunSuite with SharedSparkSession {
 
   /** Deterministic synthetic corpus: n docs of odd token counts over a shared vocab
     * (odd so no majority ties — signature bits land ~iid uniform, the honest model

@@ -1,20 +1,11 @@
 package graft.ops
 
+import graft.SharedSparkSession
 import graft.functions.ShardCache
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class SimilarityLshSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-lsh-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class SimilarityLshSpec extends AnyFunSuite with SharedSparkSession {
 
   private val dir = "/root/testdata/sf0.001"
 

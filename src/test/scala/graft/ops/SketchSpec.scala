@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * admit false positives (removed by the exact verify stage) but never false
   * negatives, so sketch-prefiltering loses nothing.
   */
-class SketchSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-sketch-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class SketchSpec extends AnyFunSuite with SharedSparkSession {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,19 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-class PartitionedTableSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class PartitionedTableSpec extends AnyFunSuite with SharedSparkSession {
 
   test("bucketed write + manifest + read round-trips and prunes partitions") {
     import spark.implicits._

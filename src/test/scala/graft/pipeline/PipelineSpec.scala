@@ -1,7 +1,8 @@
 package graft.pipeline
 
+import graft.SharedSparkSession
 import graft.core.FmIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -13,16 +14,7 @@ import java.nio.file.Files
   *  - grok parse round-trip: render raw lines -> regex parse -> original rows
   *  - resume: partial run + resumed run == single full run, no recount drift
   */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-pipeline-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class PipelineSpec extends AnyFunSuite with SharedSparkSession {
 
   private lazy val turns = Transcripts.generate(spark, nConvs = 40, turnsPerConv = 25,
     skewConvs = 2, skewFactor = 20).cache()
@@ -31,7 +23,6 @@ class PipelineSpec extends AnyFunSuite {
 
   /** Catalyst-only oracle: route by substring containment on the raw input. */
   private def oracleRouted(rules: Seq[SinkRule]): DataFrame = {
-    import spark.implicits._
     rules.map { r =>
       turns.filter(col("text").contains(r.pattern))
         .select(lit(r.sink).as("sink"), col("conv_id"), col("turn_idx"),
@@ -40,7 +31,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("grok parse of rendered raw lines round-trips every field") {
-    import spark.implicits._
     val raw = Transcripts.renderRawLines(turns)
     val parsed = Transcripts.parseRawLines(spark, raw)
     assert(parsed.count() == turns.count())
@@ -105,7 +95,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("skewed conversations are split across shards by the salt block") {
-    import spark.implicits._
     val sid = TranscriptPipeline.shardIdCol(cfg)
     val perConvShards = turns.withColumn("sid", sid)
       .groupBy("conv_id").agg(countDistinct("sid").as("n"))
@@ -337,7 +326,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("alphabet fingerprint prunes shards that cannot match, never drops real matches") {
-    import spark.implicits._
     val shards = TranscriptPipeline.buildShards(spark, turns, cfg).cache()
     // a pattern whose char is absent from the whole corpus -> every shard pruned
     val pruned = TranscriptPipeline.route(spark, shards,
@@ -354,7 +342,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("shard table persists and routes identically after reload") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("shardtab").toString
     val shards = TranscriptPipeline.buildShards(spark, turns, cfg)
     TranscriptPipeline.writeShardTable(shards, dir)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -22,15 +22,7 @@ import java.nio.file.Files
   * already has its own gate; this battery is the regression net for the pairs
   * nobody thought to write.
   */
-class ManifestModelSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-manifest-model-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class ManifestModelSpec extends AnyFunSuite with SharedSparkSession {
 
   test("40-step seeded random DML sequence matches the reference model after every step") {
     import spark.implicits._

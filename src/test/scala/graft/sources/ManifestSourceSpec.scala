@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
@@ -8,15 +8,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The DSv2 manifest metadata table and the snapshot-isolated data reader. */
-class ManifestSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-manifest-source-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   private def freshTable(): String = {
     val out = Files.createTempDirectory("manifest_src").toString
@@ -446,7 +438,6 @@ class ManifestSourceSpec extends AnyFunSuite {
   }
 
   test("DSv2 appends publish segments; legacy inline bootstraps fold on first append") {
-    import spark.implicits._
     val out = freshTable() // legacy ManifestTables.commit -> INLINE entries
     val inlineRefs = ManifestTables.readSnapshotRefs(out, None)
     assert(inlineRefs.inline.nonEmpty && inlineRefs.segments.isEmpty)
@@ -583,7 +574,6 @@ class ManifestSourceSpec extends AnyFunSuite {
       "SELECT CAST(sum(graft_fnc.fm_count(shard, 'the ')) AS BIGINT) AS n " +
         "FROM graft_fnc.fm.shards WHERE graft_fnc.fm_count(shard, 'the ') > 0")
     graft.functions.FmFunctions.register(spark)
-    import spark.implicits._
     val expected = shards.toDF().selectExpr("fm_count(shard, 'the ') AS c")
       .agg(sum("c")).head().getLong(0)
     assert(qThe.head().getLong(0) == expected)
@@ -2319,7 +2309,6 @@ class ManifestSourceSpec extends AnyFunSuite {
   }
 
   test("CREATE TABLE / CTAS / DROP TABLE through the catalog") {
-    import spark.implicits._
     val wh = Files.createTempDirectory("manifest_create").toString
     val cat = "graft_ct_" + wh.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
@@ -2435,7 +2424,6 @@ class ManifestSourceSpec extends AnyFunSuite {
 
   /** events-shaped frame: 4 UTC days x 40 users, deterministic. */
   private def hiddenEventsDf = {
-    import spark.implicits._
     spark.range(400).select(
       expr("timestamp_seconds(86400 * cast(id % 4 as bigint) + id)").as("ts"),
       (col("id") % 40).as("user_id"),
@@ -2894,7 +2882,6 @@ class ManifestSourceSpec extends AnyFunSuite {
 
   test("zorderBy survives astronomic column ranges: ranks stay spread (no integer " +
       "wrap) and range predicates still skip files") {
-    import spark.implicits._
     val tbl = Files.createTempDirectory("manifest_zorder_wide").toString
     // ids span ~9.2e17 — (v - mn) * 65535 would wrap a long and clamp every rank
     // to the SAME value, silently destroying the layout
@@ -2906,7 +2893,6 @@ class ManifestSourceSpec extends AnyFunSuite {
       .repartition(8)
       .write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("overwrite").save(tbl)
-    val total = ManifestTables.readLatest(tbl).size
     ManifestMaintenance.zorderBy(spark, tbl, Seq("wide_id", "k"), targetBytes = 2048L)
     val afterFiles = ManifestTables.readLatest(tbl).size
     assert(afterFiles > 1, s"need multiple clustered files for a skipping probe")
@@ -3973,7 +3959,6 @@ class ManifestSourceSpec extends AnyFunSuite {
 
   test("row-group skipping: residual comparisons prune parquet row groups via footer " +
       "stats inside one file — the scan emits a fraction of the rows, answers exact") {
-    import spark.implicits._
     val root = Files.createTempDirectory("manifest_rowgroup")
     val tbl = s"$root/t"
     val n = 50000
@@ -4003,7 +3988,6 @@ class ManifestSourceSpec extends AnyFunSuite {
 
   test("bloom-filter row-group skipping: .option(bloomfilters) writes per-row-group " +
       "blooms; equality on an unsorted high-cardinality key skips groups stats cannot") {
-    import spark.implicits._
     val root = Files.createTempDirectory("manifest_bloom")
     // 64-char high-entropy strings defeat dictionary encoding (the dictionary
     // page overflows to plain), and interleaved writes give every row group the

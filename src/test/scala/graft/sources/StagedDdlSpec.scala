@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import graft.SharedSparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -9,15 +9,7 @@ import java.nio.file.Files
   * atomic CTAS / RTAS / CREATE OR REPLACE TABLE with Iceberg REPLACE semantics
   * (a new snapshot on the same history, never drop+create).
   */
-class StagedDdlSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-staged-ddl-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  locally { spark.sparkContext.setLogLevel("ERROR") }
+class StagedDdlSpec extends AnyFunSuite with SharedSparkSession {
 
   private var n = 0
   /** A fresh warehouse + catalog per test (catalog conf is sticky per name). */
