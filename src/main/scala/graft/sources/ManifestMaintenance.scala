@@ -593,10 +593,9 @@ object ManifestMaintenance {
     * preserves input order so the caller sees the exact sequential result.
     */
   private def mapConcurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    val par = math.min(4, math.max(1, xs.length))
-    if (xs.length <= 1 || par <= 1) xs.map(f)
+    if (xs.length <= 1) xs.map(f)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, xs.length))
       implicit val ec: scala.concurrent.ExecutionContextExecutorService =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       try scala.concurrent.Await.result(
