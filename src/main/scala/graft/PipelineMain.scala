@@ -1,14 +1,19 @@
 package graft
 
+import graft.ops.CorpusQueries
+import graft.pipeline.{SinkRule, Transcripts, TranscriptPipeline}
 import org.apache.spark.sql.SparkSession
-import graft.pipeline.{PartitionedTable, SinkRule, Transcripts, TranscriptPipeline}
 
 /** Production entry point (spark-submit):
   *
   *   spark-submit --class graft.PipelineMain <jar> \
-  *     --input <transcript table dir | "synthetic:N_CONVS:TURNS"> \
+  *     --input <manifest table dir | raw-line dir with --raw-lines | "synthetic:N_CONVS:TURNS"> \
   *     --output <out dir> [--shards 4096] [--sample-rate 16] [--salt-block 4096] \
   *     [--rules sink=pattern,sink=pattern,...] [--raw-lines] [--compress]
+  *
+  * A table input is read at its latest committed manifest snapshot (write it through
+  * graft.sources.ManifestDataSource); a directory without one fails at startup. Every
+  * flag is checked before the session starts.
   *
   * Runs parse -> index -> route -> aggregate and writes per-sink tables, aggregates,
   * window stats and lineage under --output with atomic per-attempt commit markers.
@@ -50,11 +55,34 @@ object PipelineMain {
       }
     }
 
+  private def positive(name: String, value: String): Int =
+    CorpusQueries.parsePositiveInt(name, Some(value)).get
+
+  /** The pipeline config of the parsed flags; a bad count names its flag. */
+  private[graft] def parseConfig(opts: Map[String, String]): TranscriptPipeline.Config =
+    TranscriptPipeline.Config(
+      numShards = positive("--shards", opts.getOrElse("shards", "4096")),
+      saltBlock = positive("--salt-block", opts.getOrElse("salt-block", "4096")),
+      sampleRate = positive("--sample-rate", opts.getOrElse("sample-rate", "16")),
+      rules = opts.get("rules").map(parseRules).getOrElse(Transcripts.DefaultRules),
+      compress = opts.contains("compress"))
+
+  /** `--input synthetic:N_CONVS:TURNS` as (N_CONVS, TURNS); None for any other input. */
+  private[graft] def parseSynthetic(input: String): Option[(Int, Int)] =
+    if (!input.startsWith("synthetic:")) None
+    else input.split(":", -1) match {
+      case Array(_, n, t) => Some((positive("--input synthetic N_CONVS", n),
+        positive("--input synthetic TURNS", t)))
+      case _ => throw new IllegalArgumentException(
+        s"--input '$input' is not synthetic:N_CONVS:TURNS")
+    }
+
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
     val input = opts.getOrElse("input", sys.error("--input required"))
     val output = opts.getOrElse("output", sys.error("--output required"))
-    val rules = opts.get("rules").map(parseRules).getOrElse(Transcripts.DefaultRules)
+    val cfg = parseConfig(opts)
+    val synthetic = parseSynthetic(input)
 
     val spark = SparkSession.builder()
       // spark-submit injects spark.master; default to local[*] for direct JVM runs
@@ -65,22 +93,12 @@ object PipelineMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val cfg = TranscriptPipeline.Config(
-      numShards = opts.getOrElse("shards", "4096").toInt,
-      saltBlock = opts.getOrElse("salt-block", "4096").toInt,
-      sampleRate = opts.getOrElse("sample-rate", "16").toInt,
-      rules = rules,
-      compress = opts.contains("compress"))
-
-    val turns =
-      if (input.startsWith("synthetic:")) {
-        val parts = input.split(':')
-        Transcripts.generate(spark, parts(1).toInt, parts(2).toInt)
-      } else if (opts.contains("raw-lines")) {
+    val turns = synthetic match {
+      case Some((nConvs, nTurns)) => Transcripts.generate(spark, nConvs, nTurns)
+      case None if opts.contains("raw-lines") =>
         Transcripts.parseRawLines(spark, spark.read.text(input))
-      } else {
-        PartitionedTable.readTranscripts(spark, input)
-      }
+      case None => Transcripts.readTable(spark, input)
+    }
 
     val t0 = System.nanoTime()
     val report = TranscriptPipeline.runToSinks(spark, turns, cfg, output)

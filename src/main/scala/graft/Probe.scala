@@ -1,7 +1,9 @@
 package graft
 
+import graft.core.FmIndexBuilder
 import graft.ops.CorpusQueries
 import graft.pipeline.{Transcripts, TranscriptPipeline}
+import graft.sources.ManifestTables
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,7 +11,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Measurement main: one session builder, one timing helper and one task listener
-  * shared by four modes. Each mode prints one JSON line on stdout; every timed step
+  * shared by four Spark modes, plus one Spark-free FM-core mode. Each Spark mode
+  * prints one JSON line on stdout; every timed step
   * also prints its wall, task and shuffle-write totals on stderr, so a wall far above
   * taskSec / cores points at driver-side work (planning, commits, bounded collects).
   * Bench.scala stays the frozen end-to-end line; this main adds evidence beside it.
@@ -21,6 +24,9 @@ import java.util.concurrent.atomic.AtomicLong
   *   runMain graft.Probe dml [fileCount ...]      manifest DML cost (default 100 1000)
   *   runMain graft.Probe pipeline [cores] [nConvs] [turns] [runs]
   *       min of <runs> full runToSinks (defaults 15000 x 120, 3 runs) + heap peak
+  *   runMain graft.Probe shard [chars] [rate] | shard --file <path> <reps> [rate]
+  *       one FmIndex over a generated log-like corpus (default 128M chars) or <reps>
+  *       copies of a UTF-8 file, rate default 32; one JSON line per engine
   *
   * Cores: the pipeline's first argument, else SPARK_GRAFT_CPUS, else every
   * available processor. All arguments are checked before the session starts.
@@ -28,22 +34,31 @@ import java.util.concurrent.atomic.AtomicLong
 object Probe {
 
   private[graft] sealed trait Mode
+  /** A mode that runs inside a SparkSession. */
+  private[graft] sealed trait SparkMode extends Mode
   private[graft] final case class Query(repeats: Int, names: Seq[String],
-      plans: Option[String]) extends Mode
-  private[graft] final case class Scale(scales: Seq[Int]) extends Mode
-  private[graft] final case class Dml(sizes: Seq[Int]) extends Mode
+      plans: Option[String]) extends SparkMode
+  private[graft] final case class Scale(scales: Seq[Int]) extends SparkMode
+  private[graft] final case class Dml(sizes: Seq[Int]) extends SparkMode
   private[graft] final case class Pipeline(cores: Option[Int], nConvs: Int, turns: Int,
-      runs: Int) extends Mode
+      runs: Int) extends SparkMode
+  /** `size` is the generated corpus's chars, or the copies of `file` when it is set. */
+  private[graft] final case class Shard(size: Int, file: Option[String], rate: Int) extends Mode
 
   private def positive(name: String, v: String): Int =
     CorpusQueries.parsePositiveInt(name, Some(v)).get
 
-  private[graft] def parseArgs(args: Seq[String]): Mode = {
-    val (plans, rest) = args.indexOf("--plans") match {
+  /** The value of `flag` and the arguments without the pair. */
+  private def flagValue(args: Seq[String], flag: String, what: String): (Option[String], Seq[String]) =
+    args.indexOf(flag) match {
       case -1 => (None, args)
       case i if i + 1 < args.length => (Some(args(i + 1)), args.patch(i, Nil, 2))
-      case _ => throw new IllegalArgumentException("--plans needs a directory")
+      case _ => throw new IllegalArgumentException(s"$flag needs a $what")
     }
+
+  private[graft] def parseArgs(args: Seq[String]): Mode = {
+    val (plans, withFile) = flagValue(args, "--plans", "directory")
+    val (file, rest) = flagValue(withFile, "--file", "path")
     rest.find(_.startsWith("--")).foreach { f =>
       throw new IllegalArgumentException(s"unexpected argument: $f")
     }
@@ -66,15 +81,22 @@ object Probe {
         val Seq(cores, nConvs, turns, runs) = nums.zip(Seq("cores", "nConvs", "turns", "runs"))
           .map { case (v, name) => Some(positive(name, v)) }.padTo(4, None)
         Pipeline(cores, nConvs.getOrElse(15000), turns.getOrElse(120), runs.getOrElse(3))
-      case Seq(m, _*) if !Set("query", "scale", "dml", "pipeline")(m) =>
+      case Seq("shard", nums @ _*) if nums.length <= 2 && (file.isEmpty || nums.nonEmpty) =>
+        val Seq(size, rate) = nums.zip(Seq(if (file.isEmpty) "chars" else "reps", "rate"))
+          .map { case (v, name) => Some(positive(name, v)) }.padTo(2, None)
+        Shard(size.getOrElse(1 << 27), file, rate.getOrElse(32))
+      case Seq(m, _*) if !Set("query", "scale", "dml", "pipeline", "shard")(m) =>
         throw new IllegalArgumentException(
-          s"unknown mode '$m': expected query, scale, dml or pipeline")
+          s"unknown mode '$m': expected query, scale, dml, pipeline or shard")
       case _ => throw new IllegalArgumentException(
         "usage: query <repeats> [q ...] [--plans <dir>] | scale [n ...] | dml [files ...] " +
-          s"| pipeline [cores] [nConvs] [turns] [runs]; got '${args.mkString(" ")}'")
+          "| pipeline [cores] [nConvs] [turns] [runs] | shard [chars] [rate] " +
+          s"| shard --file <path> <reps> [rate]; got '${args.mkString(" ")}'")
     }
     if (plans.nonEmpty && !mode.isInstanceOf[Query])
       throw new IllegalArgumentException("--plans applies to the query mode only")
+    if (file.nonEmpty && !mode.isInstanceOf[Shard])
+      throw new IllegalArgumentException("--file applies to the shard mode only")
     mode
   }
 
@@ -100,9 +122,7 @@ object Probe {
   private def measure[T](meter: Meter, label: String)(body: => T): (T, Double) = {
     meter.taskMs.set(0L)
     meter.shuffleBytes.set(0L)
-    val t0 = System.nanoTime()
-    val r = body
-    val sec = (System.nanoTime() - t0) / 1e9
+    val (r, sec) = timed(body)
     System.err.println(f"[probe] $label%-32s wall=$sec%.3f s " +
       f"taskSec=${meter.taskMs.get / 1e3}%.1f shuffleWriteMB=${meter.shuffleBytes.get / 1e6}%.1f")
     (r, sec)
@@ -113,15 +133,38 @@ object Probe {
   private def tmpPath(name: String): String =
     Paths.get(System.getProperty("java.io.tmpdir"), name).toString
 
-  private def deleteTree(dir: String): Unit = {
-    val walk = Files.walk(Paths.get(dir))
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
+  /** `body`'s result and wall seconds. */
+  private def timed[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  def main(args: Array[String]): Unit = {
-    val mode = parseArgs(args.toSeq)
+  /** Runs `f` while sampling used heap every 20 ms: (result, seconds, peak used bytes). */
+  private def withPeakHeap[T](f: => T): (T, Double, Long) = {
+    @volatile var peak = 0L
+    @volatile var sampling = true
+    val sampler = new Thread(() => {
+      val rt = Runtime.getRuntime
+      while (sampling) {
+        peak = math.max(peak, rt.totalMemory() - rt.freeMemory())
+        Thread.sleep(20)
+      }
+    })
+    sampler.setDaemon(true)
+    sampler.start()
+    val (out, sec) = timed(f)
+    sampling = false
+    sampler.join()
+    (out, sec, peak)
+  }
+
+  def main(args: Array[String]): Unit = parseArgs(args.toSeq) match {
+    case s: Shard => shard(s) // no session: the heap figures stay Spark-free
+    case mode: SparkMode => sessionMain(mode)
+  }
+
+  private def sessionMain(mode: SparkMode): Unit = {
     val envCpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     val sfDir = mode match {
       case _: Query => sys.env.getOrElse("SPARK_GRAFT_SF_DIR", throw new IllegalArgumentException(
@@ -422,7 +465,7 @@ object Probe {
       val filesAfter = graft.sources.ManifestMaintenance.liveDataFiles(dir).length
       System.err.println(f"[probe] dml n=$n commit first10=$firstAvg%.3f " +
         f"last10=$lastAvg%.3f filesAfter=$filesAfter")
-      deleteTree(dir)
+      ManifestTables.deleteTree(Paths.get(dir))
       n -> Map(
         "commit_first10_avg" -> firstAvg, "commit_last10_avg" -> lastAvg,
         "respec_add" -> respecAddSec, "respec_drop" -> respecDropSec,
@@ -456,32 +499,146 @@ object Probe {
     val warm = Files.createTempDirectory("probe_warm").toString
     TranscriptPipeline.runToSinks(spark, Transcripts.generate(spark, 8, 40),
       cfg.copy(numShards = cores), warm)
-    deleteTree(warm)
+    ManifestTables.deleteTree(Paths.get(warm))
     val raw = spark.read.parquet(rawDir)
     val nTurns = raw.count()
 
-    @volatile var peak = 0L
-    @volatile var sampling = true
-    val sampler = new Thread(() => {
-      val rt = Runtime.getRuntime
-      while (sampling) {
-        peak = math.max(peak, rt.totalMemory() - rt.freeMemory())
-        Thread.sleep(25)
-      }
-    })
-    sampler.setDaemon(true)
-    sampler.start()
-    val times = (1 to p.runs).map { i =>
+    val (times, _, peak) = withPeakHeap((1 to p.runs).map { i =>
       val out = Files.createTempDirectory(s"probe_pipeline_$i").toString
       val (_, sec) = measure(meter, s"pipeline run $i")(
         TranscriptPipeline.runToSinks(spark, Transcripts.parseRawLines(spark, raw), cfg, out))
-      deleteTree(out)
+      ManifestTables.deleteTree(Paths.get(out))
       sec
-    }
-    sampling = false
-    sampler.join()
+    })
     val runs = times.map(t => f"$t%.2f").mkString("[", ",", "]")
     f"""{"cores":$cores,"turns":$nTurns,"fullRuns":$runs,"min":${times.min}%.2f,""" +
       f""""turnsPerSec":${nTurns / times.min}%.0f,"peakHeapMb":${peak >> 20}}"""
+  }
+
+  // ------------------------------------------------------------------ shard
+
+  /* Single-shard stress at the pipeline's maxCorpusChars cap (128M chars,
+   * TranscriptPipeline.Config.maxCorpusChars): builds ONE FmIndex and reports build
+   * throughput, peak-heap estimate, serialized bytes and query latencies — the
+   * numbers that size real executors (a shard-build task at the cap needs corpus +
+   * SA-IS int arrays + BWT in memory at once). Prints one JSON line per build config
+   * (Rank9 for speed, RRR for size). The --file form replicates a UTF-8 log fixture
+   * (e.g. the reference's HDFS_2k_multichar.log) and additionally reports serialized
+   * size as a percentage of input UTF-8 BYTES — the unit the reference's size
+   * benchmark uses (44.5% @rate 32 on Android.log,
+   * FmIndexSerializedSizeBenchmark.java:57).
+   */
+
+  /** Deterministic log-like text (levels, block ids, key=value pairs, CJK salt) with a
+    * multi-hundred-symbol alphabet.
+    */
+  private def shardCorpus(chars: Int): Array[Char] = {
+    val rnd = new scala.util.Random(42L)
+    val levels = Array("INFO ", "WARN ", "ERROR ", "DEBUG ")
+    val words = Array("Received", "block", "packet", "src:", "dest:", "size=", "blk_",
+      "PacketResponder", "terminating", "exception", "retry", "offset=")
+    val sb = new java.lang.StringBuilder(chars + 256)
+    while (sb.length < chars) {
+      sb.append(levels(rnd.nextInt(levels.length)))
+      val n = 4 + rnd.nextInt(10)
+      var i = 0
+      while (i < n) {
+        rnd.nextInt(6) match {
+          case 0 => sb.append("blk_").append(rnd.nextLong())
+          case 1 => sb.append("size=").append(rnd.nextInt(1 << 24))
+          case 2 => sb.append((0x4e00 + rnd.nextInt(512)).toChar)
+          case _ => sb.append(words(rnd.nextInt(words.length)))
+        }
+        sb.append(' ')
+        i += 1
+      }
+      sb.append('\n')
+    }
+    val out = new Array[Char](chars)
+    sb.getChars(0, chars, out, 0)
+    out
+  }
+
+  private def usedHeapMb(): Long = {
+    System.gc()
+    val rt = Runtime.getRuntime
+    (rt.totalMemory() - rt.freeMemory()) >> 20
+  }
+
+  private def shard(sh: Shard): Unit = {
+    val (text, inputBytes) = sh.file match {
+      case Some(path) =>
+        val raw = Files.readAllBytes(Paths.get(path))
+        val out = new String(raw, java.nio.charset.StandardCharsets.UTF_8).repeat(sh.size).toCharArray
+        System.err.println(s"[probe] fixture $path x${sh.size}: ${out.length} chars, " +
+          s"${raw.length.toLong * sh.size} bytes")
+        (out, raw.length.toLong * sh.size)
+      case None =>
+        System.err.println(s"[probe] generating ${sh.size} chars...")
+        (shardCorpus(sh.size), -1L)
+    }
+    val chars = text.length
+    val baseHeap = usedHeapMb()
+
+    val configs = Seq[(String, FmIndexBuilder)](
+      ("huffman+rank9", new FmIndexBuilder().setSampleRate(sh.rate)),
+      ("huffman+rrr", new FmIndexBuilder().setSampleRate(sh.rate).setCompression(true))
+    )
+    val patterns = Seq("blk_", "PacketResponder", "size=1", "terminating")
+    configs.foreach { case (name, builder) =>
+      // sample used heap during the build: the transient peak (SA-IS int arrays + BWT)
+      // is what sizes a real executor, not the retained index
+      val (fm, buildSec, peak) = withPeakHeap(builder.build(text))
+      val peakMb = (peak >> 20) - baseHeap
+      val retainedMb = usedHeapMb() - baseHeap
+      val bytes = fm.serialize().length
+      // warm the query paths before timing: the FIRST config otherwise pays the JIT
+      // interpreter/compile cost in its numbers and cross-config ratios skew
+      patterns.foreach(p => fm.count(p.toCharArray))
+      fm.locate("blk_".toCharArray, 0, 4, new Array[Int](1000), 1000)
+      fm.extractString(chars / 3, chars / 3 + 1024)
+      val (counts, countSec) = timed(patterns.map(p => fm.count(p.toCharArray)))
+      val (nLoc, locateSec) = timed(fm.locate("blk_".toCharArray, 0, 4, new Array[Int](1000), 1000))
+      val (snippet, extractSec) = timed(fm.extractString(chars / 2, chars / 2 + 1024))
+      require(snippet.length == 1024 && nLoc > 0 && counts.head > 0)
+      // per-char costs of two ways to rebuild text: the LF-walk extract (one wavelet
+      // descent per char) against one linear decode of the whole shard, as route runs
+      // (shard-sized corpora repeat each pass: their arrays stay in cache)
+      val span = math.min(chars, 1 << 20)
+      val reps = math.max(1, (1 << 22) / chars)
+      fm.extractString(0, span)
+      val (_, spanSec) = timed((1 to reps).foreach(_ => fm.extractString(0, span)))
+      fm.decodeAll() // warm-up
+      val decodeBase = usedHeapMb()
+      val (decoded, decodeSec, decodePeak) = withPeakHeap {
+        var last = fm.decodeAll()
+        (2 to reps).foreach(_ => last = fm.decodeAll())
+        last
+      }
+      require(java.util.Arrays.equals(decoded, text), "decodeAll differs from the input")
+      val decodePeakMb = (decodePeak >> 20) - decodeBase
+      // one overlapping indexOf scan of the decoded text, as route runs per live rule
+      val decodedText = new String(decoded)
+      val (hits, scanSec) = timed((1 to reps).map { _ =>
+        var n = 0
+        var i = decodedText.indexOf("blk_")
+        while (i >= 0) { n += 1; i = decodedText.indexOf("blk_", i + 1) }
+        n
+      }.sum)
+      require(hits == counts.head * reps)
+      println(
+        f"""{"engine":"$name","chars":$chars,"sampleRate":${sh.rate},""" +
+          f""""buildSec":$buildSec%.1f,"mcharsPerSec":${chars / 1e6 / buildSec}%.2f,""" +
+          f""""peakHeapMb":$peakMb,"retainedMb":$retainedMb,"serializedBytes":$bytes,""" +
+          f""""bytesPerChar":${bytes.toDouble / chars}%.3f,""" +
+          (if (inputBytes > 0) f""""pctOfInputBytes":${100.0 * bytes / inputBytes}%.1f,""" else "") +
+          f""""countUsPerPattern":${countSec * 1e6 / patterns.length}%.0f,""" +
+          f""""locate1000Us":${locateSec * 1e6}%.0f,"extract1024Us":${extractSec * 1e6}%.0f,""" +
+          f""""extractNsPerChar":${spanSec * 1e9 / span / reps}%.1f,""" +
+          f""""decodeNsPerChar":${decodeSec * 1e9 / chars / reps}%.1f,""" +
+          f""""scanNsPerChar":${scanSec * 1e9 / chars / reps}%.2f,""" +
+          f""""buildPeakBytesPerChar":${peakMb * 1048576.0 / chars}%.1f,""" +
+          f""""decodePeakBytesPerChar":${decodePeakMb * 1048576.0 / chars}%.1f}""")
+    }
   }
 }

@@ -40,11 +40,6 @@ final class FmIndex private (
   /** Number of distinct symbols (sigma), including the sentinel. */
   def getAlphabetLength: Int = monotonicMap.size
 
-  def serializedSizeInBytes: Long =
-    suffixes.sizeInBytes + (if (positions ne null) positions.sizeInBytes else 0L) +
-      sampledSuffixes.sizeInBytes + wavelet.sizeInBytes + 8L * monotonicMap.size +
-      4L * (monotonicLookUp.length + cumulative.length)
-
   // ---------------------------------------------------------------- count
 
   /** Number of OVERLAPPING occurrences of `pattern` in the indexed text. */
@@ -162,7 +157,7 @@ final class FmIndex private (
     * Peak working memory is about 9 B/char: the BWT codes, overwritten in place by LF
     * (4), each row's char (2), the text (2) and the wavelet decode's one-array copy of
     * the node bits (under 1). `FmIndex.build` holds the symbol codes, the suffix array
-    * and the BWT (4 B/char each) at once, plus SA-IS's buckets. BigShardStress on a
+    * and the BWT (4 B/char each) at once, plus SA-IS's buckets. `Probe shard` on a
     * 16M-char corpus at sampleRate 16 measured build 18.6-24.3 B/char and this decode
     * 8.4-9.9 B/char of peak heap (Rank9 and RRR alike).
     */

@@ -100,9 +100,6 @@ final class HuffmanWaveletTree private (
     out
   }
 
-  def sizeInBytes: Long =
-    nodeBv.map(_.sizeInBytes).sum + 9L * sigma + 8L * nodeLeft.length + 32
-
   def write(out: DataOutput): Unit = {
     out.writeInt(length)
     out.writeInt(sigma)

@@ -36,8 +36,6 @@ final class IntVector(val length: Int, val width: Int, val data: Array[Long]) {
     else ((data(w) >>> shift) | (data(w + 1) << (64 - shift))) & mask
   }
 
-  def sizeInBytes: Long = 8L * data.length + 16
-
   def write(out: DataOutput): Unit = {
     out.writeInt(length)
     out.writeInt(width)

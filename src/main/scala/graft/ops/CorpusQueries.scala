@@ -319,28 +319,12 @@ object CorpusQueries {
       .replaceAll("[^A-Za-z0-9_-]", "_")
     val mine = root.resolve(appId)
     val cutoff = System.currentTimeMillis() - 3600000L
-    val stream = Files.list(root)
-    val stale = try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala
-        .filter(p => p.getFileName.toString != appId &&
-          Files.getLastModifiedTime(p).toMillis < cutoff)
-        .toList
-    } finally stream.close()
-    stale.foreach { d =>
-      val walk = Files.walk(d)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    graft.sources.ManifestTables.listNames(root).map(root.resolve)
+      .filter(p => p.getFileName.toString != appId && Files.getLastModifiedTime(p).toMillis < cutoff)
+      .foreach(graft.sources.ManifestTables.deleteTree)
     // re-entry within one application (Bench + Verify in one JVM) still cleans ITS
     // OWN previous copy — the per-run write path is exercised fresh every time
-    if (Files.exists(mine)) {
-      val walk = Files.walk(mine)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    graft.sources.ManifestTables.deleteTree(mine)
     mine.toString
   }
 

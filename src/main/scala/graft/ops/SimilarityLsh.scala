@@ -84,24 +84,13 @@ object SimilarityLsh {
     }
   }
 
-  /** Guard threshold: `SPARK_GRAFT_LSH_FANOUT_WARN=<rows>` overrides, 0 disables. */
-  private[graft] def fanoutGuardThreshold: Long =
-    parseFanoutWarn(sys.env.get("SPARK_GRAFT_LSH_FANOUT_WARN"))
+  /** Uncapped band joins warn when a bucket exceeds this many rows. */
+  private[graft] val FanoutGuardThreshold = 4096L
 
-  /** Unset = 4096 rows, `0` = guard disabled, a positive long = that threshold;
-    * anything else throws naming the variable (a negative value used to disable the
-    * guard silently, a non-numeric one to fail without naming it).
-    */
-  private[graft] def parseFanoutWarn(value: Option[String]): Long =
-    value.fold(4096L) { v =>
-      v.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_LSH_FANOUT_WARN must be 0 (disabled) or a positive row count, got '$v'"))
-    }
-
-  // one guard run per (corpus key, threshold) per JVM: the guard is an extra agg
-  // job, and a catalog running several queries over the SAME immutable corpus
-  // (q41/q44/q44b share the minhash bands) should pay it once, not per query
-  private val guarded = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
+  // one guard run per corpus key per JVM: the guard is an extra agg job, and a
+  // catalog running several queries over the SAME immutable corpus (q41/q44/q44b
+  // share the minhash bands) should pay it once, not per query
+  private val guarded = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Distinct unordered candidate pairs (id_a < id_b) sharing any band (and every
     * `matchCols` group key, e.g. a media `kind`). The equi-join shuffles on the band
@@ -118,21 +107,17 @@ object SimilarityLsh {
   def candidatePairs(bandsDf: DataFrame, idCol: String, matchCols: Seq[String] = Nil,
       maxBucket: Option[Int] = None, guardKey: Option[String] = None): DataFrame = {
     val keys = Seq("band_idx", "band_val") ++ matchCols
-    maxBucket match {
-      case None if fanoutGuardThreshold > 0 => {
-        // callers without a stable corpus key memoize on the band frame's semantic
-        // plan hash — a repeated identical call (bench min-of-N reruns, shared
-        // bands across queries) must not re-pay the guard's aggregation each time.
-        // KNOWN TRADE: the hash captures the PLAN, not the data — the same plan
-        // re-run after the underlying table changed skips the re-check. The guard
-        // is advisory (the cap is the real protection); long-lived production
-        // sessions should pass an explicit per-corpus guardKey or set the cap.
-        val gk = guardKey.getOrElse(
-          s"plan:${bandsDf.queryExecution.logical.semanticHash()}")
-        if (guarded.add((gk, fanoutGuardThreshold)))
-          fanoutWarning(bandsDf, keys, fanoutGuardThreshold)
-      }
-      case _ =>
+    if (maxBucket.isEmpty) {
+      // callers without a stable corpus key memoize on the band frame's semantic
+      // plan hash — a repeated identical call (bench min-of-N reruns, shared
+      // bands across queries) must not re-pay the guard's aggregation each time.
+      // KNOWN TRADE: the hash captures the PLAN, not the data — the same plan
+      // re-run after the underlying table changed skips the re-check. The guard
+      // is advisory (the cap is the real protection); long-lived production
+      // sessions should pass an explicit per-corpus guardKey or set the cap.
+      val gk = guardKey.getOrElse(
+        s"plan:${bandsDf.queryExecution.logical.semanticHash()}")
+      if (guarded.add(gk)) fanoutWarning(bandsDf, keys, FanoutGuardThreshold)
     }
     val capped = maxBucket match {
       case None => bandsDf

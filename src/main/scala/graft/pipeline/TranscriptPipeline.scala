@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.{FmIndex, FmIndexBuilder}
+import graft.sources.ManifestTables
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -9,7 +10,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.sql.Timestamp
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** One FM-Index shard: the compressed index + per-turn metadata for one deterministic
   * partition of the transcript table. The shard's corpus is the concatenation of its
@@ -371,12 +371,8 @@ object TranscriptPipeline {
 
   /** Ids of the markers named exactly `<prefix><digits>` (not a crashed write's `.tmp`). */
   private def listMarkers(outDir: String, prefix: String): Set[Int] = {
-    val dir = manifestPath(outDir)
-    if (!Files.isDirectory(dir)) return Set.empty
     val marker = s"$prefix(\\d+)".r
-    val s = Files.list(dir)
-    try s.iterator.asScala.map(_.getFileName.toString).collect { case marker(k) => k.toInt }.toSet
-    finally s.close()
+    ManifestTables.listNames(manifestPath(outDir)).collect { case marker(k) => k.toInt }.toSet
   }
 
   private def writeMarker(outDir: String, name: String, body: String): Unit = {

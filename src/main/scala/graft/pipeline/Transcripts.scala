@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.sources.{ManifestDataSource, ManifestTables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -128,6 +129,21 @@ object Transcripts {
         col("role"), lit("(tool="), col("tool"), lit("): "), col("text")
       ).as("value")
     )
+
+  /** The turns of a manifest table's latest committed snapshot, pinned at plan time:
+    * uncommitted or stray parquet files under `dir` are never read. Any partition
+    * columns (e.g. `p_bucket`) are dropped. A directory without a committed snapshot
+    * fails here, naming it.
+    */
+  private[graft] def readTable(spark: SparkSession, dir: String): Dataset[Turn] = {
+    import spark.implicits._
+    val snap = ManifestTables.latestSnapshotId(dir).getOrElse(throw new IllegalArgumentException(
+      s"$dir is not a manifest table: no committed snapshot under $dir/_manifests"))
+    spark.read.format(classOf[ManifestDataSource].getName)
+      .option("snapshot", snap.toString).load(dir)
+      .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .as[Turn]
+  }
 
   private val LinePattern =
     "^(\\S+) \\[([^#\\]]+)#(\\d+)\\] (\\w+)\\(tool=([^)]*)\\): (.*)$"

@@ -5,7 +5,6 @@ import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, 
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.nio.file.{Files, Paths}
 import java.util
-import scala.jdk.CollectionConverters._
 
 /** TableCatalog plugin over a warehouse of manifest-committed tables — manifest tables
   * become addressable by NAME in plain SQL, the last mile of the DSv2 surface:
@@ -67,12 +66,8 @@ class ManifestCatalog extends TableCatalog
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val nsDir = Paths.get((warehouse +: namespace.toSeq).mkString("/"))
     if (!Files.isDirectory(nsDir)) throw new NoSuchNamespaceException(namespace)
-    val stream = Files.list(nsDir)
-    try stream.iterator().asScala
-      .filter(p => Files.isDirectory(p) && isTable(p.toString))
-      .map(p => Identifier.of(namespace, p.getFileName.toString))
-      .toArray
-    finally stream.close()
+    ManifestTables.listNames(nsDir).filter(n => isTable(nsDir.resolve(n).toString))
+      .map(Identifier.of(namespace, _)).toArray
   }
 
   override def tableExists(ident: Identifier): Boolean = isTable(dirOf(ident))
@@ -479,10 +474,7 @@ class ManifestCatalog extends TableCatalog
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirOf(ident)
     if (!isTable(dir)) return false
-    val walk = Files.walk(Paths.get(dir))
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
+    ManifestTables.deleteTree(Paths.get(dir))
     true
   }
 
@@ -574,12 +566,9 @@ class ManifestCatalog extends TableCatalog
   override def listNamespaces(namespace: Array[String]): Array[Array[String]] = {
     val dir = nsDirOf(namespace)
     if (!Files.isDirectory(dir)) throw new NoSuchNamespaceException(namespace)
-    val stream = Files.list(dir)
-    try stream.iterator().asScala
-      .filter(p => Files.isDirectory(p) && !isTable(p.toString))
-      .map(p => namespace :+ p.getFileName.toString)
-      .toArray
-    finally stream.close()
+    ManifestTables.listNames(dir)
+      .filter(n => Files.isDirectory(dir.resolve(n)) && !isTable(dir.resolve(n).toString))
+      .map(namespace :+ _).toArray
   }
 
   override def namespaceExists(namespace: Array[String]): Boolean =
@@ -610,17 +599,10 @@ class ManifestCatalog extends TableCatalog
     val dir = nsDirOf(namespace)
     if (!namespaceExists(namespace)) throw new NoSuchNamespaceException(namespace)
     if (!cascade) {
-      val stream = Files.list(dir)
-      val empty = try !stream.iterator().hasNext finally stream.close()
-      if (!empty) throw new org.apache.spark.sql.catalyst.analysis
+      if (ManifestTables.listNames(dir).nonEmpty) throw new org.apache.spark.sql.catalyst.analysis
         .NonEmptyNamespaceException(namespace)
       Files.delete(dir)
-    } else {
-      val walk = Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    } else ManifestTables.deleteTree(dir)
     true
   }
 

@@ -449,16 +449,8 @@ object ManifestMaintenance {
     val nOut = math.max(1, math.ceil(files.map(_.bytes).sum.toDouble / targetBytes).toInt)
     sorter(readFilesWithDeletes(s2, dir, dataSchema, files, deleted, eqDels, colIds), nOut)
       .write.parquet(tmpOut)
-    val w = Files.list(Paths.get(tmpOut))
-    val parts = try {
-      val it = w.iterator(); val b = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.startsWith("part-") && n.endsWith(".parquet")) b += p
-      }
-      b.result().sortBy(_.getFileName.toString)
-    } finally w.close()
+    val parts = ManifestTables.listNames(Paths.get(tmpOut))
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted.map(Paths.get(tmpOut, _))
     val fields = dataSchema.fields.map(f => (f.name, f.dataType)).toSeq
     val out = parts.zipWithIndex.map { case (p, k) =>
       val rel = partitionDirOf(partCols, joined) + s"cluster-$uid-$k.parquet"
@@ -470,7 +462,7 @@ object ManifestMaintenance {
       ManifestTables.Entry(rel, Files.size(target), joined, snapshot = -1,
         stats = st, rows = rows)
     }
-    deleteRecursively(Paths.get(dir, "_compact_tmp", uid))
+    ManifestTables.deleteTree(Paths.get(dir, "_compact_tmp", uid))
     out
   }
 
@@ -638,7 +630,7 @@ object ManifestMaintenance {
     val target = Paths.get(dir, rel)
     Files.createDirectories(target.getParent)
     Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(Paths.get(dir, "_compact_tmp", uid))
+    ManifestTables.deleteTree(Paths.get(dir, "_compact_tmp", uid))
     // the compacted file's stats derive from ITS OWN footer, never merged input
     // bounds: deletes applied during the rewrite can remove the extreme rows, so a
     // merged bound would be prune-safe but aggregate-WRONG — and the footer path
@@ -655,18 +647,9 @@ object ManifestMaintenance {
   }
 
   private def listOnly(dirPath: Path, pred: Path => Boolean): Path = {
-    val w = Files.list(dirPath)
-    val all = try w.filter(p => pred(p)).toArray(new Array[Path](_)) finally w.close()
+    val all = ManifestTables.listNames(dirPath).map(dirPath.resolve).filter(pred)
     require(all.length == 1, s"expected exactly one part file in $dirPath, got ${all.length}")
     all.head
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    val w = Files.walk(p)
-    try w.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(f => Files.deleteIfExists(f))
-    finally w.close()
   }
 
   // ------------------------------------------------ PARTITION SPEC EVOLUTION

@@ -17,8 +17,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 /** Generic snapshot-manifest commit for a Hive-partitioned parquet directory — the
-  * Iceberg-layout discipline of graft.pipeline.PartitionedTable generalized to any
-  * single string partition column: `_manifests/snapshot-N.json` lists every data file
+  * Iceberg-layout discipline for any single string partition column: `_manifests/snapshot-N.json` lists every data file
   * with its byte size and partition value. Readers that go through the manifest (the
   * DSv2 source below) see EXACTLY the committed snapshot — stray or in-flight files in
   * the directory are invisible, which is the property that makes concurrent
@@ -286,40 +285,35 @@ object ManifestTables {
   private def snapshotFiles(dir: String): Seq[String] = {
     val mdir = Paths.get(dir, "_manifests")
     require(Files.isDirectory(mdir), s"no _manifests under $dir — commit a snapshot first")
-    val stream = Files.list(mdir)
-    try stream.iterator().asScala
-      .flatMap { p =>
-        val name = p.getFileName.toString
-        SnapshotName.findFirstMatchIn(name).filter(_.matched == name)
-          .map(m => (m.group(1).toInt, p.toString))
-      }
-      .toSeq.sortBy(_._1).map(_._2)
-    finally stream.close()
+    listNames(mdir).collect { case n @ SnapshotName(id) => (id.toInt, mdir.resolve(n).toString) }
+      .sortBy(_._1).map(_._2)
   }
 
   /** All committed snapshot ids, ascending — NOT assumed contiguous (expiry
     * removes old ids).
     */
-  private[sources] def snapshotIds(dir: String): Seq[Int] = {
-    val mdir = Paths.get(dir, "_manifests")
-    if (!Files.isDirectory(mdir)) return Nil
-    val stream = Files.list(mdir)
-    val ids = try stream.iterator().asScala.map(_.getFileName.toString)
-      .flatMap(n => SnapshotName.findFirstMatchIn(n).filter(_.matched == n).map(_.group(1).toInt))
-      .toSeq finally stream.close()
-    ids.sorted
+  private[sources] def snapshotIds(dir: String): Seq[Int] =
+    listNames(Paths.get(dir, "_manifests")).collect { case SnapshotName(id) => id.toInt }.sorted
+
+  /** The names of the entries directly under `dir`; empty when it is not a directory. */
+  private[graft] def listNames(dir: java.nio.file.Path): Seq[String] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val stream = Files.list(dir)
+      try stream.iterator().asScala.map(_.getFileName.toString).toList finally stream.close()
+    }
+
+  /** Deletes `root` and everything under it, children first; a missing root is a no-op. */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit = if (Files.exists(root)) {
+    val walk = Files.walk(root)
+    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => Files.deleteIfExists(p))
+    finally walk.close()
   }
 
   /** Highest committed snapshot id, or None before the first commit. */
-  private[sources] def latestSnapshotId(dir: String): Option[Int] = {
-    val mdir = Paths.get(dir, "_manifests")
-    if (!Files.isDirectory(mdir)) return None
-    val stream = Files.list(mdir)
-    val ids = try stream.iterator().asScala.map(_.getFileName.toString)
-      .flatMap(n => SnapshotName.findFirstMatchIn(n).filter(_.matched == n).map(_.group(1).toInt))
-      .toSeq finally stream.close()
-    if (ids.isEmpty) None else Some(ids.max)
-  }
+  private[graft] def latestSnapshotId(dir: String): Option[Int] =
+    snapshotIds(dir).lastOption
 
   private[sources] def readLatest(dir: String): Seq[Entry] = readSnapshot(dir, None)
 
@@ -336,8 +330,8 @@ object ManifestTables {
   }
 
   private def parseEntries(txt: String, sourceFile: String, snap: Int): Seq[Entry] = {
-    // partition key optional: PartitionedTable's transcript manifests share this file
-    // layout but carry no partition values (they surface as ""); per-file column
+    // partition key optional: unpartitioned tables carry no partition values (they
+    // surface as ""); per-file column
     // stats optional (entries written before the stats feature read as stat-less —
     // they are simply never pruned on data-column bounds)
     val entry =
@@ -703,14 +697,9 @@ object ManifestTables {
   }
 
   def listTags(dir: String): Seq[(String, Int)] = {
-    val mdir = Paths.get(dir, "_manifests")
-    if (!Files.isDirectory(mdir)) return Nil
     val TagFile = s"tag-($TagNamePattern)\\.json".r
-    val stream = Files.list(mdir)
-    val names = try stream.iterator().asScala.map(_.getFileName.toString).flatMap { n =>
-      TagFile.findFirstMatchIn(n).filter(_.matched == n).map(_.group(1))
-    }.toSeq finally stream.close()
-    names.sorted.flatMap(n => readTag(dir, n).map(n -> _))
+    listNames(Paths.get(dir, "_manifests")).collect { case TagFile(n) => n }
+      .sorted.flatMap(n => readTag(dir, n).map(n -> _))
   }
 
   def deleteTag(dir: String, name: String): Boolean =
@@ -1080,14 +1069,9 @@ object ManifestTables {
   }
 
   private[sources] def listStaged(dir: String): Seq[(String, Int)] = {
-    val mdir = Paths.get(dir, "_manifests")
-    if (!Files.isDirectory(mdir)) return Nil
     val StagedFile = s"staged-($TagNamePattern)\\.json".r
-    val stream = Files.list(mdir)
-    val names = try stream.iterator().asScala.map(_.getFileName.toString).flatMap { n =>
-      StagedFile.findFirstMatchIn(n).filter(_.matched == n).map(_.group(1))
-    }.toSeq finally stream.close()
-    names.sorted.map(n => n -> readStagedParent(dir, n))
+    listNames(Paths.get(dir, "_manifests")).collect { case StagedFile(n) => n }
+      .sorted.map(n => n -> readStagedParent(dir, n))
   }
 
   /** Cheap existence probe (no parse): the write path's schema-inference options
@@ -1258,13 +1242,9 @@ object ManifestTables {
 
   private def branchSnapshotFiles(dir: String, name: String): Seq[(Int, String)] = {
     val mdir = Paths.get(dir, "_manifests")
-    if (!Files.isDirectory(mdir)) return Nil
     val B = (java.util.regex.Pattern.quote(s"branch-$name-snapshot-") + "(\\d+)\\.json").r
-    val stream = Files.list(mdir)
-    try stream.iterator().asScala.flatMap { p =>
-      val n = p.getFileName.toString
-      B.findFirstMatchIn(n).filter(_.matched == n).map(m => (m.group(1).toInt, p.toString))
-    }.toSeq.sortBy(_._1) finally stream.close()
+    listNames(mdir).collect { case n @ B(id) => (id.toInt, mdir.resolve(n).toString) }
+      .sortBy(_._1)
   }
 
   /** Highest branch-local snapshot id (0 = the fork state, K = K appends since). */
@@ -1301,14 +1281,8 @@ object ManifestTables {
 
   /** (name, fork base, branch head id) per branch, name-sorted. */
   def listBranches(dir: String): Seq[(String, Int, Int)] = {
-    val mdir = Paths.get(dir, "_manifests")
-    if (!Files.isDirectory(mdir)) return Nil
     val R = s"branchref-($TagNamePattern)\\.json".r
-    val stream = Files.list(mdir)
-    val names = try stream.iterator().asScala.map(_.getFileName.toString)
-      .flatMap(n => R.findFirstMatchIn(n).filter(_.matched == n).map(_.group(1))).toSeq
-      finally stream.close()
-    names.sorted.map(n =>
+    listNames(Paths.get(dir, "_manifests")).collect { case R(n) => n }.sorted.map(n =>
       (n, readBranchBase(dir, n), branchHeadId(dir, n).getOrElse(-1)))
   }
 
@@ -1845,13 +1819,6 @@ object ManifestTables {
     }
   }
 
-  /** The partition column name recorded by the latest committed snapshot ("" if the
-    * manifest predates partition recording, e.g. PartitionedTable transcript tables).
-    */
-  /** Partition column spec of the latest snapshot: comma-joined names from
-    * partition_column, value types from partition_types (absent = all string, the
-    * pre-typed-partition format). Empty when the table is unpartitioned.
-    */
   /** Partition spec AT A SNAPSHOT (latest when None): every snapshot records its
     * own partition_column/partition_types, so a pinned (time-travel) scan of a
     * table whose OVERWRITE redefined the partitioning still interprets its own
@@ -1892,14 +1859,8 @@ object ManifestTables {
     Paths.get(dir, "_manifests", f"spec-$id%05d.json")
 
   private[sources] def listSpecIds(dir: String): Seq[Int] = {
-    val mdir = Paths.get(dir, "_manifests")
-    if (!Files.exists(mdir)) return Nil
-    val s = Files.list(mdir)
-    try s.iterator().asScala.flatMap { p =>
-      "spec-(\\d+)\\.json".r.unapplySeq(p.getFileName.toString).flatMap(_.headOption)
-        .map(_.toInt)
-    }.toSeq.sorted
-    finally s.close()
+    val SpecFile = "spec-(\\d+)\\.json".r
+    listNames(Paths.get(dir, "_manifests")).collect { case SpecFile(id) => id.toInt }.sorted
   }
 
   /** The registered spec of one id — loud on an unknown id: an entry stamped with

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{CorpusQueries, ShardTableCache, SimilarityLsh}
+import graft.ops.{CorpusQueries, ShardTableCache}
 import graft.pipeline.SinkRule
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,18 +30,6 @@ class ConfigParsingSpec extends AnyFunSuite {
     }
   }
 
-  test("SPARK_GRAFT_LSH_FANOUT_WARN: unset 4096, 0 disables, positive longs; else throws") {
-    assert(SimilarityLsh.parseFanoutWarn(None) == 4096L)
-    assert(SimilarityLsh.parseFanoutWarn(Some("0")) == 0L)
-    assert(SimilarityLsh.parseFanoutWarn(Some("1")) == 1L)
-    assert(SimilarityLsh.parseFanoutWarn(Some("99999999999")) == 99999999999L)
-    for (bad <- Seq("-1", "abc", "", " 8", "1.5", "99999999999999999999")) {
-      val e = intercept[IllegalArgumentException](SimilarityLsh.parseFanoutWarn(Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_LSH_FANOUT_WARN") && e.getMessage.contains(s"'$bad'"),
-        e.getMessage)
-    }
-  }
-
   test("--rules parses sink=pattern entries; a pattern may itself contain '='") {
     assert(PipelineMain.parseRules("errors=ERROR,kv=size=") ==
       Seq(SinkRule("errors", "ERROR"), SinkRule("kv", "size=")))
@@ -68,6 +56,27 @@ class ConfigParsingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("--compression"), e.getMessage)
   }
 
+  test("PipelineMain counts and synthetic:N:T parse strictly; a bad value names its flag") {
+    val cfg = PipelineMain.parseConfig(Map("shards" -> "8", "sample-rate" -> "4", "compress" -> "true"))
+    assert((cfg.numShards, cfg.saltBlock, cfg.sampleRate, cfg.compress) == ((8, 4096, 4, true)))
+    assert(PipelineMain.parseSynthetic("synthetic:30:20").contains((30, 20)))
+    assert(PipelineMain.parseSynthetic("/data/turns").isEmpty)
+    val cases = Seq(
+      Map("shards" -> "abc") -> "--shards",
+      Map("sample-rate" -> "0") -> "--sample-rate",
+      Map("salt-block" -> "-1") -> "--salt-block")
+    for ((opts, flag) <- cases) {
+      val e = intercept[IllegalArgumentException](PipelineMain.parseConfig(opts))
+      assert(e.getMessage.contains(flag) && e.getMessage.contains(s"'${opts.head._2}'"),
+        e.getMessage)
+    }
+    for ((bad, named) <- Seq("synthetic:5" -> "synthetic:5", "synthetic:5:x" -> "'x'",
+        "synthetic:0:3" -> "'0'", "synthetic:1:2:3" -> "synthetic:1:2:3")) {
+      val e = intercept[IllegalArgumentException](PipelineMain.parseSynthetic(bad))
+      assert(e.getMessage.contains("--input") && e.getMessage.contains(named), e.getMessage)
+    }
+  }
+
   test("Probe parses each mode's arguments; unset SPARK_GRAFT_CPUS means every processor") {
     assert(Probe.parseArgs(Seq("query", "2", "q01_agg_pricing", "--plans", "p")) ==
       Probe.Query(2, Seq("q01_agg_pricing"), Some("p")))
@@ -75,6 +84,9 @@ class ConfigParsingSpec extends AnyFunSuite {
     assert(Probe.parseArgs(Seq("dml", "200")) == Probe.Dml(Seq(200)))
     assert(Probe.parseArgs(Seq("pipeline", "4", "200", "40")) ==
       Probe.Pipeline(Some(4), 200, 40, 3))
+    assert(Probe.parseArgs(Seq("shard")) == Probe.Shard(1 << 27, None, 32))
+    assert(Probe.parseArgs(Seq("shard", "40000", "16")) == Probe.Shard(40000, None, 16))
+    assert(Probe.parseArgs(Seq("shard", "--file", "f.log", "4")) == Probe.Shard(4, Some("f.log"), 32))
     assert(Probe.parseCpus(None) == Runtime.getRuntime.availableProcessors)
     assert(Probe.parseCpus(Some("3")) == 3)
   }
@@ -90,7 +102,12 @@ class ConfigParsingSpec extends AnyFunSuite {
       Seq("pipeline", "1", "2", "3", "4", "5") -> "pipeline 1 2 3 4 5",
       Seq("scale", "--cpus", "4") -> "--cpus",
       Seq("dml", "--plans", "p") -> "--plans",
-      Seq("query", "1", "--plans") -> "--plans")
+      Seq("query", "1", "--plans") -> "--plans",
+      Seq("shard", "2M") -> "'2M'",
+      Seq("shard", "1", "2", "3") -> "shard 1 2 3",
+      Seq("shard", "--file", "f.log") -> "shard --file f.log",
+      Seq("shard", "--file", "f.log", "4", "0") -> "'0'",
+      Seq("scale", "--file", "f.log") -> "--file")
     for ((args, named) <- cases) {
       val e = intercept[IllegalArgumentException](Probe.parseArgs(args))
       assert(e.getMessage.contains(named), e.getMessage)

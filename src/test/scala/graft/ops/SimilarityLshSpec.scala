@@ -137,7 +137,7 @@ class SimilarityLshSpec extends AnyFunSuite with SharedSparkSession {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val honest = SimilarityLsh.bands(emb, "vec_id", "embedding", CorpusQueries.EmbedPlanes, 4)
     assert(SimilarityLsh.fanoutWarning(honest, Seq("band_idx", "band_val"),
-      SimilarityLsh.fanoutGuardThreshold).isEmpty,
+      SimilarityLsh.FanoutGuardThreshold).isEmpty,
       "guard must stay quiet on the fixture corpus at the default threshold")
     // and the oracle gate stays byte-identical: the guard only ever LOGS
     val before = SimilarityLsh.candidatePairs(bands, "id").count()
