@@ -11,10 +11,10 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Measurement main: one session builder, one timing helper and one task listener
-  * shared by four Spark modes, plus one Spark-free FM-core mode. Each Spark mode
-  * prints one JSON line on stdout; every timed step
-  * also prints its wall, task and shuffle-write totals on stderr, so a wall far above
-  * taskSec / cores points at driver-side work (planning, commits, bounded collects).
+  * shared by four Spark modes, plus the Spark-free `shard` mode. Each Spark mode
+  * prints one JSON line on stdout; every timed step also prints its wall, task and
+  * shuffle-write totals on stderr, so a wall far above taskSec / cores points at
+  * driver-side work (planning, commits, bounded collects).
   * Bench.scala stays the frozen end-to-end line; this main adds evidence beside it.
   *
   *   runMain graft.Probe query <repeats> [queryName ...] [--plans <dir>]
