@@ -29,9 +29,7 @@ class RankBitVectorSpec extends AnyFunSuite {
     val rnd = new Random(42)
     for (density <- Seq(0.01, 0.5, 0.99); n <- Seq(1, 63, 64, 65, 511, 512, 513, 10000)) {
       val bits = Array.fill(n)(rnd.nextDouble() < density)
-      val b = new RankBitVector.Builder(n)
-      bits.zipWithIndex.foreach { case (x, i) => if (x) b.set(i) }
-      val v = b.result()
+      val v = TestOracles.bitVector(n)(bits)
       var ones = 0
       var i = 0
       while (i < n) {
@@ -46,9 +44,7 @@ class RankBitVectorSpec extends AnyFunSuite {
   }
 
   test("serde round-trip") {
-    val b = new RankBitVector.Builder(1000)
-    (0 until 1000 by 3).foreach(b.set)
-    val v = b.result()
+    val v = TestOracles.bitVector(1000)(_ % 3 == 0)
     val bytes = Serde.writeToByteArray[RankBitVector]((x, o) => x.write(o), v)
     val back = Serde.readFromByteArray(RankBitVector.read, bytes)
     assert(back == v && back.rankOnes(997) == v.rankOnes(997))

@@ -189,6 +189,60 @@ class FmIndexSpec extends AnyFunSuite {
     assert(got == golden)
   }
 
+  test("serialized bytes are pinned: golden hashes at rates 1, 3 and 16 on wide, run and 2-symbol inputs") {
+    def sha256(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    val wide = GoldenInputs.head._2
+    assert(wide.distinct.length > 1024 && wide.contains('\u0000') &&
+      wide.exists(Character.isHighSurrogate))
+    // (input, sample rate, compress, extract) -> SHA-256 of serialize()
+    val golden: Map[(String, Int, Boolean, Boolean), String] = Map(
+      ("wide", 1, false, true) ->
+        "9f5fa4ed507e9ceb86f9cea2837b2ff0dc6b236f4887d9953685ea7d5a4b1a72",
+      ("wide", 1, true, true) ->
+        "2165da1057969d8b628175d335d4addf36407c37dd4daa6c713c3aece2a00c75",
+      ("wide", 3, false, true) ->
+        "203efba9bb67373b89b07fb311e5c655c558f16c580c241ec7f65a40226cd005",
+      ("wide", 3, true, true) ->
+        "b63e0379a933e78ca7e0190136827db30e1f4fcab4441c77130b1df4874c4c44",
+      ("wide", 16, false, true) ->
+        "62c7f15ff29a01684949b27d5e48069b7b083a8e9b5d42ef70f1d855fb3502c1",
+      ("wide", 16, true, true) ->
+        "3338f41e43a2723ed19c72205e6f2ad8a5a699e80a390bdfb8ffb5084bf77d83",
+      ("run", 1, false, true) ->
+        "ffd9fd7ae86449b278348ee8d08a338d7f2d2fe175f03ff81faeba3d29c85bd1",
+      ("run", 1, true, true) ->
+        "4fef587246f0300c4286227bd472fe4e2e022071a0954c7feb6a9c4391e8857e",
+      ("run", 3, false, true) ->
+        "00bf7000511022ec26428d6ba26f822f4d0d332f1d795a2085c5e92ac387de0f",
+      ("run", 3, true, true) ->
+        "7c027087f07ca1434cd5a04cbd91fcfa27afb1c3afdadefaaf566b83d141e9d8",
+      ("run", 16, false, true) ->
+        "8088f1bfb8d288190c8272b7171d7c54fbeaa8dd928d4c3018e869a5c168d645",
+      ("run", 16, true, true) ->
+        "e104c2d367853d695b800b89ed7097c381fb1be46dd1fa4b829b94c262771811",
+      ("two", 1, false, true) ->
+        "d92463bae3cabeed937cc4be3b1f396bd0e72cb7576de946dcf8687757f13f17",
+      ("two", 1, true, true) ->
+        "31c7cf5248fafef3ac43ce4efdcb4d97c6d224f707ea7d0c7572f539a01ac311",
+      ("two", 3, false, true) ->
+        "6511ec19df4f519f9cfbbf31b2cd6aabf70d02276b9a7bf520a8b5c0bc77f864",
+      ("two", 3, true, true) ->
+        "d8d91dfb16958f8866c28d2c41b26f66e5a3936e3b25f807c26ad72059a82980",
+      ("two", 16, false, true) ->
+        "78d1f892c5721866b8f58eb496434c5b6c76b53853249d54e4c3763f2579a365",
+      ("two", 16, true, true) ->
+        "c372add6fdf7aad55603e98743cfd703c8be9ec2416dc14f7cf2ec7e34a1076b",
+      ("wide", 3, false, false) ->
+        "da86e8f974c588194e61c154cf1ebbf528ff1f644fb2b5d40ceeb9163440a1df",
+      ("wide", 3, true, false) ->
+        "e5949ccd28e65f48f4b6412d33111102bc36f739d4d610337704d9060c3fee61")
+    val got = golden.keys.map { case k @ (name, rate, compress, extract) =>
+      k -> sha256(FmIndex.build(GoldenInputs.toMap.apply(name), rate, extract, compress).serialize())
+    }.toMap
+    assert(got == golden)
+  }
+
   test("locate with sliced substring") {
     val rnd = new Random(42)
     val locations = new Array[Int](10000)

@@ -63,9 +63,7 @@ class RrrVectorSpec extends AnyFunSuite {
   test("answers equal the plain RankBitVector on the same bits") {
     val rnd = new Random(7)
     val n = 50000
-    val b = new RankBitVector.Builder(n)
-    (0 until n).foreach(i => if (rnd.nextInt(9) == 0) b.set(i))
-    val plain = b.result()
+    val plain = TestOracles.bitVector(n)(_ => rnd.nextInt(9) == 0)
     val rrr = RrrVector(plain, 16)
     (0 until n by 137).foreach { i =>
       assert(rrr.access(i) == plain.access(i))

@@ -88,6 +88,26 @@ object TestOracles {
 
   lazy val LogChars: Array[Char] = LogCorpus.toCharArray
 
+  /** Golden-hash inputs for the construction kernels' edge cases: more than 1024
+    * distinct symbols with embedded '\u0000' and a surrogate pair, a 5,000-char
+    * single-symbol run, and a 2-symbol text.
+    */
+  lazy val GoldenInputs: Seq[(String, Array[Char])] = Seq(
+    "wide" -> {
+      val rnd = new Random(13)
+      val sb = new StringBuilder
+      var k = 0
+      while (k < 1100) { // 7919 is coprime to 1100: every CJK char of the range once
+        sb.append((0x4e00 + (k * 7919) % 1100).toChar).append(('a' + rnd.nextInt(26)).toChar)
+        if (k % 50 == 0) sb.append('\u0000')
+        if (k % 97 == 0) sb.append("\uD83D\uDE00")
+        k += 1
+      }
+      sb.toString.toCharArray
+    },
+    "run" -> Array.fill(5000)('x'),
+    "two" -> { val rnd = new Random(17); Array.fill(4000)(if (rnd.nextInt(3) == 0) 'b' else 'a') })
+
   /** Overlapping-match count of a literal pattern (restart at start+1). */
   def countOverlapping(text: Array[Char], pattern: Array[Char]): Int =
     locateOverlapping(text, pattern).length
@@ -133,6 +153,13 @@ object TestOracles {
     var i = seed + 1
     while (i < text.length && text(i) != boundary) { up.append(text(i)); i += 1 }
     up.toString
+  }
+
+  /** A Rank9 vector of `numBits` bits with bit i set when `set(i)`. */
+  def bitVector(numBits: Int)(set: Int => Boolean): RankBitVector = {
+    val words = new Array[Long](((numBits + 63) >>> 6) max 1)
+    (0 until numBits).foreach(i => if (set(i)) words(i >>> 6) |= 1L << i)
+    RankBitVector.fromWords(numBits, words)
   }
 
   /** Naive symbol frequency in [0, until). */
