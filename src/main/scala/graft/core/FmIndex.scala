@@ -392,89 +392,98 @@ object FmIndex {
 
   /** Builds the index: sentinel append -> appearance-order alphabet mapping (embedded-'\0'
     * rule: when the input itself contains '\0', those map to code 1 and only the final
-    * appended sentinel takes code 0) -> cumulative counts -> SA-IS -> SA sampling -> BWT ->
-    * Huffman-shaped wavelet tree. `compress` stores every bitvector, the SA-sample marks
-    * and each wavelet node, RRR-compressed (reference-style: smallest, slower queries);
-    * the default Rank9 everywhere favors query speed.
+    * appended sentinel takes code 0) -> cumulative counts -> SA-IS -> one pass over the
+    * suffix array for the SA samples, their marks and the BWT -> Huffman-shaped wavelet
+    * tree. `compress` stores every bitvector, the SA-sample marks and each wavelet node,
+    * RRR-compressed (reference-style: smallest, slower queries); the default Rank9
+    * everywhere favors query speed.
     */
   def build(input: Array[Char], sampleRate: Int = 32, enableExtract: Boolean = true,
       compress: Boolean = false): FmIndex = {
     require(sampleRate > 0, "sampleRate must be positive")
-    val n = input.length + 1
-
-    var embeddedSentinels = 0
-    var i = 0
-    while (i < input.length) {
-      if (input(i) == '\u0000') embeddedSentinels += 1
-      i += 1
-    }
-    val zeroCode: Short = if (embeddedSentinels > 0) 1 else 0
-
-    val map = new mutable.LongMap[Short](1024)
-    val lookUpBuf = new Array[Int](MaxAlphabet + 2)
-    map.update(0L, zeroCode)
-    lookUpBuf(zeroCode) = 0
-    var next = zeroCode + 1
-    i = 0
-    while (i < input.length) {
-      val ch = input(i).toLong
-      if (!map.contains(ch)) {
-        if (map.size >= MaxAlphabet)
-          throw new IllegalArgumentException(s"Input has more than $MaxAlphabet different symbols")
-        map.update(ch, next.toShort)
-        lookUpBuf(next) = input(i).toInt
-        next += 1
-      }
-      i += 1
-    }
-    val sigma = next
-    val lookUp = java.util.Arrays.copyOfRange(lookUpBuf, 0, sigma)
-
-    val seq = new Array[Int](n)
-    i = 0
-    while (i < n - 1) { seq(i) = map(input(i).toLong).toInt; i += 1 }
-    seq(n - 1) = 0 // the appended sentinel is always the unique smallest symbol
+    val (map, lookUp, seq) = encode(input)
+    val n = seq.length
+    val sigma = lookUp.length
 
     val cumulative = new Array[Int](sigma + 1)
-    i = 0
+    var i = 0
     while (i < n) { cumulative(seq(i) + 1) += 1; i += 1 }
     i = 1
     while (i <= sigma) { cumulative(i) += cumulative(i - 1); i += 1 }
 
     val sa = SuffixArrays.saIs(seq, sigma)
 
+    // row i samples suffix sa(i) when sampleRate divides it; power-of-two rates (the
+    // pipeline's 16 among them) test and divide by mask and shift
     val bitWidth = Bits.minBits(n.toLong)
     val suffixes = new IntVector(n / sampleRate + 1, bitWidth)
-    val sampledB = new RankBitVector.Builder(n)
+    val positions = if (enableExtract) new IntVector(n / sampleRate + 2, bitWidth) else null
+    val marks = new Array[Long](((n + 63) >>> 6) max 1)
+    val bwt = new Array[Int](n)
+    val shift = if (Integer.bitCount(sampleRate) == 1) Integer.numberOfTrailingZeros(sampleRate) else -1
+    val mask = sampleRate - 1
     var si = 0
     i = 0
     while (i < n) {
-      if (sa(i) % sampleRate == 0) {
-        suffixes.setValue(si, sa(i).toLong)
-        sampledB.set(i)
+      val p = sa(i)
+      bwt(i) = if (p == 0) 0 else seq(p - 1) // seq(n - 1) is the sentinel 0
+      if (if (shift >= 0) (p & mask) == 0 else p % sampleRate == 0) {
+        suffixes.setValue(si, p.toLong)
         si += 1
+        marks(i >>> 6) |= 1L << i
+        if (enableExtract)
+          positions.setValue(if (shift >= 0) p >>> shift else p / sampleRate, i.toLong)
       }
       i += 1
     }
-    val sampled = BitSeqSerde.maybeCompress(sampledB.result(), compress)
+    val sampled = BitSeqSerde.maybeCompress(RankBitVector.fromWords(n, marks), compress)
+    if (enableExtract) positions.setValue((n - 1) / sampleRate + 1, positions.getValue(0))
 
-    var positions: IntVector = null
-    if (enableExtract) {
-      positions = new IntVector(n / sampleRate + 2, bitWidth)
-      i = 0
-      while (i < n) {
-        if (sa(i) % sampleRate == 0) positions.setValue(sa(i) / sampleRate, i.toLong)
-        i += 1
-      }
-      positions.setValue((n - 1) / sampleRate + 1, positions.getValue(0))
-    }
-
-    val bwt = Bwt.fromSuffixArray(seq, sa)
     // Huffman-shaped wavelet: frequent BWT symbols descend ~entropy levels, not log(sigma)
     val wavelet = HuffmanWaveletTree(bwt, sigma, compress)
 
     new FmIndex(sampleRate, enableExtract, n, map, lookUp, cumulative, bitWidth,
       suffixes, positions, sampled, wavelet)
+  }
+
+  /** The appearance-order alphabet of `input`: the char -> code map, its inverse (code ->
+    * char, so sigma is its length) and the code sequence with the sentinel 0 appended.
+    * Chars are coded through a dense 64K table; the map gets one insert per symbol.
+    */
+  private[graft] def encode(input: Array[Char]): (mutable.LongMap[Short], Array[Int], Array[Int]) = {
+    var hasZero = false
+    var i = 0
+    while (i < input.length && !hasZero) { hasZero = input(i) == '\u0000'; i += 1 }
+    val zeroCode: Short = if (hasZero) 1 else 0
+
+    val map = new mutable.LongMap[Short](1024)
+    val lookUpBuf = new Array[Int](MaxAlphabet + 2)
+    // 0 marks an unseen char: every code but the sentinel's is at least 1, and '\0'
+    // occurs in the input only when it takes code 1
+    val codeOf = new Array[Short](65536)
+    map.update(0L, zeroCode)
+    codeOf(0) = zeroCode
+    lookUpBuf(zeroCode) = 0
+    var next = zeroCode + 1
+    val seq = new Array[Int](input.length + 1)
+    i = 0
+    while (i < input.length) {
+      val ch = input(i)
+      var code = codeOf(ch)
+      if (code == 0) {
+        if (map.size >= MaxAlphabet)
+          throw new IllegalArgumentException(s"Input has more than $MaxAlphabet different symbols")
+        code = next.toShort
+        map.update(ch.toLong, code)
+        codeOf(ch) = code
+        lookUpBuf(next) = ch.toInt
+        next += 1
+      }
+      seq(i) = code
+      i += 1
+    }
+    // the appended sentinel seq(input.length) stays 0, the unique smallest symbol
+    (map, java.util.Arrays.copyOfRange(lookUpBuf, 0, next), seq)
   }
 
   def read(in: DataInput): FmIndex = {

@@ -9,7 +9,7 @@ import java.io.{DataInput, DataOutput}
   * (/root/reference/indices/src/main/java/com/dynatrace/wavelet/WaveletFixedBlockBoosting.java:1010,1305),
   * realized as one rank bitvector per internal Huffman node instead of block boosting.
   *
-  * Deterministic construction: the Huffman heap breaks frequency ties by node id, so the
+  * Deterministic construction: the Huffman merges break frequency ties by node id, so the
   * same input always yields the same structure (required for serde hashCode equality).
   */
 final class HuffmanWaveletTree private (
@@ -131,41 +131,68 @@ object HuffmanWaveletTree {
     * bitvector RRR-compressed (entropy-sized, ~2-4x slower rank) instead of Rank9.
     */
   def apply(seq: Array[Int], sigma: Int, compress: Boolean = false): HuffmanWaveletTree = {
+    // inverseSelect packs the symbol into 16 bits, and construction buffers hold chars
+    require(sigma <= 65536, s"sigma must be at most 65536, got $sigma")
     val n = seq.length
     val freq = new Array[Long](sigma)
     var i = 0
     while (i < n) { freq(seq(i)) += 1; i += 1 }
-    val present = (0 until sigma).filter(freq(_) > 0)
+    var nPresent = 0
+    i = 0
+    while (i < sigma) { if (freq(i) > 0) nPresent += 1; i += 1 }
 
-    if (present.length <= 1) {
+    if (nPresent <= 1) {
       // single distinct symbol (or empty): no internal nodes. Only supported when that
       // symbol is 0 (the FM-Index sentinel) — inverseSelect has no tree to read from.
-      require(present.isEmpty || present.head == 0,
+      require(nPresent == 0 || freq(0) > 0,
         "degenerate single-symbol sequences must use symbol 0")
       return new HuffmanWaveletTree(n, sigma, new Array[Long](sigma),
         new Array[Byte](sigma), Array.empty, Array.empty, -1, Array.empty[BitRankSeq])
     }
 
-    // deterministic Huffman: min-heap on (freq, id); leaf ids 0..sigma-1, internal after
-    val numInternal = present.length - 1
+    // Deterministic Huffman: merge the two smallest nodes by (freq, id) until one is
+    // left; leaf ids are -(sym+1), internal ids 0, 1, ... in merge order. Merges come
+    // out in (freq, id) order, so the smallest node heads either the sorted leaves or
+    // the unmerged internal nodes (the two-queue form of a min-heap on (freq, id)).
+    val numInternal = nPresent - 1
     val nodeLeft = new Array[Int](numInternal)
     val nodeRight = new Array[Int](numInternal)
     val subFreq = new Array[Long](numInternal)
-    implicit val ord: Ordering[(Long, Int)] = Ordering.Tuple2(Ordering.Long.reverse, Ordering.Int.reverse)
-    val heap = scala.collection.mutable.PriorityQueue[(Long, Int)]()
-    present.foreach(s => heap.enqueue((freq(s), -s - 1))) // leaves as negative markers
-    var nextInternal = 0
-    while (heap.size > 1) {
-      val (f1, a) = heap.dequeue()
-      val (f2, b) = heap.dequeue()
-      val id = nextInternal
-      nodeLeft(id) = a // leaves arrive as -(sym+1); internal ids are >= 0
-      nodeRight(id) = b
-      subFreq(id) = f1 + f2
-      heap.enqueue((f1 + f2, id))
-      nextInternal += 1
+    val leaves = new Array[Long](nPresent) // freq, then 65535 - sym: ascending (freq, id)
+    var k = 0
+    i = 0
+    while (i < sigma) {
+      if (freq(i) > 0) { leaves(k) = (freq(i) << 16) | (65535 - i); k += 1 }
+      i += 1
     }
-    val root = heap.dequeue()._2
+    java.util.Arrays.sort(leaves)
+    var nextLeaf = 0
+    var nextMerged = 0
+    var id = 0
+    while (id < numInternal) {
+      var sum = 0L
+      var side = 0
+      while (side < 2) {
+        // a leaf wins ties: its id is negative
+        val leaf = nextLeaf < nPresent &&
+          (nextMerged == id || (leaves(nextLeaf) >>> 16) <= subFreq(nextMerged))
+        val node =
+          if (leaf) {
+            sum += leaves(nextLeaf) >>> 16
+            nextLeaf += 1
+            (leaves(nextLeaf - 1) & 0xffffL).toInt - 65536 // -(sym + 1)
+          } else {
+            sum += subFreq(nextMerged)
+            nextMerged += 1
+            nextMerged - 1
+          }
+        if (side == 0) nodeLeft(id) = node else nodeRight(id) = node
+        side += 1
+      }
+      subFreq(id) = sum
+      id += 1
+    }
+    val root = numInternal - 1
 
     // assign codes by walking the tree
     val codes = new Array[Long](sigma)
@@ -182,26 +209,64 @@ object HuffmanWaveletTree {
     }
     assign(root, 0L, 0)
 
-    // per-node bitvector sizes = subtree frequency
-    val builders = Array.tabulate(numInternal)(id => new RankBitVector.Builder(subFreq(id).toInt))
-    val cursors = new Array[Int](numInternal)
+    // Node bits, a word at a time. Each node's symbols sit contiguously, in sequence
+    // order, at the same offset in one of two buffers: a node at depth d reads its
+    // range from one buffer and stably partitions it into its children's subranges of
+    // the other, so every node's bits come from one sequential pass. Children have
+    // smaller ids than their parent, so descending ids visit parents first.
+    def size(node: Int): Int = if (node >= 0) subFreq(node).toInt else freq(-node - 1).toInt
+    val path = new Array[Long](sigma) // the code reversed: bit d is the branch at depth d
     i = 0
-    while (i < n) {
-      val sym = seq(i)
-      var node = root
-      var l = codeLens(sym) - 1
-      val code = codes(sym)
-      while (l >= 0) {
-        val bit = (code >>> l) & 1L
-        if (bit != 0L) builders(node).set(cursors(node))
-        cursors(node) += 1
-        node = if (bit == 0L) nodeLeft(node) else nodeRight(node)
-        l -= 1
-      }
+    while (i < sigma) {
+      if (codeLens(i) > 0) path(i) = java.lang.Long.reverse(codes(i)) >>> (64 - codeLens(i))
       i += 1
     }
-    new HuffmanWaveletTree(n, sigma, codes, codeLens, nodeLeft, nodeRight, root,
-      builders.map(b => BitSeqSerde.maybeCompress(b.result(), compress)))
+    val lo = new Array[Int](numInternal)
+    val depth = new Array[Int](numInternal)
+    val bufs = Array(new Array[Char](n), new Array[Char](n))
+    i = 0
+    while (i < n) { bufs(0)(i) = seq(i).toChar; i += 1 }
+    val nodeBv = new Array[BitRankSeq](numInternal)
+    var v = root
+    while (v >= 0) {
+      val d = depth(v)
+      val src = bufs(d & 1)
+      val dst = bufs((d + 1) & 1)
+      val left = nodeLeft(v)
+      val right = nodeRight(v)
+      val start = lo(v)
+      val end = start + size(v)
+      var c0 = start
+      var c1 = start + size(left)
+      if (left >= 0) { lo(left) = c0; depth(left) = d + 1 }
+      if (right >= 0) { lo(right) = c1; depth(right) = d + 1 }
+      val partition = left >= 0 || right >= 0 // leaves need no symbols
+      val words = new Array[Long](((end - start + 63) >>> 6) max 1)
+      var w = 0
+      var p = start
+      while (p < end) {
+        val stop = math.min(end, p + 64)
+        var word = 0L
+        var k = 0
+        while (p < stop) {
+          val sym = src(p)
+          val b = ((path(sym) >>> d) & 1L).toInt
+          word |= b.toLong << k
+          if (partition) { // branch-free: b picks the cursor
+            dst(c0 + ((c1 - c0) & -b)) = sym
+            c0 += 1 - b
+            c1 += b
+          }
+          k += 1
+          p += 1
+        }
+        words(w) = word
+        w += 1
+      }
+      nodeBv(v) = BitSeqSerde.maybeCompress(RankBitVector.fromWords(end - start, words), compress)
+      v -= 1
+    }
+    new HuffmanWaveletTree(n, sigma, codes, codeLens, nodeLeft, nodeRight, root, nodeBv)
   }
 
   def read(in: DataInput): HuffmanWaveletTree = {

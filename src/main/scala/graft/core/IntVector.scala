@@ -20,11 +20,10 @@ final class IntVector(val length: Int, val width: Int, val data: Array[Long]) {
     val off = pos.toLong * width
     val w = (off >>> 6).toInt
     val shift = (off & 63).toInt
-    data(w) = (data(w) & ~(mask << shift)) | ((value & mask) << shift)
+    val v = value & mask
+    data(w) = (data(w) & ~(mask << shift)) | (v << shift)
     val spill = shift + width - 64
-    if (spill > 0) {
-      data(w + 1) = (data(w + 1) & ~Bits.lowMask(spill)) | ((value & mask) >>> (width - spill))
-    }
+    if (spill > 0) data(w + 1) = (data(w + 1) & (-1L << spill)) | (v >>> (64 - shift))
   }
 
   def getValue(pos: Int): Long = {

@@ -58,13 +58,6 @@ final class RankBitVector private (
 
 object RankBitVector {
 
-  /** Mutable builder: set bits, then `result()` computes the rank directory. */
-  final class Builder(val numBits: Int) {
-    val words = new Array[Long](((numBits + 63) >>> 6) max 1)
-    @inline def set(pos: Int): Unit = words(pos >>> 6) |= (1L << (pos & 63))
-    def result(): RankBitVector = fromWords(numBits, words)
-  }
-
   def fromWords(numBits: Int, words: Array[Long]): RankBitVector = {
     val nBlocks = ((numBits + 511) >>> 9) + 1
     val blockRank = new Array[Int](nBlocks max 1)

@@ -19,93 +19,97 @@ object SuffixArrays {
     require(n > 0, "empty input")
     val sa = new Array[Int](n)
     if (n == 1) { sa(0) = 0; return sa }
-    java.util.Arrays.fill(sa, -1)
 
-    // L/S classification; sType(i) == true means suffix i is S-type
-    val sType = new Array[Boolean](n)
-    sType(n - 1) = true
+    // t(i): 0 when suffix i is L-type, 1 when S-type, 3 when LMS (S-type after an
+    // L-type), so one read answers either question and the naming compares both at
+    // once. The scan is branch-free and leaves the LMS positions, descending, in sa.
+    val t = new Array[Byte](n)
+    var nLms = 0
+    var next = 1 // the type of suffix i + 1; the sentinel is S-type
     var i = n - 2
     while (i >= 0) {
-      sType(i) = s(i) < s(i + 1) || (s(i) == s(i + 1) && sType(i + 1))
+      val a = s(i)
+      val b = s(i + 1)
+      val cur = ((a - b) >>> 31) | ((((a ^ b) - 1) >>> 31) & next) // a < b, or a == b and S
+      val lms = next & (cur ^ 1)
+      t(i + 1) = (next | (lms << 1)).toByte
+      sa(nLms) = i + 1
+      nLms += lms
+      next = cur
       i -= 1
     }
-    @inline def isLms(j: Int): Boolean = j > 0 && sType(j) && !sType(j - 1)
+    t(0) = next.toByte
+    val lmsPos = new Array[Int](nLms) // text order
+    var k = 0
+    while (k < nLms) { lmsPos(k) = sa(nLms - 1 - k); k += 1 }
 
-    val bktSizes = new Array[Int](sigma)
+    // bucket starts and ends, computed once and copied into `bkt` before each scan
+    val starts = new Array[Int](sigma)
+    val ends = new Array[Int](sigma)
     i = 0
-    while (i < n) { bktSizes(s(i)) += 1; i += 1 }
+    while (i < n) { ends(s(i)) += 1; i += 1 }
+    var sum = 0
+    var c = 0
+    while (c < sigma) { starts(c) = sum; sum += ends(c); ends(c) = sum; c += 1 }
     val bkt = new Array[Int](sigma)
-    def bktEnds(): Unit = {
-      var sum = 0; var c = 0
-      while (c < sigma) { sum += bktSizes(c); bkt(c) = sum; c += 1 }
-    }
-    def bktStarts(): Unit = {
-      var sum = 0; var c = 0
-      while (c < sigma) { bkt(c) = sum; sum += bktSizes(c); c += 1 }
-    }
 
     def induce(): Unit = {
       // induce L-type suffixes scanning left-to-right
-      bktStarts()
+      System.arraycopy(starts, 0, bkt, 0, sigma)
       var j = 0
       while (j < n) {
-        val p = sa(j)
-        if (p > 0 && !sType(p - 1)) {
-          val c = s(p - 1); sa(bkt(c)) = p - 1; bkt(c) += 1
+        val p = sa(j) - 1
+        if (p >= 0 && t(p) == 0) {
+          val c = s(p); sa(bkt(c)) = p; bkt(c) += 1
         }
         j += 1
       }
       // induce S-type suffixes scanning right-to-left
-      bktEnds()
+      System.arraycopy(ends, 0, bkt, 0, sigma)
       j = n - 1
       while (j >= 0) {
-        val p = sa(j)
-        if (p > 0 && sType(p - 1)) {
-          val c = s(p - 1); bkt(c) -= 1; sa(bkt(c)) = p - 1
+        val p = sa(j) - 1
+        if (p >= 0 && t(p) != 0) {
+          val c = s(p); bkt(c) -= 1; sa(bkt(c)) = p
         }
         j -= 1
       }
     }
 
     // 1) place LMS suffixes at their bucket ends (arbitrary relative order), induce once
-    bktEnds()
-    i = 1
-    while (i < n) {
-      if (isLms(i)) { val c = s(i); bkt(c) -= 1; sa(bkt(c)) = i }
-      i += 1
-    }
+    java.util.Arrays.fill(sa, -1)
+    System.arraycopy(ends, 0, bkt, 0, sigma)
+    k = 0
+    while (k < nLms) { val p = lmsPos(k); val c = s(p); bkt(c) -= 1; sa(bkt(c)) = p; k += 1 }
     induce()
 
     // 2) compact the now-sorted LMS substrings to the front of sa
-    var nLms = 0
+    k = 0
     i = 0
     while (i < n) {
       val p = sa(i)
-      if (isLms(p)) { sa(nLms) = p; nLms += 1 }
+      if (t(p) == 3) { sa(k) = p; k += 1 }
       i += 1
     }
 
-    // 3) name LMS substrings (equal substrings share a name)
+    // 3) name LMS substrings (equal substrings share a name); two substrings are equal
+    //    when chars and types agree up to and including the next LMS position
     java.util.Arrays.fill(sa, nLms, n, -1)
     var name = 0
     var prev = -1
     i = 0
     while (i < nLms) {
       val pos = sa(i)
-      var diff = false
-      if (prev == -1) diff = true
-      else {
+      var diff = prev < 0
+      if (!diff) {
         var d = 0
         var done = false
         while (!done) {
-          if (s(pos + d) != s(prev + d) || sType(pos + d) != sType(prev + d)) {
-            diff = true; done = true
-          } else if (d > 0) {
-            val lp = isLms(pos + d); val lq = isLms(prev + d)
-            if (lp && lq) done = true
-            else if (lp != lq) { diff = true; done = true }
-            else d += 1
-          } else d += 1
+          val a = pos + d
+          val b = prev + d
+          if (s(a) != s(b) || t(a) != t(b)) { diff = true; done = true }
+          else if (d > 0 && t(a) == 3) done = true
+          else d += 1
         }
       }
       if (diff) { name += 1; prev = pos }
@@ -113,32 +117,22 @@ object SuffixArrays {
       i += 1
     }
 
-    // 4) build the reduced string (LMS names in text order) and solve it
+    // 4) the reduced string (LMS names in text order), solved directly when the names
+    //    are unique and recursively otherwise
     val s1 = new Array[Int](nLms)
-    var j = 0
-    i = nLms
-    while (i < n) {
-      if (sa(i) >= 0) { s1(j) = sa(i); j += 1 }
-      i += 1
-    }
+    k = 0
+    while (k < nLms) { s1(k) = sa(nLms + lmsPos(k) / 2); k += 1 }
     val sa1: Array[Int] =
       if (name == nLms) {
         val r = new Array[Int](nLms)
-        var k = 0
+        k = 0
         while (k < nLms) { r(s1(k)) = k; k += 1 }
         r
       } else saIs(s1, name)
 
     // 5) final induced sort seeded with LMS suffixes in sorted order
-    val lmsPos = new Array[Int](nLms)
-    j = 0
-    i = 1
-    while (i < n) {
-      if (isLms(i)) { lmsPos(j) = i; j += 1 }
-      i += 1
-    }
     java.util.Arrays.fill(sa, -1)
-    bktEnds()
+    System.arraycopy(ends, 0, bkt, 0, sigma)
     i = nLms - 1
     while (i >= 0) {
       val p = lmsPos(sa1(i))
