@@ -415,9 +415,8 @@ object FmIndex {
 
     // row i samples suffix sa(i) when sampleRate divides it; power-of-two rates (the
     // pipeline's 16 among them) test and divide by mask and shift
-    val bitWidth = Bits.minBits(n.toLong)
-    val suffixes = new IntVector(n / sampleRate + 1, bitWidth)
-    val positions = if (enableExtract) new IntVector(n / sampleRate + 2, bitWidth) else null
+    val sampledSuffix = new Array[Int](n / sampleRate + 1)
+    val sampledRow = if (enableExtract) new Array[Int](n / sampleRate + 2) else null
     val marks = new Array[Long](((n + 63) >>> 6) max 1)
     val bwt = new Array[Int](n)
     val shift = if (Integer.bitCount(sampleRate) == 1) Integer.numberOfTrailingZeros(sampleRate) else -1
@@ -428,16 +427,22 @@ object FmIndex {
       val p = sa(i)
       bwt(i) = if (p == 0) 0 else seq(p - 1) // seq(n - 1) is the sentinel 0
       if (if (shift >= 0) (p & mask) == 0 else p % sampleRate == 0) {
-        suffixes.setValue(si, p.toLong)
+        sampledSuffix(si) = p
         si += 1
         marks(i >>> 6) |= 1L << i
-        if (enableExtract)
-          positions.setValue(if (shift >= 0) p >>> shift else p / sampleRate, i.toLong)
+        if (enableExtract) sampledRow(if (shift >= 0) p >>> shift else p / sampleRate) = i
       }
       i += 1
     }
+    val bitWidth = Bits.minBits(n.toLong)
+    val suffixes = IntVector.pack(sampledSuffix, bitWidth)
+    val positions =
+      if (!enableExtract) null
+      else {
+        sampledRow((n - 1) / sampleRate + 1) = sampledRow(0)
+        IntVector.pack(sampledRow, bitWidth)
+      }
     val sampled = BitSeqSerde.maybeCompress(RankBitVector.fromWords(n, marks), compress)
-    if (enableExtract) positions.setValue((n - 1) / sampleRate + 1, positions.getValue(0))
 
     // Huffman-shaped wavelet: frequent BWT symbols descend ~entropy levels, not log(sigma)
     val wavelet = HuffmanWaveletTree(bwt, sigma, compress)

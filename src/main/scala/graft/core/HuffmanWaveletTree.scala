@@ -134,9 +134,26 @@ object HuffmanWaveletTree {
     // inverseSelect packs the symbol into 16 bits, and construction buffers hold chars
     require(sigma <= 65536, s"sigma must be at most 65536, got $sigma")
     val n = seq.length
+    // symbol counts, and the symbols as chars: the first of the two partition buffers
+    // used below. Odd and even positions count apart, so a run of one symbol is not
+    // one chain of increments of one counter.
     val freq = new Array[Long](sigma)
+    val odd = new Array[Int](sigma)
+    val bufs = Array(new Array[Char](n), new Array[Char](n))
+    val buf0 = bufs(0)
     var i = 0
-    while (i < n) { freq(seq(i)) += 1; i += 1 }
+    while (i + 1 < n) {
+      val a = seq(i)
+      val b = seq(i + 1)
+      freq(a) += 1
+      odd(b) += 1
+      buf0(i) = a.toChar
+      buf0(i + 1) = b.toChar
+      i += 2
+    }
+    if (i < n) { freq(seq(i)) += 1; buf0(i) = seq(i).toChar }
+    i = 0
+    while (i < sigma) { freq(i) += odd(i); i += 1 }
     var nPresent = 0
     i = 0
     while (i < sigma) { if (freq(i) > 0) nPresent += 1; i += 1 }
@@ -223,9 +240,6 @@ object HuffmanWaveletTree {
     }
     val lo = new Array[Int](numInternal)
     val depth = new Array[Int](numInternal)
-    val bufs = Array(new Array[Char](n), new Array[Char](n))
-    i = 0
-    while (i < n) { bufs(0)(i) = seq(i).toChar; i += 1 }
     val nodeBv = new Array[BitRankSeq](numInternal)
     var v = root
     while (v >= 0) {

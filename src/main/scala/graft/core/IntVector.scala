@@ -59,6 +59,31 @@ object IntVector {
     ((bits + 63) >>> 6).toInt
   }
 
+  /** `values` packed at `width` bits each in one sequential pass; every value must be
+    * non-negative and below 2^width.
+    */
+  def pack(values: Array[Int], width: Int): IntVector = {
+    val data = new Array[Long](wordsFor(values.length, width))
+    var acc = 0L // the bits of the word being filled
+    var bits = 0
+    var w = 0
+    var i = 0
+    while (i < values.length) {
+      val v = values(i).toLong
+      acc |= v << bits
+      bits += width
+      if (bits >= 64) {
+        data(w) = acc
+        w += 1
+        bits -= 64
+        acc = v >>> (width - bits) // the spilled high bits; 0 when none spilled
+      }
+      i += 1
+    }
+    if (bits > 0) data(w) = acc
+    new IntVector(values.length, width, data)
+  }
+
   def read(in: DataInput): IntVector = {
     val length = in.readInt()
     val width = in.readInt()

@@ -83,12 +83,14 @@ object SuffixArrays {
     while (k < nLms) { val p = lmsPos(k); val c = s(p); bkt(c) -= 1; sa(bkt(c)) = p; k += 1 }
     induce()
 
-    // 2) compact the now-sorted LMS substrings to the front of sa
+    // 2) compact the now-sorted LMS substrings to the front of sa (branch-free:
+    //    t(p) >> 1 is 1 exactly for LMS)
     k = 0
     i = 0
     while (i < n) {
       val p = sa(i)
-      if (t(p) == 3) { sa(k) = p; k += 1 }
+      sa(k) = p
+      k += t(p) >> 1
       i += 1
     }
 
