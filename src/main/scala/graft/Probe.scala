@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.FmIndexBuilder
+import graft.core.{Bwt, FmIndex, FmIndexBuilder, HuffmanWaveletTree, SuffixArrays}
 import graft.ops.CorpusQueries
 import graft.pipeline.{Transcripts, TranscriptPipeline}
 import graft.sources.ManifestTables
@@ -519,9 +519,10 @@ object Probe {
 
   /* Single-shard stress at the pipeline's maxCorpusChars cap (128M chars,
    * TranscriptPipeline.Config.maxCorpusChars): builds ONE FmIndex and reports build
-   * throughput, peak-heap estimate, serialized bytes and query latencies — the
-   * numbers that size real executors (a shard-build task at the cap needs corpus +
-   * SA-IS int arrays + BWT in memory at once). Prints one JSON line per build config
+   * throughput and its warm split (SA-IS, wavelet, rest), peak-heap estimate,
+   * serialized bytes and query latencies — the numbers that size real executors (a
+   * shard-build task at the cap needs corpus + SA-IS int arrays + BWT in memory at
+   * once). Prints one JSON line per build config
    * (Rank9 for speed, RRR for size). The --file form replicates a UTF-8 log fixture
    * (e.g. the reference's HDFS_2k_multichar.log) and additionally reports serialized
    * size as a percentage of input UTF-8 BYTES — the unit the reference's size
@@ -580,12 +581,10 @@ object Probe {
     val chars = text.length
     val baseHeap = usedHeapMb()
 
-    val configs = Seq[(String, FmIndexBuilder)](
-      ("huffman+rank9", new FmIndexBuilder().setSampleRate(sh.rate)),
-      ("huffman+rrr", new FmIndexBuilder().setSampleRate(sh.rate).setCompression(true))
-    )
+    val configs = Seq(("huffman+rank9", false), ("huffman+rrr", true))
     val patterns = Seq("blk_", "PacketResponder", "size=1", "terminating")
-    configs.foreach { case (name, builder) =>
+    configs.foreach { case (name, compress) =>
+      val builder = new FmIndexBuilder().setSampleRate(sh.rate).setCompression(compress)
       // sample used heap during the build: the transient peak (SA-IS int arrays + BWT)
       // is what sizes a real executor, not the retained index
       val (fm, buildSec, peak) = withPeakHeap(builder.build(text))
@@ -626,6 +625,7 @@ object Probe {
         n
       }.sum)
       require(hits == counts.head * reps)
+      val (saisNs, waveletNs, restNs) = buildSplit(text, sh.rate, compress, reps)
       println(
         f"""{"engine":"$name","chars":$chars,"sampleRate":${sh.rate},""" +
           f""""buildSec":$buildSec%.1f,"mcharsPerSec":${chars / 1e6 / buildSec}%.2f,""" +
@@ -638,7 +638,26 @@ object Probe {
           f""""decodeNsPerChar":${decodeSec * 1e9 / chars / reps}%.1f,""" +
           f""""scanNsPerChar":${scanSec * 1e9 / chars / reps}%.2f,""" +
           f""""buildPeakBytesPerChar":${peakMb * 1048576.0 / chars}%.1f,""" +
-          f""""decodePeakBytesPerChar":${decodePeakMb * 1048576.0 / chars}%.1f}""")
+          f""""decodePeakBytesPerChar":${decodePeakMb * 1048576.0 / chars}%.1f,""" +
+          f""""saisNsPerChar":$saisNs%.1f,"waveletNsPerChar":$waveletNs%.1f,""" +
+          f""""restNsPerChar":$restNs%.1f}""")
     }
+  }
+
+  /** Warm ns per char of SA-IS, of the wavelet construction and of the rest of the
+    * build (alphabet, the pass over the suffix array, bitvector directories), each the
+    * mean of `reps` runs on `text`. The kernels are called on the inputs
+    * `FmIndex.build` gives them; the rest is a warm build less the two.
+    */
+  private def buildSplit(text: Array[Char], rate: Int, compress: Boolean,
+      reps: Int): (Double, Double, Double) = {
+    def nsPerChar(sec: Double) = sec * 1e9 / text.length / reps
+    val (_, buildSec) = timed((1 to reps).foreach(_ => FmIndex.build(text, rate, compress = compress)))
+    val (_, lookUp, seq) = FmIndex.encode(text)
+    var sa: Array[Int] = null
+    val (_, saisSec) = timed((1 to reps).foreach(_ => sa = SuffixArrays.saIs(seq, lookUp.length)))
+    val bwt = Bwt.fromSuffixArray(seq, sa)
+    val (_, waveletSec) = timed((1 to reps).foreach(_ => HuffmanWaveletTree(bwt, lookUp.length, compress)))
+    (nsPerChar(saisSec), nsPerChar(waveletSec), nsPerChar(buildSec - saisSec - waveletSec))
   }
 }

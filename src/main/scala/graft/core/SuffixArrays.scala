@@ -96,7 +96,6 @@ object SuffixArrays {
 
     // 3) name LMS substrings (equal substrings share a name); two substrings are equal
     //    when chars and types agree up to and including the next LMS position
-    java.util.Arrays.fill(sa, nLms, n, -1)
     var name = 0
     var prev = -1
     i = 0
@@ -115,7 +114,7 @@ object SuffixArrays {
         }
       }
       if (diff) { name += 1; prev = pos }
-      sa(nLms + pos / 2) = name - 1
+      sa(nLms + (pos >>> 1)) = name - 1
       i += 1
     }
 
@@ -123,7 +122,7 @@ object SuffixArrays {
     //    are unique and recursively otherwise
     val s1 = new Array[Int](nLms)
     k = 0
-    while (k < nLms) { s1(k) = sa(nLms + lmsPos(k) / 2); k += 1 }
+    while (k < nLms) { s1(k) = sa(nLms + (lmsPos(k) >>> 1)); k += 1 }
     val sa1: Array[Int] =
       if (name == nLms) {
         val r = new Array[Int](nLms)

@@ -463,11 +463,13 @@ object TranscriptPipeline {
     val writersKey = "spark.sql.maxConcurrentOutputFileWriters"
     val prevWriters = spark.conf.getOption(writersKey)
     spark.conf.set(writersKey, math.max(8, cfg.rules.length + 2).toString)
-    // `text` is written PLAIN with no dictionary page: its values are nearly all
-    // distinct, so the dictionary writer hashed every text only to find the dictionary
-    // too large and re-encode the column plain. Rows are unchanged; file bytes are not.
+    // `text` and `ts` are written PLAIN with no dictionary page. Texts are nearly all
+    // distinct, so the dictionary writer hashed every one only to find the dictionary
+    // too large and re-encode the column plain. A turn's `ts` is distinct within a
+    // sink file, so its kept INT96 dictionary was larger than the plain values and
+    // slower to write. Rows are unchanged; file bytes are not.
     try enriched.coalesce(spark.sparkContext.defaultParallelism)
-      .write.options(directCommit).option("parquet.enable.dictionary#text", "false")
+      .write.options(directCommit ++ Seq("text", "ts").map(c => s"parquet.enable.dictionary#$c" -> "false"))
       .mode("append").partitionBy("sink", "attempt").parquet(s"$outDir/sinks")
     finally prevWriters match {
       case Some(v) => spark.conf.set(writersKey, v)

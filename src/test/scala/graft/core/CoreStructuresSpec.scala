@@ -80,6 +80,49 @@ class SuffixArraySpec extends AnyFunSuite {
     check(Array.fill(5000)(1) :+ 0, 2) // long run
   }
 
+  test("SA-IS matches prefix doubling: n up to 20k, sigma 2 to 40,000, periodic and Fibonacci") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // values in [1, sigma), then the sentinel 0
+    val uniform = for { sigma <- Gen.choose(2, 40000); n <- Gen.choose(0, 20000); seed <- Gen.long }
+      yield { val r = new Random(seed); (Array.fill(n)(1 + r.nextInt(sigma - 1)), sigma) }
+    val skewed = for { sigma <- Gen.choose(2, 40000); n <- Gen.choose(0, 20000); seed <- Gen.long }
+      yield {
+        val r = new Random(seed)
+        (Array.fill(n)(1 + (math.pow(r.nextDouble(), 6) * (sigma - 1)).toInt), sigma)
+      }
+    val periodic = for {
+      sigma <- Gen.choose(2, 40000); period <- Gen.choose(1, 64); n <- Gen.choose(0, 20000)
+      seed <- Gen.long
+    } yield {
+      val r = new Random(seed)
+      val unit = Array.fill(period)(1 + r.nextInt(sigma - 1))
+      (Array.tabulate(n)(i => unit(i % period)), sigma)
+    }
+    val fibonacci = for { sigma <- Gen.choose(3, 40000); n <- Gen.choose(0, 20000); a <- Gen.choose(1, sigma - 1) }
+      yield (TestOracles.fibonacciWord(n, a, 1 + (a % (sigma - 1))), sigma)
+    val gen = Gen.oneOf(uniform, skewed, periodic, fibonacci)
+    val prop = Prop.forAllNoShrink(gen) { case (body, sigma) =>
+      val s = body :+ 0
+      java.util.Arrays.equals(SuffixArrays.saIs(s, sigma), TestOracles.prefixDoublingSa(s))
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(120), prop)
+    assert(res.passed, s"property failed: ${res.status}")
+    // inputs that reach the recursion at least two levels deep
+    val fib = TestOracles.fibonacciWord(17711, 1, 2) :+ 0
+    val periodicText = Array.tabulate(20000)(i => Array(3, 1, 4, 1, 5, 9, 2, 6, 5, 3)(i % 10)) :+ 0
+    for ((s, sigma) <- Seq((fib, 3), (periodicText, 10))) {
+      val depth = TestOracles.saIsDepth(s)
+      assert(depth >= 2, s"recursion depth $depth")
+      assert(java.util.Arrays.equals(SuffixArrays.saIs(s, sigma), TestOracles.prefixDoublingSa(s)))
+    }
+    // the prefix-doubling oracle agrees with the naive one where the naive one is cheap
+    val rnd = new Random(5)
+    for (_ <- 0 until 50) {
+      val s = Array.fill(1 + rnd.nextInt(200))(1 + rnd.nextInt(5)) :+ 0
+      assert(TestOracles.prefixDoublingSa(s).toSeq == SuffixArrays.naive(s).toSeq)
+    }
+  }
+
   test("SuffixArraySearch count/locate match the overlap oracle on the log corpus") {
     val text = TestOracles.LogChars.take(50000)
     val search = new SuffixArraySearch(text)

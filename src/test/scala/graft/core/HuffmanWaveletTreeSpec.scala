@@ -69,6 +69,45 @@ class HuffmanWaveletTreeSpec extends AnyFunSuite {
     assert(HuffmanWaveletTree(Array.empty[Int], 1).decodeAll().isEmpty)
   }
 
+  test("rank, inverseSelect and decodeAll match running counts: sigma up to 40k, skewed, Rank9 and RRR") {
+    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Test.{check, Parameters}
+    // symbol 0 first, so a sequence of one distinct symbol is the supported all-zero one;
+    // the sixth power skews frequencies towards small symbols and deepens the tree
+    val gen = for {
+      sigma <- Gen.choose(2, 40000); n <- Gen.choose(1, 20000); power <- Gen.oneOf(1, 3, 6)
+      seed <- Gen.long
+    } yield {
+      val r = new Random(seed)
+      (Array.tabulate(n)(i => if (i == 0) 0 else (math.pow(r.nextDouble(), power) * sigma).toInt), sigma, seed)
+    }
+    val prop = Prop.forAllNoShrink(gen) { case (seq, sigma, seed) =>
+      val r = new Random(seed)
+      Seq(false, true).forall { compress =>
+        val wt = HuffmanWaveletTree(seq, sigma, compress)
+        val count = new Array[Int](sigma)
+        var ok = wt.decodeAll().sameElements(seq)
+        var i = 0
+        while (ok && i <= seq.length) {
+          if (i % 97 == 0 || i == seq.length) {
+            val syms = Seq(seq(r.nextInt(seq.length)), r.nextInt(sigma))
+            ok = syms.forall(sym => wt.rank(i, sym) == count(sym))
+          }
+          if (ok && i < seq.length) {
+            ok = wt.inverseSelect(i) == ((count(seq(i)).toLong << 16) | seq(i))
+            count(seq(i)) += 1
+          }
+          i += 1
+        }
+        ok
+      }
+    }
+    val res = check(Parameters.default.withMinSuccessfulTests(60), prop)
+    assert(res.passed, s"property failed: ${res.status}")
+    assert(intercept[IllegalArgumentException](HuffmanWaveletTree(Array(0, 1), 65537))
+      .getMessage.contains("sigma must be at most 65536"))
+  }
+
   test("degenerate single-symbol sequence (the sentinel-only corpus)") {
     val wt = HuffmanWaveletTree(Array(0), 1)
     assert(wt.rank(1, 0) == 1 && wt.rank(0, 0) == 0)

@@ -155,6 +155,76 @@ object TestOracles {
     up.toString
   }
 
+  /** Suffix array by prefix doubling, O(n log^2 n): each round sorts the suffixes by
+    * (rank of the first k symbols, rank of the next k) packed into one long with the
+    * position. Symbols and n must be below 2^21 - 1. An oracle independent of SA-IS.
+    */
+  def prefixDoublingSa(s: Array[Int]): Array[Int] = {
+    val n = s.length
+    require(n < (1 << 21) - 1 && s.forall(x => x >= 0 && x < (1 << 21) - 1))
+    val low = (1L << 21) - 1
+    var rank = s.clone()
+    val keys = new Array[Long](n)
+    val sa = new Array[Int](n)
+    var k = 1
+    var sorted = false
+    while (!sorted) {
+      var i = 0
+      while (i < n) {
+        val next = if (i + k < n) rank(i + k) + 1 else 0 // a suffix that ended sorts first
+        keys(i) = (rank(i).toLong << 42) | (next.toLong << 21) | i
+        i += 1
+      }
+      java.util.Arrays.sort(keys)
+      val nextRank = new Array[Int](n)
+      var r = 0
+      i = 0
+      while (i < n) {
+        if (i > 0 && (keys(i) >>> 21) != (keys(i - 1) >>> 21)) r += 1
+        sa(i) = (keys(i) & low).toInt
+        nextRank(sa(i)) = r
+        i += 1
+      }
+      rank = nextRank
+      sorted = r == n - 1
+      k *= 2
+    }
+    sa
+  }
+
+  /** How many levels of reduced strings SA-IS recurses into for the sentinel-terminated
+    * `s`: 0 when its LMS substrings are all distinct. Derived independently of SA-IS:
+    * LMS substrings are ordered by their suffixes' ranks and named by comparing chars
+    * and L/S types up to and including the next LMS position.
+    */
+  def saIsDepth(s: Array[Int]): Int = {
+    val n = s.length
+    val sType = new Array[Boolean](n)
+    sType(n - 1) = true
+    for (i <- n - 2 to 0 by -1) sType(i) = s(i) < s(i + 1) || (s(i) == s(i + 1) && sType(i + 1))
+    val lms = (1 until n).filter(i => sType(i) && !sType(i - 1)).toArray
+    val nextLms = lms.indices.map(j => if (j + 1 < lms.length) lms(j + 1) else lms(j)).toArray
+    def substring(j: Int) = (lms(j) to nextLms(j)).map(x => (s(x), sType(x)))
+    val rank = new Array[Int](n)
+    prefixDoublingSa(s).zipWithIndex.foreach { case (p, r) => rank(p) = r }
+    val byRank = lms.indices.sortBy(j => rank(lms(j)))
+    val names = new Array[Int](lms.length)
+    var name = 0
+    byRank.indices.foreach { r =>
+      if (r > 0 && substring(byRank(r)) != substring(byRank(r - 1))) name += 1
+      names(byRank(r)) = name
+    }
+    if (name == lms.length - 1) 0 else 1 + saIsDepth(names)
+  }
+
+  /** The Fibonacci word of length `n` over {a, b} (a prefix of the infinite word). */
+  def fibonacciWord(n: Int, a: Int, b: Int): Array[Int] = {
+    var prev = Array(b)
+    var cur = Array(a)
+    while (cur.length < n) { val next = cur ++ prev; prev = cur; cur = next }
+    cur.take(n)
+  }
+
   /** A Rank9 vector of `numBits` bits with bit i set when `set(i)`. */
   def bitVector(numBits: Int)(set: Int => Boolean): RankBitVector = {
     val words = new Array[Long](((numBits + 63) >>> 6) max 1)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.SharedSparkSession
+import graft.{SharedSparkSession, TempDirs}
 import graft.ops.ShardTableCache
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * FmFingerprintPruning optimizer rule (soundness + that it actually fires), and the
   * GraftExtensions wiring class.
   */
-class ExtensionsSpec extends AnyFunSuite with SharedSparkSession {
+class ExtensionsSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -102,7 +102,7 @@ class ExtensionsSpec extends AnyFunSuite with SharedSparkSession {
   test("null alpha_fp rows survive the injected guard (null-safe rewrite)") {
     FmFunctions.register(spark)
     GraftExtensions.installRules(spark)
-    val p = java.nio.file.Files.createTempDirectory("ext_nullfp").toString
+    val p = tempDir("ext_nullfp").toString
     // half the shards carry a NULL fingerprint (nullable parquet read) — the guard
     // must treat unknown as "may contain", never as "drop"
     ShardTableCache.docShards(spark, dir, numShards = 16).toDF()
@@ -126,8 +126,8 @@ class ExtensionsSpec extends AnyFunSuite with SharedSparkSession {
     FmFunctions.register(spark)
     GraftExtensions.installRules(spark)
     val base = ShardTableCache.docShards(spark, dir, numShards = 16).toDF()
-    val pa = java.nio.file.Files.createTempDirectory("ext_xrel_a").toString
-    val pb = java.nio.file.Files.createTempDirectory("ext_xrel_b").toString
+    val pa = tempDir("ext_xrel_a").toString
+    val pb = tempDir("ext_xrel_b").toString
     base.select(col("shard_id"), col("shard")).write.mode("overwrite").parquet(pa)
     // a SAME-NAMED fingerprint from another table, deliberately claiming 'merge'
     // chars are absent — pairing it with A.shard would wrongly kill every row

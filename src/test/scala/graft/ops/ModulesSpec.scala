@@ -1,14 +1,13 @@
 package graft.ops
 
-import graft.SharedSparkSession
+import graft.{SharedSparkSession, TempDirs}
 import graft.functions.FmFunctions
 import graft.pipeline.Transcripts
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-class ModulesSpec extends AnyFunSuite with SharedSparkSession {
+class ModulesSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
   test("approximate aggregates: HLL distinct and approx percentile within error bounds") {
     // sketch surface for corpus-level stats where exactness is not worth the shuffle:
@@ -227,7 +226,7 @@ class ModulesSpec extends AnyFunSuite with SharedSparkSession {
 
   test("streaming: windowed counts and stateful conversation aggregates match batch") {
     val turns = Transcripts.generate(spark, nConvs = 12, turnsPerConv = 15)
-    val rawDir = Files.createTempDirectory("stream_raw").toString
+    val rawDir = tempDir("stream_raw").toString
     Transcripts.renderRawLines(turns).write.mode("overwrite").parquet(rawDir)
 
     val rawStream = spark.readStream
@@ -265,7 +264,7 @@ class ModulesSpec extends AnyFunSuite with SharedSparkSession {
   test("streaming: watermark-bounded dedup and native session windows match batch") {
     val base = Transcripts.generate(spark, nConvs = 8, turnsPerConv = 12)
     val turns = base.union(base.limit(20)) // inject exact duplicates
-    val rawDir = Files.createTempDirectory("stream_dedup").toString
+    val rawDir = tempDir("stream_dedup").toString
     Transcripts.renderRawLines(turns).write.mode("overwrite").parquet(rawDir)
     val parsed = StreamingPipeline.parseStream(spark,
       spark.readStream.schema("value STRING").parquet(rawDir))
@@ -295,9 +294,9 @@ class ModulesSpec extends AnyFunSuite with SharedSparkSession {
   test("streaming: file sink + checkpoint restart is exactly-once across new data") {
     val turns = Transcripts.generate(spark, nConvs = 10, turnsPerConv = 12)
     val half = turns.count() / 2
-    val rawDir = Files.createTempDirectory("stream_ckpt_raw").toString
-    val outDir = Files.createTempDirectory("stream_ckpt_out").toString + "/sink"
-    val ckpt = Files.createTempDirectory("stream_ckpt_meta").toString
+    val rawDir = tempDir("stream_ckpt_raw").toString
+    val outDir = tempDir("stream_ckpt_out").toString + "/sink"
+    val ckpt = tempDir("stream_ckpt_meta").toString
     val all = Transcripts.renderRawLines(turns)
     all.limit(half.toInt).write.mode("overwrite").parquet(rawDir)
 
@@ -328,7 +327,7 @@ class ModulesSpec extends AnyFunSuite with SharedSparkSession {
 
   test("streaming: watermarked stream-stream interval join matches the batch join") {
     val turns = Transcripts.generate(spark, nConvs = 10, turnsPerConv = 16)
-    val rawDir = Files.createTempDirectory("stream_ssj").toString
+    val rawDir = tempDir("stream_ssj").toString
     Transcripts.renderRawLines(turns).write.mode("overwrite").parquet(rawDir)
     val parsed = StreamingPipeline.parseStream(spark,
       spark.readStream.schema("value STRING").parquet(rawDir))

@@ -1,10 +1,9 @@
 package graft.ops
 
-import graft.{SharedSparkSession, SparkEntry}
+import graft.{SharedSparkSession, SparkEntry, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Scale behavior of the 64-bit / 4x16-bit-band SimHash pairing (q37).
   *
@@ -15,7 +14,7 @@ import java.nio.file.Files
   * bucket sizes stay near-constant and per-doc candidate work stays bounded when the
   * corpus grows 10x, and that the band join's recall is exact for hamming <= 3.
   */
-class SimhashScalingSpec extends AnyFunSuite with SharedSparkSession {
+class SimhashScalingSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
   /** Deterministic synthetic corpus: n docs of odd token counts over a shared vocab
     * (odd so no majority ties — signature bits land ~iid uniform, the honest model
@@ -23,7 +22,7 @@ class SimhashScalingSpec extends AnyFunSuite with SharedSparkSession {
     */
   private def corpusDir(n: Int): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory(s"simhash_scale_$n").toString
+    val dir = tempDir(s"simhash_scale_$n").toString
     val rnd = new scala.util.Random(42)
     val vocab = Array.tabulate(5000)(i => s"tok${i}_${rnd.nextInt(100000)}")
     (0 until n).map { i =>
@@ -80,7 +79,7 @@ class SimhashScalingSpec extends AnyFunSuite with SharedSparkSession {
     import spark.implicits._
     // corpus with PLANTED near-duplicates: copies with 1..3 tokens changed land within
     // a few signature bits of their source
-    val dir = Files.createTempDirectory("simhash_recall").toString
+    val dir = tempDir("simhash_recall").toString
     val rnd = new scala.util.Random(7)
     val vocab = Array.tabulate(2000)(i => s"w$i")
     val base = (0 until 150).map { i =>

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.SharedSparkSession
+import graft.{SharedSparkSession, TempDirs}
 import graft.core.FmIndex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -14,7 +14,7 @@ import java.nio.file.Files
   *  - grok parse round-trip: render raw lines -> regex parse -> original rows
   *  - resume: partial run + resumed run == single full run, no recount drift
   */
-class PipelineSpec extends AnyFunSuite with SharedSparkSession {
+class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
   private lazy val turns = Transcripts.generate(spark, nConvs = 40, turnsPerConv = 25,
     skewConvs = 2, skewFactor = 20).cache()
@@ -104,8 +104,8 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession {
 
   test("full run writes sinks/aggregates/lineage and a resumed run converges exactly") {
     import spark.implicits._
-    val outFull = Files.createTempDirectory("graft_full").toString
-    val outResume = Files.createTempDirectory("graft_resume").toString
+    val outFull = tempDir("graft_full").toString
+    val outResume = tempDir("graft_resume").toString
 
     val r1 = TranscriptPipeline.runToSinks(spark, turns, cfg, outFull)
     assert(!r1.resumed && r1.shardsBuilt > 0 && r1.rowsRouted > 0)
@@ -155,8 +155,8 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession {
 
   test("crash before the commit marker never duplicates sink rows (crash-atomic resume)") {
     import spark.implicits._
-    val outFull = Files.createTempDirectory("graft_atomic_full").toString
-    val out = Files.createTempDirectory("graft_atomic").toString
+    val outFull = tempDir("graft_atomic_full").toString
+    val out = tempDir("graft_atomic").toString
     TranscriptPipeline.runToSinks(spark, turns, cfg, outFull)
 
     // attempt 0: only shards 0..3 commit cleanly
@@ -230,8 +230,8 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession {
     val bigCfg = TranscriptPipeline.Config(numShards = 10000, saltBlock = 2,
       sampleRate = 8, numPartitionsOpt = Some(32))
     val manyTurns = Transcripts.generate(spark, nConvs = 3000, turnsPerConv = 20).cache()
-    val outFull = Files.createTempDirectory("graft_10k_full").toString
-    val out = Files.createTempDirectory("graft_10k").toString
+    val outFull = tempDir("graft_10k_full").toString
+    val out = tempDir("graft_10k").toString
 
     val rf = TranscriptPipeline.runToSinks(spark, manyTurns, bigCfg, outFull)
     assert(rf.shardsBuilt > 9000, s"expected ~10k populated shards, got ${rf.shardsBuilt}")
@@ -342,7 +342,7 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession {
   }
 
   test("shard table persists and routes identically after reload") {
-    val dir = Files.createTempDirectory("shardtab").toString
+    val dir = tempDir("shardtab").toString
     val shards = TranscriptPipeline.buildShards(spark, turns, cfg)
     TranscriptPipeline.writeShardTable(shards, dir)
     val reloaded = TranscriptPipeline.readShardTable(spark, dir)

@@ -1,8 +1,7 @@
 package graft.sources
 
-import graft.SharedSparkSession
+import graft.{SharedSparkSession, TempDirs}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** MODEL-BASED random DML battery for the manifest table format: a SEEDED random
   * sequence of table operations runs against both the real table (through the
@@ -22,11 +21,11 @@ import java.nio.file.Files
   * already has its own gate; this battery is the regression net for the pairs
   * nobody thought to write.
   */
-class ManifestModelSpec extends AnyFunSuite with SharedSparkSession {
+class ManifestModelSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
   test("40-step seeded random DML sequence matches the reference model after every step") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_model").toString
+    val wh = tempDir("manifest_model").toString
     val tbl = s"$wh/ns/t"
     val cat = "graft_model_spec"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SharedSparkSession
+import graft.{SharedSparkSession, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
@@ -8,10 +8,10 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The DSv2 manifest metadata table and the snapshot-isolated data reader. */
-class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
+class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
   private def freshTable(): String = {
-    val out = Files.createTempDirectory("manifest_src").toString
+    val out = tempDir("manifest_src").toString
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("lang_p", col("lang"))
       .write.mode("overwrite").partitionBy("lang_p").parquet(out)
@@ -155,7 +155,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   }
 
   test("data table: timestamps and doubles round-trip (events-shaped schema)") {
-    val out = Files.createTempDirectory("manifest_src_ev").toString
+    val out = tempDir("manifest_src_ev").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .withColumn("et_p", col("event_type"))
       .write.mode("overwrite").partitionBy("et_p").parquet(out)
@@ -168,7 +168,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   }
 
   test("data table: array<float> (embeddings) round-trips through write + vectorized read") {
-    val out = Files.createTempDirectory("manifest_embed").toString
+    val out = tempDir("manifest_embed").toString
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .withColumn("label_p", col("label").cast("string"))
     emb.write.format(classOf[ManifestDataSource].getName)
@@ -194,7 +194,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("data table: arrays with nulls and empties survive the round-trip") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_arr_edge").toString
+    val out = tempDir("manifest_arr_edge").toString
     val rows = Seq(
       (1L, Some(Seq(1.0f, -2.5f, Float.NaN)), "a"),
       (2L, Some(Seq.empty[Float]), "a"),
@@ -225,7 +225,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("DSv2 write bootstrap: first write commits snapshot 0, appends commit 1, overwrite replaces") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_write").toString
+    val out = tempDir("manifest_write").toString
     val t0 = Seq((1L, "alpha", "en"), (2L, "beta", "fr")).toDF("id", "txt", "lang_p")
     t0.write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "lang_p").mode("append").save(out)
@@ -252,7 +252,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("DSv2 write interoperates with Spark partitionBy layout and survives hostile partition values") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_write_esc").toString
+    val out = tempDir("manifest_write_esc").toString
     Seq((1L, "v a:b"), (2L, "plain"), (3L, "v a:b")).toDF("id", "p")
       .write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("append").save(out)
@@ -270,7 +270,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("DSv2 write: append schema mismatch is rejected; uncommitted read fails loudly") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_write_schema").toString
+    val out = tempDir("manifest_write_schema").toString
     Seq((1L, "x", "en")).toDF("id", "txt", "lang_p")
       .write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "lang_p").mode("append").save(out)
@@ -285,7 +285,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       bad.getMessage.toLowerCase.contains("incompatible") ||
       bad.getMessage.toLowerCase.contains("cannot write"),
       s"unexpected error: ${bad.getMessage.take(300)}")
-    val fresh = Files.createTempDirectory("manifest_unwritten").toString
+    val fresh = tempDir("manifest_unwritten").toString
     val err = intercept[Exception] { dataTable(fresh).count() }
     assert(err.getMessage.contains("no committed snapshot") ||
       err.getMessage.contains("_manifests"))
@@ -293,7 +293,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("DSv2 write/read round-trip property: nulls, unicode, NaN/Inf, extreme values survive") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_fuzz").toString
+    val out = tempDir("manifest_fuzz").toString
     // adversarial rows: nulls in every nullable column, unicode + quotes in strings,
     // NaN/Inf doubles, Long extremes — partition values kept hostile but non-null
     val rows = Seq(
@@ -332,9 +332,9 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("streaming sink: exactly-once micro-batch commits into the manifest table") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val src = Files.createTempDirectory("manifest_stream_src").toString
-    val out = Files.createTempDirectory("manifest_stream_out").toString
-    val ckpt = Files.createTempDirectory("manifest_stream_ckpt").toString
+    val src = tempDir("manifest_stream_src").toString
+    val out = tempDir("manifest_stream_out").toString
+    val ckpt = tempDir("manifest_stream_ckpt").toString
     Seq((1L, "en"), (2L, "fr")).toDF("id", "p").write.mode("append").parquet(src)
     def runOnce(): Unit = {
       val stream = spark.readStream.schema("id BIGINT, p STRING").parquet(src)
@@ -375,7 +375,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   }
 
   test("snapshot publication is claim-once: a second committer on the same id must retry") {
-    val out = Files.createTempDirectory("manifest_claim").toString
+    val out = tempDir("manifest_claim").toString
     val e1 = Seq(ManifestTables.Entry("a.parquet", 10L, "en", 0))
     val e2 = Seq(ManifestTables.Entry("b.parquet", 20L, "fr", 0))
     assert(ManifestTables.tryWriteSnapshot(out, "p", e1, 0))
@@ -394,7 +394,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     // (no Spark jobs, so the measurement isolates commit cost): one segment per
     // append + a snapshot referencing previous segment names. Cost must NOT grow with
     // total file count — the round-3 path rewrote all previous entries every time.
-    val out = Files.createTempDirectory("manifest_layered").toString
+    val out = tempDir("manifest_layered").toString
     def appendOnce(i: Int): Double = {
       val entries = (0 until 100).map(j =>
         ManifestTables.Entry(f"p=a/part-$i%03d-$j%03d.parquet", 1000L + j, "a", 0))
@@ -463,7 +463,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("multi-column TYPED partitions: write, typed read-back, manifest pruning on both columns") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_multipart").toString
+    val out = tempDir("manifest_multipart").toString
     val rows = Seq(
       (1L, "a", "en", 2023, java.sql.Date.valueOf("2023-05-01")),
       (2L, "b", "en", 2024, java.sql.Date.valueOf("2024-06-02")),
@@ -506,7 +506,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("ShardIndexTable: fingerprint pruning drops whole shard FILES at the manifest") {
     val dir = "/root/testdata/sf0.001"
-    val tbl = Files.createTempDirectory("shard_index_tbl").toString
+    val tbl = tempDir("shard_index_tbl").toString
     val shards = graft.ops.ShardTableCache.docShards(spark, dir, numShards = 16)
     graft.sources.ShardIndexTable.publish(shards.toDF(), tbl)
     val totalFiles = graft.sources.ManifestTables.readLatest(tbl).size
@@ -547,7 +547,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     // fingerprint file pruning. The predicate stays residual, so answers are
     // oracle-exact regardless of pruning (q26b pins that); HERE we pin the I/O.
     val dir = "/root/testdata/sf0.001"
-    val wh = Files.createTempDirectory("fm_fn_catalog").toString
+    val wh = tempDir("fm_fn_catalog").toString
     val shards = graft.ops.ShardTableCache.docShards(spark, dir, numShards = 16)
     graft.sources.ShardIndexTable.publish(shards.toDF(), s"$wh/fm/shards")
     spark.conf.set("spark.sql.catalog.graft_fnc", classOf[ManifestCatalog].getName)
@@ -587,8 +587,8 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("storage-partitioned join: co-partitioned manifest tables join with NO shuffle") {
     import spark.implicits._
-    val dirA = Files.createTempDirectory("manifest_spj_a").toString
-    val dirB = Files.createTempDirectory("manifest_spj_b").toString
+    val dirA = tempDir("manifest_spj_a").toString
+    val dirB = tempDir("manifest_spj_b").toString
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .withColumn("lang_p", col("lang")).drop("lang")
       .write.format(classOf[ManifestDataSource].getName)
@@ -643,7 +643,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("expireSnapshots reclaims overwritten files; retained history and reads survive") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_expire").toString
+    val out = tempDir("manifest_expire").toString
     def write(mode: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("id", "p").write.format(classOf[ManifestDataSource].getName)
         .option("partcol", "p").mode(mode).save(out)
@@ -689,7 +689,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("expiry preserves streaming exactly-once: a replayed batch stays refused after its note's snapshot is gone") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_expire_stream").toString
+    val out = tempDir("manifest_expire_stream").toString
     val sinkId = "expire-sink"
     assert(ManifestStreamSink.commitBatch(Seq((1L, "a")).toDF("id", "p"), 0L, out, "p", sinkId))
     assert(ManifestStreamSink.commitBatch(Seq((2L, "a")).toDF("id", "p"), 1L, out, "p", sinkId))
@@ -711,7 +711,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("tableSchema walks the ACTUAL snapshot ids after expiry leaves gaps") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_expire_schema").toString
+    val out = tempDir("manifest_expire_schema").toString
     Seq((1L, "a")).toDF("id", "p").write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("append").save(out)         // snapshot 0
     Seq((2L, "a")).toDF("id", "p").write.format(classOf[ManifestDataSource].getName)
@@ -727,7 +727,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("removeOrphans reclaims stale unreferenced segment JSONs too") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_orphan_segs").toString
+    val out = tempDir("manifest_orphan_segs").toString
     Seq((1L, "a")).toDF("id", "p").write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("append").save(out)
     val referenced = ManifestTables.readSnapshotRefs(out, None).segments
@@ -751,7 +751,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("removeOrphans deletes only old unreferenced files") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_orphans").toString
+    val out = tempDir("manifest_orphans").toString
     Seq((1L, "a")).toDF("id", "p").write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("append").save(out)
     // an old orphan (aborted/crashed write): unreferenced + old mtime -> deleted
@@ -776,7 +776,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     // id — a competing noted publication landing between the two reads would be
     // missed and the batch published twice. The fixed order (pin id, then check note)
     // makes the CAS failure route every loser back through the note check.
-    val out = Files.createTempDirectory("manifest_race").toString
+    val out = tempDir("manifest_race").toString
     Seq((0L, "seed")).toDF("id", "p").write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("append").save(out)
     val batch = Seq((1L, "en"), (2L, "fr")).toDF("id", "p")
@@ -841,7 +841,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("aggregate pushdown: COUNT(col) from footer null counts — planted nulls, " +
       "pre-ADD files count 0, DISTINCT and partition columns stay plan-side") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_countcol").toString
+    val wh = tempDir("manifest_countcol").toString
     val tblDir = s"$wh/ns/t"
     // gen-1: nullable int + string columns with planted nulls
     Seq((1L, Some(10), Some("x"), "en"), (2L, Option.empty[Int], Option.empty[String], "en"),
@@ -909,7 +909,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     try {
     // dim must be a SOURCE-backed relation: a filter over a LocalRelation is
     // constant-folded away before PartitionPruning looks for a selective predicate
-    val dimDir = Files.createTempDirectory("manifest_dpp_dim").toString
+    val dimDir = tempDir("manifest_dpp_dim").toString
     Seq(("en", 1), ("zz", 2)).toDF("lang_key", "grp").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)
     val fact = dataTable(out)
@@ -954,7 +954,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     // lexicographically "snapshot-100000.json" < "snapshot-99999.json": a
     // name-sorted 'latest' would serve stale data and the append path would
     // silently drop the 100000th commit
-    val out = Files.createTempDirectory("manifest_bignum").toString
+    val out = tempDir("manifest_bignum").toString
     assert(ManifestTables.tryWriteSnapshot(out, "p",
       Seq(ManifestTables.Entry("old.parquet", 1L, "", 0)), 99999))
     assert(ManifestTables.tryWriteSnapshot(out, "p",
@@ -968,7 +968,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("writer rejects partition values containing the reserved separator") {
     import spark.implicits._
-    val out = Files.createTempDirectory("manifest_sep").toString
+    val out = tempDir("manifest_sep").toString
     val bad = Seq((1L, "a\u001fb", "x")).toDF("id", "p1", "p2")
     val err = intercept[Exception] {
       bad.write.format(classOf[ManifestDataSource].getName)
@@ -981,7 +981,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   }
 
   test("over-long commit notes are rejected at write time (head-probe contract)") {
-    val out = Files.createTempDirectory("manifest_note_len").toString
+    val out = tempDir("manifest_note_len").toString
     val e = Seq(ManifestTables.Entry("a.parquet", 1L, "", 0))
     val longNote = "n" * 300
     val err = intercept[IllegalArgumentException] {
@@ -996,7 +996,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("VERSION AS OF serves a legitimately EMPTY snapshot (empty overwrite)") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_wh_empty").toString
+    val wh = tempDir("manifest_wh_empty").toString
     val tblDir = s"$wh/ns/t"
     Seq((1L, "en")).toDF("id", "p").write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("append").save(tblDir)
@@ -1016,7 +1016,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("TableCatalog plugin: SQL by name, INSERT INTO commits a snapshot, VERSION AS OF time-travels") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_wh").toString
+    val wh = tempDir("manifest_wh").toString
     // create the table by WRITING (DSv2 bootstrap) at its catalog location
     val tblDir = s"$wh/corpus/docs"
     Seq((1L, "hello", "en"), (2L, "bonjour", "fr")).toDF("id", "txt", "lang_p")
@@ -1047,7 +1047,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("schema evolution: ADD COLUMN is metadata-only; old files null-fill; " +
       "time travel serves the historical schema") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_evolve").toString
+    val wh = tempDir("manifest_evolve").toString
     val tblDir = s"$wh/ns/t"
     Seq((1L, "a", "en"), (2L, "b", "fr")).toDF("id", "txt", "lang_p")
       .write.format(classOf[ManifestDataSource].getName)
@@ -1116,7 +1116,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("DELETE FROM: partition-predicate deletes are metadata-only snapshot edits; " +
       "untouched segments carry by name; time travel still serves pre-delete data") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_delete").toString
+    val wh = tempDir("manifest_delete").toString
     val tblDir = s"$wh/ns/t"
     def append(rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p")
@@ -1177,7 +1177,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("row-level operations: UPDATE/MERGE copy-on-write rewrites only files with " +
       "matches; _file provenance column; no-match ops publish nothing") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_rowlevel").toString
+    val wh = tempDir("manifest_rowlevel").toString
     val tblDir = s"$wh/ns/t"
     def append(rows: (Long, String, Long)*): Unit =
       rows.toSeq.toDF("id", "lang_p", "score").coalesce(1)
@@ -1245,7 +1245,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("merge-on-read DELETE: positional delta segment, no data file rewritten; " +
       "readers apply positions; copy-on-write and compaction compose; GC reclaims") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_mor").toString
+    val wh = tempDir("manifest_mor").toString
     val tblDir = s"$wh/ns/t"
     def append(rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p").coalesce(1)
@@ -1321,7 +1321,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("rewritePositionDeletes: segments fold to one, dangling positions drop, " +
       "metadata-only, idempotent; fully-dead segments already pruned by DELETE") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_rpd").toString
+    val wh = tempDir("manifest_rpd").toString
     val tblDir = s"$wh/ns/t"
     def append(rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p").coalesce(1)
@@ -1379,7 +1379,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("merge-on-read UPDATE: delete+insert delta — no touched file rewritten, " +
       "replacement rows append; partition moves work; compaction folds") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_moru").toString
+    val wh = tempDir("manifest_moru").toString
     val tblDir = s"$wh/ns/t"
     Seq((1L, 10L, "en"), (2L, 20L, "en"), (3L, 30L, "fr")).toDF("id", "score", "lang_p")
       .coalesce(1).write.format(classOf[ManifestDataSource].getName)
@@ -1417,7 +1417,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("per-file column stats: data-column predicates skip whole files by min/max; " +
       "compaction merges bounds; unknown/long/all-null columns never mis-prune") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_stats").toString
+    val wh = tempDir("manifest_stats").toString
     val tbl = s"$wh/t"
     // three files in ONE partition with disjoint id ranges, a short string tag,
     // and a score column that is all-null in the third file
@@ -1499,7 +1499,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("clusterBy: sort-order rewrite makes per-file ranges disjoint so range " +
       "queries skip; footer-derived stats; deletes fold; time travel intact") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_cluster").toString
+    val wh = tempDir("manifest_cluster").toString
     val tbl = s"$wh/t"
     // ingest order orthogonal to id: every append spans the WHOLE id range, so a
     // range predicate must open every file before clustering
@@ -1544,7 +1544,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("snapshot tags: VERSION AS OF a name; tags pin snapshots through expiry; " +
       "immutable; deleteTag releases") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_tags").toString
+    val wh = tempDir("manifest_tags").toString
     val tbl = s"$wh/ns/t"
     def write(mode: String, rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p").coalesce(1)
@@ -1586,7 +1586,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("data-file compaction: bin-packs small files per partition into one atomic " +
       "snapshot swap; schema-evolution-aware; no-op when nothing packs") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_compactdata").toString
+    val wh = tempDir("manifest_compactdata").toString
     val tblDir = s"$wh/ns/t"
     def append(rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p")
@@ -1639,7 +1639,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     assert(ManifestTables.hiveUnescape("no-escapes") == "no-escapes")
     // end-to-end: a partition VALUE containing a space (Hive-escaped on disk) is
     // served raw by the data table and filterable by its raw form
-    val out = Files.createTempDirectory("manifest_src_esc").toString
+    val out = tempDir("manifest_src_esc").toString
     spark.range(4).withColumn("p", concat(lit("v "), (col("id") % 2).cast("string")))
       .write.mode("overwrite").partitionBy("p").parquet(out)
     ManifestTables.commit(out, "p")
@@ -1659,7 +1659,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("incremental batch read: startSnapshot serves exactly the appended delta; " +
       "tags resolve; empty range is empty; overwrite in range refuses") {
-    val tbl = Files.createTempDirectory("manifest_inc").toString + "/t"
+    val tbl = tempDir("manifest_inc").toString + "/t"
     incAppend(tbl, 0, 5, "en")
     val base = ManifestTables.latestSnapshotId(tbl).get
     ManifestTables.createTag(tbl, "base", base)
@@ -1700,7 +1700,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   }
 
   test("incremental batch read: merge-on-read delete activity in range refuses") {
-    val tbl = Files.createTempDirectory("manifest_inc_mor").toString + "/t"
+    val tbl = tempDir("manifest_inc_mor").toString + "/t"
     incAppend(tbl, 0, 6, "en")
     val base = ManifestTables.latestSnapshotId(tbl).get
     incAppend(tbl, 6, 9, "en")
@@ -1722,7 +1722,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("changelog read: net insert/delete rows reconstruct the end snapshot; " +
       "insert-then-delete-in-range nets out; rewrites refuse; pruning composes") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_cdc").toString
+    val wh = tempDir("manifest_cdc").toString
     val tbl = s"$wh/ns/t"
     def append(rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p").coalesce(1)
@@ -1792,7 +1792,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       "streamSkipRewrites recovers a stream wedged on a rewrite") {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_stream_skip")
+    val root = tempDir("manifest_stream_skip")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     def append(rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p").coalesce(1)
@@ -1839,7 +1839,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       "rows exactly once across restarts; a MOR UPDATE emits its delete/insert pair") {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_cdc_stream")
+    val root = tempDir("manifest_cdc_stream")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     def append(rows: (Long, Long, String)*): Unit =
       rows.toSeq.toDF("id", "v", "lang_p").coalesce(1)
@@ -1900,7 +1900,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       "baseline; later delete growth and appends still arrive as events") {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_cdc_skip")
+    val root = tempDir("manifest_cdc_skip")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     def write(mode: String, rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p").coalesce(1)
@@ -1947,7 +1947,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       "rewrites — a delete targeting a rewritten copy cannot retract the original insert") {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_cdc_skipnet")
+    val root = tempDir("manifest_cdc_skipnet")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     def write(mode: String, rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p").coalesce(1)
@@ -1990,7 +1990,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("TIMESTAMP AS OF: commit timestamps resolve SQL + option reads; before-first " +
       "refuses; both pins at once refuse; legacy snapshots fall back to file mtime") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_ts")
+    val root = tempDir("manifest_ts")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     def write(mode: String, rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "lang_p").coalesce(1)
@@ -2039,7 +2039,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     val e4 = intercept[Exception] { idsAt("startTimestamp" -> tMid.toString) }
     assert(e4.getMessage != null && e4.getMessage.contains("ambiguous"), e4.getMessage)
     // legacy snapshot with no ts field resolves via file mtime
-    val legacy = Files.createTempDirectory("manifest_ts_legacy")
+    val legacy = tempDir("manifest_ts_legacy")
     val mdir = legacy.resolve("_manifests"); Files.createDirectories(mdir)
     Files.writeString(mdir.resolve("snapshot-00000.json"),
       """{"snapshot": 0, "partition_column": "p", "files": []}""")
@@ -2051,7 +2051,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("changelog SYNC: applying a changelog range to a replica (DELETE + INSERT) " +
       "reproduces the source table exactly — the derived-corpus propagation primitive") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_cdc_sync")
+    val root = tempDir("manifest_cdc_sync")
     val wh = s"$root/wh"
     def write(tblPath: String, mode: String, rows: (Long, Long, String)*): Unit =
       rows.toSeq.toDF("id", "v", "lang_p").coalesce(1)
@@ -2099,7 +2099,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("streaming source: AvailableNow drains appends incrementally across restarts, " +
       "each file exactly once; time-travel relations refuse to stream") {
     import org.apache.spark.sql.streaming.Trigger
-    val root = Files.createTempDirectory("manifest_stream_src")
+    val root = tempDir("manifest_stream_src")
     val tbl = s"$root/t"
     val ckpt = s"$root/ckpt"
     val sink = s"$root/sink"
@@ -2152,7 +2152,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("equality-delete upsert: O(keys) commit, last-writer-wins read, pushdown refusal, compaction folds") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_eqdel").toString
+    val tbl = tempDir("manifest_eqdel").toString
     def write(df: org.apache.spark.sql.DataFrame, mode: String, upsert: Boolean): Unit = {
       val w = df.write.format(classOf[ManifestDataSource].getName)
         .option("partcol", "lang_p").mode(mode)
@@ -2211,7 +2211,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("rename/drop evolution: field-id resolution across files, history ban, time travel, compaction composes") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_rename").toString
+    val wh = tempDir("manifest_rename").toString
     val cat = "graft_ren_" + wh.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -2254,7 +2254,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("type widening: int->bigint/float->double straddle, footer aggs, refusals, eq-delete guard") {
     import spark.implicits._
     import org.apache.spark.sql.types.{DoubleType, LongType}
-    val wh = Files.createTempDirectory("manifest_widen").toString
+    val wh = tempDir("manifest_widen").toString
     val cat = "graft_wide_" + wh.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -2309,7 +2309,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   }
 
   test("CREATE TABLE / CTAS / DROP TABLE through the catalog") {
-    val wh = Files.createTempDirectory("manifest_create").toString
+    val wh = tempDir("manifest_create").toString
     val cat = "graft_ct_" + wh.replaceAll("[^A-Za-z0-9]", "").takeRight(8)
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -2331,7 +2331,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("expired-notes sidecar: non-stream commit-note dedup survives snapshot expiry") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_notes").toString
+    val tbl = tempDir("manifest_notes").toString
     def noted(ids: Range, note: String): Unit =
       ids.map(i => (i.toLong, "x")).toDF("id", "p")
         .write.format(classOf[ManifestDataSource].getName)
@@ -2354,7 +2354,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     // fingerprint PER ENTRY of the scan's own pinned snapshot.
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val wh = Files.createTempDirectory("fm_pinned").toString
+    val wh = tempDir("fm_pinned").toString
     val tbl = s"$wh/fm/shards"
     val shards = graft.ops.ShardTableCache.docShards(spark, dir, numShards = 8)
     ShardIndexTable.publish(shards.toDF(), tbl)
@@ -2401,7 +2401,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     // NaN-is-greatest ordering a pushed MIN would return NaN instead of the true
     // minimum. The refusal keeps the aggregate plan-side and therefore exact.
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_nan").toString
+    val tbl = tempDir("manifest_nan").toString
     Seq((1L, 2.5, "a"), (2L, Double.NaN, "a"), (3L, -7.5, "b"))
       .toDF("id", "x", "p")
       .write.format(classOf[ManifestDataSource].getName)
@@ -2432,7 +2432,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("hidden partitioning: days(ts) + bucket(n,user_id) route files, stay out of " +
       "the schema, and round-trip every row") {
-    val tbl = Files.createTempDirectory("manifest_hidden").toString
+    val tbl = tempDir("manifest_hidden").toString
     hiddenEventsDf.write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "days(ts),bucket(4,user_id)").mode("overwrite").save(tbl)
     val df = dataTable(tbl)
@@ -2456,7 +2456,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("hidden partitioning: bucket equality and day ranges prune whole FILES; " +
       "answers stay exact (residual predicate re-checks rows)") {
-    val tbl = Files.createTempDirectory("manifest_hidden_prune").toString
+    val tbl = tempDir("manifest_hidden_prune").toString
     hiddenEventsDf.write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "days(ts),bucket(4,user_id)").mode("overwrite").save(tbl)
     val total = inputPartitionCount(dataTable(tbl).select("msg"))
@@ -2486,7 +2486,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("hidden partitioning: truncate(w,col) prunes by prefix bucket; values with " +
       "shared prefixes stay exact") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_hidden_trunc").toString
+    val tbl = tempDir("manifest_hidden_trunc").toString
     val df = Seq(("alpha", 1L), ("alps", 2L), ("beta", 3L), ("bet", 4L), ("gamma", 5L))
       .toDF("word", "n")
     df.write.format(classOf[ManifestDataSource].getName)
@@ -2501,7 +2501,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("hidden partitioning: copy-on-write UPDATE re-derives transform routing for " +
       "rewritten rows; reads stay exact") {
-    val wh = Files.createTempDirectory("manifest_hidden_dml").toString
+    val wh = tempDir("manifest_hidden_dml").toString
     val tbl = s"$wh/ns/ev"
     hiddenEventsDf.write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "days(ts),bucket(4,user_id)").mode("overwrite").save(tbl)
@@ -2523,7 +2523,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("hidden partitioning: CREATE TABLE PARTITIONED BY (days(ts), bucket(n, id)) " +
       "+ INSERT INTO prune like the option path; ALTER protects transform sources") {
-    val wh = Files.createTempDirectory("manifest_hidden_cat").toString
+    val wh = tempDir("manifest_hidden_cat").toString
     spark.conf.set("spark.sql.catalog.hidcat", classOf[ManifestCatalog].getName)
     spark.conf.set("spark.sql.catalog.hidcat.warehouse", wh)
     try {
@@ -2554,7 +2554,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   }
 
   test("hidden partitioning: an append asking a DIFFERENT partition spec is rejected") {
-    val tbl = Files.createTempDirectory("manifest_hidden_spec").toString
+    val tbl = tempDir("manifest_hidden_spec").toString
     hiddenEventsDf.write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "days(ts),bucket(4,user_id)").mode("overwrite").save(tbl)
     val e = intercept[Exception] {
@@ -2574,11 +2574,11 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("n_chars"), col("lang").as("lang_p"))
       .repartition(8)
-    val tblA = Files.createTempDirectory("manifest_dist_a").toString
+    val tblA = tempDir("manifest_dist_a").toString
     docs.write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "lang_p").mode("overwrite").save(tblA)
     val defaultFiles = ManifestTables.readLatest(tblA).size
-    val tblB = Files.createTempDirectory("manifest_dist_b").toString
+    val tblB = tempDir("manifest_dist_b").toString
     docs.write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "lang_p").option("distribute", "true")
       .mode("overwrite").save(tblB)
@@ -2597,7 +2597,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       "predicates skip files with no clustering rewrite; answers identical") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("n_chars"), col("lang").as("lang_p"))
-    val tblA = Files.createTempDirectory("manifest_sort_a").toString
+    val tblA = tempDir("manifest_sort_a").toString
     docs.repartition(6) // round-robin: every file spans the whole doc_id range
       .write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "lang_p").mode("overwrite").save(tblA)
@@ -2606,7 +2606,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     s2.conf.set("spark.sql.shuffle.partitions", "6")
-    val tblB = Files.createTempDirectory("manifest_sort_b").toString
+    val tblB = tempDir("manifest_sort_b").toString
     s2.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("n_chars"), col("lang").as("lang_p"))
       .write.format(classOf[ManifestDataSource].getName)
@@ -2626,14 +2626,14 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     val bad = intercept[Exception] {
       docs.write.format(classOf[ManifestDataSource].getName)
         .option("sortorder", "nope").mode("overwrite")
-        .save(Files.createTempDirectory("manifest_sort_c").toString)
+        .save(tempDir("manifest_sort_c").toString)
     }
     assert(bad.getMessage.contains("sortorder"))
   }
 
   test("clustered-distribution write: hidden transforms shuffle through the " +
       "catalog's bucket/days functions — one file per (day, bucket) tuple") {
-    val wh = Files.createTempDirectory("manifest_dist_hidden").toString
+    val wh = tempDir("manifest_dist_hidden").toString
     spark.conf.set("spark.sql.catalog.distcat", classOf[ManifestCatalog].getName)
     spark.conf.set("spark.sql.catalog.distcat.warehouse", wh)
     try {
@@ -2664,7 +2664,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("compaction composes with hidden partitioning: bin-packed files keep their " +
       "(day,bucket) routing; transform pruning and answers survive") {
-    val tbl = Files.createTempDirectory("manifest_hidden_compact").toString
+    val tbl = tempDir("manifest_hidden_compact").toString
     // three appends of the same tuples -> >= 3 small files per (day, bucket)
     (0 until 3).foreach { r =>
       hiddenEventsDf.filter(col("user_id") % 3 === r).coalesce(1)
@@ -2692,7 +2692,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("SHOW TBLPROPERTIES surfaces format, snapshot id and the partition spec " +
       "in the partcol grammar") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_props").toString
+    val wh = tempDir("manifest_props").toString
     Seq((1L, java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(86400L)), "a"))
       .toDF("id", "ts", "p")
       .write.format(classOf[ManifestDataSource].getName)
@@ -2714,7 +2714,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("a mid-stream partition-spec redefinition refuses the crossing micro-batch " +
       "(a long-running stream must not parse the new layout under its stale spec)") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_stream_respec").toString
+    val tbl = tempDir("manifest_stream_respec").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "p")
       .write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("overwrite").save(tbl)
@@ -2733,7 +2733,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("mergeSchema append: new columns become metadata-only ADDs inside the " +
       "same commit; old rows null-fill; the widened schema then binds appends") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_mergeschema").toString
+    val tbl = tempDir("manifest_mergeschema").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "p")
       .write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("append").save(tbl)
@@ -2760,7 +2760,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       .write.format(classOf[ManifestDataSource].getName).mode("append").save(tbl)
     assert(dataTable(tbl).filter(col("id") === 4L).select("extra").head().isNullAt(0))
     // ...and the merged column got a registry id: it renames like any ALTER ADD
-    val wh = Files.createTempDirectory("manifest_mergeschema_wh").toString
+    val wh = tempDir("manifest_mergeschema_wh").toString
     val t2 = s"$wh/ns/t"
     Seq((1L, "a")).toDF("id", "p").write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("append").save(t2)
@@ -2783,7 +2783,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("overwrite may REDEFINE the partition spec; time travel reads each " +
       "snapshot under its own layout; appends still pin to the recorded spec") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_respec").toString
+    val tbl = tempDir("manifest_respec").toString
     Seq((1L, "en", 10L), (2L, "fr", 20L)).toDF("id", "lang_p", "score")
       .write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "lang_p").mode("overwrite").save(tbl)
@@ -2811,7 +2811,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("metadata DELETE folds positional-delete segments left dangling by the " +
       "removed files; bootstrap/overwrite upserts publish no spent eq segment") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_fold_dangling").toString
+    val wh = tempDir("manifest_fold_dangling").toString
     val tbl = s"$wh/ns/t"
     Seq((1L, "a"), (2L, "a")).toDF("id", "p").coalesce(1)
       .write.format(classOf[ManifestDataSource].getName)
@@ -2859,7 +2859,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("RENAME/DROP of a column the registry never tracked (unsafe name) refuses " +
       "instead of orphaning its data") {
-    val wh = Files.createTempDirectory("manifest_untracked").toString
+    val wh = tempDir("manifest_untracked").toString
     spark.conf.set("spark.sql.catalog.regcat", classOf[ManifestCatalog].getName)
     spark.conf.set("spark.sql.catalog.regcat.warehouse", wh)
     try {
@@ -2882,7 +2882,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("zorderBy survives astronomic column ranges: ranks stay spread (no integer " +
       "wrap) and range predicates still skip files") {
-    val tbl = Files.createTempDirectory("manifest_zorder_wide").toString
+    val tbl = tempDir("manifest_zorder_wide").toString
     // ids span ~9.2e17 — (v - mn) * 65535 would wrap a long and clamp every rank
     // to the SAME value, silently destroying the layout
     val df = spark.range(512).select(
@@ -2914,7 +2914,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("metadata tables by name: cat.ns.t.files / .snapshots / .tags serve the " +
       "table's inspection surface in plain SQL") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_meta_tbl").toString
+    val wh = tempDir("manifest_meta_tbl").toString
     val tbl = s"$wh/ns/t"
     def append(rows: (Long, String)*): Unit =
       rows.toSeq.toDF("id", "p").coalesce(1)
@@ -2965,7 +2965,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test(".manifests metadata table: layered manifest segments by content (data, " +
       "position-deletes, equality-deletes) plus the inline head row") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_manifests_meta").toString
+    val wh = tempDir("manifest_manifests_meta").toString
     val tbl = s"$wh/ns/t"
     def write(rows: Seq[(Long, Long, String)], mode: String,
         opts: Map[String, String] = Map.empty): Unit = {
@@ -3016,7 +3016,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       "current default fills omitted INSERT columns, pushed aggregates stay exact, " +
       "equality deletes key on the default") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_defaults").toString
+    val wh = tempDir("manifest_defaults").toString
     val tbl = s"$wh/ns/t"
     spark.conf.set("spark.sql.catalog.defcat", classOf[ManifestCatalog].getName)
     spark.conf.set("spark.sql.catalog.defcat.warehouse", wh)
@@ -3077,7 +3077,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("bucket SPJ: two bucket(4,user_id)-partitioned catalog tables join on the " +
       "SOURCE key with NO shuffle (storage-partitioned join through the transform)") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_spj_bucket").toString
+    val wh = tempDir("manifest_spj_bucket").toString
     spark.conf.set("spark.sql.catalog.spjcat", classOf[ManifestCatalog].getName)
     spark.conf.set("spark.sql.catalog.spjcat.warehouse", wh)
     val prev = (spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled"),
@@ -3131,14 +3131,14 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("hidden partitioning: DPP — a join's runtime filter on the bucket SOURCE " +
       "prunes manifest files at execution") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_hidden_dpp").toString
+    val tbl = tempDir("manifest_hidden_dpp").toString
     hiddenEventsDf.write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "bucket(4,user_id)").mode("overwrite").save(tbl)
     val total = ManifestTables.readLatest(tbl).size
     assert(total >= 3, s"need several bucket files for the probe, got $total")
     // same staging as the identity-DPP test: source-backed selective dim, fact must
     // not broadcast (a broadcast fact has no scan exchange to prune)
-    val dimDir = Files.createTempDirectory("manifest_hidden_dpp_dim").toString
+    val dimDir = tempDir("manifest_hidden_dpp_dim").toString
     Seq((7L, 1), (900L, 2)).toDF("uid", "grp").write.mode("overwrite").parquet(dimDir)
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
@@ -3177,7 +3177,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("rollbackTo publishes a new head with the target's state; history, spec, " +
       "and the reverse roll all survive") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_rollback").toString
+    val tbl = tempDir("manifest_rollback").toString
     Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("id", "v", "p")
       .write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "p").mode("overwrite").save(tbl)               // snapshot 0
@@ -3206,7 +3206,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("cherrypick re-applies an append delta after a rollback; non-appends, " +
       "double applies, and spec drift refuse") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_cherrypick").toString
+    val tbl = tempDir("manifest_cherrypick").toString
     def write(rows: Seq[(Long, String)], mode: String, partcol: String = "p"): Unit =
       rows.toDF("id", "p").write.format(classOf[ManifestDataSource].getName)
         .option("partcol", partcol).mode(mode).save(tbl)
@@ -3235,7 +3235,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       .getMessage.contains("spec"))
     // an identity-column RENAME keeps the same type token — the spec check must
     // still refuse (the old files' values would re-route to the wrong column)
-    val tbl2 = Files.createTempDirectory("manifest_cherrypick2").toString
+    val tbl2 = tempDir("manifest_cherrypick2").toString
     def w2(rows: Seq[(Long, String, String)], mode: String, pc: String): Unit =
       rows.toDF("id", "p", "q").write.format(classOf[ManifestDataSource].getName)
         .option("partcol", pc).mode(mode).save(tbl2)
@@ -3250,7 +3250,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("CALL cat.system.* procedures: rollback, expire, compact, rewrite, orphans " +
       "run through plain SQL and return their outcome rows") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_proc").toString
+    val wh = tempDir("manifest_proc").toString
     val cat = "graft_proc_spec"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -3327,7 +3327,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("partition-scoped rewrite_data_files, CALL rewrite_position_deletes, and " +
       "age-based expire_snapshots(older_than) through SQL") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_proc2").toString
+    val wh = tempDir("manifest_proc2").toString
     val cat = "graft_proc2_spec"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -3378,7 +3378,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("write-audit-publish: staged appends stay invisible, audit reads parent+delta, " +
       "publish re-applies onto an advanced head, discard leaves orphans for GC") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_wap").toString
+    val tbl = tempDir("manifest_wap").toString
     def write(rows: Seq[(Long, Long, String)], mode: String,
         wap: Option[String] = None): Unit = {
       val w = rows.toDF("id", "v", "lang_p")
@@ -3479,7 +3479,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("write-audit-publish: spec drift while staged refuses at publish; " +
       "CALL publish_wap/discard_wap drive the flow from SQL") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("manifest_wap_sql").toString
+    val wh = tempDir("manifest_wap_sql").toString
     val cat = "graft_wap_spec"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -3512,7 +3512,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("branches: isolated appends, fork-carried eq-deletes skip branch rows, " +
       "fast-forward republishes with restamped sequences, GC protects the chain") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_branch").toString
+    val tbl = tempDir("manifest_branch").toString
     def write(rows: Seq[(Long, Long, String)], mode: String,
         branch: Option[String] = None, upsert: Boolean = false): Unit = {
       var w = rows.toDF("id", "v", "lang_p")
@@ -3614,7 +3614,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     def msgChain(e: Throwable): Seq[String] =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(6)
         .flatMap(t => Option(t.getMessage)).toSeq
-    val wh = Files.createTempDirectory("manifest_branch_sql").toString
+    val wh = tempDir("manifest_branch_sql").toString
     val cat = "graft_branch_sql"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -3703,7 +3703,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     def msgChain(e: Throwable): Seq[String] =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(6)
         .flatMap(t => Option(t.getMessage)).toSeq
-    val wh = Files.createTempDirectory("manifest_branch_evo").toString
+    val wh = tempDir("manifest_branch_evo").toString
     val cat = "graft_branch_evo"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -3742,7 +3742,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("streaming admission control: maxFilesPerTrigger splits pure-append spans at " +
       "file granularity, offsets resume mid-span, the union is exact") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_ratelimit")
+    val root = tempDir("manifest_ratelimit")
     val tbl = s"$root/t"
     // one file per distinct partition value (single writer task): deterministic
     // fresh-file counts per commit, one row per file
@@ -3789,7 +3789,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("streaming admission control: non-append spans are consumed atomically — a " +
       "merge-on-read delete commit is never split even when the budget is larger") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_ratelimit_mor")
+    val root = tempDir("manifest_ratelimit_mor")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     def append(rows: Seq[(Long, String)]): Unit =
       rows.toDF("id", "lang_p").coalesce(1)
@@ -3829,7 +3829,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.{Dataset, Row}
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_ratelimit_e2e")
+    val root = tempDir("manifest_ratelimit_e2e")
     val tbl = s"$root/t"
     def append(mode: String, ids: Long*): Unit =
       ids.map(i => (i, s"p$i")).toDF("id", "p").coalesce(1)
@@ -3868,7 +3868,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       "manifest's exact row counts; rows-unknown entries exhaust the budget; " +
       "maxBytesPerTrigger composes; oversized first files still flow (soft limits)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_ratelimit_rows")
+    val root = tempDir("manifest_ratelimit_rows")
     val tbl = s"$root/t"
     // one file per commit; file k carries k+1 rows (1, 2, 3, 4 rows)
     def append(rows: Seq[Long]): Unit =
@@ -3959,7 +3959,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("row-group skipping: residual comparisons prune parquet row groups via footer " +
       "stats inside one file — the scan emits a fraction of the rows, answers exact") {
-    val root = Files.createTempDirectory("manifest_rowgroup")
+    val root = tempDir("manifest_rowgroup")
     val tbl = s"$root/t"
     val n = 50000
     // one task, sorted ids, small row groups: each group owns a narrow id range
@@ -3988,7 +3988,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("bloom-filter row-group skipping: .option(bloomfilters) writes per-row-group " +
       "blooms; equality on an unsorted high-cardinality key skips groups stats cannot") {
-    val root = Files.createTempDirectory("manifest_bloom")
+    val root = tempDir("manifest_bloom")
     // 64-char high-entropy strings defeat dictionary encoding (the dictionary
     // page overflows to plain), and interleaved writes give every row group the
     // same [min,max] span — so neither stats nor dictionary can skip: only the
@@ -4042,7 +4042,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("metadata aggregates: COUNT/MIN/MAX pre-merge from manifest row counts and V2 " +
       "stats — zero footers opened, grouped and global, int finalization included") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_metaagg")
+    val root = tempDir("manifest_metaagg")
     val tbl = s"$root/t"
     def append(rows: Seq[(Long, java.lang.Long, Int, String)]): Unit =
       rows.toDF("id", "q", "iv", "lang_p").coalesce(1)
@@ -4085,7 +4085,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("metadata aggregates: entries without recorded row counts fall back to footers " +
       "PER FILE; the mixed merge stays exact") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_metaagg_mixed")
+    val root = tempDir("manifest_metaagg_mixed")
     val tbl = s"$root/t"
     def append(rows: Seq[(Long, String)]): Unit =
       rows.toDF("id", "lang_p").coalesce(1)
@@ -4116,7 +4116,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("metadata aggregates stay EXACT through merge-on-read delete + compaction: the " +
       "compacted entry's stats re-derive from ITS footer, never merged input bounds") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_metaagg_compact")
+    val root = tempDir("manifest_metaagg_compact")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     def append(rows: Seq[(Long, String)]): Unit =
       rows.toDF("id", "lang_p").coalesce(1)
@@ -4160,7 +4160,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       expr("timestamp_seconds(86400 * 31 * cast(id % 3 as bigint) + " +
         "3600 * cast(id % 10 as bigint))").as("ts"),
       col("id").as("n"))
-    val t1 = Files.createTempDirectory("manifest_hours").toString
+    val t1 = tempDir("manifest_hours").toString
     df.coalesce(1).write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "hours(ts)").mode("overwrite").save(t1)
     assert(dataTable(t1).schema.fieldNames.toSet == Set("ts", "n"))
@@ -4173,7 +4173,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     assert(planned == 25, s"hour-range pruning expected 25 of $total, got $planned")
     assert(q.count() == df.filter(col("ts") >= lit(cut)).count())
     // months through SQL CREATE TABLE PARTITIONED BY + catalog function routing
-    val wh = Files.createTempDirectory("manifest_months").toString
+    val wh = tempDir("manifest_months").toString
     spark.conf.set("spark.sql.catalog.hmcat", classOf[ManifestCatalog].getName)
     spark.conf.set("spark.sql.catalog.hmcat.warehouse", wh)
     try {
@@ -4216,7 +4216,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
     val ydf = spark.range(60).select(
       expr("timestamp_seconds(86400 * 365 * cast(id % 3 as bigint) + " +
         "3600 * cast(id as bigint))").as("ts"), col("id").as("n"))
-    val t2 = Files.createTempDirectory("manifest_years").toString
+    val t2 = tempDir("manifest_years").toString
     ydf.coalesce(1).write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "years(ts)").mode("overwrite").save(t2)
     assert(ManifestTables.readLatest(t2).map(_.partition).toSet == Set("0", "1", "2"))
@@ -4231,7 +4231,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("partition evolution: ADD PARTITION FIELD bucket(4,user_id) — old files " +
       "stay readable and un-prunable by the new field, new files prune, answers exact") {
-    val tbl = Files.createTempDirectory("manifest_evolve_add").toString
+    val tbl = tempDir("manifest_evolve_add").toString
     // generations split by row id, NOT by user_id: both halves carry every
     // user_id, so footer-stats pruning can never remove a whole generation and
     // the test isolates the per-spec bucket-pruning behavior
@@ -4287,7 +4287,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("partition evolution: an UNPARTITIONED table gains days(ts); old files are " +
       "never pruned, new files prune; DROP PARTITION FIELD returns to unpartitioned") {
-    val tbl = Files.createTempDirectory("manifest_evolve_unpart").toString
+    val tbl = tempDir("manifest_evolve_unpart").toString
     val gen1 = hiddenEventsDf.limit(200)
     gen1.coalesce(2).write.format(classOf[ManifestDataSource].getName)
       .mode("overwrite").save(tbl)
@@ -4341,7 +4341,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   }
 
   test("partition evolution: identity fields, duplicates, and unknown sources refuse") {
-    val tbl = Files.createTempDirectory("manifest_evolve_refuse").toString
+    val tbl = tempDir("manifest_evolve_refuse").toString
     hiddenEventsDf.withColumn("lang_p", lit("en"))
       .write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "lang_p,days(ts)").mode("overwrite").save(tbl)
@@ -4371,7 +4371,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("partition evolution: compaction on a spec-straddled table stays " +
       "spec-homogeneous per bin; answers and pruning survive") {
-    val tbl = Files.createTempDirectory("manifest_evolve_compact").toString
+    val tbl = tempDir("manifest_evolve_compact").toString
     val gen1 = hiddenEventsDf.filter(col("user_id") < 20L)
     val gen2 = hiddenEventsDf.filter(col("user_id") >= 20L)
     gen1.repartition(4).write.format(classOf[ManifestDataSource].getName)
@@ -4400,7 +4400,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
       "without restart; rows cross exactly once") {
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_evolve_stream")
+    val root = tempDir("manifest_evolve_stream")
     val tbl = s"$root/t"
     def append(rows: (Long, String)*): Unit =
       rows.toSeq.toDF("user_id", "msg").coalesce(1)
@@ -4423,7 +4423,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
 
   test("partition evolution: the .specs metadata table lists the registry with " +
       "the default flagged; a never-evolved table shows its one spec as id 0") {
-    val root = Files.createTempDirectory("manifest_specs_meta")
+    val root = tempDir("manifest_specs_meta")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     hiddenEventsDf.coalesce(1).write.format(classOf[ManifestDataSource].getName)
       .option("partcol", "days(ts)").mode("overwrite").save(tbl)
@@ -4449,7 +4449,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("partition evolution: copy-on-write row-level DML on a spec-straddled table " +
       "rewrites matched files under the current spec; answers stay exact") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_evolve_cow")
+    val root = tempDir("manifest_evolve_cow")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     Seq((1L, 10L, "a"), (2L, 20L, "b"), (3L, 30L, "a"), (4L, 40L, "b"))
       .toDF("id", "v", "p").coalesce(1)
@@ -4478,7 +4478,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("partition evolution: a WAP write staged BEFORE a respec still publishes " +
       "(delta stamped with its own spec id); cherry-pick composes the same way") {
     import spark.implicits._
-    val root = Files.createTempDirectory("manifest_evolve_wap")
+    val root = tempDir("manifest_evolve_wap")
     val wh = s"$root/wh"; val tbl = s"$wh/ns/t"
     def write(rows: Seq[(Long, Long, String)], mode: String,
         wap: Option[String] = None): Unit = {
@@ -4516,7 +4516,7 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession {
   test("partition evolution: equality-delete upsert ordering survives a respec " +
       "(post-respec upsert erases pre-respec rows by key)") {
     import spark.implicits._
-    val tbl = Files.createTempDirectory("manifest_evolve_eqd").toString
+    val tbl = tempDir("manifest_evolve_eqd").toString
     Seq((1L, "old1"), (2L, "old2"), (3L, "old3")).toDF("id", "v").coalesce(1)
       .write.format(classOf[ManifestDataSource].getName).mode("overwrite").save(tbl)
     ManifestMaintenance.addPartitionField(tbl, "bucket(2,id)")

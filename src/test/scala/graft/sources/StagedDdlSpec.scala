@@ -1,21 +1,20 @@
 package graft.sources
 
-import graft.SharedSparkSession
+import graft.{SharedSparkSession, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** SQL TRUNCATE TABLE (TruncatableTable) and the StagingTableCatalog surface:
   * atomic CTAS / RTAS / CREATE OR REPLACE TABLE with Iceberg REPLACE semantics
   * (a new snapshot on the same history, never drop+create).
   */
-class StagedDdlSpec extends AnyFunSuite with SharedSparkSession {
+class StagedDdlSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
   private var n = 0
   /** A fresh warehouse + catalog per test (catalog conf is sticky per name). */
   private def freshCatalog(): (String, String) = synchronized {
     n += 1
-    val wh = Files.createTempDirectory("staged_ddl").toString
+    val wh = tempDir("staged_ddl").toString
     val cat = s"stagedddl$n"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[ManifestCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
