@@ -414,18 +414,18 @@ object FmIndex {
     val sa = SuffixArrays.saIs(seq, sigma)
 
     // row i samples suffix sa(i) when sampleRate divides it; power-of-two rates (the
-    // pipeline's 16 among them) test and divide by mask and shift
+    // pipeline's 16 among them) test and divide by mask and shift. Row i of the BWT
+    // needs only sa(i), so the BWT overwrites the suffix array in place.
     val sampledSuffix = new Array[Int](n / sampleRate + 1)
     val sampledRow = if (enableExtract) new Array[Int](n / sampleRate + 2) else null
     val marks = new Array[Long](((n + 63) >>> 6) max 1)
-    val bwt = new Array[Int](n)
     val shift = if (Integer.bitCount(sampleRate) == 1) Integer.numberOfTrailingZeros(sampleRate) else -1
     val mask = sampleRate - 1
     var si = 0
     i = 0
     while (i < n) {
       val p = sa(i)
-      bwt(i) = if (p == 0) 0 else seq(p - 1) // seq(n - 1) is the sentinel 0
+      sa(i) = if (p == 0) 0 else seq(p - 1) // seq(n - 1) is the sentinel 0
       if (if (shift >= 0) (p & mask) == 0 else p % sampleRate == 0) {
         sampledSuffix(si) = p
         si += 1
@@ -445,7 +445,7 @@ object FmIndex {
     val sampled = BitSeqSerde.maybeCompress(RankBitVector.fromWords(n, marks), compress)
 
     // Huffman-shaped wavelet: frequent BWT symbols descend ~entropy levels, not log(sigma)
-    val wavelet = HuffmanWaveletTree(bwt, sigma, compress)
+    val wavelet = HuffmanWaveletTree(sa, sigma, compress) // sa holds the BWT
 
     new FmIndex(sampleRate, enableExtract, n, map, lookUp, cumulative, bitWidth,
       suffixes, positions, sampled, wavelet)

@@ -20,10 +20,11 @@ final class IntVector(val length: Int, val width: Int, val data: Array[Long]) {
     val off = pos.toLong * width
     val w = (off >>> 6).toInt
     val shift = (off & 63).toInt
-    val v = value & mask
-    data(w) = (data(w) & ~(mask << shift)) | (v << shift)
+    data(w) = (data(w) & ~(mask << shift)) | ((value & mask) << shift)
     val spill = shift + width - 64
-    if (spill > 0) data(w + 1) = (data(w + 1) & (-1L << spill)) | (v >>> (64 - shift))
+    if (spill > 0) {
+      data(w + 1) = (data(w + 1) & ~Bits.lowMask(spill)) | ((value & mask) >>> (width - spill))
+    }
   }
 
   def getValue(pos: Int): Long = {

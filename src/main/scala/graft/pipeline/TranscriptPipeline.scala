@@ -468,8 +468,9 @@ object TranscriptPipeline {
     // too large and re-encode the column plain. A turn's `ts` is distinct within a
     // sink file, so its kept INT96 dictionary was larger than the plain values and
     // slower to write. Rows are unchanged; file bytes are not.
+    val plain = Seq("text", "ts").map(c => s"parquet.enable.dictionary#$c" -> "false")
     try enriched.coalesce(spark.sparkContext.defaultParallelism)
-      .write.options(directCommit ++ Seq("text", "ts").map(c => s"parquet.enable.dictionary#$c" -> "false"))
+      .write.options(directCommit ++ plain)
       .mode("append").partitionBy("sink", "attempt").parquet(s"$outDir/sinks")
     finally prevWriters match {
       case Some(v) => spark.conf.set(writersKey, v)
