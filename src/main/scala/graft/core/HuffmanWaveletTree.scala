@@ -135,25 +135,12 @@ object HuffmanWaveletTree {
     require(sigma <= 65536, s"sigma must be at most 65536, got $sigma")
     val n = seq.length
     // symbol counts, and the symbols as chars: the first of the two partition buffers
-    // used below. Odd and even positions count apart, so a run of one symbol is not
-    // one chain of increments of one counter.
+    // used below
     val freq = new Array[Long](sigma)
-    val odd = new Array[Int](sigma)
     val bufs = Array(new Array[Char](n), new Array[Char](n))
     val buf0 = bufs(0)
     var i = 0
-    while (i + 1 < n) {
-      val a = seq(i)
-      val b = seq(i + 1)
-      freq(a) += 1
-      odd(b) += 1
-      buf0(i) = a.toChar
-      buf0(i + 1) = b.toChar
-      i += 2
-    }
-    if (i < n) { freq(seq(i)) += 1; buf0(i) = seq(i).toChar }
-    i = 0
-    while (i < sigma) { freq(i) += odd(i); i += 1 }
+    while (i < n) { val a = seq(i); freq(a) += 1; buf0(i) = a.toChar; i += 1 }
     var nPresent = 0
     i = 0
     while (i < sigma) { if (freq(i) > 0) nPresent += 1; i += 1 }
@@ -195,13 +182,15 @@ object HuffmanWaveletTree {
           (nextMerged == id || (leaves(nextLeaf) >>> 16) <= subFreq(nextMerged))
         val node =
           if (leaf) {
-            sum += leaves(nextLeaf) >>> 16
+            val key = leaves(nextLeaf)
             nextLeaf += 1
-            (leaves(nextLeaf - 1) & 0xffffL).toInt - 65536 // -(sym + 1)
+            sum += key >>> 16
+            (key & 0xffffL).toInt - 65536 // -(sym + 1)
           } else {
-            sum += subFreq(nextMerged)
+            val merged = nextMerged
             nextMerged += 1
-            nextMerged - 1
+            sum += subFreq(merged)
+            merged
           }
         if (side == 0) nodeLeft(id) = node else nodeRight(id) = node
         side += 1
