@@ -98,8 +98,9 @@ class SuffixArraySpec extends AnyFunSuite {
       val unit = Array.fill(period)(1 + r.nextInt(sigma - 1))
       (Array.tabulate(n)(i => unit(i % period)), sigma)
     }
-    val fibonacci = for { sigma <- Gen.choose(3, 40000); n <- Gen.choose(0, 20000); a <- Gen.choose(1, sigma - 1) }
-      yield (TestOracles.fibonacciWord(n, a, 1 + (a % (sigma - 1))), sigma)
+    val fibonacci = for {
+      sigma <- Gen.choose(3, 40000); n <- Gen.choose(0, 20000); a <- Gen.choose(1, sigma - 1)
+    } yield (TestOracles.fibonacciWord(n, a, 1 + (a % (sigma - 1))), sigma)
     val gen = Gen.oneOf(uniform, skewed, periodic, fibonacci)
     val prop = Prop.forAllNoShrink(gen) { case (body, sigma) =>
       val s = body :+ 0

@@ -79,7 +79,8 @@ class HuffmanWaveletTreeSpec extends AnyFunSuite {
       seed <- Gen.long
     } yield {
       val r = new Random(seed)
-      (Array.tabulate(n)(i => if (i == 0) 0 else (math.pow(r.nextDouble(), power) * sigma).toInt), sigma, seed)
+      val seq = Array.tabulate(n)(i => if (i == 0) 0 else (math.pow(r.nextDouble(), power) * sigma).toInt)
+      (seq, sigma, seed)
     }
     val prop = Prop.forAllNoShrink(gen) { case (seq, sigma, seed) =>
       val r = new Random(seed)
