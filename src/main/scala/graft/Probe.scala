@@ -4,7 +4,7 @@ import graft.core.{Bwt, FmIndex, FmIndexBuilder, HuffmanWaveletTree, SuffixArray
 import graft.ops.CorpusQueries
 import graft.pipeline.{Transcripts, TranscriptPipeline}
 import graft.sources.ManifestTables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -12,9 +12,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 /** Measurement main: one session builder, one timing helper and one task listener
   * shared by four Spark modes, plus the Spark-free `shard` mode. Each Spark mode
-  * prints one JSON line on stdout; every timed step also prints its wall, task and
-  * shuffle-write totals on stderr, so a wall far above taskSec / cores points at
-  * driver-side work (planning, commits, bounded collects).
+  * prints one JSON line on stdout; every timed step also prints its wall, job and
+  * task counts, task time and shuffle-write totals on stderr, so a wall far above
+  * taskSec / cores points at driver-side work (planning, commits, bounded collects).
   * Bench.scala stays the frozen end-to-end line; this main adds evidence beside it.
   *
   *   runMain graft.Probe query <repeats> [queryName ...] [--plans <dir>]
@@ -23,7 +23,8 @@ import java.util.concurrent.atomic.AtomicLong
   *   runMain graft.Probe scale [scale ...]        corpus-growth probe (default 1 10)
   *   runMain graft.Probe dml [fileCount ...]      manifest DML cost (default 100 1000)
   *   runMain graft.Probe pipeline [cores] [nConvs] [turns] [runs]
-  *       min of <runs> full runToSinks (defaults 15000 x 120, 3 runs) + heap peak
+  *       min of <runs> full runToSinks (defaults 15000 x 120, 3 runs), each run's jobs
+  *       and tasks, and the heap peak
   *   runMain graft.Probe shard [chars] [rate] | shard --file <path> <reps> [rate]
   *       one FmIndex over a generated log-like corpus (default 128M chars) or <reps>
   *       copies of a UTF-8 file, rate default 32; one JSON line per engine
@@ -105,26 +106,42 @@ object Probe {
     CorpusQueries.parsePositiveInt("SPARK_GRAFT_CPUS", value)
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** Task time and shuffle-write bytes of every task that ended since the last reset. */
+  /** Jobs started, tasks ended, their task time and shuffle-write bytes since the last reset. */
   private final class Meter extends SparkListener {
+    val jobs = new AtomicLong
+    val jobsEnded = new AtomicLong
+    val tasks = new AtomicLong
     val taskMs = new AtomicLong
     val shuffleBytes = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = jobsEnded.incrementAndGet()
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
       taskMs.addAndGet(e.taskInfo.duration)
       if (e.taskMetrics != null)
         shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
+    def reset(): Unit = Seq(jobs, jobsEnded, tasks, taskMs, shuffleBytes).foreach(_.set(0L))
+    /** Waits up to 2 s for the listener bus to deliver the end of every job seen to
+      * start; a job's task ends come before its job end, so the totals then hold them.
+      */
+    def settle(): Unit = {
+      val deadline = System.nanoTime() + 2000000000L
+      while (jobsEnded.get < jobs.get && System.nanoTime() < deadline) Thread.sleep(1)
+    }
   }
 
-  /** Runs `body` once and returns its result and wall seconds; stderr gets the task
-    * time and shuffle-write bytes of the tasks it ran.
+  /** Runs `body` once and returns its result and wall seconds; stderr gets the jobs,
+    * tasks, task time and shuffle-write bytes it ran, which stay in `meter` until the
+    * next reset.
     */
   private def measure[T](meter: Meter, label: String)(body: => T): (T, Double) = {
-    meter.taskMs.set(0L)
-    meter.shuffleBytes.set(0L)
+    meter.reset()
     val (r, sec) = timed(body)
-    System.err.println(f"[probe] $label%-32s wall=$sec%.3f s " +
-      f"taskSec=${meter.taskMs.get / 1e3}%.1f shuffleWriteMB=${meter.shuffleBytes.get / 1e6}%.1f")
+    meter.settle()
+    System.err.println(f"[probe] $label%-32s wall=$sec%.3f s jobs=${meter.jobs.get} " +
+      f"tasks=${meter.tasks.get} taskSec=${meter.taskMs.get / 1e3}%.1f " +
+      f"shuffleWriteMB=${meter.shuffleBytes.get / 1e6}%.1f")
     (r, sec)
   }
 
@@ -482,8 +499,8 @@ object Probe {
 
   // ------------------------------------------------------------------ pipeline
 
-  /** Min of `runs` back-to-back full runToSinks over a cached raw-line corpus, with the
-    * sampled heap peak over those runs. local-mode executors share the driver JVM, so
+  /** Min of `runs` back-to-back full runToSinks over a cached raw-line corpus, with each
+    * run's Spark jobs and tasks and the sampled heap peak over those runs. local-mode executors share the driver JVM, so
     * that peak IS the all-executors working set; divide by cores for a
     * per-executor-core sizing estimate at cluster scale. The per-stage split is
     * perfbench's `--trace 1`.
@@ -503,15 +520,18 @@ object Probe {
     val raw = spark.read.parquet(rawDir)
     val nTurns = raw.count()
 
-    val (times, _, peak) = withPeakHeap((1 to p.runs).map { i =>
+    // each run's wall seconds, jobs and tasks
+    val (runs, _, peak) = withPeakHeap((1 to p.runs).map { i =>
       val out = Files.createTempDirectory(s"probe_pipeline_$i").toString
       val (_, sec) = measure(meter, s"pipeline run $i")(
         TranscriptPipeline.runToSinks(spark, Transcripts.parseRawLines(spark, raw), cfg, out))
       ManifestTables.deleteTree(Paths.get(out))
-      sec
+      (sec, meter.jobs.get, meter.tasks.get)
     })
-    val runs = times.map(t => f"$t%.2f").mkString("[", ",", "]")
-    f"""{"cores":$cores,"turns":$nTurns,"fullRuns":$runs,"min":${times.min}%.2f,""" +
+    val times = runs.map(_._1)
+    def list(xs: Seq[Any]) = xs.mkString("[", ",", "]")
+    f"""{"cores":$cores,"turns":$nTurns,"fullRuns":${list(times.map(t => f"$t%.2f"))},""" +
+      f""""jobs":${list(runs.map(_._2))},"tasks":${list(runs.map(_._3))},"min":${times.min}%.2f,""" +
       f""""turnsPerSec":${nTurns / times.min}%.0f,"peakHeapMb":${peak >> 20}}"""
   }
 

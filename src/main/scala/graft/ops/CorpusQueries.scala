@@ -303,7 +303,7 @@ object CorpusQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Scratch table path for queries that materialize under /tmp (q63 family, q68):
+  /** Scratch table path for queries that materialize under /tmp (q62, the q63 family, q68):
     * a per-APPLICATION subdir under a stable per-(query, SF-dir) root, with an
     * age-guarded sweep of sibling application dirs on entry. Bounded footprint (the
     * Bench ENOSPC class) without the stable-path hazard a review flagged: one
@@ -1875,8 +1875,7 @@ object CorpusQueries {
     //     directories (PartitionFilters in the scan; PlanShapeSpec asserts it), the
     //     identity-partitioning analog of Iceberg partition pruning ---
     "q62_partitioned_source" -> ((s, dir) => {
-      // applicationId suffix: concurrent sessions on one host must not share state
-      val out = s"/tmp/graft_q62_${s.sparkContext.applicationId}_${new java.io.File(dir).getName}"
+      val out = freshTmpTable("q62", dir)
       t(s, dir, "documents").withColumn("lang_p", col("lang"))
         .write.mode("overwrite").partitionBy("lang_p").parquet(out)
       s.read.parquet(out)

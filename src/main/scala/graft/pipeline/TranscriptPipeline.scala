@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.core.{FmIndex, FmIndexBuilder}
 import graft.sources.ManifestTables
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -10,6 +10,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.sql.Timestamp
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** One FM-Index shard: the compressed index + per-turn metadata for one deterministic
   * partition of the transcript table. The shard's corpus is the concatenation of its
@@ -50,6 +51,17 @@ case class RoutedHit(
     shard_id: Int
 )
 
+/** One shard piece's lineage as the task that built and routed it reports it:
+  * `rows_routed` counts the rows routed from this piece alone.
+  */
+case class PieceLineage(shard_id: Int, shard_seq: Int, n_turns: Long, corpus_chars: Long,
+    alphabet: Int, checksum: Long, rows_routed: Long)
+
+/** Internal: a row of the fused build + route stage, either a routed hit or, after a
+  * piece's hits, that piece's lineage (exactly one field is non-null).
+  */
+case class HitOrPiece(hit: RoutedHit, piece: PieceLineage)
+
 /** Internal: a Turn with its deterministic shard assignment (encoders need this public). */
 case class TurnWithShard(
     conv_id: String, turn_idx: Int, role: String, text: String, tool: String,
@@ -77,13 +89,17 @@ object TsMicros {
   *    sortWithinPartitions streams through Spark's spill-safe external sort; shard
   *    construction is a single mapPartitions pass with run-detection on shard_id — no
   *    per-group in-memory regrouping beyond one shard's corpus (capped by maxCorpusChars).
-  *  - routing deserializes each shard once and evaluates all broadcast patterns against
-  *    it: a shard with any match is decoded once (one linear inverse BWT) and scanned
-  *    per rule. Routed rows go to the sink write in the same stage, with no shuffle;
-  *    per-(sink, conv) aggregation is a classic partial+final agg handled by Catalyst.
+  *  - routing evaluates all broadcast patterns against each shard piece: a piece with
+  *    any match is decoded once (one linear inverse BWT) and scanned per rule. In
+  *    `runToSinks` each piece is routed from its in-memory index right after it is
+  *    built, in the sink write's stage: the index is never serialized, persisted or
+  *    exchanged, and routed rows reach the writer with no shuffle. `route` runs the
+  *    same kernel over a serialized shard table. Per-(sink, conv) aggregation is a
+  *    classic partial+final agg handled by Catalyst.
   *  - enrichment is an in-row CASE lookup, not a join (dimensions are tiny by design).
   *  - lineage rows + a JSON manifest make the job resumable: committed shard_ids are
-  *    skipped on re-run, so a killed job continues without recount drift.
+  *    skipped on re-run, so a killed job continues without recount drift. The lineage
+  *    rows are observed on the sink write, so the commit re-reads nothing to write them.
   */
 object TranscriptPipeline {
 
@@ -134,7 +150,10 @@ object TranscriptPipeline {
       keys
     })
 
-  def buildShards(spark: SparkSession, turns: Dataset[Turn], cfg: Config): Dataset[ShardRow] = {
+  /** The shard build's colocating shuffle: each turn with its shard_id, exchanged so that
+    * all of a shard's turns sit in one partition, sorted by (shard_id, conv_id, turn_idx).
+    */
+  private def colocate(spark: SparkSession, turns: Dataset[Turn], cfg: Config): Dataset[TurnWithShard] = {
     import spark.implicits._
     // CONTIGUOUS shard blocks instead of hashing shard_id into partitions: with
     // numShards/numPartitions ~4, Poisson hash placement gives some partitions
@@ -152,55 +171,66 @@ object TranscriptPipeline {
       .repartition(parts, blockKey)
       .sortWithinPartitions(col("shard_id"), col("conv_id"), col("turn_idx"))
       .as[TurnWithShard]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        // each next() consumes one shard piece: a run of equal shard_id, split when the
-        // corpus cap is reached (int positions bound the shard corpus size)
-        new Iterator[ShardRow] {
-          private var curShard = Int.MinValue
-          private var curSeq = 0
+  }
 
-          override def hasNext: Boolean = buf.hasNext
+  /** The shard pieces of one colocated partition, each as its metadata (a [[ShardRow]]
+    * whose `shard` bytes are null) with its in-memory index. Each next() consumes and
+    * indexes one piece: a run of equal shard_id, split when the corpus cap is reached
+    * (int positions bound the shard corpus size).
+    */
+  private def pieces(it: Iterator[TurnWithShard], cfg: Config): Iterator[(ShardRow, FmIndex)] = {
+    val buf = it.buffered
+    var curShard = Int.MinValue
+    var curSeq = 0
+    new Iterator[(ShardRow, FmIndex)] {
+      override def hasNext: Boolean = buf.hasNext
 
-          override def next(): ShardRow = {
-            val shardId = buf.head.shard_id
-            if (shardId != curShard) { curShard = shardId; curSeq = 0 }
-            val sb = new java.lang.StringBuilder
-            val convIds = mutable.ArrayBuffer[String]()
-            val turnIdxs = mutable.ArrayBuffer[Int]()
-            val roles = mutable.ArrayBuffer[String]()
-            val tools = mutable.ArrayBuffer[String]()
-            val tsMicros = mutable.ArrayBuffer[Long]()
-            val offsets = mutable.ArrayBuffer[Int]()
-            val lens = mutable.ArrayBuffer[Int]()
-            var checksum = 0L
-            while (buf.hasNext && buf.head.shard_id == shardId && sb.length < cfg.maxCorpusChars) {
-              val t = buf.next()
-              if (sb.length > 0) sb.append(Separator)
-              offsets += sb.length
-              lens += t.text.length
-              sb.append(t.text)
-              convIds += t.conv_id; turnIdxs += t.turn_idx; roles += t.role
-              tools += t.tool; tsMicros += TsMicros.toMicros(t.ts)
-              checksum += t.conv_id.hashCode.toLong * 31L + t.turn_idx
-            }
-            val corpus = new Array[Char](sb.length)
-            sb.getChars(0, sb.length, corpus, 0)
-            val fm = new FmIndexBuilder().setSampleRate(cfg.sampleRate)
-              .setCompression(cfg.compress).build(corpus)
-            // char-presence fingerprint: the distributed analog of the reference's
-            // unknown-symbol short-circuit (FmIndex.java:457-459) lifted to shard
-            // granularity — routing skips shards that cannot contain a pattern's chars
-            val alphaBits = graft.functions.AlphaFingerprint.build(corpus)
-            val row = ShardRow(shardId, curSeq, fm.serialize(), convIds.length,
-              corpus.length.toLong, fm.getAlphabetLength, alphaBits, checksum,
-              convIds.toArray, turnIdxs.toArray, roles.toArray, tools.toArray,
-              tsMicros.toArray, offsets.toArray, lens.toArray)
-            curSeq += 1
-            row
-          }
+      override def next(): (ShardRow, FmIndex) = {
+        val shardId = buf.head.shard_id
+        if (shardId != curShard) { curShard = shardId; curSeq = 0 }
+        val sb = new java.lang.StringBuilder
+        val convIds = mutable.ArrayBuffer[String]()
+        val turnIdxs = mutable.ArrayBuffer[Int]()
+        val roles = mutable.ArrayBuffer[String]()
+        val tools = mutable.ArrayBuffer[String]()
+        val tsMicros = mutable.ArrayBuffer[Long]()
+        val offsets = mutable.ArrayBuffer[Int]()
+        val lens = mutable.ArrayBuffer[Int]()
+        var checksum = 0L
+        while (buf.hasNext && buf.head.shard_id == shardId && sb.length < cfg.maxCorpusChars) {
+          val t = buf.next()
+          if (sb.length > 0) sb.append(Separator)
+          offsets += sb.length
+          lens += t.text.length
+          sb.append(t.text)
+          convIds += t.conv_id; turnIdxs += t.turn_idx; roles += t.role
+          tools += t.tool; tsMicros += TsMicros.toMicros(t.ts)
+          checksum += t.conv_id.hashCode.toLong * 31L + t.turn_idx
         }
+        val corpus = new Array[Char](sb.length)
+        sb.getChars(0, sb.length, corpus, 0)
+        val fm = new FmIndexBuilder().setSampleRate(cfg.sampleRate)
+          .setCompression(cfg.compress).build(corpus)
+        // char-presence fingerprint: the distributed analog of the reference's
+        // unknown-symbol short-circuit (FmIndex.java:457-459) lifted to shard
+        // granularity — routing skips shards that cannot contain a pattern's chars
+        val alphaBits = graft.functions.AlphaFingerprint.build(corpus)
+        val meta = ShardRow(shardId, curSeq, null, convIds.length,
+          corpus.length.toLong, fm.getAlphabetLength, alphaBits, checksum,
+          convIds.toArray, turnIdxs.toArray, roles.toArray, tools.toArray,
+          tsMicros.toArray, offsets.toArray, lens.toArray)
+        curSeq += 1
+        (meta, fm)
       }
+    }
+  }
+
+  /** One [[ShardRow]] per shard piece, its index serialized. */
+  def buildShards(spark: SparkSession, turns: Dataset[Turn], cfg: Config): Dataset[ShardRow] = {
+    import spark.implicits._
+    colocate(spark, turns, cfg).mapPartitions(pieces(_, cfg).map { case (meta, fm) =>
+      meta.copy(shard = fm.serialize())
+    })
   }
 
   // ------------------------------------------------------------------ route stage
@@ -229,30 +259,35 @@ object TranscriptPipeline {
   def route(spark: SparkSession, shards: Dataset[ShardRow], rules: Seq[SinkRule]): Dataset[RoutedHit] = {
     import spark.implicits._
     val bRules = spark.sparkContext.broadcast(rules.toArray)
-    shards.flatMap { s =>
-      lazy val fm = FmIndex.deserialize(s.shard)
-      val live = bRules.value.toSeq.flatMap { rule =>
-        if (!mayContain(s.alpha_bits, rule.pattern)) None
-        else {
-          val total = fm.count(rule.pattern.toCharArray)
-          if (total == 0) None else Some(rule -> total)
-        }
-      }
-      if (live.isEmpty) Iterator.empty
+    shards.flatMap(s => routeShard(s, FmIndex.deserialize(s.shard), bRules.value))
+  }
+
+  /** [[route]]'s kernel for one shard piece: `s`'s metadata and its index `fm`, evaluated
+    * only when some rule survives the fingerprint.
+    */
+  private def routeShard(s: ShardRow, fm: => FmIndex, rules: Array[SinkRule]): Iterator[RoutedHit] = {
+    lazy val index = fm
+    val live = rules.toSeq.flatMap { rule =>
+      if (!mayContain(s.alpha_bits, rule.pattern)) None
       else {
-        val corpus = new String(fm.decodeAll())
-        val texts = new Array[String](s.n_turns)
-        def turnText(t: Int): String = {
-          if (texts(t) eq null) texts(t) = corpus.substring(s.offsets(t), s.offsets(t) + s.lens(t))
-          texts(t)
-        }
-        live.iterator.flatMap { case (rule, total) =>
-          matchesPerTurn(scanAll(corpus, rule.pattern, total, s), rule.pattern.length, s.offsets, s.lens)
-            .iterator.map { case (t, n) =>
-              RoutedHit(rule.sink, s.conv_ids(t), s.turn_idxs(t), s.roles(t), s.tools(t),
-                TsMicros.toTimestamp(s.ts_micros(t)), n, turnText(t), s.shard_id)
-            }
-        }
+        val total = index.count(rule.pattern.toCharArray)
+        if (total == 0) None else Some(rule -> total)
+      }
+    }
+    if (live.isEmpty) Iterator.empty
+    else {
+      val corpus = new String(index.decodeAll())
+      val texts = new Array[String](s.n_turns)
+      def turnText(t: Int): String = {
+        if (texts(t) eq null) texts(t) = corpus.substring(s.offsets(t), s.offsets(t) + s.lens(t))
+        texts(t)
+      }
+      live.iterator.flatMap { case (rule, total) =>
+        matchesPerTurn(scanAll(corpus, rule.pattern, total, s), rule.pattern.length, s.offsets, s.lens)
+          .iterator.map { case (t, n) =>
+            RoutedHit(rule.sink, s.conv_ids(t), s.turn_idxs(t), s.roles(t), s.tools(t),
+              TsMicros.toTimestamp(s.ts_micros(t)), n, turnText(t), s.shard_id)
+          }
       }
     }
   }
@@ -357,7 +392,8 @@ object TranscriptPipeline {
     *     sink rows can never be adopted by a later commit.
     *  2. append sink rows under `sinks/sink=S/attempt=K/`.
     *  3. append lineage rows (one per shard piece) with attempt=K, as ONE file per
-    *     attempt; the attempt's `RunReport` is observed on that write (no re-read).
+    *     attempt. The rows are observed on step 2's write (no re-read of `sinks/`, no
+    *     join), and the attempt's `RunReport` is computed from them.
     *  4. atomically create `_manifests/commit-K` (write temp + ATOMIC_MOVE). Only now is
     *     attempt K committed.
     *
@@ -429,24 +465,34 @@ object TranscriptPipeline {
           .drop("__sid").as[Turn]
       }
 
-    val shards = buildShards(spark, pendingTurns, cfg).persist()
-    // route output is NOT cached: its only full-width consumer is the sinks write.
-    // Every later job (lineage counts, aggregates, window) re-reads this attempt's
-    // rows COLUMN-PRUNED from the parquet just written — task metrics showed the
-    // three cache scans of the text-heavy routed rows cost ~36 s of CPU at the
-    // bench corpus vs ~5 s for pruned parquet reads, plus the cache write itself
-    // disappears from the critical sinks job.
-    val routed = route(spark, shards, cfg.rules)
+    // Build and route in one pass: each piece is routed from its in-memory index right
+    // after it is built, in the task that writes its rows, so no shard bytes are
+    // serialized, persisted or exchanged. Each piece then emits its lineage row.
+    val bRules = spark.sparkContext.broadcast(cfg.rules.toArray)
+    val routed = colocate(spark, pendingTurns, cfg).mapPartitions { it =>
+      pieces(it, cfg).flatMap { case (s, fm) =>
+        var rows = 0L
+        routeShard(s, fm, bRules.value).map { h => rows += 1; HitOrPiece(h, null) } ++
+          Iterator.single(HitOrPiece(null, PieceLineage(s.shard_id, s.shard_seq, s.n_turns,
+            s.corpus_chars, s.alphabet, s.checksum, rows)))
+      }
+    }
+    // The lineage rows are observed on the sink write, so they are exact under task
+    // retry: the observation runs in the write's result stage, and Spark merges a result
+    // task's accumulator updates only for the first successful attempt of its partition.
+    val observed = Observation(s"lineage-$attempt")
+    val hits = routed.observe(observed, collect_list(col("piece")).as("pieces"))
+      .filter(col("hit").isNotNull).select("hit.*").as[RoutedHit]
 
-    val enriched = enrich(spark, routed).withColumn("attempt", lit(attempt))
-    // No shuffle before the write: route, enrich and the sink write run in the stage
-    // that reads the persisted shards, so the text-heavy routed rows are never
-    // exchanged. coalesce is narrow: it only merges partitions, so the write runs
+    val enriched = enrich(spark, hits).withColumn("attempt", lit(attempt))
+    // No shuffle between the build and the write: route, enrich and the sink write run
+    // in the stage that reads the colocating shuffle, so the text-heavy routed rows are
+    // never exchanged. coalesce is narrow: it only merges partitions, so the write runs
     // min(shard partitions, defaultParallelism) tasks, and it does not rebalance, so
     // a hot shard's rows all land on one writer. Output file count (and the
     // driver-serial commit) stays at most cluster width. A retried task re-reads the
-    // same persisted shards and route emits rows in position order, so a retry
-    // writes the same rows.
+    // same shuffle blocks, rebuilds the same pieces, and route emits rows in position
+    // order, so a retry writes the same rows.
     // committer v2 (direct task commit, no serial driver-side rename pass) is safe
     // for sinks + lineage ONLY because visibility is governed by the attempt
     // markers, not the parquet committer: readers never trust an attempt without
@@ -478,22 +524,10 @@ object TranscriptPipeline {
     }
 
     // this attempt's rows, re-read from the files just written (pruned to the
-    // columns each consumer needs; never consults commit markers, so it serves
-    // both paths' lineage counts and the fresh path's aggregates)
+    // columns each consumer needs; never consults commit markers), feed the fresh
+    // path's aggregates
     val attemptRows = spark.read.schema(sinkSchema(spark)).parquet(s"$outDir/sinks")
       .filter(col("attempt") === attempt).drop("attempt")
-
-    // lineage is written BY SPARK (no driver collect of per-shard rows) and appended,
-    // then the attempt is committed with one atomic marker
-    val routedCounts = attemptRows.groupBy(col("shard_id")).agg(count(lit(1)).as("__rr"))
-    val lineageDf = shards.join(routedCounts, Seq("shard_id"), "left")
-      .select(col("shard_id"), col("shard_seq"), col("n_turns").cast("long").as("n_turns"),
-        col("corpus_chars"), col("alphabet"), col("checksum"),
-        // attribute routed rows to the first piece of a split shard (counts are per
-        // shard_id; duplicating them across seq pieces would double-count)
-        when(col("shard_seq") === 0, coalesce(col("__rr"), lit(0L)))
-          .otherwise(lit(0L)).as("rows_routed"),
-        lit(attempt).as("attempt"))
     // aggregates must cover ALL committed data. A fresh run aggregates this attempt's
     // rows in jobs concurrent with the lineage write (the commit marker still lands
     // strictly after it); a resumed run re-reads the committed sinks, so it waits for
@@ -509,23 +543,25 @@ object TranscriptPipeline {
         runningWindow(src).write.mode("overwrite").parquet(s"$outDir/window")
       })
     val freshJobs = if (resumed) None else Some(startAggJobs(attemptRows))
-    // ONE lineage file per attempt (one small row per shard piece), and this attempt's
-    // report observed on that write rather than re-read from it. The counts are exact
-    // under task retry: after coalesce(1) the observation runs in the write's single
-    // result task, and Spark merges a result task's accumulator updates only for the
-    // first successful attempt of its partition.
-    val stats = Observation(s"lineage-$attempt")
-    lineageDf.coalesce(1)
-      .observe(stats, count(lit(1)).as("shards"), coalesce(sum("n_turns"), lit(0L)).as("turns"),
-        coalesce(sum("rows_routed"), lit(0L)).as("rows"))
+    // ONE lineage file per attempt (one small row per shard piece), written from the
+    // observed rows. They pass through the driver: O(shard pieces) of state, the same
+    // order as a broadcast of per-shard counts. rows_routed is counted per piece and
+    // reported per shard_id on the first piece of a split shard (seq 0), so summing it
+    // never double-counts.
+    val observedPieces = observed.get("pieces").asInstanceOf[scala.collection.Seq[Row]]
+    val routedPerShard = observedPieces.groupMapReduce(_.getAs[Int]("shard_id"))(
+      _.getAs[Long]("rows_routed"))(_ + _)
+    val lineage = observedPieces.map { p =>
+      val (id, seq) = (p.getAs[Int]("shard_id"), p.getAs[Int]("shard_seq"))
+      Row(id, seq, p.getAs[Long]("n_turns"), p.getAs[Long]("corpus_chars"), p.getAs[Int]("alphabet"),
+        p.getAs[Long]("checksum"), if (seq == 0) routedPerShard(id) else 0L, attempt)
+    }.sortBy(r => (r.getInt(0), r.getInt(1)))
+    spark.createDataFrame(lineage.asJava, LineageSchema).coalesce(1)
       .write.options(directCommit).mode("append").parquet(s"$outDir/lineage")
     writeMarker(outDir, s"commit-$attempt", s"""{"attempt": $attempt, "committed": true}""")
     val (fAgg, fWin) = freshJobs.getOrElse(startAggJobs(readSinks(spark, outDir)))
     Await.result(fAgg, Duration.Inf)
     Await.result(fWin, Duration.Inf)
-    shards.unpersist()
-    val m = stats.get
-    RunReport(m("shards").asInstanceOf[Long], m("turns").asInstanceOf[Long],
-      m("rows").asInstanceOf[Long], resumed)
+    RunReport(lineage.size.toLong, lineage.map(_.getLong(2)).sum, lineage.map(_.getLong(6)).sum, resumed)
   }
 }

@@ -153,6 +153,37 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
     assert(lineage.agg(sum("n_turns")).first().getLong(0) == turns.count())
   }
 
+  test("the fused build + route write equals buildShards then route, piece by piece") {
+    // a cap that splits the shards into pieces, and a rule that no shard contains
+    val splitCfg = cfg.copy(maxCorpusChars = 2000, rules = cfg.rules :+ SinkRule("none", "ㄱㄲ"))
+    val out = tempDir("graft_fused").toString
+    TranscriptPipeline.runToSinks(spark, turns, splitCfg, out)
+    val shards = TranscriptPipeline.buildShards(spark, turns, splitCfg).cache()
+    assert(shards.filter(col("shard_seq") > 0).count() > 0, "the cap must split a shard")
+
+    val sinks = TranscriptPipeline.readSinks(spark, out)
+    val twoStep = TranscriptPipeline.enrich(spark, TranscriptPipeline.route(spark, shards, splitCfg.rules))
+      .select(sinks.columns.toSeq.map(col): _*)
+    assert(sinks.count() > 0 && sinks.exceptAll(twoStep).count() == 0 &&
+      twoStep.exceptAll(sinks).count() == 0, "fused sink rows differ from enrich(route(buildShards))")
+
+    val lineage = spark.read.parquet(s"$out/lineage")
+    val keys = Seq("shard_id", "shard_seq", "n_turns", "corpus_chars", "alphabet", "checksum")
+    val pieces = shards.withColumn("n_turns", col("n_turns").cast("long")).select(keys.map(col): _*)
+    val observed = lineage.select(keys.map(col): _*)
+    assert(observed.exceptAll(pieces).count() == 0 && pieces.exceptAll(observed).count() == 0,
+      "lineage rows differ from the buildShards pieces")
+    // rows_routed: the shard's sink rows on its first piece, 0 on the later ones
+    val perShard = sinks.groupBy("shard_id").agg(count(lit(1)).as("n"))
+    val want = lineage.select("shard_id", "shard_seq").join(perShard, Seq("shard_id"), "left")
+      .select(col("shard_id"), col("shard_seq"),
+        when(col("shard_seq") === 0, coalesce(col("n"), lit(0L))).otherwise(lit(0L)).as("rows_routed"))
+    val got = lineage.select("shard_id", "shard_seq", "rows_routed")
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+      s"rows_routed misattributed: ${got.exceptAll(want).collect().take(5).mkString(", ")}")
+    shards.unpersist()
+  }
+
   test("crash before the commit marker never duplicates sink rows (crash-atomic resume)") {
     import spark.implicits._
     val outFull = tempDir("graft_atomic_full").toString
