@@ -500,10 +500,10 @@ object Probe {
   // ------------------------------------------------------------------ pipeline
 
   /** Min of `runs` back-to-back full runToSinks over a cached raw-line corpus, with each
-    * run's Spark jobs and tasks and the sampled heap peak over those runs. local-mode executors share the driver JVM, so
-    * that peak IS the all-executors working set; divide by cores for a
-    * per-executor-core sizing estimate at cluster scale. The per-stage split is
-    * perfbench's `--trace 1`.
+    * run's Spark jobs and tasks and the sampled heap peak over those runs. local-mode
+    * executors share the driver JVM, so that peak IS the all-executors working set;
+    * divide by cores for a per-executor-core sizing estimate at cluster scale. The
+    * per-stage split is perfbench's `--trace 1`.
     */
   private def pipeline(spark: SparkSession, meter: Meter, cores: Int, p: Pipeline): String = {
     val rawDir = tmpPath(s"graft_bench_rawlines_${p.nConvs}x${p.turns}")
@@ -520,7 +520,6 @@ object Probe {
     val raw = spark.read.parquet(rawDir)
     val nTurns = raw.count()
 
-    // each run's wall seconds, jobs and tasks
     val (runs, _, peak) = withPeakHeap((1 to p.runs).map { i =>
       val out = Files.createTempDirectory(s"probe_pipeline_$i").toString
       val (_, sec) = measure(meter, s"pipeline run $i")(

@@ -553,8 +553,9 @@ object TranscriptPipeline {
       _.getAs[Long]("rows_routed"))(_ + _)
     val lineage = observedPieces.map { p =>
       val (id, seq) = (p.getAs[Int]("shard_id"), p.getAs[Int]("shard_seq"))
-      Row(id, seq, p.getAs[Long]("n_turns"), p.getAs[Long]("corpus_chars"), p.getAs[Int]("alphabet"),
-        p.getAs[Long]("checksum"), if (seq == 0) routedPerShard(id) else 0L, attempt)
+      Row(id, seq, p.getAs[Long]("n_turns"), p.getAs[Long]("corpus_chars"),
+        p.getAs[Int]("alphabet"), p.getAs[Long]("checksum"),
+        if (seq == 0) routedPerShard(id) else 0L, attempt)
     }.sortBy(r => (r.getInt(0), r.getInt(1)))
     spark.createDataFrame(lineage.asJava, LineageSchema).coalesce(1)
       .write.options(directCommit).mode("append").parquet(s"$outDir/lineage")
@@ -562,6 +563,7 @@ object TranscriptPipeline {
     val (fAgg, fWin) = freshJobs.getOrElse(startAggJobs(readSinks(spark, outDir)))
     Await.result(fAgg, Duration.Inf)
     Await.result(fWin, Duration.Inf)
-    RunReport(lineage.size.toLong, lineage.map(_.getLong(2)).sum, lineage.map(_.getLong(6)).sum, resumed)
+    RunReport(lineage.size.toLong, lineage.map(_.getLong(2)).sum, lineage.map(_.getLong(6)).sum,
+      resumed)
   }
 }
