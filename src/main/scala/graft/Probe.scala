@@ -9,12 +9,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.atomic.AtomicLong
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import scala.jdk.CollectionConverters._
 
 /** Measurement main: one session builder, one timing helper and one task listener
   * shared by four Spark modes, plus the Spark-free `shard` mode. Each Spark mode
   * prints one JSON line on stdout; every timed step also prints its wall, job and
-  * task counts, task time and shuffle-write totals on stderr, so a wall far above
-  * taskSec / cores points at driver-side work (planning, commits, bounded collects).
+  * task counts, task time, shuffle-write totals and the processes it forked on stderr,
+  * so a wall far above taskSec / cores points at driver-side work (planning, commits,
+  * bounded collects) or at forks.
   * Bench.scala stays the frozen end-to-end line; this main adds evidence beside it.
   *
   *   runMain graft.Probe query <repeats> [queryName ...] [--plans <dir>]
@@ -23,8 +27,8 @@ import java.util.concurrent.atomic.AtomicLong
   *   runMain graft.Probe scale [scale ...]        corpus-growth probe (default 1 10)
   *   runMain graft.Probe dml [fileCount ...]      manifest DML cost (default 100 1000)
   *   runMain graft.Probe pipeline [cores] [nConvs] [turns] [runs]
-  *       min of <runs> full runToSinks (defaults 15000 x 120, 3 runs), each run's jobs
-  *       and tasks, and the heap peak
+  *       min and median of <runs> warm full runToSinks (defaults 15000 x 120, 3 runs),
+  *       each run's jobs and tasks, and the heap peak
   *   runMain graft.Probe shard [chars] [rate] | shard --file <path> <reps> [rate]
   *       one FmIndex over a generated log-like corpus (default 128M chars) or <reps>
   *       copies of a UTF-8 file, rate default 32; one JSON line per engine
@@ -133,16 +137,36 @@ object Probe {
 
   /** Runs `body` once and returns its result and wall seconds; stderr gets the jobs,
     * tasks, task time and shuffle-write bytes it ran, which stay in `meter` until the
-    * next reset.
+    * next reset, and the processes it forked, per program.
     */
   private def measure[T](meter: Meter, label: String)(body: => T): (T, Double) = {
     meter.reset()
-    val (r, sec) = timed(body)
+    val ((r, sec), forks) = processStarts(timed(body))
     meter.settle()
+    val perProgram = forks.groupMapReduce(_.takeWhile(_ != ' '))(_ => 1)(_ + _)
+      .toSeq.sorted.map { case (prog, n) => s" $prog=$n" }
     System.err.println(f"[probe] $label%-32s wall=$sec%.3f s jobs=${meter.jobs.get} " +
       f"tasks=${meter.tasks.get} taskSec=${meter.taskMs.get / 1e3}%.1f " +
-      f"shuffleWriteMB=${meter.shuffleBytes.get / 1e6}%.1f")
+      f"shuffleWriteMB=${meter.shuffleBytes.get / 1e6}%.1f forks=${forks.size}${perProgram.mkString}")
     (r, sec)
+  }
+
+  /** `body`'s result and the command line of every process the JVM started while it ran,
+    * from an in-process JFR recording of `jdk.ProcessStart`.
+    */
+  private[graft] def processStarts[T](body: => T): (T, Seq[String]) = {
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val r = body
+      rec.stop()
+      val file = Files.createTempFile("graft-forks", ".jfr")
+      try {
+        rec.dump(file)
+        (r, RecordingFile.readAllEvents(file).asScala.toSeq.map(_.getString("command")))
+      } finally Files.deleteIfExists(file)
+    } finally rec.close()
   }
 
   private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
@@ -203,8 +227,9 @@ object Probe {
     spark.sparkContext.setLogLevel("ERROR")
     val meter = new Meter
     spark.sparkContext.addSparkListener(meter)
-    // warm codegen and the noop sink once
-    noop(spark.range(1 << 20).selectExpr("sum(id) as s"))
+    // warm codegen and the noop sink once, under a first JFR recording: JFR's first
+    // start slows the step that pays it by seconds, so no timed step may pay it
+    processStarts(noop(spark.range(1 << 20).selectExpr("sum(id) as s")))
     val json = mode match {
       case q: Query => query(spark, meter, sfDir, q)
       case s: Scale => scale(spark, meter, s.scales)
@@ -499,8 +524,10 @@ object Probe {
 
   // ------------------------------------------------------------------ pipeline
 
-  /** Min of `runs` back-to-back full runToSinks over a cached raw-line corpus, with each
-    * run's Spark jobs and tasks and the sampled heap peak over those runs. local-mode
+  /** Min and median of `runs` back-to-back full runToSinks over a cached raw-line corpus,
+    * after untimed runs of the same config until two successive runs differ by less than
+    * 10% (at most 10), with each run's Spark jobs and tasks and the sampled heap peak over
+    * the measured runs. local-mode
     * executors share the driver JVM, so that peak IS the all-executors working set;
     * divide by cores for a per-executor-core sizing estimate at cluster scale. The
     * per-stage split is perfbench's `--trace 1`.
@@ -513,25 +540,33 @@ object Probe {
     }
     val cfg = TranscriptPipeline.Config(numShards = 512, saltBlock = 2048,
       sampleRate = 16, numPartitionsOpt = Some(128))
-    val warm = Files.createTempDirectory("probe_warm").toString
-    TranscriptPipeline.runToSinks(spark, Transcripts.generate(spark, 8, 40),
-      cfg.copy(numShards = cores), warm)
-    ManifestTables.deleteTree(Paths.get(warm))
     val raw = spark.read.parquet(rawDir)
     val nTurns = raw.count()
+    /** Seconds of one runToSinks into a fresh directory, timed by `time`. */
+    def run(name: String)(time: (=> Any) => Double): Double = {
+      val out = Files.createTempDirectory(name).toString
+      try time(TranscriptPipeline.runToSinks(spark, Transcripts.parseRawLines(spark, raw), cfg, out))
+      finally ManifestTables.deleteTree(Paths.get(out))
+    }
+    // a cold series' minimum overstates the warm per-run cost
+    var warm = Seq(run("probe_warm")(timed(_)._2))
+    while (warm.length < 10 && (warm.length < 2 ||
+        math.abs(warm.last - warm.init.last) >= 0.1 * warm.init.last))
+      warm :+= run("probe_warm")(timed(_)._2)
+    System.err.println(f"[probe] warm-up runs ${warm.map(t => f"$t%.2f").mkString(" ")}")
 
     val (runs, _, peak) = withPeakHeap((1 to p.runs).map { i =>
-      val out = Files.createTempDirectory(s"probe_pipeline_$i").toString
-      val (_, sec) = measure(meter, s"pipeline run $i")(
-        TranscriptPipeline.runToSinks(spark, Transcripts.parseRawLines(spark, raw), cfg, out))
-      ManifestTables.deleteTree(Paths.get(out))
-      (sec, meter.jobs.get, meter.tasks.get)
+      (run(s"probe_pipeline_$i")(measure(meter, s"pipeline run $i")(_)._2),
+        meter.jobs.get, meter.tasks.get)
     })
     val times = runs.map(_._1)
+    val sorted = times.sorted
+    val median = (sorted((times.length - 1) / 2) + sorted(times.length / 2)) / 2
     def list(xs: Seq[Any]) = xs.mkString("[", ",", "]")
-    f"""{"cores":$cores,"turns":$nTurns,"fullRuns":${list(times.map(t => f"$t%.2f"))},""" +
+    f"""{"cores":$cores,"turns":$nTurns,"warmRuns":${warm.length},""" +
+      f""""fullRuns":${list(times.map(t => f"$t%.2f"))},""" +
       f""""jobs":${list(runs.map(_._2))},"tasks":${list(runs.map(_._3))},"min":${times.min}%.2f,""" +
-      f""""turnsPerSec":${nTurns / times.min}%.0f,"peakHeapMb":${peak >> 20}}"""
+      f""""median":$median%.2f,"turnsPerSec":${nTurns / times.min}%.0f,"peakHeapMb":${peak >> 20}}"""
   }
 
   // ------------------------------------------------------------------ shard

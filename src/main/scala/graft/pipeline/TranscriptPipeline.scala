@@ -500,6 +500,12 @@ object TranscriptPipeline {
     // before. aggregates/window (marker-less overwrite outputs) keep the default
     // committer.
     val directCommit = Map("mapreduce.fileoutputcommitter.algorithm.version" -> "2")
+    // Every write of this run (sinks, lineage, aggregates, window) sets local file
+    // permissions in-process instead of forking a `chmod` per file, `.crc` and directory
+    // (see NoForkLocalFileSystem). The FS cache must be off for these writes, or they
+    // would get the session's cached default `file:` instance back.
+    val noFork = Map("fs.file.impl" -> classOf[NoForkLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
     // concurrent writers instead of the dynamic-partition sort: FileFormatWriter
     // otherwise SORTS every task's rows by (sink, attempt) before writing — a full
     // pass over the text-heavy payload to order at most |rules|+1 distinct keys.
@@ -516,7 +522,7 @@ object TranscriptPipeline {
     // slower to write. Rows are unchanged; file bytes are not.
     val plain = Seq("text", "ts").map(c => s"parquet.enable.dictionary#$c" -> "false")
     try enriched.coalesce(spark.sparkContext.defaultParallelism)
-      .write.options(directCommit ++ plain)
+      .write.options(directCommit ++ plain ++ noFork)
       .mode("append").partitionBy("sink", "attempt").parquet(s"$outDir/sinks")
     finally prevWriters match {
       case Some(v) => spark.conf.set(writersKey, v)
@@ -537,10 +543,11 @@ object TranscriptPipeline {
     import scala.concurrent.ExecutionContext.Implicits.global
     def startAggJobs(src: DataFrame): (Future[Unit], Future[Unit]) = (
       Future {
-        conversationAggregates(src).write.mode("overwrite").parquet(s"$outDir/aggregates")
+        conversationAggregates(src).write.options(noFork).mode("overwrite")
+          .parquet(s"$outDir/aggregates")
       },
       Future {
-        runningWindow(src).write.mode("overwrite").parquet(s"$outDir/window")
+        runningWindow(src).write.options(noFork).mode("overwrite").parquet(s"$outDir/window")
       })
     val freshJobs = if (resumed) None else Some(startAggJobs(attemptRows))
     // ONE lineage file per attempt (one small row per shard piece), written from the
@@ -558,7 +565,7 @@ object TranscriptPipeline {
         if (seq == 0) routedPerShard(id) else 0L, attempt)
     }.sortBy(r => (r.getInt(0), r.getInt(1)))
     spark.createDataFrame(lineage.asJava, LineageSchema).coalesce(1)
-      .write.options(directCommit).mode("append").parquet(s"$outDir/lineage")
+      .write.options(directCommit ++ noFork).mode("append").parquet(s"$outDir/lineage")
     writeMarker(outDir, s"commit-$attempt", s"""{"attempt": $attempt, "committed": true}""")
     val (fAgg, fWin) = freshJobs.getOrElse(startAggJobs(readSinks(spark, outDir)))
     Await.result(fAgg, Duration.Inf)

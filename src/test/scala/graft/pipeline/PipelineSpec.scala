@@ -1,11 +1,17 @@
 package graft.pipeline
 
-import graft.{SharedSparkSession, TempDirs}
+import graft.{Probe, SharedSparkSession, TempDirs}
 import graft.core.FmIndex
+import org.apache.spark.TaskKilled
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd,
+  SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline checks (the BASELINE.md invariants):
   *  - routed-row equality: FM-shard routing == Catalyst contains() oracle, per sink
@@ -182,6 +188,71 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
       s"rows_routed misattributed: ${got.exceptAll(want).collect().take(5).mkString(", ")}")
     shards.unpersist()
+  }
+
+  test("runToSinks forks no chmod, and its files get the modes of a default-FS write") {
+    val out = tempDir("graft_nofork").toString
+    val (_, forks) = Probe.processStarts(TranscriptPipeline.runToSinks(spark, turns, cfg, out))
+    val chmods = forks.filter(_.startsWith("chmod"))
+    assert(chmods.isEmpty, s"${chmods.size} chmod forks, e.g. ${chmods.take(3).mkString("; ")}")
+    // (directory modes, file modes) under root, root included
+    def modes(root: Path): (Set[String], Set[String]) = {
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.toSeq.partition(Files.isDirectory(_)) match { case (dirs, files) =>
+        def of(ps: Seq[Path]) = ps.map(p => PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toSet
+        (of(dirs), of(files))
+      } finally walk.close()
+    }
+    val ref = tempDir("graft_nofork_ref").resolve("t")
+    turns.write.parquet(ref.toString)
+    val want = modes(ref)
+    assert(want._1.nonEmpty && want._2.nonEmpty)
+    Seq("sinks", "lineage", "aggregates", "window").foreach { d =>
+      assert(modes(Paths.get(out, d)) == want, s"$d modes differ from a default-FS write")
+    }
+  }
+
+  /** Kills the first attempt of one task of the sink write's result stage (the fused
+    * build/route/write stage) as it starts, and counts that stage's TaskKilled ends. The
+    * scheduler relaunches a killed task.
+    */
+  private class SinkTaskKiller extends SparkListener {
+    @volatile private var stage = -1
+    @volatile private var sent = false
+    val killedEnds = new AtomicInteger
+    // In a fresh run the sink write's job is the first with two stages (under AQE its
+    // shuffle map stage runs first as a one-stage job); the tail starts after it ends.
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (stage < 0 && e.stageIds.size > 1) stage = e.stageIds.max
+    override def onTaskStart(e: SparkListenerTaskStart): Unit =
+      if (e.stageId == stage && !sent) {
+        sent = true
+        spark.sparkContext.killTaskAttempt(e.taskInfo.taskId, interruptThread = true, "retry test")
+      }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.stageId == stage && e.reason.isInstanceOf[TaskKilled]) killedEnds.incrementAndGet()
+  }
+
+  test("a killed and relaunched sink-write task counts its lineage once") {
+    // a cap that splits shards into many pieces: the kill lands while the task still
+    // reads its sorted input, long before it asks to commit
+    val splitCfg = cfg.copy(maxCorpusChars = 2000)
+    val clean = tempDir("graft_kill_clean").toString
+    val out = tempDir("graft_kill").toString
+    val want = TranscriptPipeline.runToSinks(spark, turns, splitCfg, clean)
+    val killer = new SinkTaskKiller
+    spark.sparkContext.addSparkListener(killer)
+    val got = try TranscriptPipeline.runToSinks(spark, turns, splitCfg, out)
+      finally spark.sparkContext.removeSparkListener(killer)
+    val deadline = System.nanoTime() + 10000000000L
+    while (killer.killedEnds.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(killer.killedEnds.get > 0, "no sink-write task attempt was killed")
+    assert(got == want, s"retried run reported $got, clean run $want")
+    def same(a: DataFrame, b: DataFrame) = a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
+    assert(same(spark.read.parquet(s"$out/lineage"), spark.read.parquet(s"$clean/lineage")),
+      "lineage differs from the clean run")
+    assert(same(TranscriptPipeline.readSinks(spark, out), TranscriptPipeline.readSinks(spark, clean)),
+      "sink rows differ from the clean run")
   }
 
   test("crash before the commit marker never duplicates sink rows (crash-atomic resume)") {
