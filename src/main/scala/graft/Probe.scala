@@ -156,17 +156,15 @@ object Probe {
     */
   private[graft] def processStarts[T](body: => T): (T, Seq[String]) = {
     val rec = new Recording()
+    val file = Files.createTempFile("graft-forks", ".jfr")
     try {
       rec.enable("jdk.ProcessStart")
       rec.start()
       val r = body
       rec.stop()
-      val file = Files.createTempFile("graft-forks", ".jfr")
-      try {
-        rec.dump(file)
-        (r, RecordingFile.readAllEvents(file).asScala.toSeq.map(_.getString("command")))
-      } finally Files.deleteIfExists(file)
-    } finally rec.close()
+      rec.dump(file)
+      (r, RecordingFile.readAllEvents(file).asScala.toSeq.map(_.getString("command")))
+    } finally { rec.close(); Files.deleteIfExists(file) }
   }
 
   private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
@@ -527,10 +525,9 @@ object Probe {
   /** Min and median of `runs` back-to-back full runToSinks over a cached raw-line corpus,
     * after untimed runs of the same config until two successive runs differ by less than
     * 10% (at most 10), with each run's Spark jobs and tasks and the sampled heap peak over
-    * the measured runs. local-mode
-    * executors share the driver JVM, so that peak IS the all-executors working set;
-    * divide by cores for a per-executor-core sizing estimate at cluster scale. The
-    * per-stage split is perfbench's `--trace 1`.
+    * the measured runs. local-mode executors share the driver JVM, so that peak IS the
+    * all-executors working set; divide by cores for a per-executor-core sizing estimate
+    * at cluster scale. The per-stage split is perfbench's `--trace 1`.
     */
   private def pipeline(spark: SparkSession, meter: Meter, cores: Int, p: Pipeline): String = {
     val rawDir = tmpPath(s"graft_bench_rawlines_${p.nConvs}x${p.turns}")
@@ -560,8 +557,7 @@ object Probe {
         meter.jobs.get, meter.tasks.get)
     })
     val times = runs.map(_._1)
-    val sorted = times.sorted
-    val median = (sorted((times.length - 1) / 2) + sorted(times.length / 2)) / 2
+    val median = { val s = times.sorted; (s((s.length - 1) / 2) + s(s.length / 2)) / 2 }
     def list(xs: Seq[Any]) = xs.mkString("[", ",", "]")
     f"""{"cores":$cores,"turns":$nTurns,"warmRuns":${warm.length},""" +
       f""""fullRuns":${list(times.map(t => f"$t%.2f"))},""" +

@@ -20,7 +20,6 @@ import scala.jdk.CollectionConverters._
 class NoForkLocalFileSystem extends LocalFileSystem(new NoForkLocalFileSystem.Raw)
 
 object NoForkLocalFileSystem {
-
   /** `RawLocalFileSystem` whose `setPermission` sets the nine rwx bits in-process. A mode
     * with the sticky bit (the only other bit `FsPermission` carries), or a file store
     * without POSIX attributes, goes to Hadoop's own method.

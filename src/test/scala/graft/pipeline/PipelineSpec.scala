@@ -242,10 +242,13 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
     val want = TranscriptPipeline.runToSinks(spark, turns, splitCfg, clean)
     val killer = new SinkTaskKiller
     spark.sparkContext.addSparkListener(killer)
-    val got = try TranscriptPipeline.runToSinks(spark, turns, splitCfg, out)
-      finally spark.sparkContext.removeSparkListener(killer)
-    val deadline = System.nanoTime() + 10000000000L
-    while (killer.killedEnds.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    val got = try {
+      val report = TranscriptPipeline.runToSinks(spark, turns, splitCfg, out)
+      // the listener bus delivers the kill's task end asynchronously
+      val deadline = System.nanoTime() + 10000000000L
+      while (killer.killedEnds.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+      report
+    } finally spark.sparkContext.removeSparkListener(killer)
     assert(killer.killedEnds.get > 0, "no sink-write task attempt was killed")
     assert(got == want, s"retried run reported $got, clean run $want")
     def same(a: DataFrame, b: DataFrame) = a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
