@@ -145,21 +145,6 @@ object SuffixArrays {
     induce()
     sa
   }
-
-  /** Naive O(n^2 log n) oracle for tests: sort suffix indices by suffix comparison. */
-  def naive(s: Array[Int]): Array[Int] = {
-    val n = s.length
-    val idx = Array.range(0, n)
-    idx.sortWith { (a, b) =>
-      var i = a; var j = b
-      var res = 0
-      while (res == 0 && i < n && j < n) {
-        res = Integer.compare(s(i), s(j))
-        i += 1; j += 1
-      }
-      if (res != 0) res < 0 else i == n && j < n
-    }
-  }
 }
 
 /** Plain suffix-array substring search over a text: count and locate by two binary

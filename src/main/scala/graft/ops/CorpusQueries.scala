@@ -337,6 +337,9 @@ object CorpusQueries {
     graft.pipeline.SinkRule("purchases", "purchase"),
     graft.pipeline.SinkRule("k8", "\"k\": 8")
   )
+  /** The shard config of the pipeline queries over the event transcripts (q71-q75). */
+  private val EventsCfg = graft.pipeline.TranscriptPipeline.Config(
+    numShards = 16, saltBlock = 64, sampleRate = 8, rules = RouteRulesEvents)
 
   // ---------------------------------------------------------------- helpers (Spark side)
 
@@ -664,6 +667,15 @@ object CorpusQueries {
         concat(col("event_type"), lit(" "), col("props"), lit(" v="),
           floor(col("value") / 100).cast("long").cast("string")))
       .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+  }
+
+  /** `rules` routed over the shard table of the event transcripts (q71-q73 share it). */
+  private def routeEvents(s: SparkSession, dir: String,
+      rules: Seq[graft.pipeline.SinkRule]): org.apache.spark.sql.Dataset[graft.pipeline.RoutedHit] = {
+    import s.implicits._
+    val shards = ShardTableCache.pipelineShards(s, s"events:$dir", EventsCfg)(
+      graft.pipeline.TranscriptPipeline.buildShards(s, eventTranscripts(s, dir).as[graft.pipeline.Turn], _))
+    graft.pipeline.TranscriptPipeline.route(s, shards, rules)
   }
 
   private val duckTranscripts =
@@ -3477,26 +3489,17 @@ object CorpusQueries {
     }),
 
     // --- log pipeline stage 2: FM-shard substring routing with match counts ---
-    "q71_route_fm" -> ((s, dir) => {
-      val cfg = graft.pipeline.TranscriptPipeline.Config(
-        numShards = 16, saltBlock = 64, sampleRate = 8, rules = RouteRulesEvents)
-      val shards = ShardTableCache.eventShards(s, dir, cfg)
-      graft.pipeline.TranscriptPipeline.route(s, shards, cfg.rules)
+    "q71_route_fm" -> ((s, dir) =>
+      routeEvents(s, dir, RouteRulesEvents)
         .select(col("sink"), col("conv_id"), col("turn_idx"), col("n_matches"))
-        .orderBy(col("sink"), col("conv_id"), col("turn_idx"))
-    }),
+        .orderBy(col("sink"), col("conv_id"), col("turn_idx"))),
 
     // --- log pipeline stage 3: per-conversation aggregates over routed rows ---
-    "q72_conv_agg" -> ((s, dir) => {
-      val cfg = graft.pipeline.TranscriptPipeline.Config(
-        numShards = 16, saltBlock = 64, sampleRate = 8, rules = RouteRulesEvents)
-      val shards = ShardTableCache.eventShards(s, dir, cfg)
-      val routed = graft.pipeline.TranscriptPipeline.route(s, shards, cfg.rules)
-      routed.groupBy(col("sink"), col("conv_id"))
+    "q72_conv_agg" -> ((s, dir) =>
+      routeEvents(s, dir, RouteRulesEvents).groupBy(col("sink"), col("conv_id"))
         .agg(count(lit(1)).as("n_turns"), sum(col("n_matches")).as("n_matches"),
           min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
-        .orderBy(col("sink"), col("conv_id"))
-    }),
+        .orderBy(col("sink"), col("conv_id"))),
 
     // --- THE NORTH-RULE COMPOSITION under the gate: the transcript pipeline runs
     //     OVER the Iceberg-analog table, not over raw files. Turns land in a
@@ -3510,15 +3513,14 @@ object CorpusQueries {
       eventTranscripts(s, dir).withColumn("role_p", col("role"))
         .write.format("graft.sources.ManifestDataSource")
         .option("partcol", "role_p").mode("overwrite").save(out)
-      val cfg = graft.pipeline.TranscriptPipeline.Config(
-        numShards = 16, saltBlock = 64, sampleRate = 8, rules = RouteRulesEvents)
-      val shards = ShardTableCache.manifestEventShards(s, dir, cfg, {
-        s.read.format("graft.sources.ManifestDataSource").load(out)
-          .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
-            col("tool"), col("ts"))
-          .as[graft.pipeline.Turn]
-      })
-      graft.pipeline.TranscriptPipeline.route(s, shards, cfg.rules)
+      // same rows as q71's input, but read through the manifest table: its own cache key
+      val shards = ShardTableCache.pipelineShards(s, s"manifest-events:$dir", EventsCfg)(
+        graft.pipeline.TranscriptPipeline.buildShards(s,
+          s.read.format("graft.sources.ManifestDataSource").load(out)
+            .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
+              col("tool"), col("ts"))
+            .as[graft.pipeline.Turn], _))
+      graft.pipeline.TranscriptPipeline.route(s, shards, RouteRulesEvents)
         .groupBy(col("sink"))
         .agg(countDistinct(col("conv_id")).as("n_convs"),
           count(lit(1)).as("n_turns"), sum(col("n_matches")).as("n_matches"))
@@ -3534,9 +3536,7 @@ object CorpusQueries {
     //     derivation over ALL turns: a missed or doubled delta breaks the gate. ---
     "q75_incremental_index" -> ((s, dir) => {
       import s.implicits._
-      val cfg = ShardTableCache.effectiveCfg(graft.pipeline.TranscriptPipeline.Config(
-        numShards = 16, saltBlock = 64, sampleRate = 8, rules = RouteRulesEvents))
-      val shards = ShardTableCache.customShards(s, s"incr:$dir", cfg, {
+      val shards = ShardTableCache.pipelineShards(s, s"incr:$dir", EventsCfg) { cfg =>
         val out = freshTmpTable("q75", dir)
         val turns = eventTranscripts(s, dir).withColumn("role_p", col("role"))
         def save(mode: String)(df: org.apache.spark.sql.DataFrame): Unit =
@@ -3557,8 +3557,8 @@ object CorpusQueries {
         val delta = graft.pipeline.TranscriptPipeline.buildShards(s,
           read(Map("startSnapshot" -> "indexed")), cfg)
         indexed.union(delta)
-      })
-      graft.pipeline.TranscriptPipeline.route(s, shards, cfg.rules)
+      }
+      graft.pipeline.TranscriptPipeline.route(s, shards, RouteRulesEvents)
         .groupBy(col("sink"))
         .agg(countDistinct(col("conv_id")).as("n_convs"),
           count(lit(1)).as("n_turns"), sum(col("n_matches")).as("n_matches"))
@@ -3860,14 +3860,10 @@ object CorpusQueries {
 
     // --- log pipeline invariant: routed-turn text RECONSTRUCTED from the shard must
     //     equal the input text (per-turn text equality, checked by the oracle) ---
-    "q73_turn_equality" -> ((s, dir) => {
-      val cfg = graft.pipeline.TranscriptPipeline.Config(
-        numShards = 16, saltBlock = 64, sampleRate = 8, rules = RouteRulesEvents)
-      val shards = ShardTableCache.eventShards(s, dir, cfg)
-      graft.pipeline.TranscriptPipeline.route(s, shards, Seq(RouteRulesEvents.head))
+    "q73_turn_equality" -> ((s, dir) =>
+      routeEvents(s, dir, Seq(RouteRulesEvents.head))
         .select(col("conv_id"), col("turn_idx"), col("text"))
-        .orderBy(col("conv_id"), col("turn_idx"))
-    })
+        .orderBy(col("conv_id"), col("turn_idx")))
   )
 
   // ---------------------------------------------------------------------------- oracles

@@ -69,6 +69,19 @@ object DocShards {
       }
   }
 
+  /** The slot of the document holding corpus position `pos`. */
+  private def slotOf(s: DocShard, pos: Int): Int = {
+    val t = java.util.Arrays.binarySearch(s.offsets, pos)
+    if (t < 0) -t - 2 else t
+  }
+
+  /** A destination for boundary extraction of any one document of `s`: sized from the
+    * shard's own max doc length (+1 for the boundary char). A fixed 64 KiB buffer would
+    * make extractUntilBoundary* throw on any longer document though the lengths are known.
+    */
+  private def boundaryBuffer(s: DocShard): Array[Char] =
+    new Array[Char](math.max(1 << 16, if (s.lens.isEmpty) 0 else s.lens.max + 1))
+
   /** Total overlapping occurrences of each pattern across the corpus: per-shard FM count
     * (map-side partial) then a global sum (final agg).
     */
@@ -93,8 +106,7 @@ object DocShards {
       val fm = FmIndex.deserialize(s.shard)
       b.value.iterator.flatMap { p =>
         fm.locateAll(p.toCharArray).iterator.map { pos =>
-          var t = java.util.Arrays.binarySearch(s.offsets, pos)
-          if (t < 0) t = -t - 2
+          val t = slotOf(s, pos)
           (s.doc_ids(t), p, (pos - s.offsets(t)).toLong)
         }
       }
@@ -132,14 +144,10 @@ object DocShards {
       val pat = pattern.toCharArray
       val first = mutable.LinkedHashMap[Int, Int]() // doc slot -> first local hit
       fm.locateAll(pat).foreach { pos => // ascending, so first insert wins
-        var t = java.util.Arrays.binarySearch(s.offsets, pos)
-        if (t < 0) t = -t - 2
+        val t = slotOf(s, pos)
         if (!first.contains(t)) first(t) = pos - s.offsets(t)
       }
-      // sized from the shard's own max doc length (+1 for the boundary char) — a fixed
-      // 64 KiB buffer would make extractUntilBoundary{Left,Right} throw on any longer
-      // document even though the lengths are known here
-      val dest = new Array[Char](math.max(1 << 16, if (s.lens.isEmpty) 0 else s.lens.max + 1))
+      val dest = boundaryBuffer(s)
       first.iterator.map { case (t, local) =>
         val g = s.offsets(t) + local
         val prefix =
@@ -164,15 +172,9 @@ object DocShards {
     import spark.implicits._
     shards.flatMap { s =>
       val fm = FmIndex.deserialize(s.shard)
-      val pat = pattern.toCharArray
-      val hits = fm.locateAll(pat)
       val seen = mutable.LinkedHashSet[Int]()
-      hits.foreach { pos =>
-        var t = java.util.Arrays.binarySearch(s.offsets, pos)
-        if (t < 0) t = -t - 2
-        seen += t
-      }
-      val dest = new Array[Char](math.max(1 << 16, if (s.lens.isEmpty) 0 else s.lens.max + 1))
+      fm.locateAll(pattern.toCharArray).foreach(pos => seen += slotOf(s, pos))
+      val dest = boundaryBuffer(s)
       seen.iterator.map { t =>
         // reconstruct the whole document by boundary extraction around its first char
         val n = fm.extractUntilBoundary(s.offsets(t), dest, 0, Separator)

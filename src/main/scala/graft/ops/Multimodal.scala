@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -80,30 +80,5 @@ object Multimodal {
           }
         }
       }
-  }
-
-  /** Near-duplicate assets by feature cosine: hyperplane-LSH candidates within kind +
-    * exact rerank — no all-pairs join. The stub features are all-positive byte
-    * statistics (one orthant), where raw sign-LSH cannot separate anything, so the
-    * features are MEAN-CENTERED for candidate generation only; the rerank cosine stays
-    * on the raw features. Exact duplicates always share every band (identical signs),
-    * so recall on true duplicates is 1.0 by construction.
-    */
-  def nearDuplicates(spark: SparkSession, features: Dataset[AssetFeatures], minCos: Double): DataFrame = {
-    val f = features.toDF().select(col("asset_id"), col("kind"), col("features"))
-    val meanRow = f.select((0 until FeatureDim)
-      .map(i => avg(element_at(col("features"), i + 1)).as(s"m$i")): _*).first()
-    val means = array((0 until FeatureDim).map(i => lit(meanRow.getDouble(i))): _*)
-    val centered = f.withColumn("__c",
-      zip_with(col("features"), means, (x, m) => x.cast("double") - m))
-    val planes = SimilarityLsh.planeWeights(nPlanes = 16, dim = FeatureDim)
-    val bands = SimilarityLsh.bands(centered, "asset_id", "__c", planes,
-      bandBits = 4, carry = Seq("kind"))
-    SimilarityLsh.candidatePairs(bands, "asset_id", matchCols = Seq("kind"))
-      .join(f.select(col("asset_id").as("id_a"), col("features").as("fa")), "id_a")
-      .join(f.select(col("asset_id").as("id_b"), col("features").as("fb")), "id_b")
-      .withColumn("cos", SimilarityLsh.cosine(col("fa"), col("fb")))
-      .filter(col("cos") >= minCos)
-      .select(col("kind"), col("id_a"), col("id_b"), col("cos"))
   }
 }

@@ -1,16 +1,15 @@
 package graft.ops
 
-import graft.pipeline.{ShardRow, TranscriptPipeline, Turn}
+import graft.pipeline.{ShardRow, TranscriptPipeline}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import scala.collection.mutable
 
-/** Session-scoped cache of built shard tables for the query catalog. Production
-  * persists the shard table once and re-queries it (`TranscriptPipeline
-  * .writeShardTable` / `readShardTable`); the catalog mirrors that by sharing one
-  * persisted Dataset across the queries that hit the same (table, config) — q20-q25
-  * over the document shards, q71-q73 over the event shards — instead of rebuilding
-  * the identical index table per query. Keyed by the live SparkContext so a cached
-  * plan can never leak across sessions (Bench starts a fresh session per phase).
+/** Session-scoped cache of built shard tables for the query catalog: the queries
+  * that hit the same (table, config) — q20-q25 over the document shards, q71-q73 over
+  * the event shards — share one persisted Dataset instead of rebuilding the identical
+  * index table per query. The pipeline itself persists no shard table: `runToSinks`
+  * routes each piece in the task that builds it. Keyed by the live SparkContext so a
+  * cached plan can never leak across sessions (Bench starts a fresh session per phase).
   */
 private[graft] object ShardTableCache {
 
@@ -49,37 +48,16 @@ private[graft] object ShardTableCache {
         compress = compress)
     }
 
-  def eventShards(s: SparkSession, dir: String, cfg: TranscriptPipeline.Config): Dataset[ShardRow] = {
-    import s.implicits._
-    val effective = effectiveCfg(cfg)
-    getOrBuild(s, s"events:$dir:$effective") {
-      TranscriptPipeline.buildShards(s, CorpusQueries.eventTranscripts(s, dir).as[Turn], effective)
-    }
-  }
-
-  /** Shards built from turns served BY THE MANIFEST TABLE (q74's north-rule
-    * composition). Cached separately from `eventShards` — same rows, different
-    * provenance: this build's input plan is the DSv2 manifest scan, so the cache
-    * must never alias the raw-parquet build.
+  /** A pipeline shard table, built once per (tag, config) and session. The catalog-wide
+    * compression sweep is applied to `cfg` here, once, and `build` gets the result.
+    * `tag` names the input's provenance (raw parquet, a manifest-table read, a
+    * tagged-snapshot + delta union): two inputs with the same rows but a different
+    * provenance must never alias. The full effective config is part of the key, so
+    * callers that share a tag but differ in numShards or rules never alias either.
     */
-  def manifestEventShards(s: SparkSession, dir: String, cfg: TranscriptPipeline.Config,
-      turns: => Dataset[Turn]): Dataset[ShardRow] = {
-    val effective = effectiveCfg(cfg)
-    getOrBuild(s, s"manifest-events:$dir:$effective") {
-      TranscriptPipeline.buildShards(s, turns, effective)
-    }
+  def pipelineShards(s: SparkSession, tag: String, cfg: TranscriptPipeline.Config)(
+      build: TranscriptPipeline.Config => Dataset[ShardRow]): Dataset[ShardRow] = {
+    val effective = if (compress) cfg.copy(compress = true) else cfg
+    getOrBuild(s, s"pipeline:$tag:$effective")(build(effective))
   }
-
-  /** An arbitrary prebuilt shard table under a cache key — q75's two-phase
-    * incremental build (tagged-snapshot shards + delta shards, unioned) caches as
-    * one unit. The FULL config is part of the key, same as every sibling entry —
-    * two callers sharing a tag but differing in numShards/rules must never alias.
-    */
-  def customShards(s: SparkSession, tag: String, cfg: TranscriptPipeline.Config,
-      build: => Dataset[ShardRow]): Dataset[ShardRow] =
-    getOrBuild(s, s"custom:$tag:${effectiveCfg(cfg)}")(build)
-
-  /** The catalog-wide compression sweep (env knob) applied to a pipeline config. */
-  private[graft] def effectiveCfg(cfg: TranscriptPipeline.Config): TranscriptPipeline.Config =
-    if (compress) cfg.copy(compress = true) else cfg
 }

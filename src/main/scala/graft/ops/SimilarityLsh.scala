@@ -52,12 +52,11 @@ object SimilarityLsh {
     }.toSeq
   }
 
-  /** (carry..., id, band_idx, band_val) rows: L rows per input row. */
+  /** (id, band_idx, band_val) rows: L rows per input row. */
   def bands(df: DataFrame, idCol: String, embCol: String, planes: Array[Array[Int]],
-      bandBits: Int, carry: Seq[String] = Nil): DataFrame = {
+      bandBits: Int): DataFrame = {
     val vals = bandValues(col(embCol), planes, bandBits)
-    df.select((carry.map(col) :+ col(idCol) :+
-      posexplode(array(vals: _*)).as(Seq("band_idx", "band_val"))): _*)
+    df.select(col(idCol), posexplode(array(vals: _*)).as(Seq("band_idx", "band_val")))
   }
 
   /** Uncapped fan-out guard: a partial+final count over the band keys (map-side
@@ -92,9 +91,8 @@ object SimilarityLsh {
   // share the minhash bands) should pay it once, not per query
   private val guarded = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Distinct unordered candidate pairs (id_a < id_b) sharing any band (and every
-    * `matchCols` group key, e.g. a media `kind`). The equi-join shuffles on the band
-    * key — no cartesian anywhere.
+  /** Distinct unordered candidate pairs (id_a < id_b) sharing any band. The equi-join
+    * shuffles on the band key — no cartesian anywhere.
     *
     * `maxBucket`: web-scale guard against degenerate buckets (a band value shared by k
     * rows emits k^2/2 candidates inside ONE shuffle partition — all-zero embeddings,
@@ -104,9 +102,9 @@ object SimilarityLsh {
     * exactly the pairs an exact rerank would mostly reject. Default None keeps the
     * oracle-exact behavior (q41/q44/q52 gates compare against a capless SQL pipeline).
     */
-  def candidatePairs(bandsDf: DataFrame, idCol: String, matchCols: Seq[String] = Nil,
+  def candidatePairs(bandsDf: DataFrame, idCol: String,
       maxBucket: Option[Int] = None, guardKey: Option[String] = None): DataFrame = {
-    val keys = Seq("band_idx", "band_val") ++ matchCols
+    val keys = Seq("band_idx", "band_val")
     if (maxBucket.isEmpty) {
       // callers without a stable corpus key memoize on the band frame's semantic
       // plan hash — a repeated identical call (bench min-of-N reruns, shared
@@ -133,7 +131,7 @@ object SimilarityLsh {
     val b = capped.select((col(idCol).as("id_b") +: keys.map(c => col(c).as(s"__r_$c"))): _*)
     val cond = keys.map(k => col(k) === col(s"__r_$k")).reduce(_ && _) &&
       col("id_a") < col("id_b")
-    a.join(b, cond).select((col("id_a") +: col("id_b") +: matchCols.map(col)): _*).distinct()
+    a.join(b, cond).select(col("id_a"), col("id_b")).distinct()
   }
 
   // ------------------------------------------------------------------ typed kernels

@@ -6,8 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Observation, 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.Paths
 import java.sql.Timestamp
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -94,12 +93,15 @@ object TsMicros {
   *    `runToSinks` each piece is routed from its in-memory index right after it is
   *    built, in the sink write's stage: the index is never serialized, persisted or
   *    exchanged, and routed rows reach the writer with no shuffle. `route` runs the
-  *    same kernel over a serialized shard table. Per-(sink, conv) aggregation is a
+  *    same kernel over the serialized pieces of `buildShards`, which only the catalog
+  *    (q71-q75, cached in memory by `ShardTableCache.pipelineShards`) and the specs
+  *    build; nothing persists a shard table. Per-(sink, conv) aggregation is a
   *    classic partial+final agg handled by Catalyst.
   *  - enrichment is an in-row CASE lookup, not a join (dimensions are tiny by design).
-  *  - lineage rows + a JSON manifest make the job resumable: committed shard_ids are
-  *    skipped on re-run, so a killed job continues without recount drift. The lineage
-  *    rows are observed on the sink write, so the commit re-reads nothing to write them.
+  *  - lineage rows + create-once commit markers make the job resumable: committed
+  *    shard_ids are skipped on re-run, so a killed job continues without recount drift.
+  *    The lineage rows are observed on the sink write, so the commit re-reads nothing
+  *    to write them.
   */
 object TranscriptPipeline {
 
@@ -327,17 +329,6 @@ object TranscriptPipeline {
     out
   }
 
-  /** Persists the shard table (the compressed index REPLACES the raw text downstream);
-    * route/aggregate jobs re-run from here without rebuilding.
-    */
-  def writeShardTable(shards: Dataset[ShardRow], dir: String): Unit =
-    shards.write.mode("overwrite").parquet(dir)
-
-  def readShardTable(spark: SparkSession, dir: String): Dataset[ShardRow] = {
-    import spark.implicits._
-    spark.read.parquet(dir).as[ShardRow]
-  }
-
   // -------------------------------------------------------------- aggregate stage
 
   /** Per-(sink, conversation) aggregate counts, unordered (readers sort if they need to). */
@@ -351,9 +342,15 @@ object TranscriptPipeline {
         max(col("ts")).as("last_ts")
       )
 
-  /** Windowed per-conversation running stats ordered by (conv_id, turn_idx). */
+  /** Windowed per-conversation running stats, ordered by (turn_idx, n_matches) within
+    * each (sink, conv_id). Two rules that route one turn into the same sink give two
+    * rows with that turn_idx; n_matches orders them, so the output never depends on
+    * the order rows arrive in (rows that tie on both are identical in every output
+    * column).
+    */
   def runningWindow(routed: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("sink"), col("conv_id")).orderBy(col("turn_idx"))
+    val w = Window.partitionBy(col("sink"), col("conv_id"))
+      .orderBy(col("turn_idx"), col("n_matches"))
     routed
       // project BEFORE the window: the sort must not drag the text payload through
       .select("sink", "conv_id", "turn_idx", "n_matches")
@@ -394,8 +391,9 @@ object TranscriptPipeline {
     *  3. append lineage rows (one per shard piece) with attempt=K, as ONE file per
     *     attempt. The rows are observed on step 2's write (no re-read of `sinks/`, no
     *     join), and the attempt's `RunReport` is computed from them.
-    *  4. atomically create `_manifests/commit-K` (write temp + ATOMIC_MOVE). Only now is
-    *     attempt K committed.
+    *  4. atomically create `_manifests/commit-K` (`ManifestTables.createOnce`: write a
+    *     temp file, then hard-link it to the name, which fails if the name exists).
+    *     Only now is attempt K committed.
     *
     * Readers (`readSinks`, resume) only trust attempts with a commit marker, so a crash
     * in any window (after the sink append, or mid-lineage-write) leaves orphan files
@@ -405,20 +403,18 @@ object TranscriptPipeline {
     */
   private def manifestPath(outDir: String) = Paths.get(outDir, "_manifests")
 
-  /** Ids of the markers named exactly `<prefix><digits>` (not a crashed write's `.tmp`). */
+  /** Ids of the markers named exactly `<prefix><digits>` (not a crashed write's temp). */
   private def listMarkers(outDir: String, prefix: String): Set[Int] = {
     val marker = s"$prefix(\\d+)".r
     ManifestTables.listNames(manifestPath(outDir)).collect { case marker(k) => k.toInt }.toSet
   }
 
-  private def writeMarker(outDir: String, name: String, body: String): Unit = {
-    val dir = manifestPath(outDir)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(name + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, dir.resolve(name), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  /** Creates a marker. K is always fresh, so an existing name means a second writer
+    * raced for the same attempt: fail rather than overwrite its marker.
+    */
+  private def writeMarker(outDir: String, name: String, body: String): Unit =
+    if (!ManifestTables.createOnce(manifestPath(outDir).resolve(name), body))
+      throw new IllegalStateException(s"$outDir: marker $name already exists")
 
   def committedAttempts(outDir: String): Set[Int] = listMarkers(outDir, "commit-")
 

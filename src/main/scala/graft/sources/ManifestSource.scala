@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import java.util
 import scala.jdk.CollectionConverters._
 
@@ -118,11 +118,7 @@ object ManifestTables {
          |${fileList.mkString(",\n")}
          |  ]
          |}""".stripMargin
-    val mdir = root.resolve("_manifests")
-    Files.createDirectories(mdir)
-    Files.write(mdir.resolve(f"snapshot-$snapshot%05d.json"),
-      json.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    replaceAtomically(root.resolve("_manifests").resolve(f"snapshot-$snapshot%05d.json"), json)
   }
 
   /** `seq` is the file's DATA SEQUENCE NUMBER (Iceberg v2's ordering primitive):
@@ -311,6 +307,41 @@ object ManifestTables {
     finally walk.close()
   }
 
+  /** Publishes `body` as `target` iff no file of that name exists; false when one
+    * does, whose content is then left unchanged. The body lands in a temp file first
+    * (`.tmp-<name>-*.inprogress`, a name no reader lists as a committed file), then
+    * `Files.createLink(target, tmp)` claims the final name: hard-link creation is
+    * atomic AND fails if the target exists, unlike rename(), which silently replaces
+    * and would let two concurrent committers overwrite each other (lost update).
+    */
+  private[graft] def createOnce(target: java.nio.file.Path, body: String): Boolean =
+    viaTemp(target, body) { tmp =>
+      try { Files.createLink(target, tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    }
+
+  /** Atomically replaces `target` (or creates it) with `body`: readers see the old
+    * content or the new, never a torn file. For the few mutable sidecars only.
+    */
+  private[graft] def replaceAtomically(target: java.nio.file.Path, body: String): Unit =
+    viaTemp(target, body) { tmp =>
+      Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+
+  private def viaTemp[T](target: java.nio.file.Path, body: String)(
+      publish: java.nio.file.Path => T): T = {
+    Files.createDirectories(target.getParent)
+    // the name is cut so that a long target name cannot push the temp name past the
+    // file-name length limit
+    val tmp = Files.createTempFile(target.getParent,
+      s".tmp-${target.getFileName.toString.take(64)}-", ".inprogress")
+    try {
+      Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+      publish(tmp)
+    } finally Files.deleteIfExists(tmp)
+  }
+
   /** Highest committed snapshot id, or None before the first commit. */
   private[graft] def latestSnapshotId(dir: String): Option[Int] =
     snapshotIds(dir).lastOption
@@ -464,18 +495,17 @@ object ManifestTables {
     s"""    {"path": "${jsonEscape(e.path)}", "bytes": ${e.bytes}, "partition": "${jsonEscape(e.partition)}"$statsField$seqField$rowsField$specField}"""
   }
 
+  /** Publishes `body` as a fresh `_manifests/<kind>-<uuid>.json`; returns its name. */
+  private def publishUnique(dir: String, kind: String, body: String): String = {
+    val name = s"$kind-${java.util.UUID.randomUUID()}.json"
+    require(createOnce(Paths.get(dir, "_manifests", name), body), s"$name already exists")
+    name
+  }
+
   private[sources] def writeSegment(dir: String, entries: Seq[Entry]): String = {
     val fileList = entries.map(entryJson)
     val json = s"""{\n  "files": [\n${fileList.mkString(",\n")}\n  ]\n}"""
-    val mdir = Paths.get(dir, "_manifests")
-    Files.createDirectories(mdir)
-    val name = s"seg-${java.util.UUID.randomUUID().toString}.json"
-    val tmp = Files.createTempFile(mdir, ".tmp-seg-", ".inprogress")
-    try {
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      Files.createLink(mdir.resolve(name), tmp)
-    } finally Files.deleteIfExists(tmp)
-    name
+    publishUnique(dir, "seg", json)
   }
 
   /** Writes an immutable positional-DELETE segment: data-file path -> ascending
@@ -488,15 +518,7 @@ object ManifestTables {
       s"""    "${jsonEscape(path)}": [${poss.sorted.distinct.mkString(",")}]"""
     }
     val json = s"""{\n  "positions": {\n${body.mkString(",\n")}\n  }\n}"""
-    val mdir = Paths.get(dir, "_manifests")
-    Files.createDirectories(mdir)
-    val name = s"del-${java.util.UUID.randomUUID().toString}.json"
-    val tmp = Files.createTempFile(mdir, ".tmp-del-", ".inprogress")
-    try {
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      Files.createLink(mdir.resolve(name), tmp)
-    } finally Files.deleteIfExists(tmp)
-    name
+    publishUnique(dir, "del", json)
   }
 
   /** One EQUALITY-delete segment (Iceberg v2 equality delete files on this layout):
@@ -527,15 +549,7 @@ object ManifestTables {
          |${body.mkString(",\n")}
          |  ]
          |}""".stripMargin
-    val mdir = Paths.get(dir, "_manifests")
-    Files.createDirectories(mdir)
-    val name = s"eqd-${java.util.UUID.randomUUID().toString}.json"
-    val tmp = Files.createTempFile(mdir, ".tmp-eqd-", ".inprogress")
-    try {
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      Files.createLink(mdir.resolve(name), tmp)
-    } finally Files.deleteIfExists(tmp)
-    name
+    publishUnique(dir, "eqd", json)
   }
 
   private[sources] def readEqDeleteSegment(dir: String, name: String): EqDelete = {
@@ -665,17 +679,8 @@ object ManifestTables {
       s"tag name '$name' must match $TagNamePattern")
     snapshotFileFor(dir, Some(snapshot)) // throws on an unknown snapshot
     val json = s"""{\n  "tag": "${jsonEscape(name)}",\n  "snapshot": $snapshot\n}"""
-    val mdir = Paths.get(dir, "_manifests")
-    val tmp = Files.createTempFile(mdir, ".tmp-tag-", ".inprogress")
-    try {
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      try Files.createLink(tagPath(dir, name), tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalArgumentException(
-            s"tag '$name' already exists on $dir — tags are immutable; deleteTag first")
-      }
-    } finally Files.deleteIfExists(tmp)
+    require(createOnce(tagPath(dir, name), json),
+      s"tag '$name' already exists on $dir — tags are immutable; deleteTag first")
   }
 
   /** Tags the CURRENT latest snapshot (the common "pin what I just built" call);
@@ -741,15 +746,6 @@ object ManifestTables {
         path -> chunks.flatMap(_._2).distinct.sorted.toArray
       }
 
-  /** Atomically PUBLISHES an explicit entry list as snapshot `id` iff that id is
-    * still unclaimed: the content lands in a temp file (whose ".tmp-" name can never
-    * be read as a snapshot), then `Files.createLink(target, tmp)` claims the final
-    * name — hard-link creation is atomic AND fails if the target exists, unlike
-    * rename(), which silently replaces and would let two concurrent committers
-    * overwrite each other (lost update). Returns false when the id was taken; the
-    * caller re-reads the latest state and retries with the next id — optimistic
-    * concurrency, the Iceberg commit protocol in miniature.
-    */
   /** Max escaped commit-note size in UTF-8 BYTES (not chars: jsonEscape passes
     * non-ASCII through, so 200 CJK chars are 600 bytes). noteOf reads only the first
     * NoteHeadBytes of a snapshot file; a note whose closing quote fell outside that
@@ -785,6 +781,11 @@ object ManifestTables {
       org.apache.spark.sql.types.DataType.fromJson(txt).asInstanceOf[StructType]
     else StructType.fromDDL(txt)
 
+  /** Publishes an explicit entry list as snapshot `id` iff that id is still unclaimed
+    * (`createOnce`). Returns false when the id was taken; the caller re-reads the
+    * latest state and retries with the next id — optimistic concurrency, the Iceberg
+    * commit protocol in miniature.
+    */
   private[sources] def tryWriteSnapshot(dir: String, partCol: String,
       entries: Seq[Entry], id: Int, note: String = ""): Boolean =
     tryWriteSnapshotRefs(dir, partCol, entries, Nil, id, note)
@@ -850,18 +851,7 @@ object ManifestTables {
          |${fileList.mkString(",\n")}
          |  ]
          |}""".stripMargin
-    val mdir = Paths.get(dir, "_manifests")
-    Files.createDirectories(mdir)
-    val tmp = Files.createTempFile(mdir, ".tmp-snapshot-", ".inprogress")
-    try {
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      try {
-        Files.createLink(mdir.resolve(fileName.getOrElse(f"snapshot-$id%05d.json")), tmp)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } finally Files.deleteIfExists(tmp)
+    createOnce(Paths.get(dir, "_manifests", fileName.getOrElse(f"snapshot-$id%05d.json")), json)
   }
 
   /** Roll the table back to `target`'s state by publishing a NEW head whose refs
@@ -1027,18 +1017,8 @@ object ManifestTables {
          |${entries.map(entryJson).mkString(",\n")}
          |  ]
          |}""".stripMargin
-    val mdir = Paths.get(dir, "_manifests")
-    Files.createDirectories(mdir)
-    val tmp = Files.createTempFile(mdir, ".tmp-staged-", ".inprogress")
-    try {
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      try Files.createLink(stagedPath(dir, wapId), tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalArgumentException(
-            s"wap id '$wapId' is already staged on $dir — publish or discard it first")
-      }
-    } finally Files.deleteIfExists(tmp)
+    require(createOnce(stagedPath(dir, wapId), json),
+      s"wap id '$wapId' is already staged on $dir — publish or discard it first")
   }
 
   private[sources] def readStaged(dir: String, wapId: String): Staged = {
@@ -1202,17 +1182,8 @@ object ManifestTables {
         s"no committed snapshot under $dir — nothing to branch from")))
     val refs = readSnapshotRefs(dir, Some(base)) // loud on an unknown id
     val spec = readPartitionSpec(dir, Some(base))
-    val mdir = Paths.get(dir, "_manifests")
-    Files.createDirectories(mdir)
-    val tmp = Files.createTempFile(mdir, ".tmp-branchref-", ".inprogress")
-    try {
-      Files.write(tmp, branchRefJson(name, base).getBytes(StandardCharsets.UTF_8))
-      try Files.createLink(branchRefPath(dir, name), tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalArgumentException(s"branch '$name' already exists on $dir")
-      }
-    } finally Files.deleteIfExists(tmp)
+    require(createOnce(branchRefPath(dir, name), branchRefJson(name, base)),
+      s"branch '$name' already exists on $dir")
     val ok = tryWriteSnapshotRefs(dir, spec.map(_.name).mkString(","), refs.inline,
       refs.segments, 0, partTypes = spec.map(typeTokenOf).mkString(","),
       schemaDdl = refs.schemaDdl, deletes = refs.deletes, eqDeletes = refs.eqDeletes,
@@ -1394,13 +1365,7 @@ object ManifestTables {
     require(ok, s"main advanced while fast-forwarding branch '$name' — no longer " +
       "at the fork point; cherry-pick the branch commits instead")
     // advance the fork pointer (atomic replace — the ONLY mutation of a ref file)
-    val p = branchRefPath(dir, name)
-    val tmp = Files.createTempFile(p.getParent, ".tmp-branchref-", ".inprogress")
-    try {
-      Files.write(tmp, branchRefJson(name, next).getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } finally Files.deleteIfExists(tmp)
+    replaceAtomically(branchRefPath(dir, name), branchRefJson(name, next))
     next
   }
 
@@ -1644,30 +1609,17 @@ object ManifestTables {
       case _ => true
     }.toSet -- retained.flatMap(noteOf).toSet
     if (plain.nonEmpty) {
-      val f = Paths.get(dir, "_manifests", "expired-notes.json")
-      val have = expiredNotes(dir)
-      val merged = (have ++ plain).toSeq.sorted
-      val tmp = Files.createTempFile(f.getParent, ".tmp-notes-", ".inprogress")
-      try {
-        Files.write(tmp, merged.map(n => s""""${jsonEscape(n)}"""")
-          .mkString("{\n  \"notes\": [\n    ", ",\n    ", "\n  ]\n}")
-          .getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } finally Files.deleteIfExists(tmp)
+      val merged = (expiredNotes(dir) ++ plain).toSeq.sorted
+      replaceAtomically(Paths.get(dir, "_manifests", "expired-notes.json"),
+        merged.map(n => s""""${jsonEscape(n)}"""")
+          .mkString("{\n  \"notes\": [\n    ", ",\n    ", "\n  ]\n}"))
     }
     if (exp.isEmpty) return
     val ret = newestNotes(retained)
     exp.foreach { case (sink, wm) =>
       if (ret.getOrElse(sink, -1L) < wm && sinkWatermark(dir, sink).forall(_ < wm)) {
-        val f = Paths.get(dir, "_manifests", s"sinkwm-${hiveEscape(sink)}.json")
-        val tmp = Files.createTempFile(f.getParent, ".tmp-wm-", ".inprogress")
-        try {
-          Files.write(tmp, s"""{"sink": "${jsonEscape(sink)}", "batch": $wm}"""
-            .getBytes(StandardCharsets.UTF_8))
-          Files.move(tmp, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        } finally Files.deleteIfExists(tmp)
+        replaceAtomically(Paths.get(dir, "_manifests", s"sinkwm-${hiveEscape(sink)}.json"),
+          s"""{"sink": "${jsonEscape(sink)}", "batch": $wm}""")
       }
     }
   }
@@ -1910,14 +1862,7 @@ object ManifestTables {
                |  "partition_column": "${jsonEscape(spec.map(_.name).mkString(","))}",
                |  "partition_types": "${jsonEscape(spec.map(typeTokenOf).mkString(","))}"
                |}""".stripMargin
-          val mdir = Paths.get(dir, "_manifests")
-          Files.createDirectories(mdir)
-          val tmp = Files.createTempFile(mdir, ".tmp-spec-", ".inprogress")
-          try {
-            Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-            try { Files.createLink(specPath(dir, next), tmp); return next }
-            catch { case _: java.nio.file.FileAlreadyExistsException => /* raced: re-check */ }
-          } finally Files.deleteIfExists(tmp)
+          if (createOnce(specPath(dir, next), json)) return next // else raced: re-check
       }
       attempt += 1
     }

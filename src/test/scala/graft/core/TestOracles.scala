@@ -155,6 +155,20 @@ object TestOracles {
     up.toString
   }
 
+  /** Suffix array by sorting suffix indices by suffix comparison, O(n^2 log n). */
+  def naiveSa(s: Array[Int]): Array[Int] = {
+    val n = s.length
+    Array.range(0, n).sortWith { (a, b) =>
+      var i = a; var j = b
+      var res = 0
+      while (res == 0 && i < n && j < n) {
+        res = Integer.compare(s(i), s(j))
+        i += 1; j += 1
+      }
+      if (res != 0) res < 0 else i == n && j < n
+    }
+  }
+
   /** Suffix array by prefix doubling, O(n log^2 n): each round sorts the suffixes by
     * (rank of the first k symbols, rank of the next k) packed into one long with the
     * position. Symbols and n must be below 2^21 - 1. An oracle independent of SA-IS.

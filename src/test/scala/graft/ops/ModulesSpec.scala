@@ -3,7 +3,6 @@ package graft.ops
 import graft.{SharedSparkSession, TempDirs}
 import graft.functions.FmFunctions
 import graft.pipeline.Transcripts
-import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -219,76 +218,6 @@ class ModulesSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
     val again = Multimodal.extractFeatures(spark, assets, numPartitions = 4, batchSize = 8).collect()
     assert(rows.sortBy(_.asset_id).map(_.features.toSeq).toSeq ==
       again.sortBy(_.asset_id).map(_.features.toSeq).toSeq)
-    // near-dup join runs and is symmetric-free (a < b)
-    val dups = Multimodal.nearDuplicates(spark, feats, 0.999)
-    assert(dups.filter(col("id_a") >= col("id_b")).count() == 0)
-  }
-
-  test("streaming: windowed counts and stateful conversation aggregates match batch") {
-    val turns = Transcripts.generate(spark, nConvs = 12, turnsPerConv = 15)
-    val rawDir = tempDir("stream_raw").toString
-    Transcripts.renderRawLines(turns).write.mode("overwrite").parquet(rawDir)
-
-    val rawStream = spark.readStream
-      .schema("value STRING")
-      .parquet(rawDir)
-    val parsed = StreamingPipeline.parseStream(spark, rawStream)
-
-    // windowed aggregate, complete mode
-    val q1 = StreamingPipeline.windowedCounts(parsed)
-      .writeStream.outputMode("complete").format("memory").queryName("win_out").start()
-    q1.processAllAvailable(); q1.stop()
-    val streamed = spark.table("win_out")
-    val batch = StreamingPipeline.windowedCounts(Transcripts.parseRawLines(
-      spark, spark.read.parquet(rawDir)))
-    assert(streamed.exceptAll(batch).count() == 0 && batch.exceptAll(streamed).count() == 0)
-    assert(streamed.count() > 0)
-
-    // stateful per-conversation aggregates, update mode; last update per conv == batch
-    val q2 = StreamingPipeline.conversationState(spark, parsed)
-      .writeStream.outputMode("update").format("memory").queryName("conv_out").start()
-    q2.processAllAvailable(); q2.stop()
-    val lastUpdates = spark.table("conv_out")
-      .groupBy("conv_id")
-      .agg(max(struct(col("n_turns"), col("n_error_turns"), col("first_ts_micros"),
-        col("last_ts_micros"))).as("s"))
-      .select(col("conv_id"), col("s.n_turns"), col("s.n_error_turns"))
-    val expected = turns.toDF()
-      .groupBy("conv_id")
-      .agg(count(lit(1)).as("n_turns"),
-        sum(when(col("text").contains("ERROR"), 1L).otherwise(0L)).as("n_error_turns"))
-    assert(lastUpdates.exceptAll(expected).count() == 0 &&
-      expected.exceptAll(lastUpdates).count() == 0)
-  }
-
-  test("streaming: watermark-bounded dedup and native session windows match batch") {
-    val base = Transcripts.generate(spark, nConvs = 8, turnsPerConv = 12)
-    val turns = base.union(base.limit(20)) // inject exact duplicates
-    val rawDir = tempDir("stream_dedup").toString
-    Transcripts.renderRawLines(turns).write.mode("overwrite").parquet(rawDir)
-    val parsed = StreamingPipeline.parseStream(spark,
-      spark.readStream.schema("value STRING").parquet(rawDir))
-
-    // dedup: one survivor per fingerprint, same distinct-fp set as batch
-    val q1 = StreamingPipeline.dedupStream(parsed)
-      .writeStream.outputMode("append").format("memory").queryName("dedup_out").start()
-    q1.processAllAvailable(); q1.stop()
-    val streamed = spark.table("dedup_out")
-    val batchFps = Transcripts.parseRawLines(spark, spark.read.parquet(rawDir))
-      .select(md5(col("text").cast("binary")).as("fp")).distinct()
-    assert(streamed.count() == batchFps.count(), "dedup must keep exactly one per fp")
-    assert(streamed.select("fp").distinct().exceptAll(batchFps).count() == 0)
-
-    // session_window: streaming complete mode == the same aggregation run as batch
-    val q2 = StreamingPipeline.sessionCounts(parsed)
-      .writeStream.outputMode("complete").format("memory").queryName("sess_out").start()
-    q2.processAllAvailable(); q2.stop()
-    val sessStream = spark.table("sess_out")
-    val sessBatch = StreamingPipeline.sessionCounts(
-      Transcripts.parseRawLines(spark, spark.read.parquet(rawDir)))
-    assert(sessStream.count() > 0)
-    assert(sessStream.exceptAll(sessBatch).count() == 0 &&
-      sessBatch.exceptAll(sessStream).count() == 0)
   }
 
   test("streaming: file sink + checkpoint restart is exactly-once across new data") {
@@ -301,7 +230,7 @@ class ModulesSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
     all.limit(half.toInt).write.mode("overwrite").parquet(rawDir)
 
     def runOnce(): Unit = {
-      val q = StreamingPipeline.parseStream(spark,
+      val q = Transcripts.parseRawLines(spark,
           spark.readStream.schema("value STRING").parquet(rawDir))
         .toDF()
         .writeStream.format("parquet")
@@ -323,23 +252,5 @@ class ModulesSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
       s"restart duplicated or dropped rows: ${out.count()} vs ${expected.count()}")
     assert(out.exceptAll(expected).count() == 0 && expected.exceptAll(out).count() == 0,
       "file-sink contents diverged from the batch parse after restart")
-  }
-
-  test("streaming: watermarked stream-stream interval join matches the batch join") {
-    val turns = Transcripts.generate(spark, nConvs = 10, turnsPerConv = 16)
-    val rawDir = tempDir("stream_ssj").toString
-    Transcripts.renderRawLines(turns).write.mode("overwrite").parquet(rawDir)
-    val parsed = StreamingPipeline.parseStream(spark,
-      spark.readStream.schema("value STRING").parquet(rawDir))
-
-    val q = StreamingPipeline.requestResponseJoin(parsed)
-      .writeStream.outputMode("append").format("memory").queryName("ssj_out").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("ssj_out")
-    val batch = StreamingPipeline.requestResponseJoin(
-      Transcripts.parseRawLines(spark, spark.read.parquet(rawDir)))
-    assert(streamed.count() > 0, "interval join produced no pairs")
-    assert(streamed.exceptAll(batch).count() == 0 && batch.exceptAll(streamed).count() == 0,
-      "stream-stream interval join diverged from the batch join")
   }
 }

@@ -82,23 +82,6 @@ class SimilarityLshSpec extends AnyFunSuite with SharedSparkSession {
       kernel.exceptAll(declarative).count() == 0, "kernel bands diverge from declarative")
   }
 
-  test("multimodal near-dup finds every planted duplicate without an all-pairs join") {
-    import spark.implicits._
-    val assets = spark.range(120).as[Long].map { i =>
-      // 0..99 distinct payloads; 100..119 duplicate payload of asset i-100
-      val src = if (i < 100) i else i - 100
-      val payload = Array.tabulate(((src % 7) * 300 + 100).toInt)(j => ((src * 31 + j) % 251).toByte)
-      Asset(i, if (src % 2 == 0) "image" else "audio", payload, s"src${src % 3}")
-    }
-    val feats = Multimodal.extractFeatures(spark, assets, numPartitions = 4, batchSize = 8)
-    val dups = Multimodal.nearDuplicates(spark, feats, 0.9999).cache()
-    // identical payloads share every band: all 20 planted pairs must surface
-    val planted = dups.filter(col("id_b") - col("id_a") === 100).count()
-    assert(planted == 20, s"expected all 20 planted duplicate pairs, got $planted")
-    assert(dups.filter(col("id_a") >= col("id_b")).count() == 0)
-    assert(dups.filter(col("cos") < 0.9999).count() == 0)
-  }
-
   test("hot-bucket cap bounds candidate fan-out on an adversarial corpus; default stays exact") {
     // adversarial: 400 all-equal embeddings land in ONE bucket per band (k^2/2 pairs
     // = 79,800 uncapped); 20 distinct vectors form small honest buckets

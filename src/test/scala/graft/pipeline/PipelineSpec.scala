@@ -36,6 +36,26 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
     }.reduce(_ unionAll _)
   }
 
+  /** The default rules plus a second rule into the `errors` sink: a turn that both
+    * match gives that sink two rows with one turn_idx and different n_matches.
+    */
+  private val sharedSinkCfg = cfg.copy(rules = cfg.rules :+ SinkRule("errors", "R"))
+
+  private def same(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
+
+  /** `window/` and `aggregates/` of a finished run equal the window and the aggregates
+    * of its committed sinks.
+    */
+  private def assertTailMatchesSinks(out: String): Unit = {
+    val sinks = TranscriptPipeline.readSinks(spark, out)
+    assert(same(spark.read.parquet(s"$out/window"), TranscriptPipeline.runningWindow(sinks)),
+      s"$out: window/ differs from runningWindow(readSinks)")
+    assert(same(spark.read.parquet(s"$out/aggregates"),
+      TranscriptPipeline.conversationAggregates(sinks)),
+      s"$out: aggregates/ differ from conversationAggregates(readSinks)")
+  }
+
   test("grok parse of rendered raw lines round-trips every field") {
     val raw = Transcripts.renderRawLines(turns)
     val parsed = Transcripts.parseRawLines(spark, raw)
@@ -110,53 +130,57 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
   test("full run writes sinks/aggregates/lineage and a resumed run converges exactly") {
     import spark.implicits._
-    val outFull = tempDir("graft_full").toString
-    val outResume = tempDir("graft_resume").toString
+    for (cfg <- Seq(this.cfg, sharedSinkCfg)) {
+      val outFull = tempDir("graft_full").toString
+      val outResume = tempDir("graft_resume").toString
 
-    val r1 = TranscriptPipeline.runToSinks(spark, turns, cfg, outFull)
-    assert(!r1.resumed && r1.shardsBuilt > 0 && r1.rowsRouted > 0)
+      val r1 = TranscriptPipeline.runToSinks(spark, turns, cfg, outFull)
+      assert(!r1.resumed && r1.shardsBuilt > 0 && r1.rowsRouted > 0)
 
-    // simulate a killed job: first attempt only processed shards 0..3
-    val half = turns.withColumn("sid", TranscriptPipeline.shardIdCol(cfg))
-      .filter(col("sid") < 4).drop("sid").as[Turn]
-    val p1 = TranscriptPipeline.runToSinks(spark, half, cfg, outResume)
-    assert(!p1.resumed)
-    val p2 = TranscriptPipeline.runToSinks(spark, turns, cfg, outResume)
-    assert(p2.resumed, "second run must resume from the committed lineage")
-    // every shard is committed now: a rerun is a no-op attempt
-    val p3 = TranscriptPipeline.runToSinks(spark, turns, cfg, outResume)
-    assert(p3 == TranscriptPipeline.RunReport(0L, 0L, 0L, resumed = true), s"no-op rerun reported $p3")
+      // simulate a killed job: first attempt only processed shards 0..3
+      val half = turns.withColumn("sid", TranscriptPipeline.shardIdCol(cfg))
+        .filter(col("sid") < 4).drop("sid").as[Turn]
+      val p1 = TranscriptPipeline.runToSinks(spark, half, cfg, outResume)
+      assert(!p1.resumed)
+      val p2 = TranscriptPipeline.runToSinks(spark, turns, cfg, outResume)
+      assert(p2.resumed, "second run must resume from the committed lineage")
+      // every shard is committed now: a rerun is a no-op attempt
+      val p3 = TranscriptPipeline.runToSinks(spark, turns, cfg, outResume)
+      assert(p3 == TranscriptPipeline.RunReport(0L, 0L, 0L, resumed = true), s"no-op rerun reported $p3")
 
-    // each report equals the totals its attempt committed to the lineage
-    def committedTotals(out: String, attempt: Int) = {
-      val r = spark.read.parquet(s"$out/lineage").filter(col("attempt") === attempt)
-        .agg(count(lit(1)), coalesce(sum("n_turns"), lit(0L)), coalesce(sum("rows_routed"), lit(0L)))
-        .first()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    Seq((r1, outFull, 0), (p1, outResume, 0), (p2, outResume, 1), (p3, outResume, 2))
-      .foreach { case (rep, out, attempt) =>
-        assert((rep.shardsBuilt, rep.turnsIndexed, rep.rowsRouted) == committedTotals(out, attempt),
-          s"attempt $attempt of $out reported $rep")
+      // each report equals the totals its attempt committed to the lineage
+      def committedTotals(out: String, attempt: Int) = {
+        val r = spark.read.parquet(s"$out/lineage").filter(col("attempt") === attempt)
+          .agg(count(lit(1)), coalesce(sum("n_turns"), lit(0L)), coalesce(sum("rows_routed"), lit(0L)))
+          .first()
+        (r.getLong(0), r.getLong(1), r.getLong(2))
       }
-    assert(p1.turnsIndexed + p2.turnsIndexed == r1.turnsIndexed &&
-      p1.rowsRouted + p2.rowsRouted == r1.rowsRouted)
+      Seq((r1, outFull, 0), (p1, outResume, 0), (p2, outResume, 1), (p3, outResume, 2))
+        .foreach { case (rep, out, attempt) =>
+          assert((rep.shardsBuilt, rep.turnsIndexed, rep.rowsRouted) == committedTotals(out, attempt),
+            s"attempt $attempt of $out reported $rep")
+        }
+      assert(p1.turnsIndexed + p2.turnsIndexed == r1.turnsIndexed &&
+        p1.rowsRouted + p2.rowsRouted == r1.rowsRouted)
 
-    val sinksFull = TranscriptPipeline.readSinks(spark, outFull)
-    val sinksRes = TranscriptPipeline.readSinks(spark, outResume)
-    assert(sinksFull.exceptAll(sinksRes).count() == 0 &&
-      sinksRes.exceptAll(sinksFull).count() == 0, "resumed sinks differ from single-run sinks")
+      val sinksFull = TranscriptPipeline.readSinks(spark, outFull)
+      val sinksRes = TranscriptPipeline.readSinks(spark, outResume)
+      assert(sinksFull.exceptAll(sinksRes).count() == 0 &&
+        sinksRes.exceptAll(sinksFull).count() == 0, "resumed sinks differ from single-run sinks")
 
-    val aggFull = spark.read.parquet(s"$outFull/aggregates")
-    val aggRes = spark.read.parquet(s"$outResume/aggregates")
-    assert(aggFull.exceptAll(aggRes).count() == 0 && aggRes.exceptAll(aggFull).count() == 0)
+      val aggFull = spark.read.parquet(s"$outFull/aggregates")
+      val aggRes = spark.read.parquet(s"$outResume/aggregates")
+      assert(aggFull.exceptAll(aggRes).count() == 0 && aggRes.exceptAll(aggFull).count() == 0)
 
-    val lineage = spark.read.parquet(s"$outFull/lineage")
-    // the schemas re-reads use instead of inferring are the inferred ones
-    assert(lineage.schema == TranscriptPipeline.LineageSchema)
-    assert(sinksFull.schema == spark.read.parquet(s"$outFull/sinks").drop("attempt").schema)
-    assert(lineage.count() == r1.shardsBuilt)
-    assert(lineage.agg(sum("n_turns")).first().getLong(0) == turns.count())
+      val lineage = spark.read.parquet(s"$outFull/lineage")
+      // the schemas re-reads use instead of inferring are the inferred ones
+      assert(lineage.schema == TranscriptPipeline.LineageSchema)
+      assert(sinksFull.schema == spark.read.parquet(s"$outFull/sinks").drop("attempt").schema)
+      assert(lineage.count() == r1.shardsBuilt)
+      assert(lineage.agg(sum("n_turns")).first().getLong(0) == turns.count())
+      assertTailMatchesSinks(outFull)
+      assertTailMatchesSinks(outResume)
+    }
   }
 
   test("the fused build + route write equals buildShards then route, piece by piece") {
@@ -260,40 +284,45 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
   test("crash before the commit marker never duplicates sink rows (crash-atomic resume)") {
     import spark.implicits._
-    val outFull = tempDir("graft_atomic_full").toString
-    val out = tempDir("graft_atomic").toString
-    TranscriptPipeline.runToSinks(spark, turns, cfg, outFull)
+    for (cfg <- Seq(this.cfg, sharedSinkCfg)) {
+      val outFull = tempDir("graft_atomic_full").toString
+      val out = tempDir("graft_atomic").toString
+      TranscriptPipeline.runToSinks(spark, turns, cfg, outFull)
 
-    // attempt 0: only shards 0..3 commit cleanly
-    val half = turns.withColumn("sid", TranscriptPipeline.shardIdCol(cfg))
-      .filter(col("sid") < 4).drop("sid").as[Turn]
-    TranscriptPipeline.runToSinks(spark, half, cfg, out)
+      // attempt 0: only shards 0..3 commit cleanly
+      val half = turns.withColumn("sid", TranscriptPipeline.shardIdCol(cfg))
+        .filter(col("sid") < 4).drop("sid").as[Turn]
+      TranscriptPipeline.runToSinks(spark, half, cfg, out)
 
-    // attempt 1 "crashes" after appending sinks + lineage but BEFORE the commit marker:
-    // run it fully, then delete the marker — the on-disk state is exactly the crash window
-    TranscriptPipeline.runToSinks(spark, turns, cfg, out)
-    val marker = java.nio.file.Paths.get(out, "_manifests", "commit-1")
-    assert(Files.deleteIfExists(marker), "expected commit-1 marker to exist")
-    // a crash inside writeMarker leaves its temp file behind: never a marker
-    Seq("start-9.tmp", "commit-1.tmp", "commit-2.tmp").foreach { name =>
-      Files.write(java.nio.file.Paths.get(out, "_manifests", name), Array[Byte]())
+      // attempt 1 "crashes" after appending sinks + lineage but BEFORE the commit marker:
+      // run it fully, then delete the marker — the on-disk state is exactly the crash window
+      TranscriptPipeline.runToSinks(spark, turns, cfg, out)
+      val marker = java.nio.file.Paths.get(out, "_manifests", "commit-1")
+      assert(Files.deleteIfExists(marker), "expected commit-1 marker to exist")
+      // a crash inside writeMarker leaves its temp file behind (named as
+      // ManifestTables.createOnce names it): never a marker
+      Seq(".tmp-start-9-1.inprogress", ".tmp-commit-1-1.inprogress",
+          ".tmp-commit-2-1.inprogress").foreach { name =>
+        Files.write(java.nio.file.Paths.get(out, "_manifests", name), Array[Byte]())
+      }
+
+      // readers must not see the orphaned attempt
+      val committedOnly = TranscriptPipeline.readSinks(spark, out)
+      val attempt0 = spark.read.parquet(s"$out/sinks").filter(col("attempt") === 0).drop("attempt")
+      assert(committedOnly.exceptAll(attempt0).count() == 0 &&
+        attempt0.exceptAll(committedOnly).count() == 0, "orphan attempt rows leaked to readers")
+
+      // the re-run takes a FRESH attempt id (orphan rows can never be adopted) and the
+      // final committed view equals the single-run result exactly — no duplicated rows
+      val r = TranscriptPipeline.runToSinks(spark, turns, cfg, out)
+      assert(r.resumed)
+      assert(TranscriptPipeline.committedAttempts(out) == Set(0, 2))
+      val fin = TranscriptPipeline.readSinks(spark, out)
+      val full = TranscriptPipeline.readSinks(spark, outFull)
+      assert(fin.exceptAll(full).count() == 0 && full.exceptAll(fin).count() == 0,
+        "post-crash resume diverged from the single-run sinks")
+      assertTailMatchesSinks(out)
     }
-
-    // readers must not see the orphaned attempt
-    val committedOnly = TranscriptPipeline.readSinks(spark, out)
-    val attempt0 = spark.read.parquet(s"$out/sinks").filter(col("attempt") === 0).drop("attempt")
-    assert(committedOnly.exceptAll(attempt0).count() == 0 &&
-      attempt0.exceptAll(committedOnly).count() == 0, "orphan attempt rows leaked to readers")
-
-    // the re-run takes a FRESH attempt id (orphan rows can never be adopted) and the
-    // final committed view equals the single-run result exactly — no duplicated rows
-    val r = TranscriptPipeline.runToSinks(spark, turns, cfg, out)
-    assert(r.resumed)
-    assert(TranscriptPipeline.committedAttempts(out) == Set(0, 2))
-    val fin = TranscriptPipeline.readSinks(spark, out)
-    val full = TranscriptPipeline.readSinks(spark, outFull)
-    assert(fin.exceptAll(full).count() == 0 && full.exceptAll(fin).count() == 0,
-      "post-crash resume diverged from the single-run sinks")
   }
 
   test("in-row enrich equals the two broadcast left joins it replaces") {
@@ -446,18 +475,6 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
     shards.unpersist()
   }
 
-  test("shard table persists and routes identically after reload") {
-    val dir = tempDir("shardtab").toString
-    val shards = TranscriptPipeline.buildShards(spark, turns, cfg)
-    TranscriptPipeline.writeShardTable(shards, dir)
-    val reloaded = TranscriptPipeline.readShardTable(spark, dir)
-    val a = TranscriptPipeline.route(spark, shards, cfg.rules)
-      .select("sink", "conv_id", "turn_idx", "n_matches", "text")
-    val b = TranscriptPipeline.route(spark, reloaded, cfg.rules)
-      .select("sink", "conv_id", "turn_idx", "n_matches", "text")
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-  }
-
   test("windowed running aggregates are ordered and monotone per conversation") {
     val shards = TranscriptPipeline.buildShards(spark, turns, cfg)
     val routed = TranscriptPipeline.route(spark, shards, cfg.rules)
@@ -469,5 +486,18 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
       .agg(count(lit(1)).as("n"), max("hit_rank").as("mx"))
       .filter(col("n") =!= col("mx")).count()
     assert(chk == 0)
+  }
+
+  test("the window orders rows of one turn in one sink the same whatever order they arrive in") {
+    import spark.implicits._
+    // two rules routing turns 0 and 1 into sink s: two rows per turn, n_matches 1 and 3
+    val rows = Seq(("s", "c", 0, 1), ("s", "c", 0, 3), ("s", "c", 1, 3), ("s", "c", 1, 1))
+    def window(in: Seq[(String, String, Int, Int)]) = TranscriptPipeline.runningWindow(
+      in.toDF("sink", "conv_id", "turn_idx", "n_matches").coalesce(1))
+      .select("turn_idx", "hit_rank", "running_matches", "n_matches").as[(Int, Int, Long, Int)]
+      .collect().toSet
+    val want = Set((0, 1, 1L, 1), (0, 2, 4L, 3), (1, 3, 5L, 1), (1, 4, 8L, 3))
+    assert(window(rows) == want)
+    assert(window(rows.reverse) == want)
   }
 }

@@ -4,7 +4,7 @@ import graft.{SharedSparkSession, TempDirs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The DSv2 manifest metadata table and the snapshot-isolated data reader. */
@@ -387,6 +387,32 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession with TempDi
     assert(ManifestTables.readLatest(out).map(_.path) == Seq("b.parquet"))
     // no stray .tmp/.inprogress file may ever read as a snapshot
     assert(ManifestTables.latestSnapshotId(out).contains(1))
+  }
+
+  test("a marker or snapshot name that exists is never overwritten, and temp files are never listed") {
+    val out = tempDir("graft_publish").toString
+    val mdir = Paths.get(out, "_manifests")
+    def read(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val marker = mdir.resolve("commit-0")
+    assert(ManifestTables.createOnce(marker, "first"))
+    assert(!ManifestTables.createOnce(marker, "second"), "an existing marker was claimed twice")
+    assert(read(marker) == "first")
+    val e = Seq(ManifestTables.Entry("a.parquet", 10L, "en", 0))
+    assert(ManifestTables.tryWriteSnapshot(out, "p", e, 0))
+    val snapshot = mdir.resolve("snapshot-00000.json")
+    val before = read(snapshot)
+    assert(!ManifestTables.tryWriteSnapshot(out, "p", Seq(e.head.copy(path = "b.parquet")), 0))
+    assert(read(snapshot) == before, "an existing snapshot was overwritten")
+    // nothing but the published names is left behind
+    assert(ManifestTables.listNames(mdir).toSet == Set("commit-0", "snapshot-00000.json"))
+    // temp files a crashed publish leaves behind are never listed as committed
+    Seq(".tmp-commit-1-7.inprogress", ".tmp-start-2-7.inprogress",
+        ".tmp-snapshot-00001.json-7.inprogress").foreach(n => Files.write(mdir.resolve(n), Array[Byte]()))
+    assert(graft.pipeline.TranscriptPipeline.committedAttempts(out) == Set(0))
+    assert(ManifestTables.latestSnapshotId(out).contains(0))
+    ManifestTables.replaceAtomically(snapshot, "replaced")
+    assert(read(snapshot) == "replaced")
+    assert(!ManifestTables.listNames(mdir).exists(n => n.startsWith(".tmp-snapshot-00000")))
   }
 
   test("segment layering: 100 appends x 100 files commit in flat per-commit metadata cost") {
