@@ -275,7 +275,6 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
     } finally spark.sparkContext.removeSparkListener(killer)
     assert(killer.killedEnds.get > 0, "no sink-write task attempt was killed")
     assert(got == want, s"retried run reported $got, clean run $want")
-    def same(a: DataFrame, b: DataFrame) = a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
     assert(same(spark.read.parquet(s"$out/lineage"), spark.read.parquet(s"$clean/lineage")),
       "lineage differs from the clean run")
     assert(same(TranscriptPipeline.readSinks(spark, out), TranscriptPipeline.readSinks(spark, clean)),
