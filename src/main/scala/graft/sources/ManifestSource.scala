@@ -329,13 +329,17 @@ object ManifestTables {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
 
+  private val PlainFileMode = java.nio.file.attribute.PosixFilePermissions.asFileAttribute(
+    java.nio.file.attribute.PosixFilePermissions.fromString("rw-rw-rw-"))
+
   private def viaTemp[T](target: java.nio.file.Path, body: String)(
       publish: java.nio.file.Path => T): T = {
     Files.createDirectories(target.getParent)
     // the name is cut so that a long target name cannot push the temp name past the
-    // file-name length limit
+    // file-name length limit; rw-rw-rw- less the umask is the mode a plain
+    // Files.write gives, where createTempFile's default is owner-only
     val tmp = Files.createTempFile(target.getParent,
-      s".tmp-${target.getFileName.toString.take(64)}-", ".inprogress")
+      s".tmp-${target.getFileName.toString.take(64)}-", ".inprogress", PlainFileMode)
     try {
       Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
       publish(tmp)

@@ -413,6 +413,10 @@ class ManifestSourceSpec extends AnyFunSuite with SharedSparkSession with TempDi
     ManifestTables.replaceAtomically(snapshot, "replaced")
     assert(read(snapshot) == "replaced")
     assert(!ManifestTables.listNames(mdir).exists(n => n.startsWith(".tmp-snapshot-00000")))
+    // published files get the mode of a plain write, not the temp file's owner-only one
+    val plain = Files.write(mdir.resolve("plain"), Array[Byte]())
+    Seq(marker, snapshot).foreach(p =>
+      assert(Files.getPosixFilePermissions(p) == Files.getPosixFilePermissions(plain), s"$p mode"))
   }
 
   test("segment layering: 100 appends x 100 files commit in flat per-commit metadata cost") {
