@@ -165,12 +165,11 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
 
       val sinksFull = TranscriptPipeline.readSinks(spark, outFull)
       val sinksRes = TranscriptPipeline.readSinks(spark, outResume)
-      assert(sinksFull.exceptAll(sinksRes).count() == 0 &&
-        sinksRes.exceptAll(sinksFull).count() == 0, "resumed sinks differ from single-run sinks")
+      assert(same(sinksFull, sinksRes), "resumed sinks differ from single-run sinks")
 
       val aggFull = spark.read.parquet(s"$outFull/aggregates")
       val aggRes = spark.read.parquet(s"$outResume/aggregates")
-      assert(aggFull.exceptAll(aggRes).count() == 0 && aggRes.exceptAll(aggFull).count() == 0)
+      assert(same(aggFull, aggRes))
 
       val lineage = spark.read.parquet(s"$outFull/lineage")
       // the schemas re-reads use instead of inferring are the inferred ones
@@ -308,8 +307,7 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
       // readers must not see the orphaned attempt
       val committedOnly = TranscriptPipeline.readSinks(spark, out)
       val attempt0 = spark.read.parquet(s"$out/sinks").filter(col("attempt") === 0).drop("attempt")
-      assert(committedOnly.exceptAll(attempt0).count() == 0 &&
-        attempt0.exceptAll(committedOnly).count() == 0, "orphan attempt rows leaked to readers")
+      assert(same(committedOnly, attempt0), "orphan attempt rows leaked to readers")
 
       // the re-run takes a FRESH attempt id (orphan rows can never be adopted) and the
       // final committed view equals the single-run result exactly — no duplicated rows
@@ -318,8 +316,7 @@ class PipelineSpec extends AnyFunSuite with SharedSparkSession with TempDirs {
       assert(TranscriptPipeline.committedAttempts(out) == Set(0, 2))
       val fin = TranscriptPipeline.readSinks(spark, out)
       val full = TranscriptPipeline.readSinks(spark, outFull)
-      assert(fin.exceptAll(full).count() == 0 && full.exceptAll(fin).count() == 0,
-        "post-crash resume diverged from the single-run sinks")
+      assert(same(fin, full), "post-crash resume diverged from the single-run sinks")
       assertTailMatchesSinks(out)
     }
   }
